@@ -515,24 +515,40 @@ def regression_flags(per_query: dict, prior: dict,
     return sorted(flags, key=lambda f: -f["ratio"])
 
 
-def _latest_bench_record() -> tuple[str, dict] | None:
-    """Newest BENCH_r*.json's parsed per-query times, for the gate."""
+def _bench_records() -> list[tuple[str, dict]]:
+    """Every parseable BENCH_r*.json as (file name, body), oldest first.
+
+    The body is the record's "parsed" result line.  A record whose
+    "parsed" is null (a truncated capture, BENCH_r06.json) or not an object
+    falls back to the outer record, so every body is a dict.  Records of one
+    round sort by file name."""
     import glob
     import re as _re
 
-    paths = sorted(
-        glob.glob(os.path.join(REPO, "BENCH_r*.json")),
-        key=lambda p: int(_re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    for p in reversed(paths):
+    def key(path: str) -> tuple[int, str]:
+        name = os.path.basename(path)
+        return int(_re.search(r"r(\d+)", name).group(1)), name
+
+    out = []
+    for p in sorted(glob.glob(os.path.join(REPO, "BENCH_r*.json")), key=key):
         try:
             with open(p) as f:
                 rec = json.load(f)
-            q = rec.get("parsed", rec).get("queries")
-            if q:
-                return os.path.basename(p), q
-        except (OSError, ValueError, AttributeError):
+        except (OSError, ValueError):
             continue
+        if isinstance(rec, dict):
+            parsed = rec.get("parsed")
+            out.append((os.path.basename(p),
+                        parsed if isinstance(parsed, dict) else rec))
+    return out
+
+
+def _latest_bench_record(
+        records: list[tuple[str, dict]]) -> tuple[str, dict] | None:
+    """The newest record's per-query times, for the single-round gate."""
+    for name, rec in reversed(records):
+        if rec.get("queries"):
+            return name, rec["queries"]
     return None
 
 
@@ -558,28 +574,6 @@ def best_bench_times(records: list[dict], steal_gate: float = 5.0) -> dict:
             if isinstance(sec, (int, float)) and sec > 0:
                 best[name] = min(best.get(name, float("inf")), sec)
     return best
-
-
-def _all_bench_records() -> list[dict]:
-    """Every parseable BENCH_r*.json body, oldest first."""
-    import glob
-    import re as _re
-
-    paths = sorted(
-        glob.glob(os.path.join(REPO, "BENCH_r*.json")),
-        key=lambda p: int(_re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    out = []
-    for p in paths:
-        try:
-            with open(p) as f:
-                rec = json.load(f)
-            # "parsed" may be present-but-null (driver tail truncation,
-            # BENCH_r06.json) — fall back to the outer record, never None
-            out.append(rec.get("parsed") or rec)
-        except (OSError, ValueError, AttributeError):
-            continue
-    return out
 
 
 def _latest_bench_tag() -> str | None:
@@ -693,7 +687,8 @@ def main() -> None:
     # artifact must not suppress the JSON line (round 6 lost its record to
     # exactly that — the driver's rebench crashed here on a null "parsed").
     try:
-        prior = _latest_bench_record()
+        records = _bench_records()
+        prior = _latest_bench_record(records)
         if prior is not None:
             base_name, base_q = prior
             result["regression_baseline"] = base_name
@@ -702,7 +697,7 @@ def main() -> None:
                 result["regressions_unreliable"] = True
         # trend gate vs the BEST-EVER calm per-query time across all rounds —
         # catches multi-round drifts too slow for the single-round threshold
-        best = best_bench_times(_all_bench_records(), steal_gate=gate)
+        best = best_bench_times([rec for _, rec in records], steal_gate=gate)
         if best:
             result["regressions_vs_best"] = regression_flags(per_query, best)
     except Exception as e:  # noqa: BLE001 — gates are evidence, not the metric

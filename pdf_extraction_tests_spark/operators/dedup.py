@@ -234,7 +234,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
     # stream FOUR times (sizes, the df count, and both sides of a
     # rare-self-join), so the scan-side shingle expansion ran 4x and the
     # self-join shuffled the (doc, shingle) stream twice.  Now: per-doc
-    # sizes come scan-side from size(shingle_array) (no explode at all),
+    # sizes come from the per-row shingle arrays (no explode at all),
     # and common counts come from per-shingle sorted id lists
     # (groupBy(shingle) -> upper-triangular pair explode, df <= max_df
     # bounding each list) — the shingle pipeline runs ONCE, one exchange
@@ -248,12 +248,18 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
             lambda i: F.array_join(F.slice(words, i + 1, n), " "),
         )
     )
+    # Both sides treat a doc_id as its set of shingles over ALL its rows, as
+    # the oracle's DISTINCT (doc_id, shingle) does: sizes has one row per
+    # doc_id (so the joins below cannot repeat a pair), and collect_set
+    # counts a shingle once per doc (so a repeated doc_id row neither
+    # doubles n_common nor emits (x, x) pairs).
     base = docs.filter(F.size(words) >= n)
-    sizes = base.select(F.col(id_col).alias("doc_id"), F.size(sh_arr).alias("sz"))
+    sizes = base.groupBy(F.col(id_col).alias("doc_id")).agg(
+        F.size(F.array_distinct(F.flatten(F.collect_list(sh_arr)))).alias("sz"))
     sh = with_shingles(docs, n, text_col, id_col)
     grams = (
         sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_df))
     )
     lefts = grams.select("ids", F.posexplode("ids").alias("i", "doc_a"))
@@ -262,10 +268,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
         F.explode(
             F.slice(F.col("ids"), F.col("i") + F.lit(2), F.size("ids"))
         ).alias("doc_b"),
-    # duplicate-id guard: a repeated doc_id row would emit (x, x) pairs the
-    # old strict-< self-join never produced; cross pairs keep the same
-    # per-row multiplicity either way
-    ).filter(F.col("doc_a") != F.col("doc_b"))
+    )
     common = pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_common"))
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))

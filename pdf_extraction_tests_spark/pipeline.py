@@ -7,14 +7,23 @@ Design (SURVEY.md §3.4 / §4 custom items):
   scan — the only exchange is an explicit *salted repartition* on
   ``part_key = pmod(xxhash64(doc_id), P)`` for load balance and stable
   checkpoint identity.
-* **Skew routing.** Documents whose total span bytes exceed a threshold are
-  routed to a chunked path: spans are ``posexplode``-ed into fixed-size
-  chunks, parsed chunk-parallel with ``applyInPandas`` (the expensive stage —
-  in production this is where PDF bytes are rasterized/OCR'd), then
-  re-assembled per document for the cheap doc-global layout/boundary logic.
+* **Skew routing.** Documents whose total span text exceeds a threshold are
+  routed to a chunked path: their span arrays are sliced into chunk rows,
+  parsed chunk-parallel (the expensive stage — in production this is where
+  PDF bytes are rasterized/OCR'd), then re-assembled per document with
+  ``applyInPandas`` for the cheap doc-global layout/boundary logic.
   The reference OOMs silently on big docs (eager per-page loop,
   Document_Processor_DocLayout_YOLO_Code_v10.R:32-191); the north rule makes
   sub-batching mandatory.
+* **Python over the scan once.** The size test is a JVM expression in the
+  scan stage, and the oversize docs are gathered JVM-side through one
+  exchange on ``doc_id`` before any Python stage of the chunked path.  The
+  direct path's ``mapInPandas`` is therefore the only Python stage that runs
+  once per scan split; AQE coalesces the gathered exchange, so the chunked
+  path's Python stages run only on the partitions that hold oversize docs.
+  Each Python task has a fixed start-up cost (160-260 ms measured on a
+  4-core host) whatever its row count, so the number of Python tasks, not
+  the bytes, is what this routing saves.
 * **Lineage / resume.** Every run appends one row per ``part_key`` to a
   checkpoint table; a restart anti-joins input partitions against completed
   rows and re-processes only the remainder — batch incrementality standing in
@@ -124,16 +133,6 @@ def _spans_to_records(spans) -> list[dict]:
 # ---------------------------------------------------------------------------
 # normal path: one mapInPandas stage, zero extra shuffles
 # ---------------------------------------------------------------------------
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        norm = pdf.assign(spans=pdf["spans"].map(_spans_to_records))
-        out = ec.extract_docs_frame(norm[["doc_id", "spans"]])
-        out["part_key"] = pdf["part_key"].to_numpy()
-        yield out
 
 
 # Flat-boundary crossing (round-7, guide §4): the JVM's ArrowWriter
@@ -299,11 +298,10 @@ def extract_docs_simple(docs: DataFrame,
 # ---------------------------------------------------------------------------
 
 
-
 def _split_chunk_rows(batches: Iterator[pd.DataFrame],
                       chunk_spans: int, chunk_chars: int) -> Iterator[pd.DataFrame]:
-    """Stage 0 (narrow, no shuffle): slice each oversized doc's span array
-    into chunk rows on a running character budget."""
+    """Stage 0 (narrow): slice each oversized doc's span array into chunk
+    rows on a running character budget."""
     for pdf in batches:
         rows = []
         for doc_id, part_key, spans in zip(pdf["doc_id"], pdf["part_key"], pdf["spans"]):
@@ -360,8 +358,15 @@ def extract_chunked(docs: DataFrame, chunk_spans: int = DEFAULT_CHUNK_SPANS,
     cap for many-tiny-span docs.  The slicing happens in a narrow
     mapInPandas over the nested array (no per-span explode — exploding
     multi-MB docs into one shuffle row per span cost more than the parse);
-    the only shuffles are the chunk spread and the per-doc reassembly,
-    both proportional to the (few) huge docs.
+    the shuffles are the chunk spread and the per-doc reassembly, both
+    proportional to the (few) huge docs.
+
+    The split is a Python stage, and every Python task pays a fixed
+    start-up cost whatever its row count.  So ``docs`` should already be
+    gathered off the scan: :func:`extract_docs` repartitions its oversize
+    docs on ``doc_id`` (a JVM-side exchange that AQE coalesces) before
+    calling this.  Called directly on a scan, the split runs one Python
+    task per scan split even when only one split holds an oversize doc.
     """
     chunk_schema = T.StructType(
         [
@@ -483,6 +488,13 @@ def extract_docs(
     scan's splits are as balanced as a hash shuffle's.  The salted
     repartition happens BEFORE size computation and routing so every
     downstream stage runs at full parallelism.
+
+    Either way Python runs over the scan once: oversize docs are filtered
+    by a JVM size expression and gathered through one exchange on
+    ``doc_id`` before the chunked path's first Python stage, so only the
+    direct path's ``mapInPandas`` runs on every scan split.  When no doc is
+    oversize one empty split task remains: AQE cannot prove that a Python
+    map over empty input is empty, so it keeps one coalesced partition.
     """
     from .shipping import ship_package
 
@@ -513,7 +525,8 @@ def extract_docs(
     small = sized.filter(F.col("_total_chars") <= oversize_chars).drop("_total_chars")
     big = sized.filter(F.col("_total_chars") > oversize_chars).drop("_total_chars")
     small_out = extract_direct(small)  # filter preserves the partitioning
-    big_out = extract_chunked(big, chunk_spans, chunk_chars)
+    # gathered JVM-side before the chunked path's first Python stage
+    big_out = extract_chunked(big.repartition("doc_id"), chunk_spans, chunk_chars)
     return small_out.unionByName(big_out)
 
 

@@ -44,3 +44,30 @@ def read_schema_columns(plan: str) -> list[str]:
     if not m:
         return []
     return [c.split(":")[0] for c in m.group(1).split(",") if c]
+
+
+def scan_stage_lines(plan: str) -> list[list[str]]:
+    """Per file scan in the plan tree, the tree lines of the scan and of
+    every operator above it up to the first exchange: the work that runs in
+    the scan's own stage, once per scan split.
+
+    Lines keep their tree rails, so a caller can tell Union branches apart
+    (a Union's earlier children are drawn with a ``:`` rail).
+    """
+    tree = plan.split("\n\n")[0].splitlines()
+    nodes = [(m.start(), ln) for ln in tree
+             if re.search(r"\(\d+\)\s*$", ln) and (m := re.search(r"\w", ln))]
+    stages = []
+    for i, (depth, ln) in enumerate(nodes):
+        if not re.search(r"\bScan (parquet|orc|json|csv|text)\b", ln):
+            continue
+        stage = [ln]
+        for up_depth, up in reversed(nodes[:i]):
+            if up_depth >= depth:
+                continue  # not an ancestor
+            if re.search(r"Exchange \(\d+\)", up):  # shuffle or broadcast
+                break
+            stage.append(up)
+            depth = up_depth
+        stages.append(stage)
+    return stages

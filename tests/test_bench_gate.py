@@ -3,6 +3,10 @@ no Spark, no subprocess)."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 import bench
 
 
@@ -32,13 +36,17 @@ class TestRegressionFlags:
         assert bench.regression_flags({"q": 0.4}, {"q": 1.0}) == []
 
     def test_latest_bench_record_reads_newest(self):
-        got = bench._latest_bench_record()
+        records = bench._bench_records()
+        got = bench._latest_bench_record(records)
         assert got is not None
         name, queries = got
         # assert shape, not the specific round number
         assert name.startswith("BENCH_r") and name.endswith(".json")
         assert "extract_pipeline" in queries
         assert all(isinstance(v, (int, float)) for v in queries.values())
+        # no later record (e.g. a same-round null-parsed one) has times
+        idx = [n for n, _ in records].index(name)
+        assert not any(rec.get("queries") for _, rec in records[idx + 1:])
 
 
 class TestBestBenchTimes:
@@ -86,11 +94,37 @@ class TestBestBenchTimes:
         assert [f["query"] for f in vs_best] == ["q"]
 
     def test_all_committed_records_parse(self):
-        recs = bench._all_bench_records()
-        assert len(recs) >= 5  # rounds 1-5 committed as of round 6
-        best = bench.best_bench_times(recs)
+        recs = bench._bench_records()
+        committed = glob.glob(os.path.join(bench.REPO, "BENCH_r*.json"))
+        names = [n for n, _ in recs]
+        assert sorted(names) == sorted(os.path.basename(p) for p in committed)
+        # null "parsed" bodies fall back to the outer record
+        bodies = dict(recs)
+        for null_parsed in ("BENCH_r06.json", "BENCH_r07_control.json"):
+            assert bodies[null_parsed]["parsed"] is None
+        assert all(isinstance(body, dict) for body in bodies.values())
+        best = bench.best_bench_times(list(bodies.values()))
         assert "extract_pipeline" in best
         assert all(v > 0 for v in best.values())
+
+    def test_loader_orders_by_round_and_skips_unreadable(self, tmp_path,
+                                                          monkeypatch):
+        files = {
+            "BENCH_r10.json": {"parsed": {"queries": {"q": 1.0}}},
+            "BENCH_r02.json": {"parsed": None, "rc": 1},
+            "BENCH_r03.json": [1, 2],
+            "BENCH_r04.json": {"parsed": "truncated"},
+        }
+        for name, body in files.items():
+            (tmp_path / name).write_text(json.dumps(body))
+        (tmp_path / "BENCH_r05.json").write_text("{not json")
+        monkeypatch.setattr(bench, "REPO", str(tmp_path))
+        recs = bench._bench_records()
+        assert [n for n, _ in recs] == [
+            "BENCH_r02.json", "BENCH_r04.json", "BENCH_r10.json"]
+        assert recs[0][1] == {"parsed": None, "rc": 1}
+        assert recs[1][1] == {"parsed": "truncated"}
+        assert bench._latest_bench_record(recs) == ("BENCH_r10.json", {"q": 1.0})
 
 
 class TestScalingBlockPick:

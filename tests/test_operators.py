@@ -69,6 +69,30 @@ class TestDedup:
         rows = D.ngram_jaccard_pairs(spark.createDataFrame(pdf), 3, 0.8, 50).collect()
         assert len(rows) == 1 and rows[0].jaccard == 1.0
 
+    def test_jaccard_duplicated_doc_id_matches_oracle(self, spark):
+        """A doc_id on several rows is one doc, the union of its rows'
+        shingles, as in q24's oracle: no pair repeats and every jaccard
+        equals DuckDB's."""
+        import duckdb
+
+        from pdf_extraction_tests_spark.queries import oracle_sql
+
+        w = [f"w{i}" for i in range(1, 12)]
+        pdf = pd.DataFrame({
+            "doc_id": [1, 1, 2, 3, 3],
+            "text": [" ".join(w[:10]), " ".join(w[:10]),  # repeated row
+                     " ".join(w),
+                     " ".join(w[:6]), " ".join(w[4:])],   # split over two rows
+        })
+        rows = D.ngram_jaccard_pairs(spark.createDataFrame(pdf), 3, 0.8, 50).collect()
+        pairs = [(r.doc_a, r.doc_b) for r in rows]
+        assert len(pairs) == len(set(pairs)) == 3
+        con = duckdb.connect()
+        con.register("documents", pdf)
+        want = {(int(a), int(b)): j for a, b, j in
+                con.execute(oracle_sql()["q24_ngram_jaccard"]).fetchall()}
+        assert {(r.doc_a, r.doc_b): r.jaccard for r in rows} == want
+
     def test_simhash_close_for_similar(self, spark):
         pdf = pd.DataFrame(
             {"doc_id": [1, 2, 3],

@@ -104,6 +104,45 @@ class TestChunkedPath:
         assert got == _oracle([doc])
 
 
+class TestParquetScanRoutes:
+    """Every route over a real multi-file parquet scan.  createDataFrame
+    input never takes the scan-fused route (its partition estimate falls
+    back to the RDD probe), so this is the test that covers it."""
+
+    @pytest.mark.parametrize("with_oversize", [True, False])
+    def test_every_route_matches_oracle(self, spark, tmp_path, synthetic_docs,
+                                        with_oversize):
+        def oversize(spans):
+            return sum(len(s["text"] or "") for s in spans) > pl.DEFAULT_OVERSIZE_CHARS
+
+        docs = [
+            {"doc_id": r.doc_id, "spans": r.spans}
+            for r in synthetic_docs.itertuples(index=False)
+            if with_oversize or not oversize(r.spans)
+        ]
+        assert sum(oversize(d["spans"]) for d in docs) == int(with_oversize)
+        path = tmp_path / "corpus"
+        _docs_df(spark, docs).repartition(4).write.parquet(str(path))
+        scan = spark.read.schema(DOCS).parquet(str(path))
+        # enough estimated splits that repartition=None fuses onto the scan
+        total = sum(f.stat().st_size for f in path.glob("*.parquet"))
+        key = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(total // 16))
+        try:
+            assert pl.estimate_scan_partitions(scan) >= \
+                2 * spark.sparkContext.defaultParallelism
+            want = _oracle(docs)
+            for repartition in (None, True, False):
+                rows = pl.extract_docs(scan, num_parts=8,
+                                       repartition=repartition).collect()
+                assert len(rows) == len(docs), repartition
+                got = _spans_key([r.asDict(recursive=True) for r in rows])
+                assert got == want, repartition
+        finally:
+            spark.conf.set(key, old)
+
+
 class TestCheckpointResume:
     def test_run_and_resume(self, spark, tmp_path, synthetic_docs):
         docs = [

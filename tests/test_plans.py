@@ -2,10 +2,12 @@
 
 Results being right is not enough — these pin that filters push into the
 parquet scan, dimensions broadcast, column pruning holds, and the extraction
-pipeline performs exactly one shuffle (its salted repartition).
+pipeline runs Python over its scan once.
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 
@@ -15,6 +17,7 @@ from pdf_extraction_tests_spark.plans.audit import (
     has_broadcast_join,
     pushed_filters,
     read_schema_columns,
+    scan_stage_lines,
 )
 from pdf_extraction_tests_spark.queries import queries
 
@@ -82,25 +85,41 @@ def test_bucketed_embedding_dedup_no_cartesian(spark):
         or "BroadcastHashJoin" in plan, plan
 
 
-def test_extraction_single_shuffle(spark):
-    """The happy-path extraction plan: exactly one exchange (the salted
-    part_key repartition) between scan and the Arrow stage."""
+def test_extraction_single_shuffle(spark, tmp_path):
+    """The extraction plan over a parquet scan runs Python over the scan
+    once: the small path's MapInPandas is the only Python node in a scan
+    stage (none when the salted repartition sits under it), and the
+    oversize branch crosses an Exchange before its first Python node."""
     from pdf_extraction_tests_spark.corpus import corpus_pandas
     from pdf_extraction_tests_spark.pipeline import extract_docs
     from pdf_extraction_tests_spark.schema import DOCS
     import pandas as pd
 
     src = pd.read_parquet(f"{SF}/documents.parquet").head(8)
-    docs = spark.createDataFrame(corpus_pandas(src), schema=DOCS)
-    out = extract_docs(docs, num_parts=4, oversize_chars=10**12)
-    plan = formatted_plan(out)
-    # The Union's first branch (":-" prefixed tree lines) is the small path:
-    # exactly one Exchange feeding MapInPandas.  The chunked branch owns the
-    # other exchanges but processes zero rows (empty after the size filter).
-    small_branch = [ln for ln in plan.splitlines() if ln.lstrip().startswith(":")]
-    assert sum("Exchange" in ln for ln in small_branch) == 1, plan
-    assert any("MapInPandas" in ln for ln in small_branch), plan
-    assert count_exchanges(plan) == 3, plan  # 1 small + 2 chunked-path
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(corpus_pandas(src), schema=DOCS) \
+        .repartition(4).write.parquet(path)
+    docs = spark.read.schema(DOCS).parquet(path)
+    for repartition, exchanges in ((False, 3), (True, 4)):
+        plan = formatted_plan(extract_docs(
+            docs, num_parts=4, oversize_chars=10**12, repartition=repartition))
+        stages = scan_stage_lines(plan)
+        assert len(stages) == 2, plan  # one scan per Union branch
+        python = [ln for st in stages for ln in st
+                  if re.search(r"\b(MapInPandas|FlatMapGroupsInPandas) \(", ln)]
+        # The Union's first branch (":"-railed tree lines) is the small
+        # path; the oversize branch's three exchanges (doc_id gather, chunk
+        # spread, per-doc regroup) all sit above its scan stage.
+        small_branch = [ln for ln in plan.split("\n\n")[0].splitlines()
+                        if ln.lstrip().startswith(":")]
+        if repartition:
+            assert python == [], plan
+            assert sum("Exchange" in ln for ln in small_branch) == 1, plan
+        else:
+            assert len(python) == 1 and "MapInPandas" in python[0], plan
+            assert python[0].lstrip().startswith(":"), plan
+            assert not any("Exchange" in ln for ln in small_branch), plan
+        assert count_exchanges(plan) == exchanges, plan
 
 
 def test_extraction_scan_prunes_to_needed_columns(spark):
