@@ -7,6 +7,11 @@ plan capture live here (guide §1.1/§1.4/§1.5).
   sink, best-of-N repeats, with job descriptions set.
 * ``--plans DIR [--suffix before|after]`` writes ``.explain("formatted")``
   for each query to ``DIR/<query>_<suffix>.txt``.
+* ``--task-cost`` times the fixed cost of a Spark task with and without a
+  Python worker: a JVM-only ``spark.range(16, numPartitions=16)`` count, an
+  identity ``mapInPandas`` over the same 16 partitions, and the in-worker
+  ``importlib.invalidate_caches()`` call that PySpark makes at the start of
+  every Python task.  Interleaved, best of 3, in one session.
 * Session/conf methodology matches bench.py exactly (same task-slot cap,
   same small-input maxPartitionBytes override) so numbers are comparable
   with the driver's headline queries.
@@ -15,6 +20,7 @@ Usage:
   python bench_extra.py                      # time all queries at sf0.1
   python bench_extra.py --queries q23_lsh_candidates,q22_minhash_signatures
   python bench_extra.py --plans plans/r07 --suffix before --no-timing
+  python bench_extra.py --task-cost --out /tmp/task_cost.json
 """
 
 from __future__ import annotations
@@ -40,6 +46,87 @@ def _explain_formatted(df) -> str:
     return buf.getvalue()
 
 
+TASK_COST_PARTS = 16
+TASK_COST_REPEATS = 3
+
+
+def _identity_batches(batches):
+    # every package UDF imports the package in the worker; do the same so
+    # the worker runs exactly what a package mapInPandas task runs
+    import pdf_extraction_tests_spark  # noqa: F401
+
+    yield from batches
+
+
+def _invalidate_caches_ms(batches):
+    import importlib
+
+    import pandas as pd
+
+    import pdf_extraction_tests_spark  # noqa: F401
+
+    for _ in batches:
+        pass
+    t0 = time.perf_counter()
+    importlib.invalidate_caches()
+    yield pd.DataFrame({"ms": [(time.perf_counter() - t0) * 1e3]})
+
+
+def task_cost(spark) -> dict:
+    """Per-task cost of a JVM-only task, a Python identity task and the
+    in-worker ``importlib.invalidate_caches()`` call.  The job variants
+    report wall time per task (``wall / TASK_COST_PARTS``); the invalidate
+    variant reports the median over its tasks of one call each.  One
+    untimed round first spawns the workers and imports the package."""
+    import statistics
+
+    from pdf_extraction_tests_spark.shipping import ship_package
+
+    ship_package(spark)
+    n = TASK_COST_PARTS
+
+    def frame():
+        return spark.range(n, numPartitions=n)
+
+    def jvm_only() -> float:
+        t0 = time.perf_counter()
+        frame().count()
+        return (time.perf_counter() - t0) * 1e3 / n
+
+    def python_identity() -> float:
+        t0 = time.perf_counter()
+        frame().mapInPandas(_identity_batches, "id long").write.format(
+            "noop").mode("overwrite").save()
+        return (time.perf_counter() - t0) * 1e3 / n
+
+    def invalidate_caches() -> float:
+        rows = frame().mapInPandas(_invalidate_caches_ms, "ms double").collect()
+        return statistics.median(r.ms for r in rows)
+
+    variants = {
+        "jvm_only_ms_per_task": jvm_only,
+        "python_identity_ms_per_task": python_identity,
+        "invalidate_caches_ms": invalidate_caches,
+    }
+    for fn in variants.values():
+        fn()
+    runs: dict[str, list[float]] = {k: [] for k in variants}
+    with bench._StealMeter() as sm:
+        for _ in range(TASK_COST_REPEATS):
+            for name, fn in variants.items():
+                spark.sparkContext.setJobDescription(f"task_cost:{name}")
+                runs[name].append(round(fn(), 2))
+        spark.sparkContext.setJobDescription(None)
+    return {
+        "master": spark.sparkContext.master,
+        "partitions": n,
+        "host_cpus": os.cpu_count(),
+        "best": {k: min(v) for k, v in runs.items()},
+        "all_runs": runs,
+        "steal_pct": sm.steal_pct,
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get(
@@ -52,6 +139,8 @@ def main() -> None:
     ap.add_argument("--no-timing", action="store_true")
     ap.add_argument("--extract", action="store_true",
                     help="also time the extraction pipeline on the bench corpus")
+    ap.add_argument("--task-cost", action="store_true",
+                    help="only time the per-task cost of JVM and Python tasks")
     ap.add_argument("--out", default="", help="write JSON here too")
     args = ap.parse_args()
 
@@ -63,6 +152,10 @@ def main() -> None:
     spec.loader.exec_module(entry)
 
     spark = bench._session(f"local[{bench._effective_tasks()}]")
+    if args.task_cost:
+        _emit({"task_cost": task_cost(spark)}, args.out)
+        spark.stop()
+        return
     qmap = entry.queries()
     names = [n for n in args.queries.split(",") if n] or list(qmap)
     unknown = [n for n in names if n not in qmap]
@@ -124,11 +217,15 @@ def main() -> None:
         result["extract"] = {"runs": runs, "docs": n,
                              "best_sec": min(r["sec"] for r in runs)}
 
-    print(json.dumps(result))
-    if args.out:
-        with open(args.out, "w") as f:
-            json.dump(result, f, indent=1)
+    _emit(result, args.out)
     spark.stop()
+
+
+def _emit(result: dict, out: str) -> None:
+    print(json.dumps(result))
+    if out:
+        with open(out, "w") as f:
+            json.dump(result, f, indent=1)
 
 
 if __name__ == "__main__":

@@ -16,3 +16,15 @@ in :mod:`pdf_extraction_tests_spark.queries` and cross-checked against DuckDB.
 """
 
 __version__ = "0.1.0"
+
+import sys as _sys
+
+# In a Spark Python worker (SparkFiles is imported and flagged by the
+# worker's setup_spark_files before any task code unpickles this package),
+# stop the per-task importlib.invalidate_caches() from re-reading every zip
+# archive on sys.path.
+_spark_files = _sys.modules.get("pyspark.core.files")
+if _spark_files is not None and _spark_files.SparkFiles._is_running_on_worker:
+    from .shipping import install_zip_stat_check
+
+    install_zip_stat_check()

@@ -336,7 +336,11 @@ def token_count_col(text_col: str, tokenizer: str = "whitespace",
     thousand tuples, broadcast once per executor).
     """
     if tokenizer == "whitespace":
-        return F.size(F.split(F.trim(F.col(text_col)), r"\s+")).cast("long")
+        # NULL text has no count, as DuckDB's len(NULL); bare size() gives
+        # -1 for it when ANSI is off (spark.sql.legacy.sizeOfNull)
+        text = F.col(text_col)
+        return F.when(text.isNotNull(),
+                      F.size(F.split(F.trim(text), r"\s+"))).cast("long")
     if tokenizer != "bpe":
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
     from pyspark.sql.functions import pandas_udf

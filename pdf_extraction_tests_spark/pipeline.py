@@ -21,9 +21,11 @@ Design (SURVEY.md §3.4 / §4 custom items):
   direct path's ``mapInPandas`` is therefore the only Python stage that runs
   once per scan split; AQE coalesces the gathered exchange, so the chunked
   path's Python stages run only on the partitions that hold oversize docs.
-  Each Python task has a fixed start-up cost (160-260 ms measured on a
-  4-core host) whatever its row count, so the number of Python tasks, not
-  the bytes, is what this routing saves.
+  Each Python task has a fixed start-up cost whatever its row count
+  (~35 ms wall per task against ~10 ms for a JVM-only task, 2 slots on a
+  4-core host, once the worker's zip finders are stat-checked — see
+  :mod:`.shipping`), so the number of Python tasks, not the bytes, is what
+  this routing saves.
 * **Lineage / resume.** Every run appends one row per ``part_key`` to a
   checkpoint table; a restart anti-joins input partitions against completed
   rows and re-processes only the remainder — batch incrementality standing in
@@ -362,11 +364,14 @@ def extract_chunked(docs: DataFrame, chunk_spans: int = DEFAULT_CHUNK_SPANS,
     proportional to the (few) huge docs.
 
     The split is a Python stage, and every Python task pays a fixed
-    start-up cost whatever its row count.  So ``docs`` should already be
-    gathered off the scan: :func:`extract_docs` repartitions its oversize
-    docs on ``doc_id`` (a JVM-side exchange that AQE coalesces) before
-    calling this.  Called directly on a scan, the split runs one Python
-    task per scan split even when only one split holds an oversize doc.
+    start-up cost whatever its row count (~35 ms against ~10 ms for a
+    JVM-only task on a 4-core host; the first task in each worker pays
+    ~150 ms more for its zip-directory re-reads).  So ``docs`` should
+    already be gathered off the scan: :func:`extract_docs` repartitions its
+    oversize docs on ``doc_id`` (a JVM-side exchange that AQE coalesces)
+    before calling this.  Called directly on a scan, the split runs one
+    Python task per scan split even when only one split holds an oversize
+    doc.
     """
     chunk_schema = T.StructType(
         [

@@ -1239,30 +1239,29 @@ def q45(spark, sf_dir, tokenizer: str = "whitespace"):
         W.orderBy(F.desc("quality"), F.asc("_sub"))
         .rowsBetween(W.unboundedPreceding, -1)
     )
+    # _off stays NULL while every earlier bucket's count is NULL, so
+    # cum_tokens below is NULL exactly where the oracle's global running
+    # sum is (NULL text has a NULL count and sum() skips it)
     offsets = totals.select(
-        "quality", "_sub",
-        F.coalesce(F.sum("_bt").over(off_w), F.lit(0).cast("long")).alias("_off"),
-    )
+        "quality", "_sub", F.sum("_bt").over(off_w).alias("_off"))
     # Budget prune BEFORE the join-back (guide §2.3 — shuffle fewer bytes):
-    # cum_tokens = _off + running_sum(_toks) >= _off (token counts are
-    # never negative; a NULL count contributes 0 to the window sum), so a
-    # bucket with _off > 20000 can only yield rows the final filter drops.
-    # Keeping only _off <= 20000 buckets turns the broadcast join into a
+    # cum_tokens >= _off (token counts are never negative), so a bucket
+    # with _off > 20000 can only yield rows the final filter drops.
+    # Keeping only the other buckets turns the broadcast join into a
     # selective semi-filter: the per-(quality,_sub) window exchange now
     # carries just the head buckets instead of the whole corpus — at
     # 100 TB this is the difference between shuffling every doc and
     # shuffling only the budget's candidate buckets.  Output identical.
-    offsets = offsets.filter(F.col("_off") <= F.lit(20000))
+    off = F.col("_off")
+    offsets = offsets.filter(off.isNull() | (off <= F.lit(20000)))
     run_w = (
         W.partitionBy("quality", "_sub").orderBy(F.asc("doc_id"))
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
+    run = F.sum("_toks").over(run_w)
     return (
         scored.join(F.broadcast(offsets), ["quality", "_sub"])
-        .select(
-            "doc_id",
-            (F.col("_off") + F.sum("_toks").over(run_w)).alias("cum_tokens"),
-        )
+        .select("doc_id", F.coalesce(off + run, off, run).alias("cum_tokens"))
         .filter(F.col("cum_tokens") <= 20000)
     )
 

@@ -129,3 +129,33 @@ def test_entry_rows_only_extras_run(spark, name):
     df = _ENTRY_EXTRAS[name](spark, SF_DIR)
     assert len(df.schema.fields) > 0
     assert df.count() > 0
+
+
+def test_q45_null_text_matches_oracle_under_both_ansi_modes(spark, tmp_path):
+    """NULL text has no token count (DuckDB's ``len(NULL)`` is NULL), with
+    ANSI on or off — with ANSI off Spark's ``size(NULL)`` is -1, which
+    used to pull every later running total down by one.  Doc 1 is also the
+    first row of its (quality, sub-bucket), so its running total is NULL
+    inside the bucket while the oracle's global running total is not."""
+    pd.DataFrame({
+        "doc_id": [1, 2, 3, 4, 5, 6],
+        "text": [None,
+                 "the cat sat on the mat and the dog ran to the park today",
+                 "1 2 3", None,
+                 "a study of the effect of rain and wind to the north coast",
+                 "4 5"],
+    }).to_parquet(tmp_path / "documents.parquet")
+    spec = next(s for s in REGISTRY if s.name == "q45_token_budget_head")
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{tmp_path}/documents.parquet')")
+    want = _canon(con.execute(spec.sql).df())
+    assert len(want) == 6
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            got = _canon(spec.fn(spark, str(tmp_path)).toPandas())
+            assert got == want, f"ansi={ansi}"
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
