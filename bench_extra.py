@@ -12,6 +12,13 @@ plan capture live here (guide §1.1/§1.4/§1.5).
   identity ``mapInPandas`` over the same 16 partitions, and the in-worker
   ``importlib.invalidate_caches()`` call that PySpark makes at the start of
   every Python task.  Interleaved, best of 3, in one session.
+* ``--timeline`` records when each stage of a warm ``extract_docs`` pass
+  runs, on the sparkbench seed-1 extract-bulk corpus in the sparkbench
+  session (local[2], 512k splits): per stage its submit, first-task launch
+  and completion times (seconds from the pass start), its task count, and
+  every task's launch time and duration, read through a job group and the
+  status store as ``sparkbench.tracing.stage_records`` does.  One warm-up
+  pass, then TIMELINE_PASSES recorded passes.
 * Session/conf methodology matches bench.py exactly (same task-slot cap,
   same small-input maxPartitionBytes override) so numbers are comparable
   with the driver's headline queries.
@@ -21,6 +28,7 @@ Usage:
   python bench_extra.py --queries q23_lsh_candidates,q22_minhash_signatures
   python bench_extra.py --plans plans/r07 --suffix before --no-timing
   python bench_extra.py --task-cost --out /tmp/task_cost.json
+  python bench_extra.py --timeline --out /tmp/extract_timeline.json
 """
 
 from __future__ import annotations
@@ -127,6 +135,103 @@ def task_cost(spark) -> dict:
     }
 
 
+TIMELINE_PASSES = 4
+
+
+def _stage_timeline(spark, group: str, t0_ms: int) -> list[dict]:
+    """Per executed stage of the jobs in ``group``: submit, first-task
+    launch and completion times in seconds from ``t0_ms`` (epoch ms), the
+    task count, and each task's (launch, duration) in seconds."""
+    store = spark._jsc.sc().statusStore()  # noqa: SLF001
+    to_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava  # noqa: SLF001
+    tracker = spark.sparkContext.statusTracker()
+
+    def rel(opt_date):
+        return (round((opt_date.get().getTime() - t0_ms) / 1e3, 3)
+                if opt_date.isDefined() else None)
+
+    out = []
+    for job in sorted(tracker.getJobIdsForGroup(group)):
+        info = tracker.getJobInfo(job)
+        for sid in sorted(info.stageIds if info else []):
+            try:
+                sd = store.lastStageAttempt(sid)
+            except Exception:  # noqa: BLE001 -- skipped or evicted stage
+                continue
+            if sd.status().toString() == "SKIPPED":
+                continue
+            tasks = to_java(store.taskList(sid, sd.attemptId(), 1 << 30))
+            out.append({
+                "job": job, "stage": sid, "name": sd.name(),
+                "submit_s": rel(sd.submissionTime()),
+                "first_launch_s": rel(sd.firstTaskLaunchedTime()),
+                "complete_s": rel(sd.completionTime()),
+                "tasks": sd.numTasks(),
+                "input_bytes": sd.inputBytes(),
+                "shuffle_write_records": sd.shuffleWriteRecords(),
+                "task_launch_dur_s": sorted(
+                    [round((t.launchTime().getTime() - t0_ms) / 1e3, 3),
+                     round(t.duration().get() / 1e3, 3)]
+                    for t in tasks if t.duration().isDefined()),
+            })
+    return out
+
+
+def extract_timeline() -> dict:
+    """Stage timeline of warm extract_docs passes to the noop sink on the
+    sparkbench seed-1 extract-bulk corpus, in the sparkbench session."""
+    import shutil
+    import tempfile
+    from statistics import median
+
+    from sparkbench import workloads as W
+
+    from pdf_extraction_tests_spark.pipeline import extract_docs
+    from pdf_extraction_tests_spark.shipping import ship_package
+
+    work = tempfile.mkdtemp(prefix="timeline-")
+    run = W.Run(REPO, work, "extract-bulk", 1)
+    run.start_session()
+    try:
+        run.ensure_inputs()
+        spark = run.spark
+        ship_package(spark)
+        W.warmup(run)
+        sc = spark.sparkContext
+        records = []
+        for i in range(TIMELINE_PASSES + 1):  # pass 0 warms the plan and the JIT
+            group = f"timeline-{i}"
+            sc.setJobGroup(group, "extract_docs timeline")
+            W.settle(run)
+            t0_ms = int(time.time() * 1e3)
+            t0 = time.perf_counter()
+            df = extract_docs(run.corpus_df())
+            build_s = time.perf_counter() - t0
+            W.noop(df)
+            wall_s = time.perf_counter() - t0
+            stages = _stage_timeline(spark, group, t0_ms)
+            busy = sum(d for s in stages for _, d in s["task_launch_dur_s"])
+            records.append({
+                "wall_s": round(wall_s, 3), "build_s": round(build_s, 3),
+                "stages": len(stages),
+                "tasks": sum(s["tasks"] for s in stages),
+                # share of slot time with no task running
+                "slot_idle_frac": round(1 - busy / (W.SLOTS * wall_s), 3),
+                "stage_timeline": stages,
+            })
+        warm = records[1:]
+        return {
+            "master": W.MASTER, "host_cpus": os.cpu_count(),
+            "corpus_docs": run.stats["corpus_docs"],
+            "median": {k: median(r[k] for r in warm) for k in
+                       ("wall_s", "build_s", "stages", "tasks", "slot_idle_frac")},
+            "passes": warm,
+        }
+    finally:
+        run.spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get(
@@ -141,8 +246,15 @@ def main() -> None:
                     help="also time the extraction pipeline on the bench corpus")
     ap.add_argument("--task-cost", action="store_true",
                     help="only time the per-task cost of JVM and Python tasks")
+    ap.add_argument("--timeline", action="store_true",
+                    help="only record the stage timeline of warm extract_docs "
+                         "passes on the sparkbench seed-1 corpus")
     ap.add_argument("--out", default="", help="write JSON here too")
     args = ap.parse_args()
+
+    if args.timeline:
+        _emit({"extract_timeline": extract_timeline()}, args.out)
+        return
 
     import importlib.util
 

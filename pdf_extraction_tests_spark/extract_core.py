@@ -11,7 +11,7 @@ Representation note: documents are small (tens to hundreds of regions), so
 the per-document kernel works on plain lists of dict records — pandas frames
 at this size cost ~10-30x in per-op overhead (measured: 35 docs/s/thread
 frame-based vs >400 list-based).  pandas appears only at the Arrow batch
-boundary (:func:`extract_docs_frame`).
+boundary (:func:`extract_docs_frame`, and the Spark stage's batch loop).
 
 Per-document stages and their reference counterparts:
 
@@ -229,11 +229,6 @@ HTML_MIN_BLOCK_CHARS = 10
 # A region record is a plain dict with keys:
 #   page, x, y, w, h, text, element_type, media_ref, offset, parse_failure
 
-REGION_COLUMNS = [
-    "page", "x", "y", "w", "h", "text", "element_type",
-    "media_ref", "offset", "parse_failure",
-]
-
 
 def _rec(page, x, y, w, h, text, etype, media_ref, offset, pf):
     return {
@@ -292,9 +287,9 @@ def spans_to_regions(spans: Iterable[dict]) -> list[dict]:
     ``spans`` is an iterable of dicts with keys kind/text/media_ref/offset.
     Media spans become placeholder rows (re-anchored to the geometry of the
     preceding block by :func:`reanchor_media`, which must run on the fully
-    assembled document — this keeps per-chunk parsing order-independent so
-    the oversized-doc path can parse chunks in parallel); parse failures
-    become counter rows (parse_failure=1).
+    assembled document — this keeps per-chunk parsing independent of the
+    other chunks, so the oversized-doc path can parse chunk by chunk and
+    concatenate); parse failures become counter rows (parse_failure=1).
     """
     rows: list[dict] = []
     for sp in spans:
@@ -329,8 +324,8 @@ def reanchor_media(records: list[dict]) -> list[dict]:
     position it inherits (page, x, y) from the last text-bearing record
     before it in input (offset) order — the ``offset`` tiebreak in
     :func:`reading_order` then places it immediately after that block.
-    Runs on the assembled per-document records so chunk-parallel parsing and
-    single-pass parsing yield identical results.
+    Runs on the assembled per-document records so chunk-by-chunk parsing
+    and single-pass parsing yield identical results.
     """
     out = sorted(records, key=lambda r: r["offset"])
     page, ax, ay = 1, 0, -1
@@ -1449,13 +1444,6 @@ def extract_simple_frame(pdf: pd.DataFrame,
     return pd.DataFrame(results, columns=EXTRACT_RESULT_COLUMNS)
 
 
-def extract_from_regions(doc_id: str, regions: pd.DataFrame,
-                         cleaning_method: str = "hybrid") -> dict:
-    """Region-DataFrame wrapper (used by the chunked skew path, where stage-1
-    output crosses an Arrow boundary as the REGIONS schema)."""
-    return extract_from_records(doc_id, regions.to_dict("records"), cleaning_method)
-
-
 def extract_document(doc_id: str, spans: Iterable[dict],
                      cleaning_method: str = "hybrid") -> dict:
     """spans-in -> extracted-doc-out; the per-document unit of work."""
@@ -1465,8 +1453,10 @@ def extract_document(doc_id: str, spans: Iterable[dict],
 def extract_docs_frame(pdf: pd.DataFrame, cleaning_method: str = "hybrid") -> pd.DataFrame:
     """Extract every document in a nested (doc_id, spans) pandas frame.
 
-    This is the body of the Spark ``mapInPandas`` stage and, called directly,
-    the single-process local oracle for differential tests.
+    The single-process local oracle for differential tests: the Spark
+    ``mapInPandas`` stage runs the same :func:`extract_document` per doc
+    (or :func:`spans_to_regions` per chunk, then
+    :func:`extract_from_records`, for an oversized doc).
     """
     results = [
         extract_document(row.doc_id, row.spans if row.spans is not None else [],

@@ -655,9 +655,12 @@ def with_token_counts(docs: DataFrame, text_col: str = "text",
     frozen seed default; pass a corpus-learned table from
     ``functions.bpe.load_merge_table`` for corpus-calibrated counts."""
     t = F.col(text_col)
-    ws_tokens = F.size(F.split(F.trim(t), r"\s+"))
+    # NULL text has no count, as DuckDB's len(NULL); bare size() gives -1
+    # for it when ANSI is off (spark.sql.legacy.sizeOfNull)
+    ws_tokens = F.when(t.isNotNull(), F.size(F.split(F.trim(t), r"\s+")))
     # RE2-compatible (no lookarounds) so the DuckDB oracle is exact
-    pieces = F.size(F.expr(rf"regexp_extract_all({text_col}, '[a-zA-Z0-9]+|[^a-zA-Z0-9\\s]', 0)"))
+    pieces = F.when(t.isNotNull(), F.size(F.expr(
+        rf"regexp_extract_all({text_col}, '[a-zA-Z0-9]+|[^a-zA-Z0-9\\s]', 0)")))
     out = docs.withColumn("ws_tokens", ws_tokens).withColumn(
         "subword_pieces", pieces)
     if tokenizer == "bpe":

@@ -8,30 +8,30 @@ Design (SURVEY.md §3.4 / §4 custom items):
   ``part_key = pmod(xxhash64(doc_id), P)`` for load balance and stable
   checkpoint identity.
 * **Skew routing.** Documents whose total span text exceeds a threshold are
-  routed to a chunked path: their span arrays are sliced into chunk rows,
-  parsed chunk-parallel (the expensive stage — in production this is where
-  PDF bytes are rasterized/OCR'd), then re-assembled per document with
-  ``applyInPandas`` for the cheap doc-global layout/boundary logic.
-  The reference OOMs silently on big docs (eager per-page loop,
-  Document_Processor_DocLayout_YOLO_Code_v10.R:32-191); the north rule makes
-  sub-batching mandatory.
-* **Python over the scan once.** The size test is a JVM expression in the
-  scan stage, and the oversize docs are gathered JVM-side through one
-  exchange on ``doc_id`` before any Python stage of the chunked path.  The
-  direct path's ``mapInPandas`` is therefore the only Python stage that runs
-  once per scan split; AQE coalesces the gathered exchange, so the chunked
-  path's Python stages run only on the partitions that hold oversize docs.
-  Each Python task has a fixed start-up cost whatever its row count
-  (~35 ms wall per task against ~10 ms for a JVM-only task, 2 slots on a
-  4-core host, once the worker's zip finders are stat-checked — see
-  :mod:`.shipping`), so the number of Python tasks, not the bytes, is what
-  this routing saves.
+  split into chunk rows before the Arrow crossing, JVM-side in the scan
+  stage: a running character budget gives each doc's chunk boundaries, a
+  small int array is exploded to one row per chunk, and each chunk's spans
+  are sliced in a codegen'd projection.  The same Python batch function
+  parses each chunk to regions (the expensive stage — in production this is
+  where PDF bytes are rasterized/OCR'd) and runs the cheap doc-global
+  layout/boundary logic once the doc's last chunk arrives, so a multi-MB
+  doc never crosses as one Arrow row.  The reference OOMs silently on big
+  docs (eager per-page loop, Document_Processor_DocLayout_YOLO_Code_v10.R:
+  32-191); the north rule makes sub-batching mandatory.
+* **Python over the scan once.** Extraction is one ``mapInPandas`` with no
+  Union and no exchange of its own, so every doc, oversize or not, is
+  extracted in the task that scanned it.  Each Python task has a fixed
+  start-up cost whatever its row count (~35 ms wall per task against
+  ~10 ms for a JVM-only task, 2 slots on a 4-core host, once the worker's
+  zip finders are stat-checked — see :mod:`.shipping`), and a stage boundary
+  leaves slots idle while the stages before it finish, so one stage is the
+  cheapest shape.
 * **Lineage / resume.** Every run appends one row per ``part_key`` to a
   checkpoint table; a restart anti-joins input partitions against completed
   rows and re-processes only the remainder — batch incrementality standing in
   for the reference's "skip if .RData exists" idiom (v10.R:3712-3723).
-* **No per-row Python.** Only Arrow-vectorized ``mapInPandas`` /
-  ``applyInPandas``; everything else is native column expressions.
+* **No per-row Python.** Only Arrow-vectorized ``mapInPandas``; everything
+  else is native column expressions.
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from . import extract_core as ec
-from .schema import CHECKPOINT, DOCS, EXTRACTED_WITH_PART, REGIONS
+from .schema import CHECKPOINT, EXTRACTED_WITH_PART
 from .tables import read_table, write_table
 
 # part_key cardinality: the checkpoint/resume granularity.  Deliberately
@@ -133,7 +133,7 @@ def _spans_to_records(spans) -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
-# normal path: one mapInPandas stage, zero extra shuffles
+# extraction: one mapInPandas over the scan, oversize docs split JVM-side
 # ---------------------------------------------------------------------------
 
 
@@ -148,8 +148,12 @@ def _spans_to_records(spans) -> list[dict]:
 # (cheap — measured inside the same probe), and result spans returned as
 # four arrays re-zipped to the public struct schema JVM-side.  The kernel
 # and the public EXTRACTED_WITH_PART schema are untouched.
-
-_EXTRACT_FLAT_COLS = ["_kinds", "_texts", "_refs", "_orders"]
+#
+# The JVM expressions below are SQL strings (F.expr / selectExpr), not
+# Python-API lambdas: a lambda in a higher-order function costs py4j round
+# trips per node at build time, a SQL string parses JVM-side in one call,
+# and the build runs inside every pass and every streaming micro-batch.
+# Only int()-coerced parameters are interpolated.
 
 _EXTRACT_FLAT_OUT = T.StructType(
     [f for f in EXTRACTED_WITH_PART.fields if f.name != "spans"]
@@ -162,6 +166,56 @@ _EXTRACT_FLAT_OUT = T.StructType(
 )
 
 _FLAT_OUT_NAMES = [f.name for f in _EXTRACT_FLAT_OUT.fields]
+
+# summed span text; NULL text counts 0 (a NULL spans array sums to NULL,
+# so that doc is never chunked)
+_TOTAL_CHARS_SQL = "aggregate(spans, 0L, (acc, s) -> acc + coalesce(length(s.text), 0))"
+
+_REZIP_SQL = (
+    "transform(arrays_zip(_kinds, _texts, _refs, _orders), x -> named_struct("
+    "'kind', x._kinds, 'text', x._texts, 'media_ref', x._refs, "
+    "'order', x._orders)) AS spans"
+)
+
+
+def _chunk_bounds_sql(chunk_spans: int, chunk_chars: int) -> str:
+    """One doc's chunk boundaries ``[0, e1, ..., en]``: chunk ``c`` is
+    ``spans[b[c]:b[c+1]]``.  A chunk closes once its text reaches
+    ``chunk_chars`` or it holds ``chunk_spans`` spans; empty or NULL spans
+    give one empty chunk."""
+    grow = "coalesce(length(s.text), 0)"
+    return f"""coalesce(aggregate(spans,
+        named_struct('i', 0, 'n', 0, 'cum', 0L, 'b', array(0)),
+        (acc, s) -> IF(acc.cum + {grow} >= {int(chunk_chars)}
+                       OR acc.n + 1 >= {int(chunk_spans)},
+          named_struct('i', acc.i + 1, 'n', 0, 'cum', 0L,
+                       'b', array_append(acc.b, acc.i + 1)),
+          named_struct('i', acc.i + 1, 'n', acc.n + 1,
+                       'cum', acc.cum + {grow}, 'b', acc.b)),
+        acc -> IF(acc.n > 0 OR acc.i = 0, array_append(acc.b, acc.i), acc.b)),
+      array(0, 0))"""
+
+
+def _chunk_rows(docs: DataFrame, chunk_if: str, chunk_spans: int,
+                chunk_chars: int) -> DataFrame:
+    """docs(doc_id, part_key, spans) -> the flat crossing rows: one row per
+    unchunked doc (``_chunk = -1``, ``_n = 0``) and, for each doc where the
+    SQL condition ``chunk_if`` holds, one row per chunk (``_chunk`` =
+    0.._n-1, in order).  All JVM-side, in the scan stage: a small int array
+    is exploded and each chunk's spans are sliced in a codegen'd projection,
+    so a multi-MB doc never crosses as one Arrow row."""
+    bounds = f"IF({chunk_if}, {_chunk_bounds_sql(chunk_spans, chunk_chars)}, array(0))"
+    spans = ("IF(_chunk < 0, spans, "
+             "slice(spans, _b[_chunk] + 1, _b[_chunk + 1] - _b[_chunk]))")
+    return (
+        docs.selectExpr("doc_id", "part_key", "spans", f"{bounds} AS _b")
+        .selectExpr("doc_id", "part_key", "spans", "_b", "explode(IF(size(_b) = 1, "
+                    "array(-1), sequence(0, size(_b) - 2))) AS _chunk")
+        .selectExpr("doc_id", "part_key", "_chunk", "size(_b) - 1 AS _n",
+                    *[f"({spans}).{field} AS {name}" for field, name in (
+                        ("kind", "_kinds"), ("text", "_texts"),
+                        ("media_ref", "_refs"), ("offset", "_orders"))])
+    )
 
 
 def _records_from_flat(pdf: pd.DataFrame) -> list[list[dict]]:
@@ -179,49 +233,97 @@ def _records_from_flat(pdf: pd.DataFrame) -> list[list[dict]]:
     ]
 
 
+def _flat_out(results: list[dict], part_keys: list[int]) -> pd.DataFrame:
+    out = pd.DataFrame(results, columns=ec.EXTRACT_RESULT_COLUMNS)
+    spans = out.pop("spans")
+    out["part_key"] = part_keys
+    out["_kinds"] = spans.map(lambda sp: [s["kind"] for s in sp])
+    out["_texts"] = spans.map(lambda sp: [s["text"] for s in sp])
+    out["_refs"] = spans.map(lambda sp: [s["media_ref"] for s in sp])
+    out["_orders"] = spans.map(lambda sp: [s["order"] for s in sp])
+    return out[_FLAT_OUT_NAMES]
+
+
 def _extract_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """An unchunked doc is extracted from its row.  A chunked doc's chunk
+    rows arrive in order; each chunk's regions append to the open doc, and
+    the doc is extracted at its last chunk (media re-anchoring and every
+    doc-global step run on the assembled regions).  The open doc carries
+    across Arrow batches; a row out of that sequence raises rather than
+    emitting a partial doc."""
+    open_id, next_chunk, regions = None, 0, []
     for pdf in batches:
         if pdf.empty:
             continue
-        frame = pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "spans": _records_from_flat(pdf)})
-        out = ec.extract_docs_frame(frame)
-        spans = out["spans"]
-        out = out.drop(columns=["spans"])
-        out["part_key"] = pdf["part_key"].to_numpy()
-        out["_kinds"] = spans.map(lambda sp: [s["kind"] for s in sp])
-        out["_texts"] = spans.map(lambda sp: [s["text"] for s in sp])
-        out["_refs"] = spans.map(lambda sp: [s["media_ref"] for s in sp])
-        out["_orders"] = spans.map(lambda sp: [s["order"] for s in sp])
-        yield out[_FLAT_OUT_NAMES]
+        results, part_keys = [], []
+        for doc_id, part_key, chunk, n, spans in zip(
+                pdf["doc_id"], pdf["part_key"], pdf["_chunk"], pdf["_n"],
+                _records_from_flat(pdf)):
+            if max(chunk, 0) != next_chunk or (chunk > 0 and doc_id != open_id):
+                raise ValueError(
+                    f"chunk {chunk} of doc {doc_id!r} out of sequence "
+                    f"(open doc {open_id!r} expects chunk {next_chunk})")
+            if chunk < 0:
+                results.append(ec.extract_document(doc_id, spans))
+                part_keys.append(part_key)
+                continue
+            open_id, next_chunk = doc_id, chunk + 1
+            regions.extend(ec.spans_to_regions(spans))
+            if next_chunk == n:
+                results.append(ec.extract_from_records(doc_id, regions))
+                part_keys.append(part_key)
+                open_id, next_chunk, regions = None, 0, []
+        if results:
+            yield _flat_out(results, part_keys)
+    if open_id is not None:
+        raise ValueError(f"doc {open_id!r} ended before its last chunk")
+
+
+def _extract(docs: DataFrame, chunk_if: str,
+             chunk_spans: int = DEFAULT_CHUNK_SPANS,
+             chunk_chars: int = DEFAULT_CHUNK_CHARS) -> DataFrame:
+    """The extraction stage behind every public entry point: chunk rows
+    (:func:`_chunk_rows`), one mapInPandas, and the span re-zip, with no
+    exchange — so it runs in the stage of whatever produced ``docs``."""
+    from .shipping import ship_package
+
+    ship_package(docs.sparkSession)
+    raw = _chunk_rows(docs, chunk_if, chunk_spans, chunk_chars).mapInPandas(
+        _extract_batches_flat, schema=_EXTRACT_FLAT_OUT)
+    return raw.selectExpr(*[
+        _REZIP_SQL if f.name == "spans" else f.name
+        for f in EXTRACTED_WITH_PART.fields])
 
 
 def extract_direct(docs: DataFrame) -> DataFrame:
-    """docs(doc_id, spans, part_key) -> extracted, one Arrow stage.
-
-    Crosses the Python boundary flat (see note above) and re-zips the
-    span struct JVM-side so callers see the unchanged EXTRACTED_WITH_PART
-    schema."""
-    raw = _flat_spans_input(docs, "part_key").mapInPandas(
-        _extract_batches_flat, schema=_EXTRACT_FLAT_OUT)
-    spans = F.transform(
-        F.arrays_zip("_kinds", "_texts", "_refs", "_orders"),
-        lambda x: F.struct(
-            x["_kinds"].alias("kind"),
-            x["_texts"].alias("text"),
-            x["_refs"].alias("media_ref"),
-            x["_orders"].alias("order"),
-        ),
-    )
-    return raw.withColumn("spans", spans).select(
-        *[f.name for f in EXTRACTED_WITH_PART.fields])
+    """docs(doc_id, spans, part_key) -> extracted, no doc chunked: one
+    mapInPandas over ``docs`` with the flat crossing (see the note above)
+    and the unchanged EXTRACTED_WITH_PART schema."""
+    return _extract(docs, "false")
 
 
-def _flat_spans_input(docs: DataFrame, *extra_cols: str) -> DataFrame:
+def extract_chunked(docs: DataFrame, chunk_spans: int = DEFAULT_CHUNK_SPANS,
+                    chunk_chars: int = DEFAULT_CHUNK_CHARS) -> DataFrame:
+    """docs(doc_id, spans, part_key) -> extracted, every doc chunked: the
+    same stage as :func:`extract_direct`, with each doc's spans sliced
+    JVM-side into chunk rows before the Arrow crossing.
+
+    Chunks are cut on a running CHARACTER budget (default 200k), not span
+    count — a multi-MB doc made of a few hundred huge spans must still
+    split into many parse units (north_star: "multi-MB spans split into
+    sub-batches before the Arrow UDF"); ``chunk_spans`` remains a secondary
+    cap for many-tiny-span docs.  Each chunk is parsed to regions in its
+    own call, and the doc is assembled in the same task once its last chunk
+    arrives, so no chunk or region row crosses an exchange.
+    """
+    return _extract(docs, "true", chunk_spans, chunk_chars)
+
+
+def _flat_spans_input(docs: DataFrame) -> DataFrame:
     """Project the spans struct array into four parallel arrays for a flat
-    boundary crossing (see the note above extract_direct)."""
+    boundary crossing (see the flat-boundary note above _EXTRACT_FLAT_OUT)."""
     return docs.select(
-        "doc_id", *extra_cols,
+        "doc_id",
         F.col("spans.kind").alias("_kinds"),
         F.col("spans.text").alias("_texts"),
         F.col("spans.media_ref").alias("_refs"),
@@ -293,103 +395,6 @@ def extract_docs_simple(docs: DataFrame,
     if "part_key" not in docs.columns:
         docs = with_part_key(docs, num_parts)
     return docs.mapInPandas(_extract_simple_batches, schema=EXTRACTED_WITH_PART)
-
-
-# ---------------------------------------------------------------------------
-# skew path: chunk-parallel parse, then per-doc assemble
-# ---------------------------------------------------------------------------
-
-
-def _split_chunk_rows(batches: Iterator[pd.DataFrame],
-                      chunk_spans: int, chunk_chars: int) -> Iterator[pd.DataFrame]:
-    """Stage 0 (narrow): slice each oversized doc's span array into chunk
-    rows on a running character budget."""
-    for pdf in batches:
-        rows = []
-        for doc_id, part_key, spans in zip(pdf["doc_id"], pdf["part_key"], pdf["spans"]):
-            spans = _spans_to_records(spans)
-            cur: list[dict] = []
-            cum = 0
-            chunk = 0
-            for sp in spans:
-                cur.append(sp)
-                cum += len(sp.get("text") or "")
-                if cum >= chunk_chars or len(cur) >= chunk_spans:
-                    rows.append((doc_id, int(part_key), chunk, cur))
-                    cur, cum = [], 0
-                    chunk += 1
-            if cur or not spans:
-                rows.append((doc_id, int(part_key), chunk, cur))
-        yield pd.DataFrame(rows, columns=["doc_id", "part_key", "chunk", "spans"])
-
-
-def _parse_chunk_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Stage 1 (chunk-parallel): raw span chunks -> parsed region rows."""
-    cols = [f.name for f in REGIONS.fields]
-    for pdf in batches:
-        frames = []
-        for doc_id, part_key, spans in zip(pdf["doc_id"], pdf["part_key"], pdf["spans"]):
-            recs = ec.spans_to_regions(_spans_to_records(spans))
-            if not recs:
-                continue
-            f = pd.DataFrame(recs, columns=ec.REGION_COLUMNS)
-            f.insert(0, "doc_id", doc_id)
-            f.insert(1, "part_key", int(part_key))
-            frames.append(f[cols])
-        yield (pd.concat(frames, ignore_index=True) if frames
-               else pd.DataFrame(columns=cols))
-
-
-def _assemble_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Stage 2 (per document): assembled regions -> extracted record."""
-    res = ec.extract_from_regions(pdf["doc_id"].iloc[0], pdf)
-    out = pd.DataFrame([res], columns=ec.EXTRACT_RESULT_COLUMNS)
-    out["part_key"] = int(pdf["part_key"].iloc[0])
-    return out
-
-
-def extract_chunked(docs: DataFrame, chunk_spans: int = DEFAULT_CHUNK_SPANS,
-                    chunk_chars: int = DEFAULT_CHUNK_CHARS) -> DataFrame:
-    """Oversized documents: slice spans into chunk rows (narrow) ->
-    spread + parse chunk-parallel -> assemble per doc.
-
-    Chunks are cut on a running CHARACTER budget (default 200k), not span
-    count — a multi-MB doc made of a few hundred huge spans must still
-    split into many parse units (north_star: "multi-MB spans split into
-    sub-batches before the Arrow UDF"); ``chunk_spans`` remains a secondary
-    cap for many-tiny-span docs.  The slicing happens in a narrow
-    mapInPandas over the nested array (no per-span explode — exploding
-    multi-MB docs into one shuffle row per span cost more than the parse);
-    the shuffles are the chunk spread and the per-doc reassembly, both
-    proportional to the (few) huge docs.
-
-    The split is a Python stage, and every Python task pays a fixed
-    start-up cost whatever its row count (~35 ms against ~10 ms for a
-    JVM-only task on a 4-core host; the first task in each worker pays
-    ~150 ms more for its zip-directory re-reads).  So ``docs`` should
-    already be gathered off the scan: :func:`extract_docs` repartitions its
-    oversize docs on ``doc_id`` (a JVM-side exchange that AQE coalesces)
-    before calling this.  Called directly on a scan, the split runs one
-    Python task per scan split even when only one split holds an oversize
-    doc.
-    """
-    chunk_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("part_key", T.IntegerType(), False),
-            T.StructField("chunk", T.IntegerType(), False),
-            T.StructField("spans", DOCS["spans"].dataType, True),
-        ]
-    )
-    chunk_rows = docs.select("doc_id", "part_key", "spans").mapInPandas(
-        lambda it: _split_chunk_rows(it, chunk_spans, chunk_chars),
-        schema=chunk_schema,
-    )
-    spread = chunk_rows.repartition("doc_id", "chunk")
-    regions = spread.mapInPandas(_parse_chunk_rows, schema=REGIONS)
-    return regions.groupBy("doc_id").applyInPandas(
-        lambda pdf: _assemble_doc(pdf), schema=EXTRACTED_WITH_PART
-    )
 
 
 DEBUG_BOUNDARY_SCHEMA = T.StructType(
@@ -490,20 +495,16 @@ def extract_docs(
     When the scan already yields enough splits, extraction fuses directly
     onto it: shuffling nested span payloads costs ~3x the extraction itself
     (measured: 214 vs 73 thread-seconds on the bench corpus), and a parquet
-    scan's splits are as balanced as a hash shuffle's.  The salted
-    repartition happens BEFORE size computation and routing so every
-    downstream stage runs at full parallelism.
+    scan's splits are as balanced as a hash shuffle's.
 
-    Either way Python runs over the scan once: oversize docs are filtered
-    by a JVM size expression and gathered through one exchange on
-    ``doc_id`` before the chunked path's first Python stage, so only the
-    direct path's ``mapInPandas`` runs on every scan split.  When no doc is
-    oversize one empty split task remains: AQE cannot prove that a Python
-    map over empty input is empty, so it keeps one coalesced partition.
+    Either way extraction is ONE mapInPandas with no exchange of its own:
+    a JVM size expression picks the docs whose summed span text exceeds
+    ``oversize_chars``, and only those are split JVM-side into chunk rows
+    (:func:`extract_chunked`'s budget) in the same stage.  Every other doc
+    crosses as one row.  Python therefore runs once per scan split (or per
+    salted partition), and each oversize doc is parsed and assembled inside
+    the task that scanned it, in parallel with the other splits.
     """
-    from .shipping import ship_package
-
-    ship_package(docs.sparkSession)
     if "part_key" not in docs.columns:
         docs = with_part_key(docs, num_parts)
     if repartition is None:
@@ -515,24 +516,8 @@ def extract_docs(
         # comes from spark.sql.shuffle.partitions (AQE may coalesce), so the
         # same job re-balances automatically at any cluster size
         docs = docs.repartition("part_key")
-    sized = docs.withColumn(
-        "_total_chars",
-        F.coalesce(  # NULL spans => 0, so the doc still routes (and emits an
-            # empty extraction) instead of silently vanishing from both paths
-            F.aggregate(
-                F.col("spans"),
-                F.lit(0).cast("long"),
-                lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
-            ),
-            F.lit(0).cast("long"),
-        ),
-    )
-    small = sized.filter(F.col("_total_chars") <= oversize_chars).drop("_total_chars")
-    big = sized.filter(F.col("_total_chars") > oversize_chars).drop("_total_chars")
-    small_out = extract_direct(small)  # filter preserves the partitioning
-    # gathered JVM-side before the chunked path's first Python stage
-    big_out = extract_chunked(big.repartition("doc_id"), chunk_spans, chunk_chars)
-    return small_out.unionByName(big_out)
+    return _extract(docs, f"{_TOTAL_CHARS_SQL} > {int(oversize_chars)}",
+                    chunk_spans, chunk_chars)
 
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame | None:

@@ -77,27 +77,6 @@ EXTRACTED_WITH_PART = T.StructType(
     EXTRACTED.fields + [T.StructField("part_key", T.IntegerType(), False)]
 )
 
-# ---------------------------------------------------------------------------
-# Intermediate: parsed region rows (skew path stage 1 output).  Mirrors the
-# reference region tibble (v10.R:158-176) plus doc/chunk bookkeeping.
-# ---------------------------------------------------------------------------
-REGIONS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("part_key", T.IntegerType(), False),
-        T.StructField("page", T.IntegerType(), True),
-        T.StructField("x", T.IntegerType(), True),
-        T.StructField("y", T.IntegerType(), True),
-        T.StructField("w", T.IntegerType(), True),
-        T.StructField("h", T.IntegerType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("element_type", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), True),
-        T.StructField("parse_failure", T.IntegerType(), True),
-    ]
-)
-
 # Layout table (reference §1.2 ``complete_layout``, v10.R:92-103, 197-202):
 # one row per detected block — geometry + class, no text payload.  The
 # reference's per-block model ``confidence`` has no deterministic source

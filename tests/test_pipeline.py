@@ -8,6 +8,8 @@ chunked skew path engaged.
 
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
 import pytest
 
@@ -81,27 +83,180 @@ class TestDirectPath:
         assert got == want
 
 
+# Session configs the chunked path must not depend on (ROADMAP direction 5):
+# one- and two-row Arrow batches make a doc's chunk rows straddle batches.
+CONF_MATRIX = [
+    {},
+    {"spark.sql.execution.arrow.maxRecordsPerBatch": "1"},
+    {"spark.sql.execution.arrow.maxRecordsPerBatch": "2"},
+    {"spark.sql.ansi.enabled": "false"},
+]
+
+
+@contextlib.contextmanager
+def _session_conf(spark, confs):
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 class TestChunkedPath:
     def test_chunked_equals_direct(self, spark):
-        """Force every doc through the oversize path; results identical."""
+        """Force every doc through the oversize path; results identical,
+        under every config of the matrix."""
         docs = fx.ALL_FIXTURES
-        direct = pl.extract_docs(_docs_df(spark, docs), num_parts=4,
-                                 oversize_chars=10**12)
-        chunked = pl.extract_docs(_docs_df(spark, docs), num_parts=4,
-                                  oversize_chars=0, chunk_spans=2)
-        a = _spans_key([r.asDict(recursive=True) for r in direct.collect()])
-        b = _spans_key([r.asDict(recursive=True) for r in chunked.collect()])
-        assert a == b
-        assert a == _oracle(docs)
+        want = _oracle(docs)
+        for confs in CONF_MATRIX:
+            with _session_conf(spark, confs):
+                direct = pl.extract_docs(_docs_df(spark, docs), num_parts=4,
+                                         oversize_chars=10**12)
+                chunked = pl.extract_docs(_docs_df(spark, docs), num_parts=4,
+                                          oversize_chars=0, chunk_spans=2)
+                a = _spans_key([r.asDict(recursive=True) for r in direct.collect()])
+                b = _spans_key([r.asDict(recursive=True) for r in chunked.collect()])
+            assert a == b, confs
+            assert a == want, confs
 
     def test_media_at_chunk_boundary(self, spark):
         """A media span opening a chunk must still anchor to the previous
         chunk's last block (reanchor_media runs post-assembly)."""
         doc = fx.GENERIC_DOC
-        chunked = pl.extract_docs(_docs_df(spark, [doc]), num_parts=2,
-                                  oversize_chars=0, chunk_spans=3)
-        got = _spans_key([r.asDict(recursive=True) for r in chunked.collect()])
-        assert got == _oracle([doc])
+        for confs in CONF_MATRIX:
+            with _session_conf(spark, confs):
+                chunked = pl.extract_docs(_docs_df(spark, [doc]), num_parts=2,
+                                          oversize_chars=0, chunk_spans=3)
+                got = _spans_key([r.asDict(recursive=True) for r in chunked.collect()])
+            assert got == _oracle([doc]), confs
+
+    @pytest.mark.parametrize("rows", [
+        [("a", 0, 2), ("b", -1, 0)],           # another doc before a's last chunk
+        [("a", 0, 2), ("b", 0, 2)],            # another doc's first chunk
+        [("a", 0, 3), ("a", 2, 3)],            # a skipped chunk
+        [("a", 1, 2)],                         # no first chunk
+        [("a", 0, 2)],                         # input ends before the last chunk
+    ])
+    def test_interrupted_chunk_sequence_raises(self, rows):
+        """The batch function never assembles a partial doc.  Each row is
+        its own Arrow batch, so the open doc also crosses batches."""
+        batches = [_chunk_batch(doc_id, chunk, n) for doc_id, chunk, n in rows]
+        with pytest.raises(ValueError):
+            list(pl._extract_batches_flat(iter(batches)))
+
+    def test_chunks_straddling_batches_assemble(self):
+        """A doc whose chunks arrive in separate batches, with an empty
+        batch between them, equals its unchunked extraction."""
+        spans = fx.GENERIC_DOC["spans"]
+        chunks = [spans[i:i + 3] for i in range(0, len(spans), 3)]
+        batches = [_chunk_batch("a", c, len(chunks), sp)
+                   for c, sp in enumerate(chunks)]
+        batches.insert(1, batches[0].iloc[:0])
+        (out,) = pl._extract_batches_flat(iter(batches))
+        want = ec.extract_document("a", spans)
+        assert list(out["_texts"].iloc[0]) == [s["text"] for s in want["spans"]]
+        assert out["main_text"].iloc[0] == want["main_text"]
+
+
+def _chunk_batch(doc_id, chunk, n, spans=()):
+    """One Arrow batch of the flat crossing with a single chunk row."""
+    return pd.DataFrame([{
+        "doc_id": doc_id, "part_key": 0, "_chunk": chunk, "_n": n,
+        "_kinds": [s["kind"] for s in spans],
+        "_texts": [s["text"] for s in spans],
+        "_refs": [s["media_ref"] for s in spans],
+        "_orders": [s["offset"] for s in spans],
+    }])
+
+
+def _reference_chunk_rows(docs, chunk_spans, chunk_chars):
+    """The reference splitter the JVM chunk rows must equal: slice each
+    doc's span array into chunk rows on a running character budget, with a
+    span-count cap; empty or NULL spans give one empty chunk."""
+    rows = []
+    for doc in docs:
+        spans = pl._spans_to_records(doc["spans"])
+        cur, cum, chunk = [], 0, 0
+        for sp in spans:
+            cur.append(sp)
+            cum += len(sp.get("text") or "")
+            if cum >= chunk_chars or len(cur) >= chunk_spans:
+                rows.append((doc["doc_id"], chunk, cur))
+                cur, cum = [], 0
+                chunk += 1
+        if cur or not spans:
+            rows.append((doc["doc_id"], chunk, cur))
+    return rows
+
+
+def _text_span(text, offset):
+    return {"kind": "text", "text": text, "media_ref": None, "offset": offset}
+
+
+def _multi_mb_doc():
+    big_text = "word " * 2000
+    return {"doc_id": "huge", "spans": [
+        {"kind": "region", "media_ref": None, "offset": i,
+         "text": f"1,200,{100 + i * 10},2000,50,plain text|{big_text}{i}"}
+        for i in range(600)]}
+
+
+def _giant_spans_doc():
+    giant = "tok " * 50_000  # ~200k chars per span
+    return {"doc_id": "giant_spans", "spans": [
+        {"kind": "region", "media_ref": None, "offset": i,
+         "text": f"1,200,{100 + i * 200},2000,150,plain text|{giant}{i}"}
+        for i in range(6)]}
+
+
+class TestChunkBoundaries:
+    """The JVM chunk rows equal the reference splitter's, row for row."""
+
+    @pytest.mark.parametrize("case", [
+        "null_and_empty", "null_text", "exact_budget", "span_cap",
+        "span_over_budget", "multi_mb", "giant_spans"])
+    def test_jvm_chunk_rows_equal_reference(self, spark, case):
+        docs, chunk_spans, chunk_chars = {
+            "null_and_empty": (
+                [{"doc_id": "null", "spans": None}, {"doc_id": "empty", "spans": []}],
+                4, 10),
+            "null_text": (
+                [{"doc_id": "nt", "spans": [
+                    _text_span("abcd", 0), _text_span(None, 1),
+                    _text_span("efgh", 2), {"kind": "media", "text": None,
+                                            "media_ref": "m://1", "offset": 3},
+                    _text_span("ij", 4)]}],
+                8, 6),
+            # the second span brings the chunk to exactly chunk_chars
+            "exact_budget": (
+                [{"doc_id": "ex", "spans": [_text_span("x" * n, i) for i, n
+                                             in enumerate([4, 6, 10, 3, 7])]}],
+                100, 10),
+            "span_cap": (
+                [{"doc_id": "cap", "spans": [_text_span("s", i) for i in range(7)]}],
+                3, 10**6),
+            "span_over_budget": (
+                [{"doc_id": "over", "spans": [
+                    _text_span("a", 0), _text_span("b" * 50, 1), _text_span("c", 2)]}],
+                100, 10),
+            "multi_mb": ([_multi_mb_doc()], 100, pl.DEFAULT_CHUNK_CHARS),
+            "giant_spans": ([_giant_spans_doc()], pl.DEFAULT_CHUNK_SPANS,
+                            pl.DEFAULT_CHUNK_CHARS),
+        }[case]
+        want = _reference_chunk_rows(docs, chunk_spans, chunk_chars)
+        df = pl.with_part_key(_docs_df(spark, docs).coalesce(1), 4)
+        got = pd.DataFrame([r.asDict() for r in pl._chunk_rows(
+            df, "true", chunk_spans, chunk_chars).collect()])
+        assert list(zip(got["doc_id"], got["_chunk"], pl._records_from_flat(got))) \
+            == want
+        n_chunks = pd.Series([doc_id for doc_id, _, _ in want]).value_counts()
+        assert list(got["_n"]) == [n_chunks[d] for d in got["doc_id"]]
 
 
 class TestParquetScanRoutes:
@@ -235,14 +390,7 @@ class TestHostileInputs:
 class TestOversizedDoc:
     def test_multi_mb_doc(self, spark):
         """A deliberately huge doc (SURVEY §7 risk) goes through chunking."""
-        big_text = "word " * 2000
-        spans = []
-        for i in range(600):
-            spans.append(
-                {"kind": "region", "media_ref": None, "offset": i,
-                 "text": f"1,200,{100 + i * 10},2000,50,plain text|{big_text}{i}"}
-            )
-        doc = {"doc_id": "huge", "spans": spans}
+        doc = _multi_mb_doc()
         df = pl.extract_docs(_docs_df(spark, [doc]), num_parts=2,
                              oversize_chars=100_000, chunk_spans=100)
         rows = [r.asDict(recursive=True) for r in df.collect()]
@@ -252,13 +400,7 @@ class TestOversizedDoc:
     def test_few_giant_spans_split_by_char_budget(self, spark):
         """A doc of FEW huge spans must still split into many parse chunks
         (char-budget chunking; span-count alone would make it one chunk)."""
-        giant = "tok " * 50_000  # ~200k chars per span
-        spans = [
-            {"kind": "region", "media_ref": None, "offset": i,
-             "text": f"1,200,{100 + i * 200},2000,150,plain text|{giant}{i}"}
-            for i in range(6)
-        ]
-        doc = {"doc_id": "giant_spans", "spans": spans}
+        doc = _giant_spans_doc()
         df = pl.extract_docs(_docs_df(spark, [doc]), num_parts=2,
                              oversize_chars=100_000, chunk_chars=200_000)
         rows = [r.asDict(recursive=True) for r in df.collect()]

@@ -86,10 +86,10 @@ def test_bucketed_embedding_dedup_no_cartesian(spark):
 
 
 def test_extraction_single_shuffle(spark, tmp_path):
-    """The extraction plan over a parquet scan runs Python over the scan
-    once: the small path's MapInPandas is the only Python node in a scan
-    stage (none when the salted repartition sits under it), and the
-    oversize branch crosses an Exchange before its first Python node."""
+    """The extraction plan over a parquet scan is one Python stage: a
+    single MapInPandas (oversize docs are split into chunk rows JVM-side,
+    inside the same stage) with no Union, no grouped Python node, and no
+    exchange but the optional salted repartition, which sits below it."""
     from pdf_extraction_tests_spark.corpus import corpus_pandas
     from pdf_extraction_tests_spark.pipeline import extract_docs
     from pdf_extraction_tests_spark.schema import DOCS
@@ -100,26 +100,19 @@ def test_extraction_single_shuffle(spark, tmp_path):
     spark.createDataFrame(corpus_pandas(src), schema=DOCS) \
         .repartition(4).write.parquet(path)
     docs = spark.read.schema(DOCS).parquet(path)
-    for repartition, exchanges in ((False, 3), (True, 4)):
+    for repartition, exchanges in ((False, 0), (True, 1)):
         plan = formatted_plan(extract_docs(
-            docs, num_parts=4, oversize_chars=10**12, repartition=repartition))
-        stages = scan_stage_lines(plan)
-        assert len(stages) == 2, plan  # one scan per Union branch
-        python = [ln for st in stages for ln in st
-                  if re.search(r"\b(MapInPandas|FlatMapGroupsInPandas) \(", ln)]
-        # The Union's first branch (":"-railed tree lines) is the small
-        # path; the oversize branch's three exchanges (doc_id gather, chunk
-        # spread, per-doc regroup) all sit above its scan stage.
-        small_branch = [ln for ln in plan.split("\n\n")[0].splitlines()
-                        if ln.lstrip().startswith(":")]
-        if repartition:
-            assert python == [], plan
-            assert sum("Exchange" in ln for ln in small_branch) == 1, plan
-        else:
-            assert len(python) == 1 and "MapInPandas" in python[0], plan
-            assert python[0].lstrip().startswith(":"), plan
-            assert not any("Exchange" in ln for ln in small_branch), plan
+            docs, num_parts=4, oversize_chars=0, repartition=repartition))
+        tree = plan.split("\n\n")[0]
+        assert "Union" not in tree and "FlatMapGroupsInPandas" not in tree, plan
+        python = [ln for ln in tree.splitlines() if "MapInPandas (" in ln]
+        assert len(python) == 1, plan
         assert count_exchanges(plan) == exchanges, plan
+        stages = scan_stage_lines(plan)
+        assert len(stages) == 1, plan
+        in_scan_stage = [ln for ln in stages[0] if "MapInPandas (" in ln]
+        # above the salted exchange when there is one, else in the scan stage
+        assert len(in_scan_stage) == 1 - exchanges, plan
 
 
 def test_extraction_scan_prunes_to_needed_columns(spark):

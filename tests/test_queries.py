@@ -131,12 +131,10 @@ def test_entry_rows_only_extras_run(spark, name):
     assert df.count() > 0
 
 
-def test_q45_null_text_matches_oracle_under_both_ansi_modes(spark, tmp_path):
-    """NULL text has no token count (DuckDB's ``len(NULL)`` is NULL), with
-    ANSI on or off — with ANSI off Spark's ``size(NULL)`` is -1, which
-    used to pull every later running total down by one.  Doc 1 is also the
-    first row of its (quality, sub-bucket), so its running total is NULL
-    inside the bucket while the oracle's global running total is not."""
+def _null_text_oracle_check(spark, tmp_path, name):
+    """Run query ``name`` over a small documents table with NULL-text docs
+    under ANSI on and off; both must equal its DuckDB oracle.  Returns the
+    oracle rows.  Restores the ANSI setting."""
     pd.DataFrame({
         "doc_id": [1, 2, 3, 4, 5, 6],
         "text": [None,
@@ -145,12 +143,11 @@ def test_q45_null_text_matches_oracle_under_both_ansi_modes(spark, tmp_path):
                  "a study of the effect of rain and wind to the north coast",
                  "4 5"],
     }).to_parquet(tmp_path / "documents.parquet")
-    spec = next(s for s in REGISTRY if s.name == "q45_token_budget_head")
+    spec = next(s for s in REGISTRY if s.name == name)
     con = duckdb.connect()
     con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
                 f"'{tmp_path}/documents.parquet')")
     want = _canon(con.execute(spec.sql).df())
-    assert len(want) == 6
     prev = spark.conf.get("spark.sql.ansi.enabled")
     try:
         for ansi in ("true", "false"):
@@ -159,3 +156,21 @@ def test_q45_null_text_matches_oracle_under_both_ansi_modes(spark, tmp_path):
             assert got == want, f"ansi={ansi}"
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+    return want
+
+
+def test_q45_null_text_matches_oracle_under_both_ansi_modes(spark, tmp_path):
+    """NULL text has no token count (DuckDB's ``len(NULL)`` is NULL), with
+    ANSI on or off — with ANSI off Spark's ``size(NULL)`` is -1, which
+    used to pull every later running total down by one.  Doc 1 is also the
+    first row of its (quality, sub-bucket), so its running total is NULL
+    inside the bucket while the oracle's global running total is not."""
+    want = _null_text_oracle_check(spark, tmp_path, "q45_token_budget_head")
+    assert len(want) == 6
+
+
+def test_q31_null_text_matches_oracle_under_both_ansi_modes(spark, tmp_path):
+    """q31's ``ws_tokens`` and ``subword_pieces`` are NULL for NULL text
+    under ANSI on and off (bare ``size(NULL)`` reads -1 with ANSI off)."""
+    want = _null_text_oracle_check(spark, tmp_path, "q31_token_counts")
+    assert len(want) == 6
