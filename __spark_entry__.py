@@ -88,7 +88,7 @@ def _dual_extractor_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_extraction_tests_spark.pipeline import extract_docs_dual
 
     docs = corpus_spark(spark, sf_dir)
-    return extract_docs_dual(docs, num_parts=16)
+    return extract_docs_dual(docs)
 
 
 def _debug_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:

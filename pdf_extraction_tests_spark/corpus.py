@@ -280,9 +280,7 @@ def corpus_spark(spark, sf_dir: str, seed: int = 42):
     """Distributed corpus build: read documents.parquet, synthesize spans
     inside a ``mapInPandas`` stage (no driver-side materialization)."""
     from .schema import DOCS
-    from .shipping import ship_package
-
-    ship_package(spark)
+    from .shipping import map_batches
 
     src = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
@@ -290,4 +288,4 @@ def corpus_spark(spark, sf_dir: str, seed: int = 42):
         for pdf in batches:
             yield corpus_pandas(pdf, seed)
 
-    return src.mapInPandas(gen, schema=DOCS)
+    return map_batches(src, gen, DOCS)

@@ -343,8 +343,13 @@ def token_count_col(text_col: str, tokenizer: str = "whitespace",
                       F.size(F.split(F.trim(text), r"\s+"))).cast("long")
     if tokenizer != "bpe":
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
+    from pyspark.sql import SparkSession
     from pyspark.sql.functions import pandas_udf
 
+    from ..shipping import ship_package
+
+    # the closure's BpeTokenizer pickles by reference to this package
+    ship_package(SparkSession.active())
     tok = _DEFAULT_TOKENIZER if merges is None else BpeTokenizer(merges)
 
     @pandas_udf("long")

@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions.llm_json import parse_llm_response
+from ..shipping import map_batches
 
 ANALYZED_FIELDS = [
     T.StructField("title_region", T.IntegerType(), True),
@@ -69,10 +70,7 @@ def llm_structure_stage(
                 }
             )
 
-    from ..shipping import ship_package
-
-    ship_package(extracted.sparkSession)
-    analyzed = extracted.select("doc_id", "spans").mapInPandas(run, schema=out_schema)
+    analyzed = map_batches(extracted.select("doc_id", "spans"), run, out_schema)
     return extracted.join(analyzed, "doc_id", "left")
 
 

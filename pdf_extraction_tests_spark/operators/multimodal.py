@@ -23,6 +23,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..shipping import map_batches
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),
@@ -249,10 +251,7 @@ def extract_media_features(media: DataFrame) -> DataFrame:
                 }
             )
 
-    from ..shipping import ship_package
-
-    ship_package(media.sparkSession)
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_batches(media, run, FEATURE_SCHEMA)
 
 
 def media_from_documents(docs: DataFrame, limit: int = 96) -> DataFrame:
@@ -336,10 +335,7 @@ def media_from_binary_docs(docs: DataFrame, content_col: str = "content",
                     })
             yield pd.DataFrame(rows, columns=cols)
 
-    from ..shipping import ship_package
-
-    ship_package(docs.sparkSession)
-    return docs.mapInPandas(run, schema=MEDIA_SCHEMA)
+    return map_batches(docs, run, MEDIA_SCHEMA)
 
 
 def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:

@@ -33,6 +33,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..shipping import map_batches
+
 PHASH_SIZE = 32          # resize target (DCT input)
 PHASH_KEEP = 8           # low-frequency block kept
 DEFAULT_BANDS = 4        # 4 x 16-bit bands over the 64-bit hash
@@ -113,10 +115,7 @@ def phash_features(media: DataFrame,
             yield pd.DataFrame({ref_col: pdf[ref_col], "phash": hashes},
                                columns=[ref_col, "phash"])
 
-    from ..shipping import ship_package
-
-    ship_package(media.sparkSession)
-    return media.select(ref_col, content_col).mapInPandas(run, schema=schema)
+    return map_batches(media.select(ref_col, content_col), run, schema)
 
 
 def phash_near_dups(hashes: DataFrame,
@@ -242,10 +241,7 @@ def audio_fingerprints(media: DataFrame,
             yield pd.DataFrame({ref_col: pdf[ref_col], "afp": fps},
                                columns=[ref_col, "afp"])
 
-    from ..shipping import ship_package
-
-    ship_package(media.sparkSession)
-    return media.select(ref_col, content_col).mapInPandas(run, schema=schema)
+    return map_batches(media.select(ref_col, content_col), run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -292,10 +288,7 @@ def video_frame_phashes(media: DataFrame,
                  "phash": pd.Series(hashes, dtype="int64")},
                 columns=[ref_col, "frame_idx", "phash"])
 
-    from ..shipping import ship_package
-
-    ship_package(media.sparkSession)
-    return media.select(ref_col, content_col).mapInPandas(run, schema=schema)
+    return map_batches(media.select(ref_col, content_col), run, schema)
 
 
 def video_near_dups(frame_hashes: DataFrame,

@@ -22,6 +22,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..shipping import map_batches
 from .dedup import _h48_duck, h48, shingles_sql, with_shingles
 
 # affine family over one base hash, same overflow-safe arithmetic as the
@@ -206,8 +207,8 @@ def heavy_hitters(docs: DataFrame, k: int = 20, shingle_n: int = 3,
         )
     sketch = cms_build(docs, shingle_n, depth, width, text_col, id_col)
     cand = (
-        sh.select("shingle")
-        .mapInPandas(_local_top_shingles(local_m or 8 * k), "shingle string")
+        map_batches(sh.select("shingle"),
+                    _local_top_shingles(local_m or 8 * k), "shingle string")
         .distinct()
     )
     pruned = (

@@ -544,8 +544,7 @@ def with_language_guess(docs: DataFrame, text_col: str = "text") -> DataFrame:
     batch.  Guess values are bit-identical to the expression path
     (equivalence pinned in tests/test_langid.py; the DuckDB oracle mirrors
     the expression path as before)."""
-    # the udf is pickled BY REFERENCE to this module (unlike bpe's
-    # closure-local udf), so executors must be able to import the package —
+    # the udf is pickled BY REFERENCE to this module, so executors must be able to import the package —
     # ship it like every pipeline operator does (memoized per context;
     # found by the round-7 4x-scale probe: a session that had never run an
     # extraction had no package on the workers and q29/q59 crashed)

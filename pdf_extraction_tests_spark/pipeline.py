@@ -30,8 +30,12 @@ Design (SURVEY.md §3.4 / §4 custom items):
   checkpoint table; a restart anti-joins input partitions against completed
   rows and re-processes only the remainder — batch incrementality standing in
   for the reference's "skip if .RData exists" idiom (v10.R:3712-3723).
-* **No per-row Python.** Only Arrow-vectorized ``mapInPandas``; everything
-  else is native column expressions.
+* **No per-row Python.** Only Arrow-vectorized ``mapInPandas``, each built
+  by :func:`.shipping.map_batches` (which ships the package to the workers
+  and drops empty batches); everything else is native column expressions.
+* **One crossing shape.** Every extraction-family relation (extract, simple,
+  dual, debug, layout) crosses the boundary flat — see the note above
+  ``_EXTRACT_FLAT_OUT``.
 """
 
 from __future__ import annotations
@@ -44,7 +48,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from . import extract_core as ec
-from .schema import CHECKPOINT, EXTRACTED_WITH_PART
+from .schema import CHECKPOINT, EXTRACTED_WITH_PART, LAYOUT
+from .shipping import map_batches
 from .tables import read_table, write_table
 
 # part_key cardinality: the checkpoint/resume granularity.  Deliberately
@@ -119,19 +124,6 @@ def estimate_scan_partitions(docs: DataFrame) -> int:
     return -(-total // max(max_bytes, 1))  # ceil
 
 
-def _spans_to_records(spans) -> list[dict]:
-    """Normalize an Arrow-materialized spans array to list-of-dicts."""
-    if spans is None:
-        return []
-    out = []
-    for sp in spans:
-        if isinstance(sp, dict):
-            out.append(sp)
-        else:  # pyspark Row
-            out.append(sp.asDict())
-    return out
-
-
 # ---------------------------------------------------------------------------
 # extraction: one mapInPandas over the scan, oversize docs split JVM-side
 # ---------------------------------------------------------------------------
@@ -142,11 +134,12 @@ def _spans_to_records(spans) -> list[dict]:
 # conversion — not Python-side work — dominated the mapInPandas round trip
 # (measured: an identity pass over the bench corpus cost 3.2-5.1 s even
 # with zero Python object construction; projecting the same spans as four
-# parallel primitive arrays cut the identity pass ~15%).  So the hot path
-# crosses flat in BOTH directions: spans.kind/.text/.media_ref/.offset out
-# to Python (a free JVM field extraction), dict records rebuilt per batch
-# (cheap — measured inside the same probe), and result spans returned as
-# four arrays re-zipped to the public struct schema JVM-side.  The kernel
+# parallel primitive arrays cut the identity pass ~15%).  So every
+# extraction-family stage crosses flat: spans.kind/.text/.media_ref/.offset
+# out to Python (a free JVM field extraction), dict records rebuilt per
+# batch (cheap — measured inside the same probe), and, for extract and
+# simple, result spans returned as four arrays re-zipped to the public
+# struct schema JVM-side (dual, debug and layout return scalar rows).  The kernel
 # and the public EXTRACTED_WITH_PART schema are untouched.
 #
 # The JVM expressions below are SQL strings (F.expr / selectExpr), not
@@ -221,7 +214,7 @@ def _chunk_rows(docs: DataFrame, chunk_if: str, chunk_spans: int,
 def _records_from_flat(pdf: pd.DataFrame) -> list[list[dict]]:
     """Rebuild the kernel's span-record dicts from the four parallel input
     arrays.  NULL spans arrays (doc with spans=NULL) come through as None
-    in every column -> empty record list, matching _spans_to_records."""
+    in every column -> empty record list."""
     return [
         [
             {"kind": k, "text": t, "media_ref": m, "offset": o}
@@ -253,8 +246,6 @@ def _extract_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     emitting a partial doc."""
     open_id, next_chunk, regions = None, 0, []
     for pdf in batches:
-        if pdf.empty:
-            continue
         results, part_keys = [], []
         for doc_id, part_key, chunk, n, spans in zip(
                 pdf["doc_id"], pdf["part_key"], pdf["_chunk"], pdf["_n"],
@@ -285,12 +276,14 @@ def _extract(docs: DataFrame, chunk_if: str,
     """The extraction stage behind every public entry point: chunk rows
     (:func:`_chunk_rows`), one mapInPandas, and the span re-zip, with no
     exchange — so it runs in the stage of whatever produced ``docs``."""
-    from .shipping import ship_package
+    return _rezip(map_batches(
+        _chunk_rows(docs, chunk_if, chunk_spans, chunk_chars),
+        _extract_batches_flat, _EXTRACT_FLAT_OUT))
 
-    ship_package(docs.sparkSession)
-    raw = _chunk_rows(docs, chunk_if, chunk_spans, chunk_chars).mapInPandas(
-        _extract_batches_flat, schema=_EXTRACT_FLAT_OUT)
-    return raw.selectExpr(*[
+
+def _rezip(flat: DataFrame) -> DataFrame:
+    """The flat crossing's output rows -> the EXTRACTED_WITH_PART shape."""
+    return flat.selectExpr(*[
         _REZIP_SQL if f.name == "spans" else f.name
         for f in EXTRACTED_WITH_PART.fields])
 
@@ -319,26 +312,17 @@ def extract_chunked(docs: DataFrame, chunk_spans: int = DEFAULT_CHUNK_SPANS,
     return _extract(docs, "true", chunk_spans, chunk_chars)
 
 
-def _flat_spans_input(docs: DataFrame) -> DataFrame:
+def _flat_spans_input(docs: DataFrame, *keys: str) -> DataFrame:
     """Project the spans struct array into four parallel arrays for a flat
-    boundary crossing (see the flat-boundary note above _EXTRACT_FLAT_OUT)."""
+    boundary crossing (see the flat-boundary note above _EXTRACT_FLAT_OUT),
+    next to ``doc_id`` and any further ``keys`` columns."""
     return docs.select(
-        "doc_id",
+        "doc_id", *keys,
         F.col("spans.kind").alias("_kinds"),
         F.col("spans.text").alias("_texts"),
         F.col("spans.media_ref").alias("_refs"),
         F.col("spans.offset").alias("_orders"),
     )
-
-
-def _extract_simple_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        norm = pdf.assign(spans=pdf["spans"].map(_spans_to_records))
-        out = ec.extract_simple_frame(norm[["doc_id", "spans"]])
-        out["part_key"] = pdf["part_key"].to_numpy()
-        yield out
 
 
 DUAL_SCHEMA = T.StructType(
@@ -354,32 +338,30 @@ DUAL_SCHEMA = T.StructType(
 
 def _extract_dual_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        if pdf.empty:
-            continue
         frame = pd.DataFrame(
             {"doc_id": pdf["doc_id"], "spans": _records_from_flat(pdf)})
         yield ec.extract_dual_frame(frame)
 
 
-def extract_docs_dual(docs: DataFrame,
-                      num_parts: int = DEFAULT_NUM_PARTS) -> DataFrame:
+def extract_docs_dual(docs: DataFrame) -> DataFrame:
     """Cross-extractor differential in ONE pass (v8.R:3017-3033): the smart
     and simple kernels run over the same parsed regions inside one
     mapInPandas stage — one corpus scan, zero joins/shuffles.  The round-2
     form (two full pipelines + equi-join) parsed every document twice and
     shuffled both outputs; at 100 TB the single-pass form is the only
     sensible shape for a per-doc differential.  Crosses the boundary flat
-    (round 7 — only the input side here; the output is five scalars).
+    (only the input side here; the output is five scalars) and follows the
+    scan partitioning."""
+    return map_batches(_flat_spans_input(docs), _extract_dual_batches_flat,
+                       DUAL_SCHEMA)
 
-    ``num_parts`` is accepted for call-shape stability but unused since
-    the flat crossing: the dual QA relation follows the scan partitioning
-    (no part_key column crosses the boundary any more)."""
-    del num_parts
-    from .shipping import ship_package
 
-    ship_package(docs.sparkSession)
-    return _flat_spans_input(docs).mapInPandas(
-        _extract_dual_batches_flat, schema=DUAL_SCHEMA)
+def _extract_simple_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        yield _flat_out(
+            [ec.extract_simple_document(doc_id, spans) for doc_id, spans
+             in zip(pdf["doc_id"], _records_from_flat(pdf))],
+            pdf["part_key"].tolist())
 
 
 def extract_docs_simple(docs: DataFrame,
@@ -388,13 +370,12 @@ def extract_docs_simple(docs: DataFrame,
     (process_document_simple, v10.R:745-811) distributed the same way as
     the smart path.  Used for the cross-extractor differential
     (v8.R:3017-3033); a QA relation typically run on samples, so it takes
-    the direct mapInPandas route without the oversized-doc chunking."""
-    from .shipping import ship_package
-
-    ship_package(docs.sparkSession)
+    the direct mapInPandas route without the oversized-doc chunking, with
+    the same flat crossing and span re-zip as :func:`extract_direct`."""
     if "part_key" not in docs.columns:
         docs = with_part_key(docs, num_parts)
-    return docs.mapInPandas(_extract_simple_batches, schema=EXTRACTED_WITH_PART)
+    return _rezip(map_batches(_flat_spans_input(docs, "part_key"),
+                              _extract_simple_batches_flat, _EXTRACT_FLAT_OUT))
 
 
 DEBUG_BOUNDARY_SCHEMA = T.StructType(
@@ -419,9 +400,6 @@ def debug_boundaries(docs: DataFrame, context: int = 3) -> DataFrame:
     per document, the rows within ``context`` of each extraction boundary
     with an in-slice flag — boundary regressions become visible in DATA.
     One mapInPandas stage over the corpus scan, no shuffle."""
-    from .shipping import ship_package
-
-    ship_package(docs.sparkSession)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in DEBUG_BOUNDARY_SCHEMA.fields]
@@ -433,8 +411,7 @@ def debug_boundaries(docs: DataFrame, context: int = 3) -> DataFrame:
             yield (pd.DataFrame(rows, columns=cols) if rows
                    else pd.DataFrame(columns=cols))
 
-    return _flat_spans_input(docs).mapInPandas(
-        run, schema=DEBUG_BOUNDARY_SCHEMA)
+    return map_batches(_flat_spans_input(docs), run, DEBUG_BOUNDARY_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -449,10 +426,6 @@ def extract_layout(docs: DataFrame) -> DataFrame:
     197-202): ALL parsed blocks, including 'abandon' and parse failures,
     before any extraction filter — the debugging/audit relation.
     """
-    from .schema import LAYOUT
-    from .shipping import ship_package
-
-    ship_package(docs.sparkSession)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in LAYOUT.fields]
@@ -471,7 +444,7 @@ def extract_layout(docs: DataFrame) -> DataFrame:
                 else pd.DataFrame(columns=cols)
             )
 
-    return _flat_spans_input(docs).mapInPandas(run, schema=LAYOUT)
+    return map_batches(_flat_spans_input(docs), run, LAYOUT)
 
 
 # ---------------------------------------------------------------------------

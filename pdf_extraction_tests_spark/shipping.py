@@ -1,4 +1,4 @@
-"""Ship the package to Spark python workers.
+"""Ship the package to Spark python workers; the one ``mapInPandas`` site.
 
 On a real cluster the job is submitted as ``spark-submit --py-files
 pipeline.zip job.py`` (north rule).  When the engine is embedded in an
@@ -6,6 +6,12 @@ externally-created SparkSession (the driver harness, notebooks), the UDF
 closures are pickled *by reference* to this package, so executors must be
 able to import it — :func:`ship_package` zips the package once per process
 and registers it with ``sparkContext.addPyFile``.
+
+Every batched Python stage in the package crosses the boundary through
+:func:`map_batches`, which ships the package before it builds the
+``mapInPandas`` plan, so no operator can forget to.  The three boundaries
+that are not ``mapInPandas`` (the language-ID and ``bpe`` pandas UDFs and
+the stateful span assembler) call :func:`ship_package` themselves.
 
 Inside a worker, :func:`install_zip_stat_check` makes PySpark's per-task
 ``importlib.invalidate_caches()`` cheap (see :class:`StatCheckedZipImporter`).
@@ -43,6 +49,19 @@ def ship_package(spark) -> None:
                     zf.write(full, rel)
     sc.addPyFile(zip_path)
     _shipped.add(key)
+
+
+def map_batches(df, fn, schema):
+    """``fn`` as a ``mapInPandas`` stage over ``df`` yielding ``schema``,
+    with the package shipped to the workers of ``df``'s session.  Empty pandas batches are dropped from
+    the iterator ``fn`` consumes, so ``fn`` is still called once per task
+    and state it keeps across batches (and any end-of-input check) holds."""
+    ship_package(df.sparkSession)
+
+    def run(batches):
+        return fn(pdf for pdf in batches if not pdf.empty)
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def _archive_stamp(path: str) -> tuple[int, int, int] | None:

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schema import DOCS
+from ..shipping import map_batches
 
 SPDF_MAGIC = b"SPDF\n"
 
@@ -166,10 +167,7 @@ def read_binary_docs(spark: SparkSession, path: str,
                 }
             )
 
-    from ..shipping import ship_package
-
-    ship_package(spark)
-    return raw.mapInPandas(parse, schema=DOCS)
+    return map_batches(raw, parse, DOCS)
 
 
 def write_spdf(path: str, regions: list[str]) -> None:

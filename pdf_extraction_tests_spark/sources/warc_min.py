@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schema import DOCS
+from ..shipping import map_batches
 
 _MAX_BLOB = 1 << 28           # 256 MiB decompressed ceiling per blob
 _CRLF2 = b"\r\n\r\n"
@@ -220,10 +221,7 @@ def read_warc_docs(spark: SparkSession, path: str,
             yield pd.DataFrame({"doc_id": ids, "spans": spans},
                                columns=["doc_id", "spans"])
 
-    from ..shipping import ship_package
-
-    ship_package(spark)
-    return raw.mapInPandas(parse, schema=DOCS)
+    return map_batches(raw, parse, DOCS)
 
 
 # ---------------------------------------------------------------------------

@@ -130,6 +130,10 @@ def assemble_spans_stream(events: DataFrame,
     engine must keep scheduling timeout-evaluation micro-batches, so an
     available-now query would never terminate.
     """
+    from ..shipping import ship_package
+
+    # _assemble is pickled by reference to this package
+    ship_package(events.sparkSession)
     return events.groupBy("doc_id").applyInPandasWithState(
         _assemble,
         outputStructType=ASSEMBLED,

@@ -35,28 +35,65 @@ def test_every_oracle_key_has_query(spark):
     assert len(q) >= 20
 
 
-def test_udf_queries_run_in_fresh_session_without_extraction():
+def test_udf_queries_run_in_fresh_session_without_extraction(tmp_path):
     """Round-7 regression: with_language_guess's Arrow kernel is pickled by
     reference to the package, so a session that never ran an extraction
     (which would have shipped the package via addPyFile) must STILL be able
     to run the LID queries — the operator now ships the package itself.
-    Runs in a subprocess so the session is genuinely fresh."""
+    The other Python boundaries that ``shipping.map_batches`` does not build
+    (the ``bpe`` token count, the stateful span assembler) and the sketch
+    heavy-hitter candidates are held to the same rule.  One subprocess;
+    each case gets its own new SparkContext, so one case shipping the
+    package cannot hide another that does not."""
     import subprocess
     import sys
 
-    code = """
-import sys
+    code = f"""
+import sys, traceback
 sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[2]").appName("fresh")
-         .config("spark.ui.enabled", "false")
-         .config("spark.sql.session.timeZone", "UTC").getOrCreate())
-d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+from pyspark.sql import SparkSession, functions as F
+from pdf_extraction_tests_spark.functions.bpe import token_count_col
+from pdf_extraction_tests_spark.operators.sketches import heavy_hitters
 from pdf_extraction_tests_spark.operators.text_analysis import with_language_guess
-n = with_language_guess(d).select("doc_id", "lang_guess").count()
-print("ROWS", n)
-spark.stop()
+from pdf_extraction_tests_spark.streaming.stateful import (
+    SPAN_EVENTS, assemble_spans_stream)
+
+def lid(spark, d):
+    return with_language_guess(d).select("doc_id", "lang_guess").count()
+
+def bpe(spark, d):
+    return d.select(F.sum(token_count_col("text", "bpe"))).first()[0] > 0
+
+def assembled(spark, d):
+    ev = [("A", "region", "1,1,10,5,5,plain text|a", None, 0, True)]
+    spark.createDataFrame(ev, schema=SPAN_EVENTS).coalesce(1).write.parquet(
+        "{tmp_path}/events")
+    q = (assemble_spans_stream(spark.readStream.schema(SPAN_EVENTS)
+                               .parquet("{tmp_path}/events"))
+         .writeStream.format("parquet").option("path", "{tmp_path}/out")
+         .option("checkpointLocation", "{tmp_path}/ckpt")
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    return spark.read.parquet("{tmp_path}/out").count()
+
+def hitters(spark, d):
+    return heavy_hitters(d, k=5, exact=False).count()
+
+stopped = []  # keeps each stopped context alive so no id(sc) is reused
+for case in (lid, bpe, assembled, hitters):
+    spark = (SparkSession.builder.master("local[2]").appName("fresh")
+             .config("spark.ui.enabled", "false")
+             .config("spark.sql.session.timeZone", "UTC").getOrCreate())
+    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    try:
+        print(case.__name__, case(spark, d), flush=True)
+    except Exception:
+        traceback.print_exc()
+    stopped.append(spark.sparkContext)
+    spark.stop()
 """
     res = subprocess.run([sys.executable, "-c", code], capture_output=True,
                          text=True, cwd="/tmp", timeout=300)
-    assert "ROWS 500" in res.stdout, res.stderr[-2000:]
+    for want in ("lid 500", "bpe True", "assembled 1", "hitters 5"):
+        assert want in res.stdout.splitlines(), (
+            res.stdout + res.stderr[-3000:])

@@ -40,3 +40,19 @@ def test_no_driver_side_collect_loops():
             if ".collect()" in code and "bounded-sample ok" not in line:
                 offenders.append(f"{path.name}:{i}: {line.strip()}")
     assert not offenders, "driver-side collect in operators:\n" + "\n".join(offenders)
+
+
+def test_mapinpandas_only_in_shipping():
+    """Every batched Python stage is built by ``shipping.map_batches``,
+    which ships the package to the workers first; a hand-written
+    ``.mapInPandas(`` elsewhere can skip that and fail with
+    ModuleNotFoundError in a session that never shipped it."""
+    offenders = []
+    for path in PKG.rglob("*.py"):
+        if path == PKG / "shipping.py":
+            continue
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if ".mapInPandas(" in line.split("#")[0]:
+                offenders.append(f"{path.name}:{i}: {line.strip()}")
+    assert not offenders, ("mapInPandas outside shipping.map_batches:\n"
+                           + "\n".join(offenders))

@@ -181,7 +181,7 @@ def _reference_chunk_rows(docs, chunk_spans, chunk_chars):
     span-count cap; empty or NULL spans give one empty chunk."""
     rows = []
     for doc in docs:
-        spans = pl._spans_to_records(doc["spans"])
+        spans = doc["spans"] or []
         cur, cum, chunk = [], 0, 0
         for sp in spans:
             cur.append(sp)
@@ -435,7 +435,7 @@ class TestDualExtractorStage:
         dual = {
             r.doc_id: (r.title_match, r.n_spans_smart, r.n_spans_simple,
                        r.main_len_ratio)
-            for r in pl.extract_docs_dual(df, num_parts=4).collect()
+            for r in pl.extract_docs_dual(df).collect()
         }
         smart = {r.doc_id: r for r in pl.extract_docs(df, num_parts=4).collect()}
         simple = {
