@@ -10,9 +10,10 @@ by that frequent set.
 
 Spark shape (two bounded shuffles, no Python on the hot path):
 
-1. gram emission is scan-side column arithmetic — ``split`` + ``transform``
-   over a ``sequence`` of start offsets + ``slice``/``array_join`` (all
-   whole-stage-codegen'd; NO explode-then-window, NO per-row UDF);
+1. gram emission is scan-side column arithmetic (:func:`word_ngrams`) —
+   one ``split`` per row, then ``transform`` over a ``sequence`` of start
+   offsets + ``slice``/``array_join`` (NO explode-then-window, NO per-row
+   UDF);
 2. document frequency is one ``groupBy(gram).agg(countDistinct(doc_id))``
    shuffle with map-side partial aggregation;
 3. the frequent set (df >= min_df) is broadcast back onto the exploded
@@ -35,18 +36,35 @@ DEFAULT_N = 3
 DEFAULT_MIN_DF = 3
 
 
-def word_ngrams_col(text: Column, n: int = DEFAULT_N) -> Column:
-    """Array of space-joined word n-grams of ``text`` (lowercased,
-    whitespace-tokenized).  Pure column arithmetic; empty array when the
-    document has fewer than ``n`` words (sequence-descending guard)."""
-    w = F.split(F.lower(text), r"\s+")
-    return F.when(
-        F.size(w) >= n,
+def word_ngrams(words: Column, n: int) -> Column:
+    """Array of the space-joined ``n``-grams of the word array ``words``, in
+    start-position order; empty when it holds fewer than ``n`` words (the
+    sequence-descending guard).  The one gram builder of every operator
+    that emits word n-grams.
+
+    ``words`` is bound ONCE, as the variable of an outer one-element
+    ``transform``.  A Column defined outside a lambda and referenced inside
+    it is inlined into the lambda body and re-evaluated per element, so a
+    captured ``split(...)`` would re-split the row once per gram position
+    (O(words^2) per row)."""
+    return F.element_at(
         F.transform(
-            F.sequence(F.lit(0), F.size(w) - n),
-            lambda i: F.array_join(F.slice(w, i + 1, n), " "),
+            F.array(words),
+            lambda w: F.when(
+                F.size(w) >= n,
+                F.transform(
+                    F.sequence(F.lit(0), F.size(w) - n),
+                    lambda i: F.array_join(F.slice(w, i + 1, n), " "),
+                ),
+            ).otherwise(F.array().cast("array<string>")),
         ),
-    ).otherwise(F.array().cast("array<string>"))
+        1,
+    )
+
+
+def word_ngrams_col(text: Column, n: int = DEFAULT_N) -> Column:
+    """Word n-grams of ``text``, lowercased and whitespace-tokenized."""
+    return word_ngrams(F.split(F.lower(text), r"\s+"), n)
 
 
 def boilerplate_fraction(

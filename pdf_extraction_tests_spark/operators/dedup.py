@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .boilerplate import word_ngrams
+
 
 def h48(col):
     """48-bit md5-derived hash as a Spark column (bigint, non-negative).
@@ -68,22 +70,11 @@ def with_shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
     """(doc_id, shingle) pairs: distinct word n-grams per document.
 
-    Built scan-side with split + transform + filter — no explode until the
-    (smaller) distinct shingle set is formed per row.
-
-    Round-7 measurement note: a ``concat_ws(element_at...)`` per-position
-    form (no sub-array allocation) was tried and measured 2.1x SLOWER than
-    this slice+array_join form in a same-session interleaved A/B at sf0.1
-    (1.26 s vs 2.61 s on the q42 shape) — keep this one.
+    Built scan-side with split + :func:`word_ngrams` + filter — no explode
+    until the (smaller) distinct shingle set is formed per row.
     """
     words = F.split(F.col(text_col), " ")
-    k = F.size(words) - F.lit(n - 1)
-    shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0))),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
-        )
-    )
+    shingles = F.array_distinct(word_ngrams(words, n))
     return (
         docs.filter(F.size(words) >= n)
         .select(F.col(id_col).alias("doc_id"), F.explode(shingles).alias("shingle"))
@@ -112,12 +103,6 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 8, shingle_n: int = 3,
     (a_i*h + b_i mod M) — k-1 md5 computations saved per shingle row.
     Mins are plain groupBy aggregates; signatures never shuffle raw text
     (the exchange carries (doc_id, 6 partial mins) after map-side combine).
-
-    Round-7 measurement note: a zero-exchange scan-side form
-    (``array_min(transform(hash_array, ...))``) was tried and measured
-    2.1x SLOWER same-session (2.69 s vs 1.28 s at sf0.1) — higher-order-
-    function evaluation loses to the codegen'd explode + vectorized hash
-    aggregate, and the exchange it saves is tiny.  Keep this shape.
     """
     pairs = with_shingles(docs, shingle_n, text_col, id_col).withColumn(
         "_h", h48("shingle")
@@ -241,13 +226,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
     # on shingle instead of a self-join.  Same-session A/B at sf0.1:
     # 4.22 s -> 2.60 s, result rows exactly equal.
     words = F.split(F.col(text_col), " ")
-    k = F.size(words) - F.lit(n - 1)
-    sh_arr = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0))),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
-        )
-    )
+    sh_arr = F.array_distinct(word_ngrams(words, n))
     # Both sides treat a doc_id as its set of shingles over ALL its rows, as
     # the oracle's DISTINCT (doc_id, shingle) does: sizes has one row per
     # doc_id (so the joins below cannot repeat a pair), and collect_set

@@ -9,9 +9,9 @@ loops.  Two standard signals, both per-document:
 * ``dup_trigram_frac`` — fraction of trigram positions whose trigram
   occurs more than once in the SAME document.
 
-Spark shape: gram emission is the same scan-side ``transform(sequence)``
-arithmetic as q51/q55; the per-(doc, gram) counts are algebraic
-``count(*)`` aggregates (map-side combinable — a hot document salts
+Spark shape: gram emission is the same scan-side
+``boilerplate.word_ngrams_col`` as q51/q55; the per-(doc, gram) counts are
+algebraic ``count(*)`` aggregates (map-side combinable — a hot document salts
 naturally because the groupBy key includes the gram), folded to per-doc
 signals by a second algebraic aggregate.  No windows, no Python, no
 holistic state: the largest aggregation state is one counter per distinct
@@ -64,11 +64,13 @@ def repetition_signals(
     """
     bi = _per_doc_gram_stats(docs, id_col, text_col, 2, "bi")
     tri = _per_doc_gram_stats(docs, id_col, text_col, 3, "tri")
+    # NULL text has no word count (the oracle's len(NULL)); bare size(NULL)
+    # reads -1 with ANSI off
+    text = F.col(text_col)
     base = docs.select(
         F.col(id_col),
-        F.size(F.split(F.lower(text_col), r"\s+")).cast("bigint").alias(
-            "n_words"
-        ),
+        F.when(text.isNotNull(), F.size(F.split(F.lower(text), r"\s+")))
+        .cast("bigint").alias("n_words"),
     )
     return (
         base.join(bi, id_col, "left")

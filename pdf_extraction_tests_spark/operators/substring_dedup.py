@@ -9,8 +9,9 @@ form is the shuffle-friendly distributed equivalent).
 
 Spark shape:
 
-1. gram emission with start offsets is scan-side column arithmetic
-   (``split`` + ``transform(sequence(...))`` -> struct(start, gram));
+1. gram emission is scan-side column arithmetic
+   (:func:`~.boilerplate.word_ngrams_col`); ``posexplode`` gives each gram
+   its start offset;
 2. cross-document frequency is one groupBy(gram) with map-side partial
    ``count(distinct doc_id)`` aggregation;
 3. duplicated grams (>= ``min_docs`` distinct docs) join back to the gram
@@ -34,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .boilerplate import word_ngrams_col
+
 DEFAULT_N = 8
 DEFAULT_MIN_DOCS = 2
 
@@ -54,35 +57,15 @@ def duplicated_span_rewrite(
     unchanged (sequence-descending guard).
     """
     w = F.split(F.col(text_col), r"\s+")
-    lw = F.lower(F.col(text_col))
-    lwords = F.split(lw, r"\s+")
-    gram_structs = F.when(
-        F.size(lwords) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(lwords) - n),
-            lambda i: F.struct(
-                i.alias("s"),
-                F.array_join(F.slice(lwords, i + 1, n), " ").alias("gram"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<s:int,gram:string>>"))
-
+    gram_strings = word_ngrams_col(F.col(text_col), n)
+    # a gram's position in the array is its start offset s
     grams = docs.select(
-        F.col(id_col), F.explode(gram_structs).alias("g")
-    ).select(id_col, F.col("g.s").alias("s"), F.col("g.gram").alias("gram"))
+        F.col(id_col), F.posexplode(gram_strings).alias("s", "gram"))
 
     # ddf via per-doc DISTINCT grams (round-7, same rewrite as q51's df):
-    # a leaner gram pipeline (strings only, no start offsets) feeds the
-    # frequency aggregate with one row per (doc, gram).  countDistinct is
-    # kept so duplicated/NULL doc_id rows still match the oracle's
+    # the frequency aggregate gets one row per (doc, gram).  countDistinct
+    # is kept so duplicated/NULL doc_id rows still match the oracle's
     # count(DISTINCT doc_id) exactly.
-    gram_strings = F.when(
-        F.size(lwords) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(lwords) - n),
-            lambda i: F.array_join(F.slice(lwords, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     dup_grams = (
         docs.select(
             F.col(id_col),

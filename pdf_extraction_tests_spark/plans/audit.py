@@ -71,3 +71,21 @@ def scan_stage_lines(plan: str) -> list[list[str]]:
             depth = up_depth
         stages.append(stage)
     return stages
+
+
+def lambda_bodies(plan: str) -> list[str]:
+    """The text of each ``lambdafunction(...)`` in the plan, through its
+    balanced closing paren (nested lambdas appear inside their parent's
+    body and again on their own)."""
+    bodies = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth = 0
+        for j in range(m.end() - 1, len(plan)):
+            if plan[j] == "(":
+                depth += 1
+            elif plan[j] == ")":
+                depth -= 1
+                if depth == 0:
+                    bodies.append(plan[m.start():j + 1])
+                    break
+    return bodies

@@ -1710,7 +1710,7 @@ def q62(spark, sf_dir):
     composed SQL, so the report cannot drift from the row-level truth)."""
     f = q59(spark, sf_dir)
     stages = [
-        ("total", 0, F.lit(True)),
+        ("total", 0, None),
         ("lang", 1, F.col("pass_lang")),
         ("lang+quality", 2, F.col("pass_lang") & F.col("pass_quality")),
         ("lang+quality+rep", 3,
@@ -1721,9 +1721,12 @@ def q62(spark, sf_dir):
          & F.col("pass_repetition") & F.col("pass_boiler")),
         ("kept", 5, F.col("keep_doc")),
     ]
+    # total is count(*), as in the oracle: 0 on an empty table, where the
+    # gate sums are NULL on both engines
     return f.agg(
         *[
-            F.sum(F.when(cond, 1).otherwise(0)).alias(f"_s{idx}")
+            (F.count(F.lit(1)) if cond is None
+             else F.sum(F.when(cond, 1).otherwise(0))).alias(f"_s{idx}")
             for _, idx, cond in stages
         ]
     ).select(

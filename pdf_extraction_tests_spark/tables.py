@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -55,13 +56,21 @@ def read_table(spark: SparkSession, location: str, schema=None) -> DataFrame | N
             return spark.read.table(location)
         except Exception:
             return None
-    try:
-        r = spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        return r.parquet(location)
-    except Exception:
+    # probe first: a failed read logs a FileNotFoundException stack trace
+    path = spark._jvm.org.apache.hadoop.fs.Path(location)  # noqa: SLF001
+    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
+    if not path.getFileSystem(conf).exists(path):
         return None
+    r = spark.read
+    if schema is not None:
+        r = r.schema(schema)
+    try:
+        return r.parquet(location)
+    except AnalysisException as e:
+        # a directory with no data files yet: a first write that died
+        if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
+            return None
+        raise
 
 
 def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 16,

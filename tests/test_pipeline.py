@@ -364,6 +364,29 @@ class TestCheckpointResume:
         assert sum(r.docs for r in rows) == len(docs)
         assert sum(r.parse_failures for r in rows) == 1  # fix_broken
 
+    def test_missing_table_is_probed_not_read(self, spark, tmp_path,
+                                              monkeypatch):
+        """A table that does not exist yet reads as None without a parquet
+        read (a failed read logs a FileNotFoundException stack trace); an
+        existing one is read once, and one holding no data files yet (a
+        first write that died) reads as None."""
+        from pyspark.sql import DataFrameReader
+
+        from pdf_extraction_tests_spark.tables import read_table
+
+        calls = []
+        real = DataFrameReader.parquet
+        monkeypatch.setattr(DataFrameReader, "parquet",
+                            lambda self, *a, **k: calls.append(a)
+                            or real(self, *a, **k))
+        assert read_table(spark, str(tmp_path / "missing")) is None
+        assert calls == []
+        spark.range(3).write.parquet(str(tmp_path / "present"))
+        assert read_table(spark, str(tmp_path / "present")).count() == 3
+        assert len(calls) == 1
+        (tmp_path / "died" / "_temporary" / "0").mkdir(parents=True)
+        assert read_table(spark, str(tmp_path / "died")) is None
+
 
 class TestHostileInputs:
     def test_null_and_empty_spans_not_dropped(self, spark):

@@ -15,6 +15,7 @@ from pdf_extraction_tests_spark.plans.audit import (
     count_exchanges,
     formatted_plan,
     has_broadcast_join,
+    lambda_bodies,
     pushed_filters,
     read_schema_columns,
     scan_stage_lines,
@@ -435,3 +436,17 @@ def test_semantic_near_dups_no_cartesian(spark):
     assert "CartesianProduct" not in plan, plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
     assert "hashpartitioning(cluster" in plan, plan
+
+
+def test_gram_emission_splits_each_row_once(spark):
+    """Every gram-emitting query splits a row's text outside its lambdas
+    (``boilerplate.word_ngrams``).  A ``split`` inside a lambda body runs
+    once per gram position: O(words^2) per row."""
+    Q = queries()
+    for name in ("q22_minhash_signatures", "q23_lsh_candidates",
+                 "q24_ngram_jaccard", "q51_boilerplate_ngrams",
+                 "q55_dup_span_rewrite", "q57_repetition_signals",
+                 "q59_curation_funnel"):
+        bodies = lambda_bodies(formatted_plan(Q[name](spark, SF)))
+        assert bodies, name
+        assert not [b for b in bodies if "split(" in b], name

@@ -131,6 +131,14 @@ def test_entry_rows_only_extras_run(spark, name):
     assert df.count() > 0
 
 
+def _duck_documents(tmp_path, sql: str) -> pd.DataFrame:
+    """Run ``sql`` in DuckDB over ``tmp_path/documents.parquet`` alone."""
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{tmp_path}/documents.parquet')")
+    return con.execute(sql).df()
+
+
 def _null_text_oracle_check(spark, tmp_path, name):
     """Run query ``name`` over a small documents table with NULL-text docs
     under ANSI on and off; both must equal its DuckDB oracle.  Returns the
@@ -144,10 +152,7 @@ def _null_text_oracle_check(spark, tmp_path, name):
                  "4 5"],
     }).to_parquet(tmp_path / "documents.parquet")
     spec = next(s for s in REGISTRY if s.name == name)
-    con = duckdb.connect()
-    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
-                f"'{tmp_path}/documents.parquet')")
-    want = _canon(con.execute(spec.sql).df())
+    want = _canon(_duck_documents(tmp_path, spec.sql))
     prev = spark.conf.get("spark.sql.ansi.enabled")
     try:
         for ansi in ("true", "false"):
@@ -174,3 +179,28 @@ def test_q31_null_text_matches_oracle_under_both_ansi_modes(spark, tmp_path):
     under ANSI on and off (bare ``size(NULL)`` reads -1 with ANSI off)."""
     want = _null_text_oracle_check(spark, tmp_path, "q31_token_counts")
     assert len(want) == 6
+
+
+@pytest.mark.parametrize("name", [
+    "q22_minhash_signatures", "q51_boilerplate_ngrams",
+    "q57_repetition_signals", "q59_curation_funnel"])
+def test_gram_queries_null_text_match_oracle_under_both_ansi_modes(
+        spark, tmp_path, name):
+    """The n-gram queries over NULL text and docs with fewer words than a
+    gram, ANSI on and off.  NULL text emits no gram; q57's ``n_words`` is
+    NULL for it (bare ``size(NULL)`` reads -1 with ANSI off)."""
+    assert _null_text_oracle_check(spark, tmp_path, name)
+
+
+def test_q62_empty_documents_matches_oracle(spark, tmp_path):
+    """An empty ``documents`` table: the ``total`` stage counts 0 documents
+    (the oracle's ``count(*)``), not NULL."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(pq.read_table(f"{SF_DIR}/documents.parquet").slice(0, 0),
+                   tmp_path / "documents.parquet")
+    spec = next(s for s in REGISTRY if s.name == "q62_funnel_summary")
+    want = _canon(_duck_documents(tmp_path, spec.sql))
+    got = _canon(spec.fn(spark, str(tmp_path)).toPandas())
+    assert ("total", 0, 0) in want
+    assert got == want
