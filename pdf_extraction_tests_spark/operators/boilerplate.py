@@ -36,35 +36,67 @@ DEFAULT_N = 3
 DEFAULT_MIN_DF = 3
 
 
-def word_ngrams(words: Column, n: int) -> Column:
-    """Array of the space-joined ``n``-grams of the word array ``words``, in
-    start-position order; empty when it holds fewer than ``n`` words (the
-    sequence-descending guard).  The one gram builder of every operator
-    that emits word n-grams.
+def quoted(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def word_ngrams(words: str, n: int) -> Column:
+    """Array of the space-joined ``n``-grams of the word array ``words`` (SQL
+    text), in start-position order; empty when it holds fewer than ``n``
+    words (the sequence-descending guard).  The one gram builder of every
+    operator that emits word n-grams.
 
     ``words`` is bound ONCE, as the variable of an outer one-element
     ``transform``.  A Column defined outside a lambda and referenced inside
     it is inlined into the lambda body and re-evaluated per element, so a
     captured ``split(...)`` would re-split the row once per gram position
-    (O(words^2) per row)."""
-    return F.element_at(
-        F.transform(
-            F.array(words),
-            lambda w: F.when(
-                F.size(w) >= n,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(w) - n),
-                    lambda i: F.array_join(F.slice(w, i + 1, n), " "),
-                ),
-            ).otherwise(F.array().cast("array<string>")),
-        ),
-        1,
+    (O(words^2) per row).  The expression is SQL text, parsed JVM-side in
+    one call: the Python-API lambdas cost a py4j round trip per node at
+    build time.  ``words`` names columns only through :func:`quoted`, and
+    ``n`` is ``int()``-coerced."""
+    n = int(n)
+    return F.expr(
+        f"element_at(transform(array({words}), w -> IF(size(w) >= {n}, "
+        f"transform(sequence(0, size(w) - {n}), "
+        f"i -> array_join(slice(w, i + 1, {n}), ' ')), "
+        "CAST(array() AS array<string>))), 1)")
+
+
+def word_ngrams_col(text_col: str, n: int = DEFAULT_N) -> Column:
+    """Word n-grams of column ``text_col``, lowercased and
+    whitespace-tokenized."""
+    return word_ngrams(f"split(lower({quoted(text_col)}), '\\\\s+')", n)
+
+
+def frequent_grams(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = DEFAULT_N,
+    min_df: int = DEFAULT_MIN_DF,
+) -> DataFrame:
+    """The corpus-learned frequent set: (gram, _freq = 1) for every
+    ``n``-gram that occurs in >= ``min_df`` distinct documents.  One
+    shuffle on ``gram``; small enough to broadcast back onto a doc's
+    grams."""
+    # df over per-doc DISTINCT grams (round-7): array_distinct forms the
+    # doc's gram set scan-side, so the aggregate's exchange carries one
+    # row per (doc, gram) instead of one per position.  countDistinct is
+    # KEPT (not count(*)) so a frame with duplicated or NULL doc_id rows
+    # still matches the oracle's count(DISTINCT doc_id) exactly.
+    return (
+        docs.select(
+            F.col(id_col),
+            F.explode(
+                F.array_distinct(word_ngrams_col(text_col, n))
+            ).alias("gram"),
+        )
+        .groupBy("gram")
+        .agg(F.countDistinct(id_col).alias("df"))
+        .filter(F.col("df") >= min_df)
+        .select("gram", F.lit(1).alias("_freq"))
     )
-
-
-def word_ngrams_col(text: Column, n: int = DEFAULT_N) -> Column:
-    """Word n-grams of ``text``, lowercased and whitespace-tokenized."""
-    return word_ngrams(F.split(F.lower(text), r"\s+"), n)
 
 
 def boilerplate_fraction(
@@ -83,28 +115,11 @@ def boilerplate_fraction(
     dropped).
     """
     grams = docs.select(
-        F.col(id_col), F.explode(word_ngrams_col(F.col(text_col), n)).alias("gram")
-    )
-    # df over per-doc DISTINCT grams (round-7): array_distinct forms the
-    # doc's gram set scan-side, so the aggregate's exchange carries one
-    # row per (doc, gram) instead of one per position.  countDistinct is
-    # KEPT (not count(*)) so a frame with duplicated or NULL doc_id rows
-    # still matches the oracle's count(DISTINCT doc_id) exactly.
-    frequent = (
-        docs.select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(word_ngrams_col(F.col(text_col), n))
-            ).alias("gram"),
-        )
-        .groupBy("gram")
-        .agg(F.countDistinct(id_col).alias("df"))
-        .filter(F.col("df") >= min_df)
-        .select("gram")
+        F.col(id_col), F.explode(word_ngrams_col(text_col, n)).alias("gram")
     )
     flagged = grams.join(
-        F.broadcast(frequent.withColumn("_freq", F.lit(1))), "gram", "left"
-    )
+        F.broadcast(frequent_grams(docs, id_col, text_col, n, min_df)),
+        "gram", "left")
     per_doc = flagged.groupBy(id_col).agg(
         F.count("*").alias("n_grams"),
         F.coalesce(F.sum("_freq"), F.lit(0)).cast("bigint").alias("n_boiler"),

@@ -40,7 +40,7 @@ def _per_doc_gram_stats(
     """(id_col, {prefix}_top_cnt, {prefix}_dup_pos, {prefix}_total) via two
     algebraic aggregations."""
     grams = docs.select(
-        F.col(id_col), F.explode(_gram_col(F.col(text_col), n)).alias("gram")
+        F.col(id_col), F.explode(_gram_col(text_col, n)).alias("gram")
     )
     per_gram = grams.groupBy(id_col, "gram").agg(F.count("*").alias("cnt"))
     return per_gram.groupBy(id_col).agg(
@@ -49,6 +49,27 @@ def _per_doc_gram_stats(
             f"{prefix}_dup_pos"
         ),
         F.sum("cnt").alias(f"{prefix}_total"),
+    )
+
+
+def gram_runs(grams: str) -> str:
+    """SQL ``struct<top: int, dup: int>`` of the gram array ``grams`` (SQL
+    text) from one sort (``sort_array``: natural order, no comparator
+    lambda) and a run-length ``aggregate``: ``top`` is the longest run of
+    one gram, ``dup`` the summed length of the runs of two or more.  With ``size(grams)`` as the total, it equals
+    :func:`_per_doc_gram_stats`'s (top_cnt, dup_pos, total) on a row whose
+    id is unique, computed in the row's own projection: no explode and no
+    shuffle."""
+    return (
+        f"aggregate(sort_array({grams}), named_struct('prev', "
+        "CAST(NULL AS STRING), 'run', 0, 'top', 0, 'dup', 0), "
+        "(a, g) -> IF(g = a.prev, "
+        "named_struct('prev', g, 'run', a.run + 1, "
+        "'top', greatest(a.top, a.run + 1), "
+        "'dup', a.dup + IF(a.run = 1, 2, 1)), "
+        "named_struct('prev', g, 'run', 1, 'top', greatest(a.top, 1), "
+        "'dup', a.dup)), "
+        "a -> named_struct('top', a.top, 'dup', a.dup))"
     )
 
 

@@ -57,7 +57,7 @@ def duplicated_span_rewrite(
     unchanged (sequence-descending guard).
     """
     w = F.split(F.col(text_col), r"\s+")
-    gram_strings = word_ngrams_col(F.col(text_col), n)
+    gram_strings = word_ngrams_col(text_col, n)
     # a gram's position in the array is its start offset s
     grams = docs.select(
         F.col(id_col), F.posexplode(gram_strings).alias("s", "gram"))

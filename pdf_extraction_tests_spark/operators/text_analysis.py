@@ -7,10 +7,13 @@ beyond any final aggregation the caller adds) with exact DuckDB oracles.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves pd.Series hints here
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
+
+from .boilerplate import quoted
 
 # ---------------------------------------------------------------------------
 # Language ID - three signal tiers, all exact integer column arithmetic on
@@ -459,18 +462,74 @@ def with_language_guess_expr(docs: DataFrame, text_col: str = "text") -> DataFra
     ).drop(*[f"_s_{lg}" for lg in scores])
 
 
+# one sorted lookup table for the batch kernel below: every profile
+# trigram that cannot overlap itself, as a 3x21-bit code (every codepoint
+# fits in 21 bits), and every marker character, as a unigram code whose top
+# field is 0x1FFFFF -- above the largest codepoint 0x10FFFF, so no window of
+# text can produce it.  The self-overlapping trigrams (t[0] == t[2]) keep
+# their own count_substring pass.
+_UNIGRAM_TAG = 0x1FFFFF << 42
+
+
+def _lid_table() -> tuple:
+    """(sorted codes, language index per code, weight per code, the
+    self-overlapping trigrams as (trigram, language index) pairs)."""
+    ix = {lang: i for i, lang in enumerate(LANGUAGES)}
+    entries, overlapping = [], []
+    for lang, tris in LANG_TRIGRAMS.items():
+        for t in tris:
+            if t[0] == t[2]:
+                overlapping.append((t, ix[lang]))
+            else:
+                a, b, c = map(ord, t)
+                entries.append(((a << 42) | (b << 21) | c, ix[lang], len(t)))
+        for c in _MARKER_CHARS.get(lang, ""):
+            entries.append((_UNIGRAM_TAG | ord(c), ix[lang], 3 * _MARKER_WEIGHT))
+    entries.sort()
+    codes, langs, weights = (np.array(col, dtype=np.int64)
+                             for col in zip(*entries))
+    assert len(np.unique(codes)) == len(codes)
+    return codes, langs, weights, overlapping
+
+
+_LID_TABLE = _lid_table()
+
+
 def _lid_guess_frame(padded: pd.Series) -> pd.Series:
     """Vectorized replica of the JVM scoring over one Arrow batch.
+
+    Every row's trigram and marker hits come from one flat codepoint array
+    for the whole batch: the padded texts joined with ``"\\x00"`` and
+    encoded as UTF-32.  Each position yields a 3x21-bit trigram code and a
+    tagged unigram code; one ``searchsorted`` into the sorted table
+    (:func:`_lid_table`) finds the hits, and one ``bincount`` adds their
+    weights per (row, language).  Extra memory is linear in the batch's
+    character count: about 50 bytes per character at peak (the int64 code
+    array for both code kinds, its lookup indices and their gathered table
+    codes, 16 bytes per character each).
 
     Exactness argument, term by term (the guess must match the expression
     path bit-for-bit — ties and the >= 6 threshold are live on real data):
 
-    * ``pc.count_substring`` counts NON-overlapping left-to-right literal
-      occurrences — the same value ``(length(p) - length(replace(p, t, '')))
-      / len(t)`` reads off the JVM's UTF8String.replace (verified:
+    * the expression path counts a literal as ``(length(p) -
+      length(replace(p, t, ''))) / len(t)``: NON-overlapping left-to-right
+      occurrences.  A 3-character pattern can overlap itself only if
+      ``t[0] == t[2]``; for every other pattern the number of overlapping
+      windows equals the non-overlapping count, so the table counts
+      windows.  The self-overlapping trigrams (``'ana'``, ``'t t'``,
+      ``' y '``, ...) keep ``pc.count_substring``, which counts
+      non-overlapping occurrences exactly like replace (verified
       'aaaa'/'aa' -> 2 on both);
-    * trigram/marker contributions are integer ``count * len(lit)`` /
-      ``count * 3 * weight`` — pure int arithmetic, no floats anywhere;
+    * no profile trigram or marker contains ``"\\x00"``, so no window that
+      spans two rows matches; unigram codes carry a top field no codepoint
+      reaches, so no window of text (embedded ``"\\x00"`` included) can
+      read as a marker;
+    * UTF-8 is self-synchronizing: a valid UTF-8 literal matches only at
+      codepoint boundaries, so matching codepoints counts what matching
+      the JVM's UTF-8 bytes counts;
+    * trigram/marker contributions are integer ``count * len(t)`` /
+      ``count * 3 * weight``; ``bincount`` sums them in float64, exact far
+      below 2**53, and the scores return to int64;
     * script scores use ``pc.count_substring_regex('[<ranges>]')`` — each
       match is a single char, so the count equals the JVM's
       ``length - length(regexp_replace(p, '[cls]', ''))`` (the literal
@@ -483,38 +542,55 @@ def _lid_guess_frame(padded: pd.Series) -> pd.Series:
       -> 'und', identical to the expression path's NULL-condition fall-
       through to the otherwise('und') branch.
     """
-    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    table, table_lang, table_weight, overlapping = _LID_TABLE
+
+    texts = padded.fillna("")
+    n, n_lang = len(texts), len(LANGUAGES)
+    # row r's codepoints start at starts[r] of the joined array
+    lens = np.fromiter(map(len, texts), dtype=np.int64, count=n)
+    starts = np.cumsum(lens + 1) - (lens + 1)
+    cps = np.frombuffer("\x00".join(texts).encode("utf-32-le"),
+                        dtype=np.uint32).astype(np.int64)
+    m = len(cps)
+    codes = np.concatenate((
+        cps | _UNIGRAM_TAG,
+        (cps[:-2] << 42) | (cps[1:-1] << 21) | cps[2:],
+    ))
+    del cps
+    idx = np.searchsorted(table, codes)
+    np.minimum(idx, len(table) - 1, out=idx)
+    hit = np.flatnonzero(table[idx] == codes)
+    del codes
+    ent = idx[hit]
+    row = np.searchsorted(starts, np.where(hit < m, hit, hit - m),
+                          side="right") - 1
+    scores = np.bincount(row * n_lang + table_lang[ent],
+                         weights=table_weight[ent], minlength=n * n_lang)
+    scores = scores.astype(np.int64).reshape(n, n_lang)
+
     # large_string: 64-bit offsets — a plain pa.string() caps one batch's
     # total text at 2 GiB, a limit the all-JVM path never had
-    arr = pa.array(padded.fillna(""), type=pa.large_string())
-    n = len(arr)
+    arr = pa.array(texts, type=pa.large_string())
 
     def counts(pattern: str, regex: bool = False) -> "np.ndarray":
         fn = pc.count_substring_regex if regex else pc.count_substring
         return fn(arr, pattern=pattern).to_numpy(
             zero_copy_only=False).astype(np.int64)
 
-    scores: dict[str, "np.ndarray"] = {}
-    for lang, tris in LANG_TRIGRAMS.items():
-        s = np.zeros(n, dtype=np.int64)
-        for t in tris:
-            s += counts(t) * len(t)
-        for c in _MARKER_CHARS.get(lang, ""):
-            s += counts(c) * (3 * _MARKER_WEIGHT)
-        scores[lang] = s
+    for t, li in overlapping:
+        scores[:, li] += counts(t) * len(t)
     for lang, cls in _SCRIPT_RANGES.items():
-        scores[lang] = counts(f"[{cls}]", regex=True) * (
+        scores[:, LANGUAGES.index(lang)] = counts(f"[{cls}]", regex=True) * (
             3 * _SCRIPT_WEIGHT.get(lang, 1))
 
-    best = np.maximum.reduce(list(scores.values()))
-    guess = np.full(n, "und", dtype=object)
-    # first language in dict order with score == best wins (same tie
+    best = scores.max(axis=1, initial=0)
+    # first language in LANGUAGES order with score == best wins (same tie
     # priority as the reversed when-chain in the expression path)
-    for lang in reversed(list(scores)):
-        guess = np.where(scores[lang] == best, lang, guess)
+    guess = np.array(LANGUAGES, dtype=object)[
+        np.argmax(scores == best[:, None], axis=1)]
     guess = np.where(best >= _LID_THRESHOLD3, guess, "und")
     return pd.Series(guess, dtype=object)
 
@@ -611,9 +687,9 @@ def with_quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     n_chars = F.length(t)
     words = F.split(t, " ")
     n_words = F.size(words)
-    stop = F.size(
-        F.filter(words, lambda w: F.lower(w).isin("the", "a", "of", "and", "to"))
-    )
+    stop = F.expr(
+        f"size(filter(split({quoted(text_col)}, ' '), "
+        "w -> lower(w) IN ('the', 'a', 'of', 'and', 'to')))")
     alpha = n_chars - F.length(F.translate(t, _ALPHA_SPACE, ""))
     mean_wlen = (n_chars - n_words + 1) / F.greatest(n_words, F.lit(1))
     score = (

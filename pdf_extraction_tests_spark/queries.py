@@ -1438,7 +1438,8 @@ def q50(spark, sf_dir):
 
 
 from pdf_extraction_tests_spark.operators.boilerplate import (  # noqa: E402
-    boilerplate_fraction, boilerplate_fraction_sql)
+    boilerplate_fraction, boilerplate_fraction_sql, frequent_grams,
+    word_ngrams_col)
 from pdf_extraction_tests_spark.operators.bm25 import (  # noqa: E402
     bm25_topk, bm25_topk_sql)
 from pdf_extraction_tests_spark.operators.chunking import (  # noqa: E402
@@ -1488,7 +1489,7 @@ from pdf_extraction_tests_spark.operators.substring_dedup import (  # noqa: E402
 from pdf_extraction_tests_spark.operators.pii import (  # noqa: E402
     scrub_pii, scrub_pii_sql)
 from pdf_extraction_tests_spark.operators.repetition import (  # noqa: E402
-    repetition_signals, repetition_signals_sql)
+    gram_runs, repetition_signals, repetition_signals_sql)
 from pdf_extraction_tests_spark.operators.sampling import (  # noqa: E402
     quota_sample, quota_sample_sql)
 
@@ -1604,44 +1605,77 @@ def q59(spark, sf_dir):
     gate (char-trigram LID), quality gate (C4/Gopher score), repetition
     gates (q57 n-gram signals), learned-boilerplate gate (q51 fraction),
     and prefix-dedup canonicalization (q21 shape) — per-doc booleans plus
-    the final keep decision.  Every signal reuses the SAME operator the
-    standalone query registers, so the funnel cannot drift from its parts;
-    the whole thing is one lazy plan (scan-side LID/quality, three bounded
-    keyed shuffles for rep/boiler/canon)."""
+    the final keep decision.
+
+    One projection of one scan computes every per-row signal: the LID
+    kernel's guess (the plan's one ArrowEvalPython), the quality score,
+    the 5-word prefix digest, and the bigram and trigram arrays
+    (``boilerplate.word_ngrams_col``, q51/q57's gram definition).  The
+    repetition fractions come from the row's own sorted gram arrays
+    (``repetition.gram_runs``: longest run over bigram positions, summed
+    runs of >= 2 over trigram positions), each guarded by ``IF(n > 0, ...)``
+    so ANSI division cannot raise.  Two corpus aggregates remain:
+
+    * q51's frequent-trigram set (``boilerplate.frequent_grams``: one
+      shuffle on ``gram``, countDistinct(doc_id) >= 3), broadcast onto the
+      row's exploded trigrams; the per-doc boilerplate count is then one
+      shuffle on ``doc_id`` with the row's flags riding along as keys;
+    * the canonical id, ``min(doc_id)`` over each digest (a window, one
+      shuffle on ``digest`` of the per-doc rows).
+
+    Rows with a NULL ``doc_id`` or NULL digest (NULL text) are dropped, as
+    the oracle's inner joins drop them.  On unique ids the rows equal the
+    oracle, which composes q57's and q51's own SQL, so the funnel cannot
+    drift from its parts.  A doc_id that repeats keeps one row per
+    distinct (doc_id, digest, flags) here and aggregates its grams over
+    those rows, where the oracle's joins multiply rows; which is intended
+    is still open."""
+
+    def frac(run: str, grams: str) -> str:
+        return (f"round(IF(size({grams}) > 0, "
+                f"{gram_runs(grams)}.{run} / size({grams}), 0.0), 6)")
+
     d = load(spark, sf_dir, "documents")
-    base = TA.with_quality_score(TA.with_language_guess(d)).select(
-        "doc_id", "lang_guess", "quality"
-    )
-    rep = repetition_signals(d).select(
-        "doc_id", "top_bigram_frac", "dup_trigram_frac"
-    )
-    boil = boilerplate_fraction(d).select("doc_id", "boiler_frac")
     digest = F.md5(F.array_join(F.slice(F.split("text", " "), 1, 5), " "))
-    pfx = d.select("doc_id", digest.alias("digest"))
-    canon = pfx.groupBy("digest").agg(F.min("doc_id").alias("canon_id"))
+    rows = (
+        TA.with_quality_score(TA.with_language_guess(d))
+        .select(
+            "doc_id",
+            (F.col("lang_guess") == "en").alias("pass_lang"),
+            (F.col("quality") >= 1.0).alias("pass_quality"),
+            digest.alias("digest"),
+            word_ngrams_col("text", 2).alias("bi"),
+            word_ngrams_col("text", 3).alias("tri"),
+        )
+        .where("doc_id IS NOT NULL AND digest IS NOT NULL")
+        .select(
+            "doc_id", "digest", "pass_lang", "pass_quality", "tri",
+            F.expr(f"{frac('dup', 'tri')} <= 0.05 AND {frac('top', 'bi')} "
+                   "<= 0.1").alias("pass_repetition"),
+        )
+        # a separate select: expressions beside a generator are evaluated
+        # once per generated row, here once per gram position
+        .select("doc_id", "digest", "pass_lang", "pass_quality",
+                "pass_repetition", F.explode_outer("tri").alias("gram"))
+    )
     flags = (
-        base.join(rep, "doc_id")
-        .join(boil, "doc_id")
-        .join(pfx, "doc_id")
-        .join(canon, "digest")
+        rows.join(F.broadcast(frequent_grams(d)), "gram", "left")
+        .groupBy("doc_id", "digest", "pass_lang", "pass_quality",
+                 "pass_repetition")
+        .agg(F.count("gram").alias("n_grams"),
+             F.count("_freq").alias("n_boiler"))
+        .select(
+            "doc_id", "pass_lang", "pass_quality", "pass_repetition",
+            F.expr("round(IF(n_grams > 0, n_boiler / n_grams, 0.0), 6) "
+                   "<= 0.3").alias("pass_boiler"),
+            (F.col("doc_id") == F.min("doc_id").over(
+                W.partitionBy("digest"))).alias("is_canonical"),
+        )
     )
-    pass_lang = F.col("lang_guess") == "en"
-    pass_quality = F.col("quality") >= 1.0
-    pass_rep = (F.col("dup_trigram_frac") <= 0.05) & (
-        F.col("top_bigram_frac") <= 0.1
-    )
-    pass_boiler = F.col("boiler_frac") <= 0.3
-    is_canon = F.col("doc_id") == F.col("canon_id")
-    return flags.select(
-        "doc_id",
-        pass_lang.alias("pass_lang"),
-        pass_quality.alias("pass_quality"),
-        pass_rep.alias("pass_repetition"),
-        pass_boiler.alias("pass_boiler"),
-        is_canon.alias("is_canonical"),
-        (pass_lang & pass_quality & pass_rep & pass_boiler & is_canon).alias(
-            "keep_doc"
-        ),
+    return flags.withColumn(
+        "keep_doc",
+        F.col("pass_lang") & F.col("pass_quality") & F.col("pass_repetition")
+        & F.col("pass_boiler") & F.col("is_canonical"),
     )
 
 

@@ -10,6 +10,8 @@ prose none of which appears in the seed paragraphs.
 
 from __future__ import annotations
 
+import random
+
 import pandas as pd
 import pytest
 
@@ -283,7 +285,11 @@ def test_arrow_kernel_matches_expression_path(spark):
     edge = spark.createDataFrame(
         [(100001, None), (100002, ""), (100003, "   "),
          (100004, "the of and to a"),          # en-ish, near threshold
-         (100005, "ß ß ß"), (100006, "añå")],  # marker-char ties
+         (100005, "ß ß ß"), (100006, "añå"),   # marker-char ties
+         # self-overlapping trigram chains: window counts exceed the
+         # non-overlapping counts both paths use
+         (100007, "anananana"), (100008, "t t t t t"),
+         (100009, "içiçiçi"), (100010, "y y y y y"), (100011, "ininini")],
         "doc_id long, text string")
     both = docs.select("doc_id", "text").unionByName(edge)
     a = {r.doc_id: r.lang_guess
@@ -291,3 +297,107 @@ def test_arrow_kernel_matches_expression_path(spark):
     b = {r.doc_id: r.lang_guess
          for r in with_language_guess_expr(both).select("doc_id", "lang_guess").collect()}
     assert a == b
+
+
+def _reference_lid_guess_frame(padded: pd.Series) -> pd.Series:
+    """The per-pattern scorer the one-pass kernel replaced: one
+    ``count_substring`` pass per trigram and marker (non-overlapping
+    counts, as the expression path's length-replace reads them) and one
+    ``count_substring_regex`` pass per script class."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arr = pa.array(padded.fillna(""), type=pa.large_string())
+    n = len(arr)
+
+    def counts(pattern: str, regex: bool = False):
+        fn = pc.count_substring_regex if regex else pc.count_substring
+        return fn(arr, pattern=pattern).to_numpy(
+            zero_copy_only=False).astype(np.int64)
+
+    scores = {}
+    for lang, tris in TA.LANG_TRIGRAMS.items():
+        s = np.zeros(n, dtype=np.int64)
+        for t in tris:
+            s += counts(t) * len(t)
+        for c in TA._MARKER_CHARS.get(lang, ""):
+            s += counts(c) * (3 * TA._MARKER_WEIGHT)
+        scores[lang] = s
+    for lang, cls in TA._SCRIPT_RANGES.items():
+        scores[lang] = counts(f"[{cls}]", regex=True) * (
+            3 * TA._SCRIPT_WEIGHT.get(lang, 1))
+    best = np.maximum.reduce(list(scores.values()))
+    guess = np.full(n, "und", dtype=object)
+    for lang in reversed(list(scores)):
+        guess = np.where(scores[lang] == best, lang, guess)
+    guess = np.where(best >= TA._LID_THRESHOLD3, guess, "und")
+    return pd.Series(guess, dtype=object)
+
+
+_SELF_OVERLAPPING = [t for tris in TA.LANG_TRIGRAMS.values() for t in tris
+                     if t[0] == t[2]]
+
+
+def _adversarial_texts() -> list:
+    """Rows built to break a window-counting kernel: chains of every
+    self-overlapping trigram, markers and script characters, non-BMP and
+    combining characters, embedded NUL, NULL and empty rows."""
+    markers = "".join(TA._MARKER_CHARS.values())
+    scripts = "яώيתॐ가ぁ一"
+    rows = [None, "", " ", "\x00", "\x00\x00", markers, scripts,
+            "ß\x00\x00ß", "\x00\x00ñ", "\x00\x00å ñ", "a\x00ana\x00ß",
+            "😀🏳️‍🌈𝔘𝔫", "e\u0301te\u0301 ça", "ß" * 5, "ñåß" * 3]
+    for t in _SELF_OVERLAPPING:
+        step = t[:2]
+        for k in range(1, 6):  # 'ana', 'anana', ... 'ana' chained k times
+            chain = step * k + t[2:]
+            rows += [chain, chain.strip(), f"x{chain}x", f"{chain}\x00{chain}"]
+    rng = random.Random(7)
+    alphabet = (list("abcdeilnorstuyz  ") + list(markers) + list(scripts)
+                + ["\x00", "😀", "\u0301"]
+                + [t for tris in TA.LANG_TRIGRAMS.values() for t in tris])
+    for _ in range(1500):
+        rows.append("".join(rng.choice(alphabet)
+                            for _ in range(rng.randint(0, 40))))
+    return rows
+
+
+def test_self_overlapping_trigrams_are_the_exact_kernel_set():
+    # the kernel counts windows for every other trigram; these are the
+    # ones whose window count can exceed the non-overlapping count
+    assert len(_SELF_OVERLAPPING) == 17
+    assert {"t t", " y ", "ana", "i i", "içi"} <= set(_SELF_OVERLAPPING)
+    _, _, _, overlapping = TA._LID_TABLE
+    assert [t for t, _ in overlapping] == _SELF_OVERLAPPING
+
+
+def test_one_pass_kernel_matches_per_pattern_reference():
+    """No Spark: the kernel's guesses equal the per-pattern reference on
+    adversarial rows, padded as the JVM pads them, in one batch and in
+    one-row and zero-row batches."""
+    rows = _adversarial_texts()
+    padded = pd.Series([None if t is None else f" {t} " for t in rows],
+                       dtype=object)
+    got = TA._lid_guess_frame(padded)
+    want = _reference_lid_guess_frame(padded)
+    assert len(got) == len(rows)
+    mismatched = [(rows[i], got[i], want[i]) for i in range(len(rows))
+                  if got[i] != want[i]]
+    assert not mismatched, mismatched[:10]
+    # the rows are not all 'und': every classifier path is exercised
+    assert len(set(got)) >= 8, set(got)
+    for i in range(0, len(rows), 97):
+        one = padded.iloc[i:i + 1].reset_index(drop=True)
+        assert list(TA._lid_guess_frame(one)) == [want[i]]
+    empty = pd.Series([], dtype=object)
+    assert len(TA._lid_guess_frame(empty)) == 0
+    assert len(_reference_lid_guess_frame(empty)) == 0
+
+
+def test_one_pass_kernel_matches_reference_on_seed_prose():
+    texts = list(TA._LANG_SEEDS.values()) + list(TA.NONLATIN_SAMPLES.values())
+    texts += [s for ss in EVAL_SENTENCES.values() for s in ss]
+    padded = pd.Series([f" {t} " for t in texts], dtype=object)
+    assert list(TA._lid_guess_frame(padded)) == list(
+        _reference_lid_guess_frame(padded))

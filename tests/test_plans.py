@@ -388,24 +388,40 @@ def test_quota_sample_is_two_phase(spark):
 
 
 def test_curation_funnel_single_lazy_plan(spark):
-    """q59: the composed funnel stays declarative — scan-side LID/quality,
-    keyed shuffles only for the rep/boiler/canon signals, q51's frequent
-    set still broadcast inside the composition, and no global sort.
-
-    Round-7: the LID gate moved to the Arrow-vectorized kernel (10x;
-    equivalence pinned in test_langid), so the plan legitimately carries
-    ArrowEvalPython nodes — still scan-side, still zero extra shuffles.
-    The pin now enforces the real invariant: no row-pickled Python
-    (BatchEvalPython) ever, and the only Python nodes are the Arrow ones."""
+    """q59/q62: the funnel is one scan-side projection plus two corpus
+    aggregates — at most 2 ``documents`` scans, at most 4 shuffle
+    exchanges (q62's report aggregate adds one), exactly one Arrow Python
+    node (the LID kernel), q51's frequent set broadcast, under AQE off and
+    on.  Nodes are counted as ``sparkbench.tracing.plan_counts`` counts
+    them.  No row-pickled Python (BatchEvalPython), no cartesian product,
+    no global sort."""
     import importlib
     Q = importlib.import_module("pdf_extraction_tests_spark.queries")
-    plan = formatted_plan(Q.queries()["q59_curation_funnel"](spark, SF))
-    assert "BatchEvalPython" not in plan, plan
-    # every Python node must be the vectorized Arrow flavor
-    assert plan.count("EvalPython") == plan.count("ArrowEvalPython"), plan
-    assert "CartesianProduct" not in plan, plan
-    assert "Exchange rangepartitioning" not in plan, plan
-    assert has_broadcast_join(plan)
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        for aqe in ("false", "true"):
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            for name, max_exchanges in (("q59_curation_funnel", 4),
+                                        ("q62_funnel_summary", 5)):
+                plan = formatted_plan(Q.queries()[name](spark, SF))
+                nodes = re.findall(r"^\(\d+\) (\w+)", plan,
+                                   flags=re.MULTILINE)
+                where = (name, aqe, plan)
+                scans = re.findall(r"^\(\d+\) Scan .*?Location: [^\n]*", plan,
+                                   flags=re.MULTILINE | re.DOTALL)
+                assert len(scans) == nodes.count("Scan"), where
+                assert all("documents.parquet" in sc for sc in scans), where
+                assert nodes.count("Scan") <= 2, where
+                assert count_exchanges(plan) <= max_exchanges, where
+                assert nodes.count("ArrowEvalPython") == 1, where
+                assert "BatchEvalPython" not in plan, where
+                assert plan.count("EvalPython") == plan.count(
+                    "ArrowEvalPython"), where
+                assert "CartesianProduct" not in plan, where
+                assert "Exchange rangepartitioning" not in plan, where
+                assert has_broadcast_join(plan), where
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
 
 
 def test_kmeans_centroid_update_state_is_bounded(spark):

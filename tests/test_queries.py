@@ -204,3 +204,38 @@ def test_q62_empty_documents_matches_oracle(spark, tmp_path):
     got = _canon(spec.fn(spark, str(tmp_path)).toPandas())
     assert ("total", 0, 0) in want
     assert got == want
+
+
+# one combined off-default conf: ANSI off, AQE off, one shuffle partition
+# and one row per Arrow batch (every LID batch is a single row)
+_OFF_DEFAULT_CONF = {
+    "spark.sql.ansi.enabled": "false",
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "1",
+}
+
+
+def test_curation_family_matches_oracle_under_off_default_conf(spark):
+    """The language-ID, boilerplate, repetition and funnel queries equal
+    their DuckDB oracles under the combined off-default conf, and every
+    conf reads as before afterwards."""
+    saved = {k: spark.conf.get(k, None) for k in _OFF_DEFAULT_CONF}
+    specs = [s for s in REGISTRY if s.name in (
+        "q29_language_guess", "q51_boilerplate_ngrams",
+        "q57_repetition_signals", "q59_curation_funnel",
+        "q62_funnel_summary")]
+    assert len(specs) == 5
+    try:
+        for k, v in _OFF_DEFAULT_CONF.items():
+            spark.conf.set(k, v)
+        for spec in specs:
+            got = _canon(spec.fn(spark, SF_DIR).toPandas())
+            assert got == _canon(_duck(spec.sql)), spec.name
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert {k: spark.conf.get(k, None) for k in _OFF_DEFAULT_CONF} == saved
