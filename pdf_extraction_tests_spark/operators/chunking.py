@@ -39,13 +39,17 @@ def chunk_documents(
     """
     if stride <= 0 or width <= 0:
         raise ValueError("width and stride must be positive")
-    w = F.split(F.lower(text_col), r"\s+")
+    w = F.col("w")
     starts = F.when(
         F.size(w) > 0,
         F.sequence(F.lit(0), F.size(w) - 1, F.lit(stride)),
     ).otherwise(F.array().cast("array<int>"))
     return (
-        docs.select(F.col(id_col), w.alias("w"), F.explode(starts).alias("s"))
+        # w is projected before the select that explodes: an expression
+        # beside a generator is evaluated once per generated row
+        docs.select(F.col(id_col), F.split(F.lower(text_col), r"\s+")
+                    .alias("w"))
+        .select(id_col, "w", F.explode(starts).alias("s"))
         .select(
             id_col,
             (F.col("s") / stride).cast("bigint").alias("chunk_idx"),

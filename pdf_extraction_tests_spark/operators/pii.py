@@ -40,6 +40,14 @@ def _count(text: Column, pattern: str) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(pattern), F.lit(0)))
 
 
+def redacted(text_col: str = "text") -> Column:
+    """Column ``text_col`` with every PATTERNS match replaced, in order."""
+    clean = F.col(text_col)
+    for _, pat, repl in PATTERNS:
+        clean = F.regexp_replace(clean, pat, repl)
+    return clean
+
+
 def scrub_pii(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -52,9 +60,6 @@ def scrub_pii(
     """
     text = F.col(text_col)
     counts = {name: _count(text, pat) for name, pat, _ in PATTERNS}
-    clean = text
-    for _, pat, repl in PATTERNS:
-        clean = F.regexp_replace(clean, pat, repl)
     total = None
     for name in counts:
         total = counts[name] if total is None else total + counts[name]
@@ -65,7 +70,7 @@ def scrub_pii(
             for name, _, _ in PATTERNS
         ],
         total.cast("bigint").alias("n_pii"),
-        clean.alias("clean_text"),
+        redacted(text_col).alias("clean_text"),
     )
 
 

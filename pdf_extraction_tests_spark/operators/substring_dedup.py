@@ -15,10 +15,10 @@ Spark shape:
 2. cross-document frequency is one groupBy(gram) with map-side partial
    ``count(distinct doc_id)`` aggregation;
 3. duplicated grams (>= ``min_docs`` distinct docs) join back to the gram
-   stream ON GRAM — both sides hash-partition by gram, so this is a
-   co-partitioned shuffle join, NEVER a broadcast of the duplicate set
-   (at corpus scale the duplicate vocabulary grows with the corpus,
-   unlike q51's min_df frequent set which is bounded by true boilerplate);
+   stream ON GRAM: a set below the broadcast threshold is broadcast, a
+   larger one is a shuffle join co-partitioned on gram (at corpus scale
+   the duplicate vocabulary grows with the corpus, unlike q51's min_df
+   frequent set; a join hint would shuffle at every size);
 4. covered start offsets fold per doc (bounded by doc length), and the
    rewrite itself is an indexed ``filter`` lambda over the word array —
    a word survives iff no duplicated gram window [s, s+n) covers it.
@@ -76,7 +76,7 @@ def duplicated_span_rewrite(
         .select("gram")
     )
     covered = (
-        grams.join(dup_grams, "gram")  # co-partitioned on gram, not broadcast
+        grams.join(dup_grams, "gram")  # broadcast or co-partitioned: step 3
         .groupBy(id_col)
         .agg(F.sort_array(F.collect_set("s")).alias("starts"))
     )

@@ -89,3 +89,13 @@ def lambda_bodies(plan: str) -> list[str]:
                     bodies.append(plan[m.start():j + 1])
                     break
     return bodies
+
+
+def plan_nodes(plan: str) -> list[tuple[str, str]]:
+    """(name, details) of each node in a formatted plan's detail section,
+    in id order: the first word of the ``(n) Name ...`` header (``Scan``,
+    ``Project``, ``BroadcastHashJoin``) and the header plus the lines
+    under it."""
+    return [(m.group(2), m.group(1)) for m in re.finditer(
+        r"^(\(\d+\) (\w+).*?)(?=^\(\d+\) |\Z)", plan,
+        flags=re.MULTILINE | re.DOTALL)]

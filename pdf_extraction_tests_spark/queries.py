@@ -1438,8 +1438,7 @@ def q50(spark, sf_dir):
 
 
 from pdf_extraction_tests_spark.operators.boilerplate import (  # noqa: E402
-    boilerplate_fraction, boilerplate_fraction_sql, frequent_grams,
-    word_ngrams_col)
+    boilerplate_fraction, boilerplate_fraction_sql, frequent_grams)
 from pdf_extraction_tests_spark.operators.bm25 import (  # noqa: E402
     bm25_topk, bm25_topk_sql)
 from pdf_extraction_tests_spark.operators.chunking import (  # noqa: E402
@@ -1489,7 +1488,7 @@ from pdf_extraction_tests_spark.operators.substring_dedup import (  # noqa: E402
 from pdf_extraction_tests_spark.operators.pii import (  # noqa: E402
     scrub_pii, scrub_pii_sql)
 from pdf_extraction_tests_spark.operators.repetition import (  # noqa: E402
-    gram_runs, repetition_signals, repetition_signals_sql)
+    gram_arrays, gram_frac, repetition_signals, repetition_signals_sql)
 from pdf_extraction_tests_spark.operators.sampling import (  # noqa: E402
     quota_sample, quota_sample_sql)
 
@@ -1499,8 +1498,9 @@ def q55(spark, sf_dir):
     """Exact substring dedup REWRITE (Lee et al. 2022 at word-8-gram
     granularity): spans covered by a gram occurring in >=2 distinct docs
     are cut out; returns per-doc counts + the rewritten text.  The
-    duplicate-gram join is co-partitioned on gram (never a broadcast —
-    the dup vocabulary grows with the corpus)."""
+    duplicate-gram join broadcasts a duplicate set below the broadcast
+    threshold and is a shuffle join co-partitioned on gram above it (the
+    dup vocabulary grows with the corpus)."""
     return duplicated_span_rewrite(load(spark, sf_dir, "documents"))
 
 
@@ -1536,10 +1536,12 @@ def q56(spark, sf_dir):
 @query("q57_repetition_signals", repetition_signals_sql())
 def q57(spark, sf_dir):
     """Gopher-style within-document repetition gates: top-bigram occurrence
-    fraction + duplicated-trigram position fraction, two algebraic
-    aggregation pyramids (state = one counter per distinct (doc, gram)).
-    Complements q47, which gates on exact repeated SENTENCES; these n-gram
-    signals catch sub-sentence loops q47 cannot see."""
+    fraction + duplicated-trigram position fraction, one projection of one
+    scan (each row's sorted gram arrays, ``repetition.gram_runs``; no
+    shuffle, no join).  One row per input row, a repeated doc_id included,
+    as the per-row oracle.  Complements q47, which gates on exact repeated
+    SENTENCES; these n-gram signals catch sub-sentence loops q47 cannot
+    see."""
     return repetition_signals(load(spark, sf_dir, "documents"))
 
 
@@ -1610,11 +1612,10 @@ def q59(spark, sf_dir):
     One projection of one scan computes every per-row signal: the LID
     kernel's guess (the plan's one ArrowEvalPython), the quality score,
     the 5-word prefix digest, and the bigram and trigram arrays
-    (``boilerplate.word_ngrams_col``, q51/q57's gram definition).  The
-    repetition fractions come from the row's own sorted gram arrays
-    (``repetition.gram_runs``: longest run over bigram positions, summed
-    runs of >= 2 over trigram positions), each guarded by ``IF(n > 0, ...)``
-    so ANSI division cannot raise.  Two corpus aggregates remain:
+    (``repetition.gram_arrays``, q51/q57's gram definition).  The
+    repetition fractions are q57's own (``repetition.gram_frac``: longest
+    run over bigram positions, summed runs of >= 2 over trigram positions
+    of the row's sorted gram arrays).  Two corpus aggregates remain:
 
     * q51's frequent-trigram set (``boilerplate.frequent_grams``: one
       shuffle on ``gram``, countDistinct(doc_id) >= 3), broadcast onto the
@@ -1631,10 +1632,6 @@ def q59(spark, sf_dir):
     those rows, where the oracle's joins multiply rows; which is intended
     is still open."""
 
-    def frac(run: str, grams: str) -> str:
-        return (f"round(IF(size({grams}) > 0, "
-                f"{gram_runs(grams)}.{run} / size({grams}), 0.0), 6)")
-
     d = load(spark, sf_dir, "documents")
     digest = F.md5(F.array_join(F.slice(F.split("text", " "), 1, 5), " "))
     rows = (
@@ -1644,19 +1641,19 @@ def q59(spark, sf_dir):
             (F.col("lang_guess") == "en").alias("pass_lang"),
             (F.col("quality") >= 1.0).alias("pass_quality"),
             digest.alias("digest"),
-            word_ngrams_col("text", 2).alias("bi"),
-            word_ngrams_col("text", 3).alias("tri"),
+            *gram_arrays(),
         )
         .where("doc_id IS NOT NULL AND digest IS NOT NULL")
         .select(
-            "doc_id", "digest", "pass_lang", "pass_quality", "tri",
-            F.expr(f"{frac('dup', 'tri')} <= 0.05 AND {frac('top', 'bi')} "
-                   "<= 0.1").alias("pass_repetition"),
+            "doc_id", "digest", "pass_lang", "pass_quality", "_tri",
+            F.expr(f"{gram_frac('dup', '_tri')} <= 0.05 AND "
+                   f"{gram_frac('top', '_bi')} <= 0.1")
+            .alias("pass_repetition"),
         )
         # a separate select: expressions beside a generator are evaluated
         # once per generated row, here once per gram position
         .select("doc_id", "digest", "pass_lang", "pass_quality",
-                "pass_repetition", F.explode_outer("tri").alias("gram"))
+                "pass_repetition", F.explode_outer("_tri").alias("gram"))
     )
     flags = (
         rows.join(F.broadcast(frequent_grams(d)), "gram", "left")

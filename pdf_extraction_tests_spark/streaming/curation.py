@@ -38,44 +38,45 @@ def curate_batch(docs: DataFrame,
 
     Returns the KEPT documents as (doc_id, clean_text, lang_guess,
     quality, top_bigram_frac, dup_trigram_frac) — clean_text is
-    PII-scrubbed.  Same operators as the standalone queries
+    PII-scrubbed.  Same column definitions as the standalone queries
     (q29/q30/q57/q56), so the streaming path cannot drift from them.
 
-    ``lang=None`` disables the language gate AND skips building the LID
-    expression entirely (lang_guess reads NULL): the 18-language score
-    tree is by far the most expensive part of the plan to ANALYZE, and a
-    foreachBatch sink re-plans it per epoch — pipelines that gate on
-    language elsewhere should not pay it here.
+    Every signal is a column of one projection over the batch and every
+    gate a filter: no exchange and no join back on ``doc_id``, so each
+    input row gives at most one output row, a repeated id included.
+
+    ``lang=None`` disables the language gate and skips the language-ID
+    kernel (lang_guess reads NULL): the plan then has no Python node, so
+    pipelines that gate on language elsewhere do not pay the Arrow
+    round trip here.
     """
-    from pdf_extraction_tests_spark.operators.pii import scrub_pii
+    from pdf_extraction_tests_spark.operators.pii import redacted
     from pdf_extraction_tests_spark.operators.repetition import (
-        repetition_signals)
+        gram_arrays, repetition_fracs)
     from pdf_extraction_tests_spark.operators.text_analysis import (
         with_language_guess, with_quality_score)
 
     if lang is None:
-        scored = docs.withColumn(
-            "lang_guess", F.lit(None).cast("string"))
-        lang_gate = F.lit(True)
+        scored, lang_gate = docs, F.lit(True)
     else:
         scored = with_language_guess(docs)
         lang_gate = F.col("lang_guess") == lang
-    base = with_quality_score(scored).select(
-        "doc_id", "text", "lang_guess", "quality")
-    rep = repetition_signals(docs).select(
-        "doc_id", "top_bigram_frac", "dup_trigram_frac")
-    scrubbed = scrub_pii(docs).select("doc_id", "clean_text")
     return (
-        base.join(rep, "doc_id")
-        .join(scrubbed, "doc_id")
+        with_quality_score(scored)
+        .filter(lang_gate)
+        # a kept row's guess is ``lang`` itself.  Read from the kernel's
+        # column instead, it would run the kernel twice: the optimizer
+        # pushes the filter below the projection that computes the guess.
+        .select("doc_id", redacted().alias("clean_text"),
+                F.lit(lang).cast("string").alias("lang_guess"), "quality",
+                *gram_arrays())
+        .select("doc_id", "clean_text", "lang_guess", "quality",
+                *repetition_fracs())
         .filter(
-            lang_gate
-            & (F.col("quality") >= min_quality)
+            (F.col("quality") >= min_quality)
             & (F.col("dup_trigram_frac") <= max_dup_trigram)
             & (F.col("top_bigram_frac") <= max_top_bigram)
         )
-        .select("doc_id", "clean_text", "lang_guess", "quality",
-                "top_bigram_frac", "dup_trigram_frac")
     )
 
 

@@ -1065,32 +1065,33 @@ class TestRepetitionSignals:
                        repetition_signals(df.repartition(16)).collect()))
         assert a == b
 
-    def test_gram_runs_equals_per_doc_gram_stats(self, spark):
-        """The row-local run-length form (q59) equals the two-aggregate
-        form (q57) on unique ids: runs at the start, middle and end of the
-        sorted array, one gram, no gram, NULL text."""
-        from pyspark.sql import functions as F
+    def test_gram_runs_equals_per_row_oracle(self, spark):
+        """The row-local run-length signals (``repetition.gram_runs``) equal
+        the per-row DuckDB oracle: runs at the start, middle and end of the
+        sorted array, one gram, no gram, NULL text, and an id on two rows
+        with different texts (each row keeps its own signals)."""
+        import duckdb
+        import pandas as pd
 
-        from pdf_extraction_tests_spark.operators.boilerplate import (
-            word_ngrams_col)
         from pdf_extraction_tests_spark.operators.repetition import (
-            _per_doc_gram_stats, gram_runs)
-        df = spark.createDataFrame([
+            repetition_signals, repetition_signals_sql)
+        from tests.test_queries import _canon
+        rows = [
             (0, ("spam ham " * 8).strip()), (1, "a b c d e f"),
             (2, "a b a b a b z y z y q"), (3, "x x x x"), (4, "one two"),
             (5, "one"), (6, ""), (7, None), (8, "b a b a c d c d c d e"),
-        ], "doc_id long, text string")
-        for n in (2, 3):
-            want = {r.doc_id: (r.g_top_cnt, r.g_dup_pos, r.g_total)
-                    for r in _per_doc_gram_stats(df, "doc_id", "text", n,
-                                                 "g").collect()}
-            runs = df.select(
-                "doc_id", word_ngrams_col("text", n).alias("g")).select(
-                "doc_id", F.expr(gram_runs("g")).alias("r"),
-                F.size("g").alias("total"))
-            got = {r.doc_id: (r.r.top, r.r.dup, r.total)
-                   for r in runs.collect() if r.total > 0}
-            assert got == want, n
+            (9, "x x x x y"), (9, "p q r s p q r s"),
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        documents = pd.DataFrame(rows, columns=["doc_id", "text"])
+        con = duckdb.connect()
+        con.register("documents", documents)
+        want = _canon(con.execute(repetition_signals_sql()).df())
+        assert len(want) == len(rows)
+        # columns by name: doc_id, dup_trigram_frac, n_words, top_bigram_frac
+        assert sorted(t[1:] for t in want if t[0] == 9) == [
+            (round(2 / 3, 6), 5, 0.75), (round(4 / 6, 6), 8, round(2 / 7, 6))]
+        assert _canon(repetition_signals(df).toPandas()) == want
 
 
 class TestQuotaSample:

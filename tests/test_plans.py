@@ -16,6 +16,7 @@ from pdf_extraction_tests_spark.plans.audit import (
     formatted_plan,
     has_broadcast_join,
     lambda_bodies,
+    plan_nodes,
     pushed_filters,
     read_schema_columns,
     scan_stage_lines,
@@ -336,18 +337,66 @@ def test_chunk_windows_zero_shuffle(spark):
     assert "EvalPython" not in plan, plan
 
 
+def test_chunk_windows_split_each_row_once(spark):
+    """q54: the word array is projected below the Generate that explodes
+    the window starts.  An expression in the Project above the Generate
+    runs once per chunk row, so a ``split`` there costs O(chunks x words)
+    per doc."""
+    from pdf_extraction_tests_spark.operators.chunking import chunk_documents
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    nodes = plan_nodes(formatted_plan(chunk_documents(docs)))
+    names = [name for name, _ in nodes]
+    assert names.count("Generate") == 1, nodes
+    above = nodes[names.index("Generate"):]
+    assert {name for name, _ in above[1:]} == {"Project"}, nodes
+    assert not [body for _, body in above if "split(" in body], nodes
+
+
 def test_dup_span_rewrite_join_is_copartitioned_not_broadcast(spark):
-    """q55: the duplicate-gram join must be a shuffle join keyed on gram
-    (the dup vocabulary grows with the corpus — broadcasting it is the
-    100 TB anti-plan); the rewrite itself adds no Python."""
+    """q55: once the duplicate-gram set is above the broadcast threshold,
+    its join to the gram stream is a shuffle join whose two sides are both
+    hash-partitioned on gram alone (the dup vocabulary grows with the
+    corpus — broadcasting it is the 100 TB anti-plan).  Below the
+    threshold, as at sf0.001 with the default, the planner broadcasts the
+    small set.  Asserted on the join node keyed on gram, with AQE off so
+    the plan is final; the rewrite adds no Python."""
     from pdf_extraction_tests_spark.operators.substring_dedup import (
         duplicated_span_rewrite)
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = formatted_plan(duplicated_span_rewrite(docs))
-    assert "hashpartitioning(gram" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "EvalPython" not in plan, plan
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        for threshold, join in ((None, "BroadcastHashJoin"),
+                                ("-1", "SortMergeJoin")):
+            if threshold is None:
+                spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+            else:
+                spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                               threshold)
+            plan = formatted_plan(duplicated_span_rewrite(docs))
+            gram_joins = [
+                (name, body) for name, body in plan_nodes(plan)
+                if "Join" in name and re.search(
+                    r"Left keys \[1\]: \[gram#\d+\]", body)]
+            assert [name for name, _ in gram_joins] == [join], plan
+            if join == "SortMergeJoin":
+                sides = re.findall(r"keys \[1\]: \[(gram#\d+)\]",
+                                   gram_joins[0][1])
+                assert len(sides) == 2, plan
+                for key in sides:
+                    assert f"hashpartitioning({key}, " in plan, (key, plan)
+            assert "CartesianProduct" not in plan, plan
+            assert "EvalPython" not in plan, plan
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_pii_scrub_zero_shuffle(spark):
@@ -361,16 +410,39 @@ def test_pii_scrub_zero_shuffle(spark):
     assert "EvalPython" not in plan, plan
 
 
-def test_repetition_aggregates_are_algebraic(spark):
-    """q57: both gram pyramids are hash aggregates with map-side partials
-    (no window over raw grams, no sort-based holistic state)."""
-    from pdf_extraction_tests_spark.operators.repetition import (
-        repetition_signals)
+def test_row_local_curation_signals_plan_as_one_projection(spark):
+    """q57 and the streaming curator compute every per-document signal as a
+    column of one projection over one ``documents`` scan: no shuffle
+    exchange, no join (nothing is joined back on ``doc_id``), no
+    row-pickled Python, under AQE off and on.  The curator's only Python
+    node is the language-ID kernel, and only with a language gate.  Nodes
+    are counted as in ``test_curation_funnel_single_lazy_plan``."""
+    from pdf_extraction_tests_spark.streaming.curation import curate_batch
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = formatted_plan(repetition_signals(docs))
-    assert plan.count("HashAggregate") >= 6, plan   # 2 grams x (partial+final)+fold
-    assert "Exchange rangepartitioning" not in plan, plan
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        for aqe in ("false", "true"):
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            for name, df, arrow_nodes in (
+                    ("q57", queries()["q57_repetition_signals"](spark, SF), 0),
+                    ("curate", curate_batch(docs), 1),
+                    ("curate lang=None", curate_batch(docs, lang=None), 0)):
+                plan = formatted_plan(df)
+                nodes = re.findall(r"^\(\d+\) (\w+)", plan,
+                                   flags=re.MULTILINE)
+                where = (name, aqe, plan)
+                scans = re.findall(r"^\(\d+\) Scan .*?Location: [^\n]*",
+                                   plan, flags=re.MULTILINE | re.DOTALL)
+                assert len(scans) == nodes.count("Scan") == 1, where
+                assert "documents.parquet" in scans[0], where
+                assert count_exchanges(plan) == 0, where
+                assert "BroadcastExchange" not in plan, where
+                assert not [n for n in nodes if "Join" in n], where
+                assert nodes.count("ArrowEvalPython") == arrow_nodes, where
+                assert "BatchEvalPython" not in plan, where
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
 
 
 def test_quota_sample_is_two_phase(spark):
