@@ -6,12 +6,14 @@ operator exactly reproducible in DuckDB for the driver's oracle check.
 
 Scale notes (100 TB):
 * exact dedup = one shuffle on the digest — the minimum possible;
-* MinHash signatures are computed scan-side per row (no shuffle), the LSH
-  band join shuffles only (band_key -> doc) pairs, and candidate
-  verification joins only within buckets;
+* MinHash signatures are computed scan-side per row (no shuffle), LSH
+  banding shuffles only (band_key -> doc) rows, and candidates pair only
+  within buckets;
 * stop-shingle removal (drop shingles appearing in > max_df docs) bounds the
-  n-gram self-join blowup — the standard trick for web-scale near-dup;
-* all self-joins are strictly upper-triangular (doc_a < doc_b).
+  n-gram pair blowup — the standard trick for web-scale near-dup;
+* every banded candidate set comes from :func:`bucket_pairs` (strictly
+  upper-triangular, doc_a < doc_b); every cosine from
+  :func:`.similarity.dot` and :func:`.similarity.norm`.
 """
 
 from __future__ import annotations
@@ -19,6 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .boilerplate import quoted, word_ngrams
+from .similarity import dot, hyperplanes, lsh_bucket_expr, lsh_bucket_sql, norm
+
+
+def _h48(col_expr) -> str:
+    return f"cast(conv(substr(md5({col_expr}), 1, 12), 16, 10) as bigint)"
 
 
 def h48(col):
@@ -26,11 +33,7 @@ def h48(col):
 
     DuckDB equivalent: ``('0x' || substr(md5(x), 1, 12))::BIGINT``.
     """
-    return F.expr(f"cast(conv(substr(md5({col}), 1, 12), 16, 10) as bigint)")
-
-
-def _h48(col_expr) -> str:
-    return f"cast(conv(substr(md5({col_expr}), 1, 12), 16, 10) as bigint)"
+    return F.expr(_h48(col))
 
 
 def _h48_duck(col_expr) -> str:
@@ -58,6 +61,46 @@ def exact_dedup(docs: DataFrame, text_col: str = "text",
             F.count("*").alias("n_copies"),
         )
         .filter(F.col("n_copies") > 1)
+    )
+
+
+# ---------------------------------------------------------------------------
+# bucket pairs: the candidate step of every banded near-dup operator
+# ---------------------------------------------------------------------------
+
+
+def bucket_pairs(df: DataFrame, bucket_cols: list[str], id_col: str,
+                 max_size: int | None = None) -> DataFrame:
+    """(doc_a, doc_b): every pair of ids that share a bucket, one row per
+    (bucket, pair).
+
+    * Strict upper triangle: ``doc_a < doc_b``, so no ``(x, x)`` and no
+      mirrored ``(b, a)``.
+    * Set semantics: an id counts once per bucket however many input rows
+      carry it (``array_sort(collect_set(id))``), so repeated rows neither
+      repeat a pair within a bucket nor pair an id with itself.
+    * Per-bucket state is the bucket's id list, bounded by bucket size.
+      Buckets with more than ``max_size`` distinct ids are dropped (None
+      keeps every bucket).
+
+    The bucketed frame is computed once and shuffled once on the bucket
+    keys; a self-join on the keys would plan it twice.  A pair that shares
+    several buckets appears once per bucket: callers that want a pair set
+    add ``distinct``.
+    """
+    keep = F.size("ids") >= 2
+    if max_size is not None:
+        keep = keep & (F.size("ids") <= max_size)
+    buckets = (
+        df.groupBy(*bucket_cols)
+        .agg(F.array_sort(F.collect_set(id_col)).alias("ids"))
+        .filter(keep)
+    )
+    return buckets.select("ids", F.posexplode("ids").alias("i", "doc_a")).select(
+        "doc_a",
+        F.explode(
+            F.slice(F.col("ids"), F.col("i") + F.lit(2), F.size("ids"))
+        ).alias("doc_b"),
     )
 
 
@@ -159,43 +202,12 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4,
     key is the band's hash values concatenated (cross-engine deterministic;
     on a pure-Spark deployment swap in xxhash64(*cols) to shrink the key).
 
-    Pairs are generated per BUCKET (groupBy (band, bh) -> sorted id list ->
-    upper-triangular explode), not by self-joining the banded frame: the
-    self-join planned the entire signature pipeline TWICE (both join inputs
-    re-scanned the corpus and recomputed every shingle md5 — visible as two
-    identical subtrees in the round-7 before-plan), while this shape
-    computes signatures once and shuffles only (band, bh, doc_id) rows.
-    Output is identical: ids within a bucket are unique (one row per
-    (doc, band)), so the sorted list's strict upper triangle is exactly
-    the ``a.doc_id < b.doc_id`` join result, distinct across bands.
-    Per-bucket state is the bucket's id list — bounded by bucket size, the
-    same concentration the join shape put in one partition's hash table.
-
-    Round-7 same-session A/B at sf0.1: 1.477 s (this shape) vs 1.504 s
-    (self-join) wall — parity locally because the join's two duplicate
-    subtrees ran on otherwise-idle cores; on a busy cluster the halved
-    signature CPU is the win, and the plan provably scans the corpus once.
+    The pairs of each (band, band_key) bucket come from
+    :func:`bucket_pairs`; ``distinct`` folds a pair shared by several bands
+    into one row.
     """
     bk = banded_keys(signatures, bands, rows_per_band)
-    buckets = (
-        bk.groupBy("band", "bh")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    lefts = buckets.select("ids", F.posexplode("ids").alias("i", "doc_a"))
-    return (
-        lefts.select(
-            "doc_a",
-            F.explode(
-                F.slice(F.col("ids"), F.col("i") + F.lit(2), F.size("ids"))
-            ).alias("doc_b"),
-        )
-        # a duplicated input id would make the sorted list emit (x, x),
-        # which the old strict `a.doc_id < b.doc_id` join could never
-        # produce — the filter restores exact parity for ANY input
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .distinct()
-    )
+    return bucket_pairs(bk, ["band", "bh"], "doc_id").distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -208,48 +220,29 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
                         id_col: str = "doc_id") -> DataFrame:
     """Exact Jaccard over word n-gram sets for near-duplicate pairs.
 
-    ``max_df`` drops stop-shingles (appearing in > max_df docs) before the
-    self-join — bounding the quadratic blowup; at web scale this filter is
-    what keeps the shuffle linear-ish in corpus size.
+    ``max_df`` drops stop-shingles (appearing in > max_df docs) before
+    pairing — bounding the quadratic blowup; at web scale this filter is
+    what keeps the shuffle linear-ish in corpus size.  Per-doc sizes come
+    from the per-row shingle arrays; common counts are the
+    :func:`bucket_pairs` rows of the per-shingle buckets, capped at
+    ``max_df`` ids.
     """
     # NO cache: this function returns a lazy frame, so a cache here could
-    # only be released by the caller (round-2 leak: one pinned shingle frame
-    # per call, session lifetime).
-    #
-    # Round-7 shape (guide §2.4/§8): the old plan referenced the shingle
-    # stream FOUR times (sizes, the df count, and both sides of a
-    # rare-self-join), so the scan-side shingle expansion ran 4x and the
-    # self-join shuffled the (doc, shingle) stream twice.  Now: per-doc
-    # sizes come from the per-row shingle arrays (no explode at all),
-    # and common counts come from per-shingle sorted id lists
-    # (groupBy(shingle) -> upper-triangular pair explode, df <= max_df
-    # bounding each list) — the shingle pipeline runs ONCE, one exchange
-    # on shingle instead of a self-join.  Same-session A/B at sf0.1:
-    # 4.22 s -> 2.60 s, result rows exactly equal.
+    # only be released by the caller (one pinned shingle frame per call,
+    # session lifetime).
     words = F.split(F.col(text_col), " ")
     sh_arr = F.array_distinct(
         word_ngrams(f"split({quoted(text_col)}, ' ')", n))
     # Both sides treat a doc_id as its set of shingles over ALL its rows, as
     # the oracle's DISTINCT (doc_id, shingle) does: sizes has one row per
-    # doc_id (so the joins below cannot repeat a pair), and collect_set
-    # counts a shingle once per doc (so a repeated doc_id row neither
-    # doubles n_common nor emits (x, x) pairs).
+    # doc_id (so the joins below cannot repeat a pair), and bucket_pairs
+    # counts a shingle once per doc (so a repeated doc_id row does not
+    # double n_common).
     base = docs.filter(F.size(words) >= n)
     sizes = base.groupBy(F.col(id_col).alias("doc_id")).agg(
         F.size(F.array_distinct(F.flatten(F.collect_list(sh_arr)))).alias("sz"))
     sh = with_shingles(docs, n, text_col, id_col)
-    grams = (
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_df))
-    )
-    lefts = grams.select("ids", F.posexplode("ids").alias("i", "doc_a"))
-    pairs = lefts.select(
-        "doc_a",
-        F.explode(
-            F.slice(F.col("ids"), F.col("i") + F.lit(2), F.size("ids"))
-        ).alias("doc_b"),
-    )
+    pairs = bucket_pairs(sh, ["shingle"], "doc_id", max_size=max_df)
     common = pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_common"))
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
@@ -580,45 +573,42 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 25,
 # ---------------------------------------------------------------------------
 
 
+def _normed(emb: DataFrame, side: str, id_col: str,
+            vec_col: str) -> DataFrame:
+    """One side of a cosine pair join: (id_<side>, v<side>, _n<side>), the
+    norm computed once per vector rather than once per pair."""
+    return emb.select(F.col(id_col).alias(f"id_{side}"),
+                      F.col(vec_col).alias(f"v{side}"),
+                      norm(F.col(vec_col)).alias(f"_n{side}"))
+
+
+def _cosine_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, cosine) for the joined pairs whose RAW cosine reaches
+    ``threshold``; the output is rounded after the filter, as the oracle
+    SQL filters on the raw value and rounds in the SELECT (a value in
+    [threshold-5e-7, threshold) must fail on both engines)."""
+    raw = dot("va", "vb") / (F.col("_na") * F.col("_nb"))
+    return (
+        pairs.filter(raw >= threshold)
+        .withColumn("cosine", F.round(raw, 6))
+        .select("id_a", "id_b", "cosine")
+    )
+
+
 def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
                         id_col: str = "vec_id",
                         vec_col: str = "embedding") -> DataFrame:
     """Cosine near-duplicate pairs among embeddings (upper-triangular).
 
-    Brute-force O(n^2) — correct baseline; the LSH-bucketed variant in
-    :mod:`.similarity` is the scale path.  Cosine is computed in double
-    precision via zip_with + aggregate (JVM-side, no UDF).
-
-    Round-7: each vector's norm is computed ONCE in the a/b projections
-    (per input row) instead of per output pair — the norm is a
-    deterministic sequential fold over one vector, so its double value is
-    bit-identical wherever it is evaluated, and the per-pair work drops
-    from three 64-element folds to one (guide §1.2 step 2).
+    Brute-force O(n^2) — correct baseline; the sign-LSH bucketed variant
+    :func:`embedding_near_dups_bucketed` (q40) is the scale path.  Cosine is
+    computed in double precision via zip_with + aggregate (JVM-side, no
+    UDF).
     """
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(F.col(c), lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
-                   ).withColumn("_na", norm("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
-                   ).withColumn("_nb", norm("vb"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    raw = dot / (F.col("_na") * F.col("_nb"))  # filter raw, round for output
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(raw >= threshold)
-        .withColumn("cosine", F.round(raw, 6))
-        .select("id_a", "id_b", "cosine")
-    )
+    a = _normed(emb, "a", id_col, vec_col)
+    b = _normed(emb, "b", id_col, vec_col)
+    return _cosine_at_least(
+        a.crossJoin(b).filter(F.col("id_a") < F.col("id_b")), threshold)
 
 
 def embedding_near_dups_bucketed(emb: DataFrame, threshold: float = 0.95,
@@ -629,18 +619,17 @@ def embedding_near_dups_bucketed(emb: DataFrame, threshold: float = 0.95,
 
     Candidate generation is the same banded shape as MinHash-LSH: per band
     an independent hyperplane set buckets every vector scan-side (pure
-    column expressions, :func:`..similarity.lsh_bucket_expr`), the self-join
-    shuffles only (band, bucket, id) rows and touches same-bucket pairs
-    only (~n^2 / 2^bits per band instead of n^2), then candidates are
-    verified with the exact cosine (filter on RAW, round for output).
+    column expressions, :func:`..similarity.lsh_bucket_expr`),
+    :func:`bucket_pairs` shuffles only (band, bucket, id) rows and pairs
+    same-bucket ids only (~n^2 / 2^bits per band instead of n^2), then
+    candidates are verified with the exact cosine (filter on RAW, round for
+    output).
     Recall rises with ``bands`` and falls with ``bits``; at the real-dedup
     operating point (cosine >= 0.95, i.e. angle <= 18deg) a bit agrees with
     probability ~0.9, so 2 bands x 3 bits give ~86% recall and each extra
     band multiplies the miss rate by ~0.27.  Fully SQL-expressible —
     :func:`embedding_near_dups_bucketed_sql` is the exact DuckDB oracle.
     """
-    from .similarity import hyperplanes, lsh_bucket_expr
-
     band_cols = [
         lsh_bucket_expr(hyperplanes(dim, bits, seed + 1000 * i), vec_col)
         .alias(f"band{i}")
@@ -654,52 +643,12 @@ def embedding_near_dups_bucketed(emb: DataFrame, threshold: float = 0.95,
     exploded = sig.select("doc", F.explode(bands_arr).alias("bk")).select(
         "doc", F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket")
     )
-    # bucket-pair generation (round-7, same rewrite as lsh_candidate_pairs):
-    # the aliased self-join planned the hyperplane bucketing twice; this
-    # computes it once and emits the identical strict-upper-triangle pairs
-    buckets = (
-        exploded.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    lefts = buckets.select("ids", F.posexplode("ids").alias("i", "id_a"))
-    cand = (
-        lefts.select(
-            "id_a",
-            F.explode(
-                F.slice(F.col("ids"), F.col("i") + F.lit(2), F.size("ids"))
-            ).alias("id_b"),
-        )
-        # duplicate-id guard: parity with the old strict-< join (see
-        # lsh_candidate_pairs)
-        .filter(F.col("id_a") != F.col("id_b"))
-        .distinct()
-    )
-    # per-vector norms computed once (value-identical deterministic fold),
-    # so candidate verification pays one 64-element fold per pair, not three
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(F.col(c), lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
-                    ).withColumn("_na", norm("va"))
-    vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
-                    ).withColumn("_nb", norm("vb"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    raw = dot / (F.col("_na") * F.col("_nb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .filter(raw >= threshold)
-        .withColumn("cosine", F.round(raw, 6))
-        .select("id_a", "id_b", "cosine")
+    cand = bucket_pairs(exploded, ["band", "bucket"], "doc").distinct().select(
+        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
+    return _cosine_at_least(
+        cand.join(_normed(emb, "a", id_col, vec_col), "id_a")
+        .join(_normed(emb, "b", id_col, vec_col), "id_b"),
+        threshold,
     )
 
 
@@ -710,8 +659,6 @@ def embedding_near_dups_bucketed_sql(threshold: float = 0.95, bits: int = 3,
     """DuckDB oracle for :func:`embedding_near_dups_bucketed` (identical
     literal hyperplanes, identical banded candidate join, WHERE on the raw
     cosine / rounded in the SELECT)."""
-    from .similarity import hyperplanes, lsh_bucket_sql
-
     band_exprs = ",\n           ".join(
         f"{lsh_bucket_sql(hyperplanes(dim, bits, seed + 1000 * i), 'e')} AS band{i}"
         for i in range(bands)
@@ -809,9 +756,11 @@ def lsh_index_append(spark, index_dir: str, new_docs: DataFrame,
     in any batch split and unioning each call's pairs equals
     ``lsh_candidate_pairs`` over the whole corpus in one batch.
 
-    Scale: signatures are scan-side; the index join touches only matching
-    (band, bh) buckets; the index grows by exactly the delta's band keys
-    (bands x delta rows) per call — never recomputed.  The returned frame
+    Scale: signatures are scan-side; within-delta pairs come from
+    :func:`bucket_pairs`, and the one join, the probe into the index,
+    touches only matching (band, bh) buckets; the index grows by exactly
+    the delta's band keys (bands x delta rows) per call — never
+    recomputed.  The returned frame
     must be consumed (or checkpointed) by the caller before the NEXT
     append if lazy evaluation would otherwise outlive the manifest read:
     read_snapshot pins data dirs, so even that is safe until an
@@ -844,20 +793,14 @@ def lsh_index_append(spark, index_dir: str, new_docs: DataFrame,
                else None if replayed is not None
                else read_snapshot(spark, index_dir))
 
-        a, b = delta.alias("a"), delta.alias("b")
-        within = (
-            a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bh") == F.col("b.bh"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-        )
-        pairs = within
+        pairs = bucket_pairs(delta, ["band", "bh"], "doc_id")
         if old is not None:
             n, o = delta.alias("n"), old.alias("o")
             cross = (
                 n.join(o, (F.col("n.band") == F.col("o.band"))
                        & (F.col("n.bh") == F.col("o.bh"))
+                       # an id re-ingested in a later batch is one doc,
+                       # as in the one-batch pair set
                        & (F.col("n.doc_id") != F.col("o.doc_id")))
                 .select(
                     F.least(F.col("n.doc_id"),

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from .similarity import dot, norm
+
 DEFAULT_K = 8
 DEFAULT_ITERS = 2
 _CENTROID_DP = 9          # quenches order-of-summation drift in the mean
@@ -203,25 +205,16 @@ def semantic_near_dups(
     vecs = emb.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
     ).join(asg, id_col)
-    # per-vector norms computed once in the a/b projections (round-7): the
-    # norm is a deterministic sequential fold over one vector, so the value
-    # is bit-identical and the per-pair work drops from three dim-length
-    # folds to one
-    _norm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
+    # per-vector norms computed once in the a/b projections, not per pair
     a = vecs.select(
         F.col(id_col).alias("id_a"), F.col("v").alias("va"), "cluster",
-        _norm.alias("_na"),
+        norm("v").alias("_na"),
     )
     b = vecs.select(
         F.col(id_col).alias("id_b"), F.col("v").alias("vb"), "cluster",
-        _norm.alias("_nb"),
+        norm("v").alias("_nb"),
     )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("_na") * F.col("_nb"))
+    cos = dot("va", "vb") / (F.col("_na") * F.col("_nb"))
     return (
         a.join(b, ["cluster"])
         .filter(F.col("id_a") < F.col("id_b"))

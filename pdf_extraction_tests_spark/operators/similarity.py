@@ -20,7 +20,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 
-def _dot(va, vb):
+def dot(va, vb):
+    """The one cosine dot product: a sequential left-to-right double fold.
+    Every cosine operator (q26, q27, q40, q61) and the sign-LSH bucket use
+    it."""
     return F.aggregate(
         F.zip_with(va, vb, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -28,7 +31,10 @@ def _dot(va, vb):
     )
 
 
-def _norm(vc):
+def norm(vc):
+    """The one vector norm: ``sqrt`` of the same sequential fold.  It is a
+    deterministic function of one vector, so computing it once per row in
+    a projection is bit-identical to computing it per pair."""
     return F.sqrt(
         F.aggregate(
             F.transform(vc, lambda x: x.cast("double") * x.cast("double")),
@@ -46,7 +52,7 @@ def cosine_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
     inside the plan); one scan, one TakeOrdered — no shuffle of vectors.
     """
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = _dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * _norm(q))
+    sim = dot(F.col(vec_col), q) / (norm(F.col(vec_col)) * norm(q))
     return (
         emb.select(F.col(id_col), F.round(sim, 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
@@ -94,7 +100,7 @@ def lsh_bucket_expr(planes: np.ndarray, vec_col: str = "embedding"):
     for b, plane in enumerate(planes):
         lit = F.array(*[F.lit(float(x)) for x in plane])
         bucket = bucket + F.when(
-            _dot(F.col(vec_col), lit) > 0, F.lit(1 << b)
+            dot(F.col(vec_col), lit) > 0, F.lit(1 << b)
         ).otherwise(F.lit(0))
     return bucket
 

@@ -663,9 +663,10 @@ def q22(spark, sf_dir):
     """,
 )
 def q23(spark, sf_dir):
-    """MinHash-LSH near-dup candidates: band the signatures, self-join on
-    (band, band_key) — the standard web-scale shingle->minhash->band->bucket
-    join; candidate pairs only, verified by q24."""
+    """MinHash-LSH near-dup candidates: band the signatures, pair the ids
+    of each (band, band_key) bucket (``dedup.bucket_pairs``) — the standard
+    web-scale shingle->minhash->band->bucket scheme; candidate pairs only,
+    verified by q24."""
     sig = D.minhash_signatures(load(spark, sf_dir, "documents"), _MINHASH_K, _SHINGLE_N)
     return D.lsh_candidate_pairs(sig, bands=3, rows_per_band=2)
 
@@ -693,7 +694,7 @@ def q23(spark, sf_dir):
 )
 def q24(spark, sf_dir):
     """Exact n-gram Jaccard >= 0.8 near-dup pairs with stop-shingle removal
-    (df <= 50) bounding the self-join."""
+    (df <= 50) bounding the per-shingle pair count."""
     return D.ngram_jaccard_pairs(load(spark, sf_dir, "documents"),
                                  n=_SHINGLE_N, threshold=0.8, max_df=50)
 
@@ -720,9 +721,10 @@ def q25(spark, sf_dir):
     """,
 )
 def q26(spark, sf_dir):
-    """Embedding cosine near-duplicate pairs (brute-force baseline;
-    LSH-bucketed scale path in operators.similarity).  Threshold 0.4 is
-    calibrated to the synthetic random embeddings (0.95 on real data)."""
+    """Embedding cosine near-duplicate pairs (brute-force baseline; the
+    sign-LSH bucketed scale path is q40,
+    ``dedup.embedding_near_dups_bucketed``).  Threshold 0.4 is calibrated
+    to the synthetic random embeddings (0.95 on real data)."""
     return D.embedding_near_dups(load(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
@@ -1020,8 +1022,8 @@ def q39(spark, sf_dir):
 def q40(spark, sf_dir):
     """Bucketed pairwise embedding near-dup — the 100 TB replacement for
     q26's brute-force crossJoin: sign-LSH bands bucket every vector
-    scan-side, the self-join touches same-bucket pairs only, exact cosine
-    verifies candidates.  Threshold 0.4 matches q26 (synthetic random
+    scan-side, ``dedup.bucket_pairs`` pairs same-bucket ids only, exact
+    cosine verifies candidates.  Threshold 0.4 matches q26 (synthetic random
     embeddings); recall vs the exact q26 pairs is pinned in
     tests/test_operators.py."""
     return D.embedding_near_dups_bucketed(

@@ -538,3 +538,38 @@ def test_gram_emission_splits_each_row_once(spark):
         bodies = lambda_bodies(formatted_plan(Q[name](spark, SF)))
         assert bodies, name
         assert not [b for b in bodies if "split(" in b], name
+
+
+def test_bucket_pair_generators_plan_once(spark, tmp_path):
+    """Every bucket-pair site goes through ``dedup.bucket_pairs``, which
+    plans its bucketed input once.  With AQE off: a second
+    ``lsh_index_append`` call plans exactly one join, the probe into the
+    index (a self-join on (band, bh) for the within-delta pairs would add
+    a second); q23 is 1 ``documents`` scan, 3 shuffle exchanges and no
+    join."""
+    from pyspark.sql import functions as F
+
+    from pdf_extraction_tests_spark.operators.dedup import lsh_index_append
+
+    def nodes(df):
+        return re.findall(r"^\(\d+\) (\w+)", formatted_plan(df),
+                          flags=re.MULTILINE)
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    idx = str(tmp_path / "lsh_index")
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        lsh_index_append(spark, idx, docs.filter(F.col("doc_id") < 250)).count()
+        second = nodes(lsh_index_append(
+            spark, idx, docs.filter(F.col("doc_id") >= 250)))
+        assert len([n for n in second if "Join" in n]) == 1, second
+
+        q23 = queries()["q23_lsh_candidates"](spark, SF)
+        plan = formatted_plan(q23)
+        q23_nodes = nodes(q23)
+        assert q23_nodes.count("Scan") == 1, plan
+        assert count_exchanges(plan) == 3, plan
+        assert not [n for n in q23_nodes if "Join" in n], plan
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)

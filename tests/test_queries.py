@@ -217,15 +217,18 @@ _OFF_DEFAULT_CONF = {
 
 
 def test_curation_family_matches_oracle_under_off_default_conf(spark):
-    """The language-ID, boilerplate, repetition and funnel queries equal
-    their DuckDB oracles under the combined off-default conf, and every
-    conf reads as before afterwards."""
+    """The language-ID, boilerplate, repetition and funnel queries, and the
+    bucket-pair near-dup queries (LSH candidates, n-gram Jaccard, dedup
+    clusters, bucketed embedding dedup), equal their DuckDB oracles under
+    the combined off-default conf, and every conf reads as before
+    afterwards."""
     saved = {k: spark.conf.get(k, None) for k in _OFF_DEFAULT_CONF}
     specs = [s for s in REGISTRY if s.name in (
         "q29_language_guess", "q51_boilerplate_ngrams",
         "q57_repetition_signals", "q59_curation_funnel",
-        "q62_funnel_summary")]
-    assert len(specs) == 5
+        "q62_funnel_summary", "q23_lsh_candidates", "q24_ngram_jaccard",
+        "q39_dedup_clusters", "q40_embedding_dedup_bucketed")]
+    assert len(specs) == 9
     try:
         for k, v in _OFF_DEFAULT_CONF.items():
             spark.conf.set(k, v)
@@ -239,3 +242,29 @@ def test_curation_family_matches_oracle_under_off_default_conf(spark):
             else:
                 spark.conf.set(k, v)
     assert {k: spark.conf.get(k, None) for k in _OFF_DEFAULT_CONF} == saved
+
+
+def test_near_dup_family_matches_oracle_with_repeated_ids(spark, tmp_path):
+    """sf0.001 with the first 3 rows of ``documents`` and of ``embeddings``
+    repeated: every near-dup query equals its DuckDB oracle.
+    ``dedup.bucket_pairs`` counts an id once per bucket, so a repeated row
+    neither pairs an id with itself nor repeats a pair; the verify joins
+    keep one row per matching input row, as the oracles' joins do."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        table = pq.read_table(f"{SF_DIR}/{t}.parquet")
+        pq.write_table(pa.concat_tables([table, table.slice(0, 3)]),
+                       tmp_path / f"{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{tmp_path}/{t}.parquet')")
+    specs = [s for s in REGISTRY if s.name in (
+        "q23_lsh_candidates", "q24_ngram_jaccard", "q26_embedding_near_dups",
+        "q39_dedup_clusters", "q40_embedding_dedup_bucketed",
+        "q61_semantic_near_dups")]
+    assert len(specs) == 6
+    for spec in specs:
+        got = _canon(spec.fn(spark, str(tmp_path)).toPandas())
+        assert got == _canon(con.execute(spec.sql).df()), spec.name
