@@ -78,8 +78,7 @@ def frequent_grams(
 ) -> DataFrame:
     """The corpus-learned frequent set: (gram, _freq = 1) for every
     ``n``-gram that occurs in >= ``min_df`` distinct documents.  One
-    shuffle on ``gram``; small enough to broadcast back onto a doc's
-    grams."""
+    shuffle on ``gram``.  q51, q55 and q59 share it."""
     # df over per-doc DISTINCT grams (round-7): array_distinct forms the
     # doc's gram set scan-side, so the aggregate's exchange carries one
     # row per (doc, gram) instead of one per position.  countDistinct is

@@ -350,8 +350,10 @@ def release(df: DataFrame) -> None:
         df._pinned_rdd_ids = ()
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 20,
-                         checkpoint_every: int = 3) -> DataFrame:
+_CHECKPOINT_EVERY = 3  # rounds between lineage-truncating checkpoints
+
+
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """(doc_a, doc_b) near-dup pairs -> (doc_id, cluster_id) with
     cluster_id = min doc id in the component (the canonical keeper).
 
@@ -363,10 +365,11 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     with labels still moving (max_iter is a safety valve, not a silent
     truncation — a wrong cluster_id would diverge from the exact oracle).
     Lineage is bounded: each round unpersists the superseded label frame
-    and ``localCheckpoint``s every ``checkpoint_every`` rounds so the plan
-    never grows 20 joins deep.  For web-scale graphs swap in the
-    large-star/small-star algorithm; min-label is optimal for the tiny,
-    dense components dedup produces.
+    and ``localCheckpoint``s every ``_CHECKPOINT_EVERY`` rounds so the plan
+    never grows 20 joins deep.  Dup components are small and shallow: over
+    q39's candidate pairs (3 bands x 2 rows) sf0.001 / sf0.01 / sf0.1 give
+    100 / 86 / 6,301 pairs, largest components of 4 / 4 / 19 docs, and
+    2 / 3 / 6 rounds to converge counting the confirming round.
 
     Block hygiene: the only persistent RDD alive after this returns is the
     final eager localCheckpoint backing the result — small (one row per
@@ -408,7 +411,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
                 (F.col("nmin") < F.col("cluster_id")).alias("_changed"),
             )
         )
-        is_ckpt = (it + 1) % checkpoint_every == 0
+        is_ckpt = (it + 1) % _CHECKPOINT_EVERY == 0
         if is_ckpt:
             # truncate lineage: without this the plan is `it` joins deep and
             # re-evaluation (or executor loss) replays the whole chain
@@ -431,7 +434,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             f"({changed} labels still changing) — component diameter exceeds "
-            "max_iter; raise max_iter or use a large-star/small-star pass"
+            "max_iter; raise max_iter"
         )
     # hand the caller an eagerly-materialized copy, then release EVERY
     # persistent RDD this call created except the final checkpoint: the
@@ -446,126 +449,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         sc, (_persistent_rdd_ids(sc) - before_ids) - final_ids)
     labels._pinned_rdd_ids = tuple(sorted(final_ids))
     return labels
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Large-star round: every node u connects its LARGER neighbors to
-    min(neighborhood ∪ {u})."""
-    mins = (
-        edges.groupBy("src").agg(F.min("dst").alias("_mn"))
-        .select("src", F.least("_mn", "src").alias("m"))
-    )
-    return (
-        edges.join(mins, "src")
-        .filter(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star round: orient edges large->small, then every node u
-    connects its smaller neighbors (and itself) to the minimum."""
-    e = edges.select(
-        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-    ).distinct()
-    mins = e.groupBy("src").agg(F.min("dst").alias("m"))
-    rewired = (
-        e.join(mins, "src")
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .unionByName(mins.select("src", F.col("m").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    return rewired
-
-
-def connected_components_star(pairs: DataFrame, max_iter: int = 25,
-                              checkpoint_every: int = 2) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    — the WEB-SCALE path (O(log^2 n) rounds independent of component
-    diameter, vs min-label propagation's diameter-bound rounds).
-
-    Same contract as :func:`connected_components`: (doc_a, doc_b) pairs ->
-    (doc_id, cluster_id=min id of the component); raises if the edge set is
-    still changing after ``max_iter`` rounds.  Equivalence against the
-    min-label implementation is pinned in tests/test_operators.py.
-    Block hygiene matches connected_components: only the final label-map
-    checkpoint survives the call.
-    """
-    sc = pairs.sparkSession.sparkContext
-    before_ids = _persistent_rdd_ids(sc)
-    # nodes is consumed exactly once (the final left join) — no cache
-    nodes = (
-        pairs.selectExpr("doc_a AS doc_id")
-        .unionByName(pairs.selectExpr("doc_b AS doc_id"))
-        .distinct()
-    )
-    edges = (
-        pairs.selectExpr("doc_a AS src", "doc_b AS dst")
-        .unionByName(pairs.selectExpr("doc_b AS src", "doc_a AS dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    prev, prev_is_ckpt = None, False
-    converged = False
-    for it in range(max_iter):
-        # one round = large-star (both orientations in) then small-star
-        both = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
-        new_edges = _small_star(_large_star(both).unionByName(both))
-        if (it + 1) % checkpoint_every == 0:
-            new_edges = new_edges.localCheckpoint(eager=False)
-        else:
-            new_edges = new_edges.cache()
-        # converged when the (canonically oriented) edge set is unchanged
-        old_canon = edges.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        ).distinct()
-        delta = (
-            new_edges.exceptAll(old_canon)
-            .unionByName(old_canon.exceptAll(new_edges))
-            .limit(1)
-            .count()
-        )
-        if prev is not None and not prev_is_ckpt:
-            prev.unpersist()
-        prev, prev_is_ckpt = new_edges, (it + 1) % checkpoint_every == 0
-        edges = new_edges
-        if delta == 0:
-            converged = True
-            break
-    if not converged:
-        _unpersist_rdd_ids(sc, _persistent_rdd_ids(sc) - before_ids)
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
-        )
-    # materialize the (small) label map eagerly, then release every
-    # persistent RDD this call created except that final checkpoint —
-    # otherwise each call leaks its cached/checkpointed edge rounds until
-    # GC + context-cleaner get around to them
-    pre_final = _persistent_rdd_ids(sc)
-    labels = (
-        edges.groupBy("src").agg(F.min("dst").alias("cluster_id"))
-        .localCheckpoint()  # eager
-    )
-    final_ids = _persistent_rdd_ids(sc) - pre_final
-    edges.unpersist()
-    _unpersist_rdd_ids(
-        sc, (_persistent_rdd_ids(sc) - before_ids) - final_ids)
-    # out is lazy over the labels checkpoint — the pin travels with it
-    # (see release())
-    out = (
-        nodes.join(labels, nodes.doc_id == labels.src, "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-        )
-    )
-    out._pinned_rdd_ids = tuple(sorted(final_ids))
-    return out
 
 
 # ---------------------------------------------------------------------------

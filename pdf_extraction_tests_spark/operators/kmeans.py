@@ -7,10 +7,11 @@ Lloyd's algorithm expressed as a FIXED UNROLLED DataFrame plan:
 * init — centroids are the embeddings of the k smallest ids
   (deterministic, no RNG state to reproduce on a cluster);
 * assign — centroids broadcast (k x dim doubles), squared-L2 via the
-  dot-product identity |a|^2 + |b|^2 - 2 a.b computed by a sequential
-  ``aggregate`` over ``zip_with`` (same left-to-right double accumulation
+  dot-product identity |a|^2 + |b|^2 - 2 a.b, every term the sequential
+  fold of :func:`.similarity.dot` (same left-to-right double accumulation
   DuckDB's ``list_dot_product`` performs, so the oracle replays distances
-  bit-for-bit); argmin = ``min(struct(dist, cluster))`` — an algebraic
+  bit-for-bit); |a|^2 is projected once per row and |b|^2 once per
+  centroid; argmin = ``min(struct(dist, cluster))`` — an algebraic
   aggregate with a deterministic cluster tiebreak;
 * update — ``posexplode`` to (cluster, dim, value), one groupBy with
   map-side-combinable avg (state: k x dim counters per task, independent
@@ -32,25 +33,13 @@ generalization the training-data suite needs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F
 
 from .similarity import dot, norm
 
 DEFAULT_K = 8
 DEFAULT_ITERS = 2
 _CENTROID_DP = 9          # quenches order-of-summation drift in the mean
-
-
-def _sqdist(vec: Column, cvec: Column) -> Column:
-    """Squared L2 via sequential double accumulation (oracle-replayable)."""
-    dot = F.aggregate(
-        F.zip_with(vec, cvec, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sq = F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x * x)
-    csq = F.aggregate(cvec, F.lit(0.0), lambda acc, x: acc + x * x)
-    return sq + csq - 2 * dot
 
 
 def kmeans_assign(
@@ -64,7 +53,8 @@ def kmeans_assign(
     iterations.  Returns (id_col, cluster:int, dist: squared L2 to the
     final centroid, rounded 6 dp).  Deterministic and partition-invariant.
     """
-    vecs = emb.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
+    v = F.col(vec_col).cast("array<double>")
+    vecs = emb.select(F.col(id_col), v.alias("v"), dot(v, v).alias("_sq"))
     # k rows — the single-partition window is bounded by the parameter
     centroids = (
         vecs.orderBy(id_col)
@@ -76,7 +66,8 @@ def kmeans_assign(
     )
 
     def assign(cent: DataFrame) -> DataFrame:
-        d = _sqdist(F.col("v"), F.col("cvec"))
+        cent = cent.select("cluster", "cvec", dot("cvec", "cvec").alias("_csq"))
+        d = F.col("_sq") + F.col("_csq") - 2 * dot("v", "cvec")
         return (
             vecs.crossJoin(F.broadcast(cent))
             .groupBy(id_col)

@@ -1,16 +1,16 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths:
+Three paths:
 * brute-force cosine top-k — the exact baseline, one scan + one top-k;
-* LSH-bucketed ANN — random-hyperplane signatures computed scan-side from a
-  broadcast seeded projection matrix; queries probe only matching buckets.
-  This is the 100 TB path: bucket cardinality ~n/2^bits, so the candidate
-  join touches a vanishing fraction of the corpus.
+* LSH-bucketed ANN — random-hyperplane sign signatures computed scan-side
+  as column expressions over literal planes; queries probe only matching
+  buckets.  This is the 100 TB path: bucket cardinality ~n/2^bits, so the
+  candidate join touches a vanishing fraction of the corpus;
+* IVF ANN — a driver-trained coarse quantizer; list assignment is a
+  vectorized pandas UDF (one matrix distance computation per Arrow batch).
 
-Cosine math stays JVM-side (zip_with/aggregate in double precision); the
-projection signature uses a vectorized pandas UDF (Arrow) because the
-hyperplane matrix multiply is a genuine numeric kernel — numpy does in one
-BLAS call what an expression tree cannot.
+Cosine math and the sign-LSH bucket stay JVM-side (zip_with/aggregate in
+double precision), so both are exactly reproducible in DuckDB.
 """
 
 from __future__ import annotations
@@ -66,36 +66,14 @@ def hyperplanes(dim: int, bits: int = 8, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((bits, dim)).astype(np.float64)
 
 
-def with_lsh_bucket(emb: DataFrame, planes: np.ndarray,
-                    vec_col: str = "embedding") -> DataFrame:
-    """Add a sign-LSH ``bucket`` column: bit b = sign(v . plane_b).
-
-    Vectorized pandas UDF (one matrix multiply per Arrow batch)."""
-    planes_b = planes  # captured by value in the closure; small (bits x dim)
-
-    @F.pandas_udf(T.IntegerType())
-    def bucket_of(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype="int32")
-        mat = np.stack(vs.to_numpy())  # (batch, dim)
-        signs = (mat @ planes_b.T) > 0  # (batch, bits)
-        weights = (1 << np.arange(planes_b.shape[0])).astype(np.int64)
-        return pd.Series((signs @ weights).astype("int32"))
-
-    return emb.withColumn("bucket", bucket_of(F.col(vec_col)))
-
-
 def lsh_bucket_expr(planes: np.ndarray, vec_col: str = "embedding"):
     """Sign-LSH bucket as a PURE column expression: bit b = 1 iff
     dot(v, plane_b) > 0, packed little-endian.
 
     JVM-side (whole-stage codegen) and exactly reproducible in DuckDB via
-    ``list_dot_product`` with the same literal planes — this is the
-    oracle-checkable form used by the q28/q40 query paths.  For wide
-    signatures (bits >~ 16) the pandas-UDF path (:func:`with_lsh_bucket`,
-    one BLAS matmul per Arrow batch) wins; for the few-bit bucketing a
-    partition-pruned probe needs, the expression form costs ``bits`` fused
-    dot products per row and keeps the whole plan SQL-expressible."""
+    ``list_dot_product`` with the same literal planes; q28 buckets with 4
+    bits and q40 with 3.  It costs ``bits`` fused dot products per row and
+    keeps the whole plan SQL-expressible."""
     bucket = F.lit(0)
     for b, plane in enumerate(planes):
         lit = F.array(*[F.lit(float(x)) for x in plane])
@@ -124,12 +102,15 @@ def lsh_bucket_sql(planes: np.ndarray, vec_expr: str = "e") -> str:
 def ann_topk_expr(emb: DataFrame, query_vec: list[float], k: int = 10,
                   bits: int = 4, seed: int = 42, id_col: str = "vec_id",
                   vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k with the expression-form bucket (oracle-checkable q28 path).
+    """ANN top-k (q28): probe only the query's sign-LSH bucket, exact-rank
+    inside it.
 
-    Same semantics as :func:`ann_topk`; the bucket assignment is a column
-    expression instead of a pandas UDF, so the whole plan (bucket -> probe
-    filter -> exact rank) is SQL-expressible.  The query's own bucket is
-    computed driver-side with the identical float64 arithmetic."""
+    Recall < 1 by construction (single-probe); raise recall with fewer bits
+    or multi-probe.  The bucket is :func:`lsh_bucket_expr`, so the whole
+    plan (bucket -> probe filter -> exact rank) is SQL-expressible; the
+    query's own bucket is computed driver-side with the identical float64
+    arithmetic.  At scale, ``bucket`` becomes the table's partition column
+    so a probe is a partition-pruned scan."""
     dim = len(query_vec)
     planes = hyperplanes(dim, bits, seed)
     q = np.asarray(query_vec, dtype=np.float64)
@@ -253,22 +234,3 @@ def ivf_topk_partitioned(spark, path: str, query_vec: list[float],
     probe_lists = [int(x) for x in order]
     scan = spark.read.parquet(path).filter(F.col("ivf_list").isin(probe_lists))
     return cosine_topk(scan, query_vec, k, id_col, vec_col)
-
-
-def ann_topk(emb: DataFrame, query_vec: list[float], k: int = 10, bits: int = 6,
-             seed: int = 42, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k: probe only the query's LSH bucket, exact-rank inside it.
-
-    Recall < 1 by construction (single-probe); raise recall with fewer bits
-    or multi-probe.  At scale, ``bucket`` becomes the table's partition
-    column so a probe is a partition-pruned scan.
-    """
-    dim = len(query_vec)
-    planes = hyperplanes(dim, bits, seed)
-    q = np.asarray(query_vec, dtype=np.float64)
-    q_bucket = int(((planes @ q > 0) * (1 << np.arange(bits))).sum())
-    bucketed = with_lsh_bucket(emb, planes, vec_col)
-    return cosine_topk(
-        bucketed.filter(F.col("bucket") == q_bucket), query_vec, k, id_col, vec_col
-    )

@@ -12,8 +12,9 @@ Spark shape:
 1. gram emission is scan-side column arithmetic
    (:func:`~.boilerplate.word_ngrams_col`); ``posexplode`` gives each gram
    its start offset;
-2. cross-document frequency is one groupBy(gram) with map-side partial
-   ``count(distinct doc_id)`` aggregation;
+2. cross-document frequency is q51's document-frequency set
+   (:func:`~.boilerplate.frequent_grams` with ``min_docs``): one
+   groupBy(gram) with map-side partial ``count(distinct doc_id)``;
 3. duplicated grams (>= ``min_docs`` distinct docs) join back to the gram
    stream ON GRAM: a set below the broadcast threshold is broadcast, a
    larger one is a shuffle join co-partitioned on gram (at corpus scale
@@ -35,7 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .boilerplate import word_ngrams_col
+from .boilerplate import frequent_grams, word_ngrams_col
 
 DEFAULT_N = 8
 DEFAULT_MIN_DOCS = 2
@@ -62,19 +63,7 @@ def duplicated_span_rewrite(
     grams = docs.select(
         F.col(id_col), F.posexplode(gram_strings).alias("s", "gram"))
 
-    # ddf via per-doc DISTINCT grams (round-7, same rewrite as q51's df):
-    # the frequency aggregate gets one row per (doc, gram).  countDistinct
-    # is kept so duplicated/NULL doc_id rows still match the oracle's
-    # count(DISTINCT doc_id) exactly.
-    dup_grams = (
-        docs.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(gram_strings)).alias("gram"))
-        .groupBy("gram")
-        .agg(F.countDistinct(id_col).alias("ddf"))
-        .filter(F.col("ddf") >= min_docs)
-        .select("gram")
-    )
+    dup_grams = frequent_grams(docs, id_col, text_col, n, min_docs)
     covered = (
         grams.join(dup_grams, "gram")  # broadcast or co-partitioned: step 3
         .groupBy(id_col)

@@ -761,9 +761,8 @@ def q28(spark, sf_dir):
     """ANN: sign-LSH bucketed top-k (single-probe), expression-form bucket
     — per-bit sign(v . plane_b) as zip_with/aggregate with literal planes,
     so the whole plan (bucket -> probe filter -> exact rank) has an exact
-    DuckDB oracle.  The pandas-UDF bucket (one BLAS matmul per Arrow
-    batch, operators.similarity.with_lsh_bucket) remains the wide-bits
-    production kernel; recall vs q27 is asserted in tests/test_operators.py."""
+    DuckDB oracle.  Recall vs brute force is asserted in
+    tests/test_operators.py."""
     from .operators.similarity import ann_topk_expr
 
     emb = load(spark, sf_dir, "embeddings")

@@ -145,33 +145,6 @@ class TestConnectedComponentsHardening:
         D.release(cc)
         assert set(rows.values()) == {1}
 
-    def test_star_equals_minlabel_on_lsh_pairs(self, spark, docs):
-        """Web-scale large-star/small-star CC == min-label CC on the real
-        LSH candidate graph (and on a long chain, where star converges in
-        O(log^2 n) rounds instead of diameter rounds)."""
-        sig = D.minhash_signatures(docs, 6, 3)
-        pairs = D.lsh_candidate_pairs(sig, 3, 2).cache()
-        cc_a = D.connected_components(pairs)
-        cc_b = D.connected_components_star(pairs)
-        a = {(r.doc_id, r.cluster_id) for r in cc_a.collect()}
-        b = {(r.doc_id, r.cluster_id) for r in cc_b.collect()}
-        D.release(cc_a)
-        D.release(cc_b)
-        pairs.unpersist()
-        assert a == b and a
-
-    def test_star_handles_long_chain_in_few_rounds(self, spark):
-        # diameter-30 path: min-label would need 30 rounds; star needs ~log^2
-        pairs = spark.createDataFrame(
-            pd.DataFrame({"doc_a": list(range(1, 31)),
-                          "doc_b": list(range(2, 32))})
-        )
-        cc = D.connected_components_star(pairs, max_iter=10)
-        rows = {r.doc_id: r.cluster_id for r in cc.collect()}
-        D.release(cc)
-        assert set(rows.values()) == {1}
-        assert len(rows) == 31
-
     def test_nonconvergence_raises_not_truncates(self, spark):
         # diameter exceeds max_iter: must RAISE, never silently emit wrong
         # cluster ids (round-1 advice)
@@ -193,7 +166,8 @@ class TestSimilarity:
     def test_ann_recall_vs_bruteforce(self, spark, emb):
         qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
         exact = {r.vec_id for r in S.cosine_topk(emb, qvec, k=10).collect()}
-        approx = {r.vec_id for r in S.ann_topk(emb, qvec, k=10, bits=4).collect()}
+        approx = {r.vec_id
+                  for r in S.ann_topk_expr(emb, qvec, k=10, bits=4).collect()}
         # single-probe LSH: require the query itself + meaningful overlap
         assert 0 in approx
         assert len(exact & approx) >= 3
@@ -217,27 +191,14 @@ class TestSimilarity:
                 for r in S.ivf_topk(emb, qvec, k=5, n_lists=4, n_probe=4).collect()]
         assert full == exact
 
-    def test_expr_bucket_matches_udf_bucket(self, spark, emb):
-        """The oracle-checkable expression bucket (q28 path) and the
-        BLAS pandas-UDF bucket (wide-bits production path) must agree."""
-        planes = S.hyperplanes(64, 4)
-        udf = {r.vec_id: r.bucket for r in S.with_lsh_bucket(emb, planes).collect()}
-        expr = {r.vec_id: r.bucket
-                for r in emb.select(
-                    "vec_id", S.lsh_bucket_expr(planes).alias("bucket")).collect()}
-        assert udf == expr
-
-    def test_ann_expr_equals_ann_udf(self, spark, emb):
-        qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
-        a = [(r.vec_id, r.cosine) for r in S.ann_topk(emb, qvec, k=10, bits=4).collect()]
-        b = [(r.vec_id, r.cosine) for r in S.ann_topk_expr(emb, qvec, k=10, bits=4).collect()]
-        assert a == b
-
     def test_bucket_is_deterministic(self, spark, emb):
         planes = S.hyperplanes(64, 6)
-        a = {r.vec_id: r.bucket for r in S.with_lsh_bucket(emb, planes).collect()}
-        b = {r.vec_id: r.bucket for r in S.with_lsh_bucket(emb, planes).collect()}
-        assert a == b
+
+        def buckets():
+            return {r.vec_id: r.bucket for r in emb.select(
+                "vec_id", S.lsh_bucket_expr(planes).alias("bucket")).collect()}
+
+        assert buckets() == buckets()
 
 
 class TestTextAnalysis:
@@ -464,10 +425,6 @@ class TestCacheHygiene:
         out.count()
         assert len(_persistent_rdd_ids(sc) - before) <= 1, (
             "connected_components left more than its result checkpoint")
-        out2 = D.connected_components_star(pairs)
-        out2.count()
-        assert len(_persistent_rdd_ids(sc) - before) <= 2, (
-            "connected_components_star left more than its result checkpoint")
 
     def test_release_drops_every_block_deterministically(self, spark, docs):
         """D.release() must drop a CC result's checkpoint blocks
@@ -487,10 +444,7 @@ class TestCacheHygiene:
         for _ in range(2):
             out = D.connected_components(pairs)
             out.count()
-            out2 = D.connected_components_star(pairs)
-            out2.count()
             D.release(out)
-            D.release(out2)
             leaked = _persistent_rdd_ids(sc) - base_ids
             assert not leaked, f"persistent RDD ids {sorted(leaked)} linger"
 

@@ -217,18 +217,21 @@ _OFF_DEFAULT_CONF = {
 
 
 def test_curation_family_matches_oracle_under_off_default_conf(spark):
-    """The language-ID, boilerplate, repetition and funnel queries, and the
+    """The language-ID, boilerplate, repetition and funnel queries, the
     bucket-pair near-dup queries (LSH candidates, n-gram Jaccard, dedup
-    clusters, bucketed embedding dedup), equal their DuckDB oracles under
-    the combined off-default conf, and every conf reads as before
-    afterwards."""
+    clusters, bucketed embedding dedup), the sign-LSH ANN top-k, the
+    duplicated-span rewrite and the k-means queries equal their DuckDB
+    oracles under the combined off-default conf, and every conf reads as
+    before afterwards."""
     saved = {k: spark.conf.get(k, None) for k in _OFF_DEFAULT_CONF}
     specs = [s for s in REGISTRY if s.name in (
         "q29_language_guess", "q51_boilerplate_ngrams",
         "q57_repetition_signals", "q59_curation_funnel",
         "q62_funnel_summary", "q23_lsh_candidates", "q24_ngram_jaccard",
-        "q39_dedup_clusters", "q40_embedding_dedup_bucketed")]
-    assert len(specs) == 9
+        "q39_dedup_clusters", "q40_embedding_dedup_bucketed",
+        "q28_ann_lsh_topk", "q55_dup_span_rewrite", "q60_kmeans_clusters",
+        "q61_semantic_near_dups")]
+    assert len(specs) == 13
     try:
         for k, v in _OFF_DEFAULT_CONF.items():
             spark.conf.set(k, v)
