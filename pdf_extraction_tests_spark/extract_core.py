@@ -1430,20 +1430,6 @@ def extract_simple_document(doc_id: str, spans: Iterable[dict],
                                        cleaning_method)
 
 
-def extract_simple_frame(pdf: pd.DataFrame,
-                         cleaning_method: str = "hybrid") -> pd.DataFrame:
-    """Simple-path analog of :func:`extract_docs_frame`."""
-    results = [
-        extract_simple_document(
-            row.doc_id, row.spans if row.spans is not None else [], cleaning_method
-        )
-        for row in pdf.itertuples(index=False)
-    ]
-    if not results:
-        return pd.DataFrame(columns=EXTRACT_RESULT_COLUMNS)
-    return pd.DataFrame(results, columns=EXTRACT_RESULT_COLUMNS)
-
-
 def extract_document(doc_id: str, spans: Iterable[dict],
                      cleaning_method: str = "hybrid") -> dict:
     """spans-in -> extracted-doc-out; the per-document unit of work."""

@@ -13,7 +13,7 @@ checkable.
 
 Everything is pure column expressions over the corpus-wide 48-bit md5
 hash (operators/dedup.py), with k affine-derived bit positions per key
-(same overflow-safe family as the count-min sketch: a < 2^14,
+(same overflow-safe family as the MinHash hashes: a < 2^14,
 h < 2^48 => a*h + b < 2^63, folded mod 2^61-1).  Words are 32-bit so
 ``1 << bit`` never touches the sign bit on either engine.  The bitset —
 and therefore the exact false-positive set — is reproducible in DuckDB

@@ -79,10 +79,9 @@ def _rank_scored(
     b: float,
     salt: int,
 ) -> DataFrame:
-    """Shared BM25 scoring + salted two-phase top-k over a
+    """BM25 scoring + salted two-phase top-k over a
     (term, id_col, tf, dl) posting frame and a 1-row (n_docs, avgdl)
-    stats frame — used by both the scan path and the indexed path so the
-    two cannot drift."""
+    stats frame."""
     df_per_term = scored.groupBy("term").agg(
         F.count("*").cast("bigint").alias("df")
     )
@@ -191,148 +190,3 @@ def bm25_topk_sql(
            round(score, 4) AS score
     FROM ranked WHERE rank <= {k}
     """
-
-
-# ---------------------------------------------------------------------------
-# index-backed retrieval: postings as a bucket-partitioned snapshot table
-# ---------------------------------------------------------------------------
-
-INDEX_BUCKETS = 16
-
-
-def build_term_index(docs: DataFrame, index_dir: str,
-                     id_col: str = "doc_id", text_col: str = "text",
-                     buckets: int = INDEX_BUCKETS) -> None:
-    """Materialize an inverted index: postings (term, id, tf, dl) as a
-    snapshot table partitioned by ``bucket(buckets, term)`` plus a 1-row
-    corpus-stats table.
-
-    The scan path (bm25_topk) explodes query terms against the corpus at
-    QUERY time — fine for ad-hoc use, wrong for a serving index.  This
-    pays the corpus explode ONCE; each later query reads only the
-    bucket directories its terms hash to (PartitionFilters, plan-pinned)
-    — the same pay-once layout as similarity.write_ivf_partitioned.
-    """
-    from pdf_extraction_tests_spark.snapshots import commit_snapshot
-
-    postings, stats = _postings_and_stats(docs, id_col, text_col)
-    commit_snapshot(postings, f"{index_dir}/postings", mode="overwrite",
-                    partition_by=[f"bucket({buckets}, term)"])
-    commit_snapshot(stats, f"{index_dir}/stats", mode="overwrite")
-
-
-def _postings_and_stats(docs: DataFrame, id_col: str,
-                        text_col: str) -> tuple[DataFrame, DataFrame]:
-    """Shared index derivation — the full build and the incremental
-    append MUST tokenize/aggregate identically or the incremental index
-    silently drifts from the scan path (same single-source rule as
-    _rank_scored on the scoring side)."""
-    words = docs.select(
-        F.col(id_col), F.split(F.lower(text_col), r"\s+").alias("w")
-    ).withColumn("dl", F.size("w"))
-    postings = (
-        words.select(id_col, "dl", F.explode("w").alias("term"))
-        .groupBy("term", id_col)
-        .agg(F.count("*").cast("bigint").alias("tf"),
-             F.max("dl").cast("bigint").alias("dl"))
-    )
-    stats = words.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
-    return postings, stats
-
-
-def bm25_topk_indexed(spark, index_dir: str, terms: list[str], k: int = 5,
-                      id_col: str = "doc_id", k1: float = K1, b: float = B,
-                      salt: int = DEFAULT_SALT) -> DataFrame:
-    """BM25 top-k over a :func:`build_term_index` snapshot: each query
-    term reads ONLY its hash bucket's directories (read_snapshot ``eq``
-    pruning), so query cost scales with posting-list sizes, never the
-    corpus.  Scoring and ranking share :func:`_rank_scored` with the scan
-    path — results are identical by construction (pinned in
-    tests/test_bm25_index.py)."""
-    from pdf_extraction_tests_spark.snapshots import read_snapshot
-
-    if not terms:
-        raise ValueError("bm25_topk_indexed: terms list is empty")
-    stats = read_snapshot(spark, f"{index_dir}/stats")
-    if stats is None:
-        raise ValueError(
-            f"bm25_topk_indexed: no stats snapshot at {index_dir}/stats "
-            "(index missing or expired)")
-    branches = [
-        read_snapshot(spark, f"{index_dir}/postings", eq={"term": t})
-        for t in terms
-    ]
-    if any(br is None for br in branches):
-        raise ValueError(
-            f"bm25_topk_indexed: no postings snapshot at {index_dir}/postings")
-    scored = branches[0]
-    for br in branches[1:]:
-        scored = scored.unionByName(br)
-    return _rank_scored(scored.filter(F.col("tf") > 0), stats, k,
-                        id_col, k1, b, salt)
-
-
-def append_to_term_index(spark, docs: DataFrame, index_dir: str,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         tag: str | None = None) -> None:
-    """Incrementally index a DELTA of new documents.
-
-    Postings for the delta append to the bucket-partitioned table (the
-    layout is inherited from the parent manifest, so the new files land
-    in the same term buckets and PartitionFilters pruning keeps working
-    across generations); the 1-row stats table is REPLACED with the
-    merged stats — counts add, avgdl merges as the count-weighted mean,
-    so stats after any batch split equal stats of one whole-corpus build
-    (pinned in tests/test_bm25_index.py).
-
-    ``tag`` makes the call replay-idempotent for streaming foreachBatch
-    epochs: a replayed tag finds both commits already recorded and skips
-    (same contract as dedup.lsh_index_append).  A lost commit race on the
-    postings table retries the whole read-merge-commit cycle.
-    """
-    from pdf_extraction_tests_spark.snapshots import (
-        ConcurrentCommitError,
-        commit_snapshot,
-        committed_tags,
-        read_snapshot,
-    )
-
-    delta_postings, delta_stats = _postings_and_stats(docs, id_col, text_col)
-
-    for _attempt in range(5):
-        if tag is not None and tag in committed_tags(f"{index_dir}/postings"):
-            break    # replayed epoch: postings already in — but still fall
-            # through to the stats loop, which checks ITS OWN tag: a crash
-            # between the two commits must be repaired by the replay, not
-            # frozen in place by an early return
-        try:
-            commit_snapshot(delta_postings, f"{index_dir}/postings",
-                            mode="append", tag=tag)
-            break
-        except ConcurrentCommitError:
-            continue                     # re-read version, retry the cycle
-    else:
-        raise RuntimeError("postings append lost 5 commit races")
-
-    for _attempt in range(5):
-        if tag is not None and tag in committed_tags(f"{index_dir}/stats"):
-            return
-        old = read_snapshot(spark, f"{index_dir}/stats")
-        merged = (
-            old.unionByName(delta_stats)
-            .agg(
-                F.sum("n_docs").cast("bigint").alias("n_docs"),
-                (F.sum(F.col("avgdl") * F.col("n_docs"))
-                 / F.sum("n_docs")).alias("avgdl"),
-            )
-        )
-        try:
-            commit_snapshot(merged, f"{index_dir}/stats",
-                            mode="overwrite", tag=tag)
-            return
-        except ConcurrentCommitError:
-            continue                     # merge against the winner's stats
-    raise RuntimeError("stats merge lost 5 commit races")

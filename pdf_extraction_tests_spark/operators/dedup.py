@@ -165,7 +165,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 8, shingle_n: int = 3,
 
 def shingles_sql(shingle_n: int = 3, table: str = "documents") -> str:
     """The DuckDB twin of :func:`with_shingles` — ONE definition shared by
-    every oracle that shingles (minhash, q42/q43, the count-min sketch), so
+    every oracle that shingles (minhash, q42/q43), so
     a semantics change cannot desynchronize them."""
     return (
         f"SELECT DISTINCT doc_id, array_to_string(arr[i:i+{shingle_n - 1}], ' ') AS shingle\n"
@@ -193,6 +193,22 @@ def minhash_sql(num_hashes: int = 8, shingle_n: int = 3,
     ) s
     GROUP BY doc_id
     """
+
+
+def banded_keys(signatures: DataFrame, bands: int = 4,
+                rows_per_band: int = 2) -> DataFrame:
+    """Signature frame -> exploded (doc_id, band, bh) band keys — the unit
+    the LSH join buckets on."""
+    band_cols = []
+    for b in range(bands):
+        cols = [F.col(f"h{b * rows_per_band + r}")
+                for r in range(rows_per_band)]
+        band_cols.append(F.struct(
+            F.lit(b).alias("band"), F.concat_ws("_", *cols).alias("bh")))
+    return signatures.select(
+        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
+    ).select("doc_id", F.col("bk.band").alias("band"),
+             F.col("bk.bh").alias("bh"))
 
 
 def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4,
@@ -571,137 +587,3 @@ def embedding_near_dups_bucketed_sql(threshold: float = 0.95, bits: int = 3,
       JOIN v vb ON vb.vec_id = cand.id_b) t
     WHERE cos >= {threshold}
     """
-
-
-def minhash_jaccard_estimate(signatures: DataFrame, pairs: DataFrame,
-                             num_hashes: int = 8) -> DataFrame:
-    """Estimate Jaccard similarity for candidate pairs FROM SIGNATURES ONLY
-    (est = fraction of agreeing MinHash components — the unbiased MinHash
-    estimator).  At scale this replaces the exact shingle re-join
-    (:func:`ngram_jaccard_pairs`) for triage: the join touches k integers
-    per doc instead of its shingle set, so verification cost is independent
-    of document length.  Bias/variance: Var = J(1-J)/k.
-    """
-    a = signatures.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(num_hashes)],
-    )
-    b = signatures.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(num_hashes)],
-    )
-    matches = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(num_hashes)
-    )
-    return (
-        pairs.join(a, "doc_a").join(b, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.round(matches / F.lit(num_hashes), 6).alias("jaccard_est"),
-        )
-    )
-# ---------------------------------------------------------------------------
-# incremental LSH: near-dup dedup of a GROWING corpus against a persisted
-# signature index (round-4 verdict item 5).  The index is a snapshot table
-# (snapshots.py) of banded signature keys, so reads pin the PRE-append data
-# dirs via the manifest — the delta never pairs against its own append.
-# ---------------------------------------------------------------------------
-
-
-def banded_keys(signatures: DataFrame, bands: int = 4,
-                rows_per_band: int = 2) -> DataFrame:
-    """Signature frame -> exploded (doc_id, band, bh) band keys — the unit
-    the LSH join and the persisted index share."""
-    band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"h{b * rows_per_band + r}")
-                for r in range(rows_per_band)]
-        band_cols.append(F.struct(
-            F.lit(b).alias("band"), F.concat_ws("_", *cols).alias("bh")))
-    return signatures.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"),
-             F.col("bk.bh").alias("bh"))
-
-
-def lsh_index_append(spark, index_dir: str, new_docs: DataFrame,
-                     num_hashes: int = 8, shingle_n: int = 3,
-                     bands: int = 4, rows_per_band: int = 2,
-                     text_col: str = "text",
-                     id_col: str = "doc_id",
-                     tag: str | None = None) -> DataFrame:
-    """Incrementally dedup ``new_docs`` against a persisted LSH index and
-    append the delta's signatures: returns candidate pairs WITHIN the
-    delta plus delta-vs-index, then commits the delta's band keys as a new
-    snapshot of ``index_dir``.
-
-    Contract (pinned in tests/test_lsh_incremental.py): feeding a corpus
-    in any batch split and unioning each call's pairs equals
-    ``lsh_candidate_pairs`` over the whole corpus in one batch.
-
-    Scale: signatures are scan-side; within-delta pairs come from
-    :func:`bucket_pairs`, and the one join, the probe into the index,
-    touches only matching (band, bh) buckets; the index grows by exactly
-    the delta's band keys (bands x delta rows) per call — never
-    recomputed.  The returned frame
-    must be consumed (or checkpointed) by the caller before the NEXT
-    append if lazy evaluation would otherwise outlive the manifest read:
-    read_snapshot pins data dirs, so even that is safe until an
-    ``expire_snapshots`` reclaims the old version.
-
-    Concurrency: when another ingest wins the snapshot version, the
-    WHOLE read-join-commit cycle retries against the fresh manifest —
-    retrying only the commit would silently miss cross pairs against the
-    winner's delta (the Iceberg optimistic-commit contract, applied to
-    the semantic unit rather than the write alone).
-
-    ``tag`` makes the call REPLAY-IDEMPOTENT (streaming foreachBatch
-    epochs): a replayed tag finds its snapshot already committed, skips
-    the append, and computes pairs against that snapshot's PARENT — the
-    exact result of the original call, not a duplicate ingest.
-    """
-    from ..snapshots import (ConcurrentCommitError, commit_snapshot,
-                             list_snapshots, read_snapshot)
-
-    sigs = minhash_signatures(new_docs, num_hashes, shingle_n,
-                              text_col, id_col)
-    delta = banded_keys(sigs, bands, rows_per_band)
-    for attempt in range(5):
-        replayed = None
-        if tag is not None:
-            replayed = next((m for m in list_snapshots(index_dir)
-                             if m.get("tag") == tag), None)
-        old = (read_snapshot(spark, index_dir, version=replayed["parent"])
-               if replayed is not None and replayed["parent"]
-               else None if replayed is not None
-               else read_snapshot(spark, index_dir))
-
-        pairs = bucket_pairs(delta, ["band", "bh"], "doc_id")
-        if old is not None:
-            n, o = delta.alias("n"), old.alias("o")
-            cross = (
-                n.join(o, (F.col("n.band") == F.col("o.band"))
-                       & (F.col("n.bh") == F.col("o.bh"))
-                       # an id re-ingested in a later batch is one doc,
-                       # as in the one-batch pair set
-                       & (F.col("n.doc_id") != F.col("o.doc_id")))
-                .select(
-                    F.least(F.col("n.doc_id"),
-                            F.col("o.doc_id")).alias("doc_a"),
-                    F.greatest(F.col("n.doc_id"),
-                               F.col("o.doc_id")).alias("doc_b"))
-            )
-            pairs = pairs.unionByName(cross)
-        if replayed is not None:
-            return pairs.distinct()  # already durable: recompute only
-        # append AFTER building the plans: read_snapshot above already
-        # pinned the pre-append data dirs through its manifest, so the
-        # commit cannot leak the delta into its own candidate join
-        try:
-            commit_snapshot(delta, index_dir, mode="append",
-                            partition_by=["band"], tag=tag)
-            return pairs.distinct()
-        except ConcurrentCommitError:
-            continue  # re-read: the winner's delta must join as `old`
-    raise ConcurrentCommitError(
-        f"lsh_index_append lost the commit race 5 times on {index_dir}")

@@ -140,8 +140,7 @@ def _wave_histogram(samples: np.ndarray) -> np.ndarray:
 def decode_gray_image(content: bytes | None) -> np.ndarray | None:
     """Grayscale (h, w) pixel decode for the codecs with REAL decoders
     (P5 PGM, uncompressed BMP, JPEG baseline+progressive, PNG) — None for
-    anything else.  Shared by the histogram features below and
-    operators/phash.py."""
+    anything else."""
     if content is None:
         return None
     content = bytes(content)
@@ -180,21 +179,9 @@ def _decode(content: bytes | None,
     kind column keeps the fallback honest in data.
     """
     if content is not None and media_type == "image":
-        try:
-            if content[:2] == b"P5":
-                return _gray_histogram(_parse_pgm(bytes(content))), "pixel"
-            if content[:2] == b"BM":
-                return _gray_histogram(_parse_bmp(bytes(content))), "pixel"
-            if content[:2] == b"\xff\xd8":
-                from ..sources._jpeg import decode_jpeg_gray
-                return (_gray_histogram(
-                    decode_jpeg_gray(bytes(content)).ravel()), "pixel")
-            if content[:8] == b"\x89PNG\r\n\x1a\n":
-                from ..sources._png import decode_png_gray
-                return (_gray_histogram(
-                    decode_png_gray(bytes(content)).ravel()), "pixel")
-        except ValueError:
-            pass
+        img = decode_gray_image(content)
+        if img is not None:
+            return _gray_histogram(img), "pixel"
     if content is not None and media_type == "audio":
         try:
             if content[:4] == b"RIFF":

@@ -1,13 +1,11 @@
 """Similarity search over an embedding column (array<float>).
 
-Three paths:
+Two paths:
 * brute-force cosine top-k — the exact baseline, one scan + one top-k;
 * LSH-bucketed ANN — random-hyperplane sign signatures computed scan-side
   as column expressions over literal planes; queries probe only matching
   buckets.  This is the 100 TB path: bucket cardinality ~n/2^bits, so the
-  candidate join touches a vanishing fraction of the corpus;
-* IVF ANN — a driver-trained coarse quantizer; list assignment is a
-  vectorized pandas UDF (one matrix distance computation per Arrow batch).
+  candidate join touches a vanishing fraction of the corpus.
 
 Cosine math and the sign-LSH bucket stay JVM-side (zip_with/aggregate in
 double precision), so both are exactly reproducible in DuckDB.
@@ -16,8 +14,7 @@ double precision), so both are exactly reproducible in DuckDB.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 
 def dot(va, vb):
@@ -139,98 +136,3 @@ def ann_topk_sql(planes: np.ndarray, k: int = 10, query_id: int = 0,
     ORDER BY cosine DESC, vec_id
     LIMIT {k}
     """
-
-
-def ivf_centroids(emb: DataFrame, n_lists: int = 16, seed: int = 42,
-                  vec_col: str = "embedding", sample: int = 2048,
-                  id_col: str = "vec_id") -> np.ndarray:
-    """Deterministic IVF coarse quantizer: k-means (fixed-seed init, few
-    Lloyd iterations) over a seeded sample of the corpus.
-
-    Runs on the driver over a bounded sample — the standard way to train a
-    coarse quantizer; assignment of the full corpus stays distributed.
-    The sample is ordered by a hash of the (small) id column — NOT of the
-    vector itself — so the scan never serializes vectors to strings; the
-    orderBy+limit compiles to TakeOrdered (per-partition top-k, no full
-    sort)."""
-    rows = (
-        emb.select(vec_col, id_col)
-        .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))  # seeded-stable sample
-        .limit(sample)
-        .select(vec_col)
-        .collect()  # bounded-sample ok: quantizer training set, <= `sample` rows
-    )
-    mat = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
-    rng = np.random.default_rng(seed)
-    cents = mat[rng.choice(len(mat), size=min(n_lists, len(mat)), replace=False)]
-    for _ in range(8):
-        d = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(len(cents)):
-            members = mat[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-    return cents
-
-
-def with_ivf_list(emb: DataFrame, centroids: np.ndarray,
-                  vec_col: str = "embedding") -> DataFrame:
-    """Assign each vector to its nearest coarse centroid (``ivf_list``).
-
-    Vectorized pandas UDF — one matrix distance computation per Arrow
-    batch.  At scale ``ivf_list`` becomes the table's partition column so a
-    probe is a partition-pruned scan of n_probe lists."""
-    cents = centroids
-
-    @F.pandas_udf(T.IntegerType())
-    def list_of(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype="int32")
-        mat = np.stack(vs.to_numpy()).astype(np.float64)
-        d = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(d.argmin(axis=1).astype("int32"))
-
-    return emb.withColumn("ivf_list", list_of(F.col(vec_col)))
-
-
-def ivf_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
-             n_lists: int = 16, n_probe: int = 3, seed: int = 42,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """IVF ANN: train a coarse quantizer, probe the n_probe nearest lists,
-    exact-rank inside them.  Recall rises with n_probe (n_probe == n_lists
-    degenerates to exact brute force)."""
-    cents = ivf_centroids(emb, n_lists, seed, vec_col, id_col=id_col)
-    q = np.asarray(query_vec, dtype=np.float64)
-    order = (((cents - q[None, :]) ** 2).sum(axis=1)).argsort()[:n_probe]
-    probe_lists = [int(x) for x in order]
-    assigned = with_ivf_list(emb, cents, vec_col)
-    return cosine_topk(
-        assigned.filter(F.col("ivf_list").isin(probe_lists)),
-        query_vec, k, id_col, vec_col,
-    )
-
-
-def write_ivf_partitioned(emb: DataFrame, centroids: np.ndarray, path: str,
-                          vec_col: str = "embedding") -> None:
-    """Materialize the corpus PARTITIONED BY ivf_list — the at-scale ANN
-    layout: each coarse cell is its own partition directory, so a probe
-    becomes a partition-pruned scan of n_probe directories instead of a
-    full-corpus scan + filter.  One shuffle on ivf_list at write time keeps
-    one file per list instead of files x tasks."""
-    assigned = with_ivf_list(emb, centroids, vec_col)
-    (assigned.repartition("ivf_list")
-     .write.mode("overwrite").partitionBy("ivf_list").parquet(path))
-
-
-def ivf_topk_partitioned(spark, path: str, query_vec: list[float],
-                         centroids: np.ndarray, k: int = 10, n_probe: int = 3,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
-    """Probe the :func:`write_ivf_partitioned` layout: the ivf_list filter
-    is a PARTITION filter (pruned at planning, verified by plan test) —
-    only the n_probe nearest lists' files are ever opened."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    order = (((centroids - q[None, :]) ** 2).sum(axis=1)).argsort()[:n_probe]
-    probe_lists = [int(x) for x in order]
-    scan = spark.read.parquet(path).filter(F.col("ivf_list").isin(probe_lists))
-    return cosine_topk(scan, query_vec, k, id_col, vec_col)

@@ -33,8 +33,8 @@ Design (SURVEY.md §3.4 / §4 custom items):
 * **No per-row Python.** Only Arrow-vectorized ``mapInPandas``, each built
   by :func:`.shipping.map_batches` (which ships the package to the workers
   and drops empty batches); everything else is native column expressions.
-* **One crossing shape.** Every extraction-family relation (extract, simple,
-  dual, debug, layout) crosses the boundary flat — see the note above
+* **One crossing shape.** Every extraction-family relation (extract, dual,
+  debug, layout) crosses the boundary flat — see the note above
   ``_EXTRACT_FLAT_OUT``.
 """
 
@@ -137,8 +137,8 @@ def estimate_scan_partitions(docs: DataFrame) -> int:
 # parallel primitive arrays cut the identity pass ~15%).  So every
 # extraction-family stage crosses flat: spans.kind/.text/.media_ref/.offset
 # out to Python (a free JVM field extraction), dict records rebuilt per
-# batch (cheap — measured inside the same probe), and, for extract and
-# simple, result spans returned as four arrays re-zipped to the public
+# batch (cheap — measured inside the same probe), and, for extract,
+# result spans returned as four arrays re-zipped to the public
 # struct schema JVM-side (dual, debug and layout return scalar rows).  The kernel
 # and the public EXTRACTED_WITH_PART schema are untouched.
 #
@@ -276,13 +276,9 @@ def _extract(docs: DataFrame, chunk_if: str,
     """The extraction stage behind every public entry point: chunk rows
     (:func:`_chunk_rows`), one mapInPandas, and the span re-zip, with no
     exchange — so it runs in the stage of whatever produced ``docs``."""
-    return _rezip(map_batches(
+    flat = map_batches(
         _chunk_rows(docs, chunk_if, chunk_spans, chunk_chars),
-        _extract_batches_flat, _EXTRACT_FLAT_OUT))
-
-
-def _rezip(flat: DataFrame) -> DataFrame:
-    """The flat crossing's output rows -> the EXTRACTED_WITH_PART shape."""
+        _extract_batches_flat, _EXTRACT_FLAT_OUT)
     return flat.selectExpr(*[
         _REZIP_SQL if f.name == "spans" else f.name
         for f in EXTRACTED_WITH_PART.fields])
@@ -312,12 +308,12 @@ def extract_chunked(docs: DataFrame, chunk_spans: int = DEFAULT_CHUNK_SPANS,
     return _extract(docs, "true", chunk_spans, chunk_chars)
 
 
-def _flat_spans_input(docs: DataFrame, *keys: str) -> DataFrame:
+def _flat_spans_input(docs: DataFrame) -> DataFrame:
     """Project the spans struct array into four parallel arrays for a flat
     boundary crossing (see the flat-boundary note above _EXTRACT_FLAT_OUT),
-    next to ``doc_id`` and any further ``keys`` columns."""
+    next to ``doc_id``."""
     return docs.select(
-        "doc_id", *keys,
+        "doc_id",
         F.col("spans.kind").alias("_kinds"),
         F.col("spans.text").alias("_texts"),
         F.col("spans.media_ref").alias("_refs"),
@@ -354,28 +350,6 @@ def extract_docs_dual(docs: DataFrame) -> DataFrame:
     scan partitioning."""
     return map_batches(_flat_spans_input(docs), _extract_dual_batches_flat,
                        DUAL_SCHEMA)
-
-
-def _extract_simple_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield _flat_out(
-            [ec.extract_simple_document(doc_id, spans) for doc_id, spans
-             in zip(pdf["doc_id"], _records_from_flat(pdf))],
-            pdf["part_key"].tolist())
-
-
-def extract_docs_simple(docs: DataFrame,
-                        num_parts: int = DEFAULT_NUM_PARTS) -> DataFrame:
-    """SIMPLE-path extraction — the reference's second extractor
-    (process_document_simple, v10.R:745-811) distributed the same way as
-    the smart path.  Used for the cross-extractor differential
-    (v8.R:3017-3033); a QA relation typically run on samples, so it takes
-    the direct mapInPandas route without the oversized-doc chunking, with
-    the same flat crossing and span re-zip as :func:`extract_direct`."""
-    if "part_key" not in docs.columns:
-        docs = with_part_key(docs, num_parts)
-    return _rezip(map_batches(_flat_spans_input(docs, "part_key"),
-                              _extract_simple_batches_flat, _EXTRACT_FLAT_OUT))
 
 
 DEBUG_BOUNDARY_SCHEMA = T.StructType(

@@ -1102,18 +1102,12 @@ def q38(spark, sf_dir):
 def q42(spark, sf_dir):
     """Corpus heavy hitters: top-20 word trigrams by document frequency
     (boilerplate/contamination radar), via
-    ``operators.sketches.heavy_hitters`` — ``exact=True`` here (scan-side
-    shingling, one count shuffle, TakeOrdered; matches the oracle
-    exactly).  The 100 TB side of the same switch, ``exact=False``, swaps
-    in the count-min sketch + per-partition bounded candidates
-    (cms_build/cms_estimate: fixed depth*width aggregation state, exact
-    DuckDB twin); sketch-vs-exact agreement pinned in
-    tests/test_operators.py::TestCountMinSketch."""
+    ``operators.sketches.heavy_hitters`` (scan-side shingling, one count
+    shuffle, TakeOrdered; matches the oracle exactly)."""
     from .operators.sketches import heavy_hitters
 
     return heavy_hitters(
-        load(spark, sf_dir, "documents"), k=20, shingle_n=_SHINGLE_N,
-        exact=True)
+        load(spark, sf_dir, "documents"), k=20, shingle_n=_SHINGLE_N)
 
 
 @query(

@@ -56,47 +56,6 @@ def stream_extract(
     )
 
 
-def stream_dedup(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    watermark: str = "1 hour",
-    ts_col: str = "ingest_ts",
-):
-    """Streaming exact dedup of a growing document feed: the streaming face
-    of ``operators.dedup.exact_dedup`` — exactly ONE row per content digest
-    is emitted.  (Across micro-batches that is the first-arriving batch's
-    row; WITHIN a micro-batch dropDuplicatesWithinWatermark keeps an
-    arbitrary representative, so which duplicate survives is not an
-    ordering guarantee — only the digest set is.)
-
-    ``dropDuplicatesWithinWatermark`` on md5(text) with an event-time
-    watermark bounds the dedup state (digests older than the watermark are
-    evicted — the property that makes this run forever at ingest scale;
-    an unwatermarked dropDuplicates grows state monotonically).  Exactly-
-    once across restarts via the streaming checkpoint.  Stream == batch
-    pinned in tests/test_streaming.py.
-    """
-    from pyspark.sql import functions as F
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(input_path).schema
-    ).parquet(input_path)
-    deduped = (
-        stream.withColumn("digest", F.md5(F.col("text")))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["digest"])
-    )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def snapshot_batch_committer(table_dir: str, num_parts: int = 16):
     """foreachBatch body for :func:`stream_extract_snapshot` — exposed for
     direct testing of the replay-idempotence contract."""
@@ -141,62 +100,6 @@ def stream_extract_snapshot(
     return (
         stream.writeStream
         .foreachBatch(snapshot_batch_committer(table_dir, num_parts))
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def lsh_dedup_batch_committer(spark: SparkSession, index_dir: str,
-                              pairs_dir: str):
-    """foreachBatch body for :func:`stream_lsh_dedup` — exposed for direct
-    replay-idempotence testing.
-
-    Per epoch: incremental near-dup candidates of the batch vs the
-    persisted LSH index (``dedup.lsh_index_append``, epoch-tagged so the
-    index append is replay-idempotent), then the pairs commit to their
-    own snapshot table under the SAME tag.  Pairs commit AFTER the index
-    commit, so pairs-tag-present implies index-tag-present; a replay at
-    any crash point converges to exactly one index delta and one pairs
-    snapshot per epoch."""
-
-    def process_batch(batch_df, epoch_id: int) -> None:
-        from .. import snapshots as S
-        from ..operators import dedup as D
-
-        tag = f"epoch-{int(epoch_id)}"
-        if tag in S.committed_tags(pairs_dir):
-            return  # fully durable: both commits landed before the crash
-        pairs = D.lsh_index_append(spark, index_dir, batch_df, tag=tag)
-        S.commit_snapshot(pairs, pairs_dir, mode="append", tag=tag)
-
-    return process_batch
-
-
-def stream_lsh_dedup(
-    spark: SparkSession,
-    input_path: str,
-    index_dir: str,
-    pairs_dir: str,
-    checkpoint_path: str,
-    max_files_per_trigger: int = 8,
-):
-    """Streaming NEAR-dup dedup of a growing corpus: the streaming face of
-    ``dedup.lsh_index_append`` — each micro-batch's MinHash band keys join
-    only the matching buckets of the persisted signature index, candidate
-    pairs land in an epoch-tagged snapshot table, and the index grows by
-    exactly the batch's keys.  Complements :func:`stream_dedup` (exact
-    digests within a watermark): this path persists ALL signature state in
-    the index table instead of executor memory, so near-dup state survives
-    restarts and never needs watermark eviction.  Union of all pairs
-    snapshots == batch LSH over everything ingested (pinned in
-    tests/test_streaming.py)."""
-    stream = spark.readStream.schema(
-        spark.read.parquet(input_path).schema
-    ).option("maxFilesPerTrigger", max_files_per_trigger).parquet(input_path)
-    return (
-        stream.writeStream
-        .foreachBatch(lsh_dedup_batch_committer(spark, index_dir, pairs_dir))
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()

@@ -71,21 +71,3 @@ def read_table(spark: SparkSession, location: str, schema=None) -> DataFrame | N
         if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
             return None
         raise
-
-
-def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 16,
-                   sort: bool = True) -> None:
-    """Materialize a table BUCKETED (and sorted) by the join key — the
-    co-located-join layout: two tables bucketed the same way join with NO
-    exchange (and no sort when ``sort=True``) on any cluster size whose
-    ``spark.sql.shuffle.partitions`` the bucket count divides evenly.
-
-    At 100 TB this is how the fact-fact joins (orders x lineitem, doc x
-    spans-by-doc) avoid re-shuffling terabytes per query: pay the shuffle
-    once at write time, amortize it over every downstream join.  Plan
-    pinned in tests/test_plans.py::test_bucketed_join_no_shuffle.
-    """
-    w = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)

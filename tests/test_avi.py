@@ -100,73 +100,3 @@ class TestVideoFeature:
         assert real.feature_kind == "frames" and real.decode_ok
         assert abs(sum(real.feature) - 1.0) < 1e-5   # mean of histograms
         assert got["vid://junk"].feature_kind == "stub"
-
-
-class TestVideoNearDups:
-    """Frame-pHash video dedup (operators/phash.py video_near_dups)."""
-
-    def _media(self, spark, rows):
-        pdf = pd.DataFrame(rows)
-        for c in ("width", "height", "duration_ms"):
-            pdf[c] = pd.Series([None] * len(rows), dtype="object")
-        from pdf_extraction_tests_spark.operators.multimodal import (
-            MEDIA_SCHEMA)
-        return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-
-    def test_reencoded_copy_found_distinct_not(self, spark):
-        from pdf_extraction_tests_spark.operators.phash import (
-            video_frame_phashes, video_near_dups)
-        rng = np.random.default_rng(21)
-        planes = _planes(n=6, seed=4)
-        frames = [encode_jpeg(p) for p in planes]
-        # re-encode: the SAME scenes through a different quantizer + noise
-        reenc = [encode_jpeg(np.clip(p + rng.normal(0, 2, p.shape), 0, 255),
-                             quant=2)
-                 for p in planes]
-        # structurally different scenes (noise fields, not gradients) —
-        # same-gradient fixtures ARE visually near-identical to pHash
-        orng = np.random.default_rng(99)
-        other = [encode_jpeg(orng.integers(0, 256, (24, 32)).astype(float))
-                 for _ in range(6)]
-        rows = [
-            {"media_ref": "v://orig", "media_type": "video",
-             "content": bytearray(A.build_avi(frames, 32, 24))},
-            {"media_ref": "v://reenc", "media_type": "video",
-             "content": bytearray(A.build_avi(reenc, 32, 24))},
-            {"media_ref": "v://other", "media_type": "video",
-             "content": bytearray(A.build_avi(other, 32, 24))},
-            {"media_ref": "v://junk", "media_type": "video",
-             "content": bytearray(b"nope")},
-        ]
-        fh = video_frame_phashes(self._media(spark, rows))
-        by_vid = {}
-        for r in fh.collect():
-            by_vid.setdefault(r.media_ref, []).append(r.phash)
-        assert "v://junk" not in by_vid          # undecodable -> no rows
-        assert len(by_vid["v://orig"]) == 4      # sampled, not all 6
-        pairs = {(r.vid_a, r.vid_b): r.n_frames
-                 for r in video_near_dups(fh).collect()}
-        assert ("v://orig", "v://reenc") in pairs
-        assert pairs[("v://orig", "v://reenc")] >= 2
-        assert not any("other" in a or "other" in b for a, b in pairs)
-
-
-class TestVideoRefSeparator:
-    """Round-7 fix: media_refs containing '#' (URL fragments) must not be
-    truncated when frame identity is folded into the join key — the old
-    '#' separator collapsed 'v#1' and 'v' into one video."""
-
-    def test_hash_in_ref_keeps_videos_distinct(self, spark):
-        from pdf_extraction_tests_spark.operators.phash import video_near_dups
-
-        # two DISTINCT videos whose refs share a '#'-prefix relationship,
-        # with identical frame hashes -> must appear as a cross-video pair
-        rows = [("v#1", i, h) for i, h in enumerate((11, 22, 33))]
-        rows += [("v", i, h) for i, h in enumerate((11, 22, 33))]
-        fh = spark.createDataFrame(
-            rows, "media_ref string, frame_idx int, phash long")
-        pairs = {(r.vid_a, r.vid_b): r.n_frames
-                 for r in video_near_dups(fh, min_matching_frames=2).collect()}
-        # old separator truncated both to 'v' (same vid -> filtered out)
-        assert ("v", "v#1") in pairs
-        assert pairs[("v", "v#1")] == 3

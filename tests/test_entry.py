@@ -41,19 +41,23 @@ def test_udf_queries_run_in_fresh_session_without_extraction(tmp_path):
     (which would have shipped the package via addPyFile) must STILL be able
     to run the LID queries — the operator now ships the package itself.
     The other Python boundaries that ``shipping.map_batches`` does not build
-    (the ``bpe`` token count, the stateful span assembler) and the sketch
-    heavy-hitter candidates are held to the same rule.  One subprocess;
-    each case gets its own new SparkContext, so one case shipping the
-    package cannot hide another that does not."""
+    (the ``bpe`` token count, the stateful span assembler) and q33's media
+    feature kernel, built on ``map_batches``, are held to the same rule
+    (96 is q33's row count at sf0.001).  One subprocess; each case gets
+    its own new SparkContext, so one case shipping the package cannot hide
+    another that does not."""
+    import pathlib
     import subprocess
     import sys
 
+    repo = pathlib.Path(__file__).resolve().parents[1]
     code = f"""
 import sys, traceback
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, "{repo}")
 from pyspark.sql import SparkSession, functions as F
 from pdf_extraction_tests_spark.functions.bpe import token_count_col
-from pdf_extraction_tests_spark.operators.sketches import heavy_hitters
+from pdf_extraction_tests_spark.operators.multimodal import (
+    extract_media_features, media_from_documents)
 from pdf_extraction_tests_spark.operators.text_analysis import with_language_guess
 from pdf_extraction_tests_spark.streaming.stateful import (
     SPAN_EVENTS, assemble_spans_stream)
@@ -76,11 +80,11 @@ def assembled(spark, d):
     q.awaitTermination()
     return spark.read.parquet("{tmp_path}/out").count()
 
-def hitters(spark, d):
-    return heavy_hitters(d, k=5, exact=False).count()
+def media(spark, d):
+    return extract_media_features(media_from_documents(d)).count()
 
 stopped = []  # keeps each stopped context alive so no id(sc) is reused
-for case in (lid, bpe, assembled, hitters):
+for case in (lid, bpe, assembled, media):
     spark = (SparkSession.builder.master("local[2]").appName("fresh")
              .config("spark.ui.enabled", "false")
              .config("spark.sql.session.timeZone", "UTC").getOrCreate())
@@ -94,6 +98,6 @@ for case in (lid, bpe, assembled, hitters):
 """
     res = subprocess.run([sys.executable, "-c", code], capture_output=True,
                          text=True, cwd="/tmp", timeout=300)
-    for want in ("lid 500", "bpe True", "assembled 1", "hitters 5"):
+    for want in ("lid 500", "bpe True", "assembled 1", "media 96"):
         assert want in res.stdout.splitlines(), (
             res.stdout + res.stderr[-3000:])

@@ -479,13 +479,6 @@ class TestDualExtractor:
         smart = ec.extract_document(fx.TWO_COL_DOC["doc_id"], fx.TWO_COL_DOC["spans"])
         assert [s["text"] for s in smart["spans"]][1].startswith("Left column second")
 
-    def test_simple_frame_batch(self):
-        pdf = pd.DataFrame(
-            [{"doc_id": d["doc_id"], "spans": d["spans"]} for d in fx.ALL_FIXTURES]
-        )
-        out = ec.extract_simple_frame(pdf)
-        assert list(out["doc_id"]) == [d["doc_id"] for d in fx.ALL_FIXTURES]
-
 
 class TestDeterminism:
     def test_twice_identical(self):

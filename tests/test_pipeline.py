@@ -84,12 +84,16 @@ class TestDirectPath:
 
 
 # Session configs the chunked path must not depend on (ROADMAP direction 5):
-# one- and two-row Arrow batches make a doc's chunk rows straddle batches.
+# one- and two-row Arrow batches make a doc's chunk rows straddle batches;
+# AQE off and one shuffle partition check extract_docs' part_key
+# repartition without coalescing and with every doc in one task.
 CONF_MATRIX = [
     {},
     {"spark.sql.execution.arrow.maxRecordsPerBatch": "1"},
     {"spark.sql.execution.arrow.maxRecordsPerBatch": "2"},
     {"spark.sql.ansi.enabled": "false"},
+    {"spark.sql.adaptive.enabled": "false"},
+    {"spark.sql.shuffle.partitions": "1"},
 ]
 
 
@@ -449,7 +453,8 @@ class TestLayoutTable:
 class TestDualExtractorStage:
     def test_dual_equals_joined_pipelines(self, spark, synthetic_docs):
         """The single-pass dual stage must produce exactly the agreement
-        rows the two-pipeline + join form would (same kernels, one parse)."""
+        rows of the smart pipeline joined with the simple kernel run per
+        doc (same kernels, one parse)."""
         docs = [
             {"doc_id": r.doc_id, "spans": r.spans}
             for r in synthetic_docs.itertuples(index=False)
@@ -462,16 +467,17 @@ class TestDualExtractorStage:
         }
         smart = {r.doc_id: r for r in pl.extract_docs(df, num_parts=4).collect()}
         simple = {
-            r.doc_id: r for r in pl.extract_docs_simple(df, num_parts=4).collect()
+            d["doc_id"]: ec.extract_simple_document(d["doc_id"], d["spans"])
+            for d in docs
         }
         assert set(dual) == set(smart) == set(simple)
         for doc_id, got in dual.items():
             sm, si = smart[doc_id], simple[doc_id]
             want = (
-                sm.title == si.title,
+                sm.title == si["title"],
                 len(sm.spans),
-                len(si.spans),
-                round(len(sm.main_text) / max(len(si.main_text), 1), 4),
+                len(si["spans"]),
+                round(len(sm.main_text) / max(len(si["main_text"]), 1), 4),
             )
             assert got == want, doc_id
 

@@ -139,64 +139,6 @@ def test_token_budget_head_no_global_corpus_window(spark):
     assert has_broadcast_join(plan), plan
 
 
-def test_ivf_partitioned_probe_is_partition_pruned(spark, tmp_path):
-    """The at-scale IVF layout: writing bucketed by ivf_list and probing
-    must plan a PartitionFilters-pruned scan (not a full scan + filter),
-    and return exactly what the in-memory IVF probe returns."""
-    from pdf_extraction_tests_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cents = S.ivf_centroids(emb, n_lists=8, seed=7)
-    path = str(tmp_path / "ivf")
-    S.write_ivf_partitioned(emb, cents, path)
-    qvec = [float(x) for x in emb.orderBy("vec_id").first().embedding]
-
-    got = S.ivf_topk_partitioned(spark, path, qvec, cents, k=5, n_probe=2)
-    plan = formatted_plan(got)
-    import re as _re
-
-    m = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "ivf_list" in m.group(1), plan  # pruning actually planned
-
-    probe = {
-        (r.vec_id, r.cosine)
-        for r in S.ivf_topk(emb, qvec, k=5, n_lists=8, n_probe=2, seed=7).collect()
-    }
-    assert {(r.vec_id, r.cosine) for r in got.collect()} == probe
-
-
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    """Two tables bucketed+sorted on the join key must sort-merge join with
-    ZERO exchanges and zero sorts — the pay-once co-location layout for
-    fact-fact joins at scale."""
-    from pdf_extraction_tests_spark.tables import write_bucketed
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS bdemo "
-              f"LOCATION '{tmp_path / 'bdemo'}'")
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    lineitem = spark.read.parquet(f"{SF}/lineitem.parquet")
-    write_bucketed(orders.withColumnRenamed("o_orderkey", "k"),
-                   "bdemo.orders_b", "k", buckets=4)
-    write_bucketed(lineitem.withColumnRenamed("l_orderkey", "k"),
-                   "bdemo.lineitem_b", "k", buckets=4)
-    a = spark.table("bdemo.orders_b").select("k", "o_totalprice")
-    b = spark.table("bdemo.lineitem_b").select("k", "l_quantity")
-    # merge hint: at the modeled scale BOTH sides are facts (nothing
-    # broadcasts); without it the planner broadcasts the tiny test table
-    # and disables bucketing entirely
-    joined = a.hint("merge").join(b, "k")
-    plan = formatted_plan(joined)
-    assert "SortMergeJoin" in plan, plan
-    assert count_exchanges(plan) == 0, plan          # co-located: no shuffle
-    assert "Bucketed: true" in plan, plan
-    # row-count sanity vs the unbucketed join
-    n_plain = (orders.join(lineitem,
-                           orders.o_orderkey == lineitem.l_orderkey).count())
-    assert joined.count() == n_plain
-    spark.sql("DROP TABLE bdemo.orders_b")
-    spark.sql("DROP TABLE bdemo.lineitem_b")
-
-
 def test_aqe_splits_skewed_join_partition(spark):
     """Runtime skew evidence: a 99%-hot join key must come out of AQE as a
     SPLIT sort-merge join (skew=true), not one straggler task — the
@@ -411,36 +353,27 @@ def test_pii_scrub_zero_shuffle(spark):
 
 
 def test_row_local_curation_signals_plan_as_one_projection(spark):
-    """q57 and the streaming curator compute every per-document signal as a
-    column of one projection over one ``documents`` scan: no shuffle
-    exchange, no join (nothing is joined back on ``doc_id``), no
-    row-pickled Python, under AQE off and on.  The curator's only Python
-    node is the language-ID kernel, and only with a language gate.  Nodes
-    are counted as in ``test_curation_funnel_single_lazy_plan``."""
-    from pdf_extraction_tests_spark.streaming.curation import curate_batch
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    """q57 computes every per-document signal as a column of one
+    projection over one ``documents`` scan: no shuffle exchange, no join
+    (nothing is joined back on ``doc_id``), no Python node, under AQE off
+    and on.  Nodes are counted as in
+    ``test_curation_funnel_single_lazy_plan``."""
     saved = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         for aqe in ("false", "true"):
             spark.conf.set("spark.sql.adaptive.enabled", aqe)
-            for name, df, arrow_nodes in (
-                    ("q57", queries()["q57_repetition_signals"](spark, SF), 0),
-                    ("curate", curate_batch(docs), 1),
-                    ("curate lang=None", curate_batch(docs, lang=None), 0)):
-                plan = formatted_plan(df)
-                nodes = re.findall(r"^\(\d+\) (\w+)", plan,
-                                   flags=re.MULTILINE)
-                where = (name, aqe, plan)
-                scans = re.findall(r"^\(\d+\) Scan .*?Location: [^\n]*",
-                                   plan, flags=re.MULTILINE | re.DOTALL)
-                assert len(scans) == nodes.count("Scan") == 1, where
-                assert "documents.parquet" in scans[0], where
-                assert count_exchanges(plan) == 0, where
-                assert "BroadcastExchange" not in plan, where
-                assert not [n for n in nodes if "Join" in n], where
-                assert nodes.count("ArrowEvalPython") == arrow_nodes, where
-                assert "BatchEvalPython" not in plan, where
+            plan = formatted_plan(queries()["q57_repetition_signals"](spark, SF))
+            nodes = re.findall(r"^\(\d+\) (\w+)", plan, flags=re.MULTILINE)
+            where = (aqe, plan)
+            scans = re.findall(r"^\(\d+\) Scan .*?Location: [^\n]*",
+                               plan, flags=re.MULTILINE | re.DOTALL)
+            assert len(scans) == nodes.count("Scan") == 1, where
+            assert "documents.parquet" in scans[0], where
+            assert count_exchanges(plan) == 0, where
+            assert "BroadcastExchange" not in plan, where
+            assert not [n for n in nodes if "Join" in n], where
+            assert "ArrowEvalPython" not in nodes, where
+            assert "BatchEvalPython" not in plan, where
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", saved)
 
@@ -540,34 +473,17 @@ def test_gram_emission_splits_each_row_once(spark):
         assert not [b for b in bodies if "split(" in b], name
 
 
-def test_bucket_pair_generators_plan_once(spark, tmp_path):
+def test_bucket_pair_generators_plan_once(spark):
     """Every bucket-pair site goes through ``dedup.bucket_pairs``, which
-    plans its bucketed input once.  With AQE off: a second
-    ``lsh_index_append`` call plans exactly one join, the probe into the
-    index (a self-join on (band, bh) for the within-delta pairs would add
-    a second); q23 is 1 ``documents`` scan, 3 shuffle exchanges and no
-    join."""
-    from pyspark.sql import functions as F
-
-    from pdf_extraction_tests_spark.operators.dedup import lsh_index_append
-
-    def nodes(df):
-        return re.findall(r"^\(\d+\) (\w+)", formatted_plan(df),
-                          flags=re.MULTILINE)
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    idx = str(tmp_path / "lsh_index")
+    plans its bucketed input once.  With AQE off, q23 is 1 ``documents``
+    scan, 3 shuffle exchanges and no join (a self-join on (band, bh)
+    would add one)."""
     saved = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        lsh_index_append(spark, idx, docs.filter(F.col("doc_id") < 250)).count()
-        second = nodes(lsh_index_append(
-            spark, idx, docs.filter(F.col("doc_id") >= 250)))
-        assert len([n for n in second if "Join" in n]) == 1, second
-
         q23 = queries()["q23_lsh_candidates"](spark, SF)
         plan = formatted_plan(q23)
-        q23_nodes = nodes(q23)
+        q23_nodes = re.findall(r"^\(\d+\) (\w+)", plan, flags=re.MULTILINE)
         assert q23_nodes.count("Scan") == 1, plan
         assert count_exchanges(plan) == 3, plan
         assert not [n for n in q23_nodes if "Join" in n], plan

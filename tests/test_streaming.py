@@ -58,42 +58,6 @@ def test_streaming_restart_is_exactly_once(spark, corpus_path, tmp_path):
     assert n2 == n1
 
 
-def test_streaming_dedup_matches_batch(spark, tmp_path):
-    """stream_dedup emits exactly one row per distinct text (first arrival),
-    with bounded watermark state — result set == batch exact dedup."""
-    import datetime
-
-    from pyspark.sql import functions as F, types as T
-
-    from pdf_extraction_tests_spark.streaming.incremental import stream_dedup
-
-    base = datetime.datetime(2024, 1, 1)
-    rows = []
-    for i in range(30):
-        rows.append({
-            "doc_id": f"d{i}",
-            "text": f"content {i % 10}",            # each text repeats 3x
-            "ingest_ts": base + datetime.timedelta(minutes=i),
-        })
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("ingest_ts", T.TimestampType()),
-    ])
-    src = str(tmp_path / "feed")
-    spark.createDataFrame(pd.DataFrame(rows), schema=schema).write.parquet(src)
-    out = str(tmp_path / "deduped")
-    q = stream_dedup(spark, src, out, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    texts = [r.text for r in got.collect()]
-    assert sorted(texts) == sorted(f"content {i}" for i in range(10))
-    # batch equivalence: same distinct digest set
-    batch = (spark.read.parquet(src)
-             .select(F.md5("text").alias("digest")).distinct().count())
-    assert got.select("digest").distinct().count() == batch == 10
-
-
 def test_snapshot_sink_matches_batch_and_travels(spark, corpus_path, tmp_path):
     """stream_extract_snapshot: exactly-once into an atomic snapshot table;
     each micro-batch is one epoch-tagged snapshot, history time-travels."""
@@ -138,60 +102,3 @@ def test_snapshot_sink_replayed_epoch_is_noop(spark, corpus_path, tmp_path):
     assert len(S.list_snapshots(table)) == 1
     commit(batch, 1)                            # a NEW epoch still appends
     assert S.read_snapshot(spark, table).count() == 2 * n1
-
-
-def test_stream_lsh_dedup_matches_batch(spark, tmp_path):
-    """stream_lsh_dedup: union of per-epoch pairs snapshots == batch LSH
-    candidate pairs over everything ingested; index holds one banded key
-    row per (band, doc)."""
-    from pdf_extraction_tests_spark import snapshots as S
-    from pdf_extraction_tests_spark.operators import dedup as D
-    from pdf_extraction_tests_spark.streaming.incremental import (
-        stream_lsh_dedup)
-
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .filter("doc_id < 120").select("doc_id", "text"))
-    src = str(tmp_path / "feed")
-    # several files -> several micro-batches at maxFilesPerTrigger=1
-    docs.repartition(3).write.parquet(src)
-    index_dir = str(tmp_path / "lsh_index")
-    pairs_dir = str(tmp_path / "lsh_pairs")
-    q = stream_lsh_dedup(spark, src, index_dir, pairs_dir,
-                         str(tmp_path / "ckpt"), max_files_per_trigger=1)
-    q.awaitTermination(180)
-
-    got = {(r.doc_a, r.doc_b)
-           for r in S.read_snapshot(spark, pairs_dir).collect()}
-    want = {(r.doc_a, r.doc_b)
-            for r in D.lsh_candidate_pairs(
-                D.minhash_signatures(docs)).collect()}
-    assert got == want and len(want) > 0
-    n_sigs = D.minhash_signatures(docs).count()
-    assert S.read_snapshot(spark, index_dir).count() == 4 * n_sigs
-
-
-def test_lsh_dedup_replayed_epoch_is_noop(spark, tmp_path):
-    """Crash-replay at any point: neither the index nor the pairs table
-    duplicates an epoch's rows."""
-    from pdf_extraction_tests_spark import snapshots as S
-    from pdf_extraction_tests_spark.streaming.incremental import (
-        lsh_dedup_batch_committer)
-
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .filter("doc_id < 60").select("doc_id", "text"))
-    index_dir = str(tmp_path / "idx")
-    pairs_dir = str(tmp_path / "pairs")
-    commit = lsh_dedup_batch_committer(spark, index_dir, pairs_dir)
-    commit(docs, 0)
-    n_idx = S.read_snapshot(spark, index_dir).count()
-    n_pairs = S.read_snapshot(spark, pairs_dir).count()
-    commit(docs, 0)                       # full replay: both tags present
-    assert S.read_snapshot(spark, index_dir).count() == n_idx
-    assert S.read_snapshot(spark, pairs_dir).count() == n_pairs
-    # crash BETWEEN the two commits: index tag landed, pairs did not —
-    # simulate by dropping the pairs table and replaying the epoch
-    import shutil
-    shutil.rmtree(pairs_dir)
-    commit(docs, 0)
-    assert S.read_snapshot(spark, index_dir).count() == n_idx  # no re-append
-    assert S.read_snapshot(spark, pairs_dir).count() == n_pairs  # recomputed
