@@ -384,30 +384,64 @@ def _burn(_) -> int:
 _KERNEL_CORPUS = "/tmp/bench_kernel_ab_corpus.pkl"
 
 
+def _flat_batches(pdf, rows: int = 10_000) -> list:
+    """The nested (doc_id, spans) corpus as the flat crossing's batches:
+    one row per doc, its spans as four parallel arrays (Arrow's default
+    10k-row batches)."""
+    import numpy as np
+    import pandas as pd
+
+    def arrays(spans, key, dtype=object):
+        return None if spans is None else np.array([s[key] for s in spans], dtype)
+
+    flat = pd.DataFrame({
+        "doc_id": pdf["doc_id"].to_numpy(), "part_key": 0, "_chunk": -1, "_n": 0,
+        "_kinds": [arrays(s, "kind") for s in pdf["spans"]],
+        "_texts": [arrays(s, "text") for s in pdf["spans"]],
+        "_refs": [arrays(s, "media_ref") for s in pdf["spans"]],
+        "_orders": [arrays(s, "offset", np.int32) for s in pdf["spans"]],
+    })
+    return [flat.iloc[i:i + rows] for i in range(0, len(flat), rows)]
+
+
 def kernel_run(pkg_parent: str) -> None:
-    """Child mode: time the pure-Python kernel (no Spark) of the package
-    rooted at ``pkg_parent`` over the SHARED pickled corpus (built once by
-    the parent from HEAD, so both sides extract identical input and the
-    ratio isolates the kernel delta from corpus-generator drift)."""
+    """Child mode: time the extraction kernel (no Spark session) of the
+    package rooted at ``pkg_parent`` over the SHARED pickled corpus (built
+    once by the parent from HEAD, so both sides extract identical input and
+    the ratio isolates the kernel delta from corpus-generator drift).  It
+    times the production stage function, ``pipeline._extract_batches_flat``
+    over the corpus as flat batches; a ref without it times
+    ``extract_core.extract_docs_frame``.  The record names the entry."""
     import pickle
 
     sys.path.insert(0, pkg_parent)
     # drop any already-imported HEAD modules so the ref's code loads
     for name in [m for m in sys.modules if m.startswith("pdf_extraction_tests_spark")]:
         del sys.modules[name]
-    from pdf_extraction_tests_spark.extract_core import extract_docs_frame
+    from pdf_extraction_tests_spark import pipeline
 
     with open(_KERNEL_CORPUS, "rb") as f:
         pdf = pickle.load(f)
-    extract_docs_frame(pdf.head(20))  # warm (regex compile, memo paths)
+    if hasattr(pipeline, "_extract_batches_flat"):
+        entry = "pipeline._extract_batches_flat"
+
+        def run(frame) -> int:
+            return sum(len(out) for out in pipeline._extract_batches_flat(
+                iter(_flat_batches(frame))))
+    else:
+        entry = "extract_core.extract_docs_frame"
+
+        def run(frame) -> int:
+            return len(pipeline.ec.extract_docs_frame(frame))
+    run(pdf.head(20))  # warm (regex compile, memo paths)
     reps = int(os.environ.get("BENCH_KERNEL_REPS", "10"))
     with _StealMeter() as sm:
         t0 = time.time()
         n = 0
         for _ in range(reps):
-            n += len(extract_docs_frame(pdf))
+            n += run(pdf)
         sec = time.time() - t0
-    print(json.dumps({"docs": n, "sec": round(sec, 3),
+    print(json.dumps({"entry": entry, "docs": n, "sec": round(sec, 3),
                       "docs_per_sec": round(n / sec, 1),
                       "steal_pct": sm.steal_pct}))
 
@@ -450,7 +484,8 @@ def kernel_ab(ref: str, rounds: int = 3) -> dict:
             rec = _one(parent)
             best[side] = max(best[side], rec["docs_per_sec"])
             runs[side].append(
-                {"docs_per_sec": rec["docs_per_sec"],
+                {"entry": rec.get("entry", "extract_core.extract_docs_frame"),
+                 "docs_per_sec": rec["docs_per_sec"],
                  "steal_pct": rec.get("steal_pct", 0.0)})
     subprocess.run(["git", "worktree", "remove", "--force", wt],
                    cwd=REPO, capture_output=True, timeout=120)

@@ -2,16 +2,17 @@
 
 This module is the *semantics* of the engine: a deterministic, single-process
 re-expression of the reference's per-document pipeline
-(``Document_Processor_DocLayout_YOLO_Code_v10.R``).  The Spark layer
-(:mod:`pdf_extraction_tests_spark.pipeline`) only distributes calls to these
-functions over Arrow batches — so the same code doubles as the local oracle
-for differential tests (SURVEY.md §5).
+(``Document_Processor_DocLayout_YOLO_Code_v10.R``).  The per-document
+functions are the reference and the local oracle for differential tests
+(SURVEY.md §5).  The Spark layer (:mod:`pdf_extraction_tests_spark.pipeline`)
+calls :func:`extract_batch` once per Arrow batch: the same stages, each run
+once over the batch's whole region table (see the section at the end).
 
 Representation note: documents are small (tens to hundreds of regions), so
-the per-document kernel works on plain lists of dict records — pandas frames
-at this size cost ~10-30x in per-op overhead (measured: 35 docs/s/thread
-frame-based vs >400 list-based).  pandas appears only at the Arrow batch
-boundary (:func:`extract_docs_frame`, and the Spark stage's batch loop).
+the per-document functions work on plain lists of dict records — pandas
+frames at this size cost ~10-30x in per-op overhead (measured: 35
+docs/s/thread frame-based vs >400 list-based).  The batch kernel instead
+holds one numpy column per field for all regions of the batch.
 
 Per-document stages and their reference counterparts:
 
@@ -39,6 +40,8 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # ---------------------------------------------------------------------------
 # Constants mirrored from the reference
@@ -287,9 +290,9 @@ def spans_to_regions(spans: Iterable[dict]) -> list[dict]:
     ``spans`` is an iterable of dicts with keys kind/text/media_ref/offset.
     Media spans become placeholder rows (re-anchored to the geometry of the
     preceding block by :func:`reanchor_media`, which must run on the fully
-    assembled document — this keeps per-chunk parsing independent of the
-    other chunks, so the oversized-doc path can parse chunk by chunk and
-    concatenate); parse failures become counter rows (parse_failure=1).
+    assembled document); parse failures become counter rows
+    (parse_failure=1).  A NULL offset is the number of rows the earlier
+    spans produced, so it depends on every earlier span of the doc.
     """
     rows: list[dict] = []
     for sp in spans:
@@ -876,7 +879,7 @@ def clean_author_list(authors: str) -> str:
     return "; ".join(cleaned)
 
 
-def extract_abstract(ordered: list[dict], title_row: int) -> tuple[str, int]:
+def extract_abstract(ordered: list[dict]) -> tuple[str, int]:
     """Abstract pick — REFERENCE-VERBATIM weights (the aggressive manual
     search of extract_abstract_with_llm, v10.R:1281-1302, plus the
     largest-block fallback :1307-1315 and header strip :1330).
@@ -887,12 +890,11 @@ def extract_abstract(ordered: list[dict], title_row: int) -> tuple[str, int]:
     >=1 dot -> 4; else 0.  Keep >= 4 (:1299), order desc(score) then
     desc(nchar) (:1300), row_id tiebreak.  Fallback: largest page-1 block
     with nchar>50 (:1307-1311).  The 'Abstract:'/'Summary:' header is
-    stripped from the winner (:1330).  ``title_row`` is unused — the
-    reference's candidate set is position-filtered only (kept in the
-    signature for the kernel's call shape).  Returns (abstract, row_id);
-    ("", -1) when nothing qualifies ("Abstract not found", :1313).
+    stripped from the winner (:1330).  The reference's candidate set is
+    position-filtered only: it does not anchor on the title (v10.R:1281).
+    Returns (abstract, row_id); ("", -1) when nothing qualifies ("Abstract
+    not found", :1313).
     """
-    del title_row  # reference does not anchor on the title (v10.R:1281)
     p1 = [
         r for r in ordered
         if r["page"] == 1 and r["element_type"] != "media" and r["text"]
@@ -1017,8 +1019,7 @@ def intro_score(text: str, is_mdpi: bool = False, low: str | None = None) -> int
     )
 
 
-def scan_boundaries(clean: list[dict], abstract_row: int = -1,
-                    is_mdpi: bool = False) -> tuple[int, int]:
+def scan_boundaries(clean: list[dict], is_mdpi: bool = False) -> tuple[int, int]:
     """Boundary extraction with the reference's weighted scoring.
 
     start: argmax of :func:`intro_score` over rows scoring >= 3, ordered
@@ -1031,10 +1032,8 @@ def scan_boundaries(clean: list[dict], abstract_row: int = -1,
     extension for short docs, simplified from v10.R:1743-1772); else one
     past the last row.  Returns (start_row_id, end_row_id), slice semantics
     [start, end) — cf. golden boundaries start=15 end=88
-    (v10_ALTAIR.R:3764-3769).  ``abstract_row`` is accepted for signature
-    stability but no longer drives the fallback.
+    (v10_ALTAIR.R:3764-3769).
     """
-    del abstract_row  # superseded by the reference's min(15, nrow) fallback
     body = [r for r in clean if r["element_type"] in BODY_TYPES]
     if not body:
         return (0, 0)
@@ -1170,21 +1169,14 @@ def analyze_document(records: list[dict]) -> dict:
     title, title_row = extract_title(ordered)
     authors = extract_authors(ordered, title_row)
     clean = strip_boilerplate(ordered)
-    # recompute title row id after renumbering (the title text is stable)
-    title_row2 = -1
-    if title:
-        for r in clean:
-            if r["text"] == title:
-                title_row2 = r["row_id"]
-                break
     # per-format banded abstract first (P7/J2), generic scorer as fallback
     abstract, abstract_row = extract_abstract_banded(clean, band_format)
     if abstract_row < 0:
-        abstract, abstract_row = extract_abstract(clean, title_row2)
+        abstract, abstract_row = extract_abstract(clean)
     if band_format == "elsevier":
         start, end = scan_boundaries_elsevier(clean)
     else:
-        start, end = scan_boundaries(clean, abstract_row, is_mdpi=is_mdpi)
+        start, end = scan_boundaries(clean, is_mdpi=is_mdpi)
     body_rows = [r for r in clean if r["element_type"] in BODY_TYPES]
     end = lookahead_end_scan(body_rows, start, end)
     return {
@@ -1439,10 +1431,10 @@ def extract_document(doc_id: str, spans: Iterable[dict],
 def extract_docs_frame(pdf: pd.DataFrame, cleaning_method: str = "hybrid") -> pd.DataFrame:
     """Extract every document in a nested (doc_id, spans) pandas frame.
 
-    The single-process local oracle for differential tests: the Spark
-    ``mapInPandas`` stage runs the same :func:`extract_document` per doc
-    (or :func:`spans_to_regions` per chunk, then
-    :func:`extract_from_records`, for an oversized doc).
+    The single-process local oracle for differential tests, running the
+    per-document reference :func:`extract_document`; the Spark stage runs
+    :func:`extract_batch`, which tests/test_batch_kernel.py pins equal to
+    it.
     """
     results = [
         extract_document(row.doc_id, row.spans if row.spans is not None else [],
@@ -1506,3 +1498,678 @@ def extract_dual_frame(pdf: pd.DataFrame,
     if not results:
         return pd.DataFrame(columns=DUAL_RESULT_COLUMNS)
     return pd.DataFrame(results, columns=DUAL_RESULT_COLUMNS)
+
+
+
+# ---------------------------------------------------------------------------
+# Batch kernel: each stage runs once per Arrow batch over one region table
+# ---------------------------------------------------------------------------
+# extract_batch returns, for a whole Arrow batch, what extract_document
+# returns per doc, with the loop turned inside out: each stage runs once over
+# one table of numpy columns holding every region of the batch, keyed by the
+# doc's ROW POSITION in the batch (a repeated doc_id stays two docs).
+# Reading order is one lexsort; per-doc scores are argmins over a sort; text
+# predicates are single passes over the column sharing one lowered copy per
+# region, and a literal that every match of a pattern needs is looked up
+# once in the whole batch's text before the pattern runs on the rows that
+# hold it.  Python loops over documents remain only where the rule is really
+# per doc, and they index the precomputed columns: the column k-means
+# fallback, the banded abstract, the lookahead scan, the main-text join and
+# sentence dedupe, and the author list.  The per-document functions above
+# stay the reference (extract_docs_frame, the span differentials and the
+# per-stage trace run them).
+#
+# One difference from the reference, on input no layout produces: a region
+# header field outside +-2**62 makes the region a parse failure here (the
+# reference keeps Python ints); the bound keeps x + w inside int64.
+
+# the flat crossing's span columns, in and out: kind, text, media_ref and
+# offset (in) or order (out), one array per document
+FLAT_SPAN_COLUMNS = ["_kinds", "_texts", "_refs", "_orders"]
+EXTRACT_FLAT_COLUMNS = (
+    [c for c in EXTRACT_RESULT_COLUMNS if c != "spans"] + FLAT_SPAN_COLUMNS)
+_GEOMETRY_LIMIT = 1 << 62
+
+# Literal gates for the page-1 blob patterns the reference runs ungated:
+# every alternative of each pattern contains one of its gate strings, so a
+# blob holding none of them cannot match
+# (tests/test_batch_kernel.py::test_blob_gates_are_necessary).
+_FMT_ALLTEXT_GATES = ("article", "keywords")
+_BAND_FLAG_GATES = {
+    "nature": ("nanotechnology", "communications"),
+    "jac": ("antimicrobial",),
+    "jsm": ("jsm nanotechnology", "scimed"),
+    "elsevier": ("elsevier", "sciencedirect", "biotechnology"),
+}
+
+
+def _concat(col, dtype) -> np.ndarray:
+    parts = [np.asarray(v, dtype=dtype) for v in col if v is not None]
+    return np.concatenate(parts) if parts else np.empty(0, dtype)
+
+
+def _flags(values) -> np.ndarray:
+    return np.array(values, dtype=bool).reshape(-1)
+
+
+def _objects(values) -> np.ndarray:
+    out = np.empty(len(values), object)
+    out[:] = values
+    return out
+
+
+def _first_per_doc(doc: np.ndarray, idx: np.ndarray, n_docs: int) -> np.ndarray:
+    """Per doc, the first of the rows ``idx`` that belongs to it; -1 for a
+    doc with none.  ``doc[idx]`` must be sorted."""
+    out = np.full(n_docs, -1, np.int64)
+    d = doc[idx]
+    first = np.ones(len(d), bool)
+    first[1:] = d[1:] != d[:-1]
+    out[d[first]] = idx[first]
+    return out
+
+
+def _argmin_per_doc(doc, idx, keys, n_docs) -> np.ndarray:
+    """Per doc, the row of ``idx`` with the smallest ``keys`` tuple (most
+    significant first); -1 for a doc with none."""
+    if len(idx):
+        idx = idx[np.lexsort([k[idx] for k in reversed(keys)] + [doc[idx]])]
+    return _first_per_doc(doc, idx, n_docs)
+
+
+def _pick(values: np.ndarray, idx: np.ndarray, default) -> np.ndarray:
+    """``values[idx]`` per doc, ``default`` where ``idx`` is -1."""
+    if not len(values):
+        return np.full(len(idx), default)
+    return np.where(idx >= 0, values[np.maximum(idx, 0)], default)
+
+
+def _doc_bounds(doc: np.ndarray, n_docs: int) -> np.ndarray:
+    """Rows sorted by doc: doc ``d`` holds rows ``[b[d], b[d + 1])``."""
+    return np.searchsorted(doc, np.arange(n_docs + 1))
+
+
+def _rank_in_doc(doc: np.ndarray, n_docs: int) -> np.ndarray:
+    """0-based position of each row within its doc (rows sorted by doc)."""
+    return np.arange(len(doc)) - _doc_bounds(doc, n_docs)[doc]
+
+
+def _arrow_strings(values: list[str]) -> pa.Array:
+    """The strings as one Arrow array for literal gates.  A string with a
+    lone surrogate (no UTF-8 form) makes them go in as surrogatepass bytes,
+    where a UTF-8 literal is found exactly where it is found in the str."""
+    try:
+        return pa.array(values, pa.string())
+    except UnicodeEncodeError:
+        return pa.array([v.encode("utf-8", "surrogatepass") for v in values],
+                        pa.binary())
+
+
+def _contains_any(arr: pa.Array, tokens) -> np.ndarray:
+    """Which strings hold one of the literal ``tokens`` as a substring: one
+    RE2 pass over the batch, of an alternation of the escaped literals."""
+    pattern = "|".join(re.sub(r"([\\.^$|?*+()\[\]{}])", r"\\\1", t)
+                       for t in tokens)
+    return pc.match_substring_regex(arr, pattern).to_numpy(zero_copy_only=False)
+
+
+def _lens(texts: list) -> np.ndarray:
+    return np.fromiter(map(len, texts), np.int64, len(texts))
+
+
+# a payload whose five header fields are plain ASCII integers (up to 18
+# digits, so inside +-2**62): int() reads each such field as its digits, so
+# these payloads are found in one Arrow pass and split without a fallback
+_STRICT_HEADER = r"^(?:-?[0-9]{1,18},){5}[^|]*\|"
+
+
+def _parse_payloads(payloads: list[str]):
+    """parse_region_payload over many payloads, plus the +-_GEOMETRY_LIMIT
+    bound.  Returns (ok, geometry rows, element types, texts), with zeros
+    and None where a payload fails.  Strict payloads are read in one Arrow
+    pass; the others go through parse_region_payload itself."""
+    n = len(payloads)
+    ok = np.zeros(n, bool)
+    geo = np.zeros((n, 5), np.int64)
+    etype, body = np.full(n, None, object), np.full(n, None, object)
+    try:
+        ok = _flags(pc.match_substring_regex(pa.array(payloads, pa.string()),
+                                             _STRICT_HEADER))
+    except UnicodeEncodeError:  # a lone surrogate: all go the reference way
+        pass
+    si = np.flatnonzero(ok)
+    parts = [payloads[i].partition("|") for i in si.tolist()]
+    fields = [head.split(",", 5) for head, _, _ in parts]
+    geo[si] = np.array([f[:5] for f in fields], dtype=np.int64).reshape(-1, 5)
+    etype[si] = [f[5] for f in fields]
+    body[si] = [p[2] for p in parts]
+    rest = np.flatnonzero(~ok)
+    parsed = [parse_region_payload(payloads[i]) for i in rest.tolist()]
+    rest = rest[_flags([p is not None for p in parsed])]
+    parsed = [p for p in parsed if p is not None]
+    if parsed:
+        try:
+            g = np.array([p[:5] for p in parsed], dtype=np.int64)
+        except OverflowError:  # a field past int64: bound-test Python ints
+            g = np.array([p[:5] for p in parsed], dtype=object)
+        fits = _flags(((g < _GEOMETRY_LIMIT) & (g > -_GEOMETRY_LIMIT)).all(axis=1))
+        rest, parsed = rest[fits], [p for p, f in zip(parsed, fits.tolist()) if f]
+        geo[rest] = g[fits].astype(np.int64)
+        ok[rest] = True
+        etype[rest] = [p[5] for p in parsed]
+        body[rest] = [p[6] for p in parsed]
+    return ok, geo, etype, body
+
+
+def _batch_regions(pdf: pd.DataFrame) -> dict:
+    """spans_to_regions for the whole batch, as one table of columns.  A
+    NULL offset (None, or NaN once Arrow has made the int array float) is
+    the number of regions the doc's earlier spans produced, as the
+    reference numbers it over the assembled doc."""
+    n_docs = len(pdf)
+    lens = np.fromiter((0 if k is None else len(k) for k in pdf["_kinds"]),
+                       np.int64, n_docs)
+    kind = _concat(pdf["_kinds"], object)
+    raw = _concat(pdf["_texts"], object)
+    refs = _concat(pdf["_refs"], object)
+    offs = _concat(pdf["_orders"], np.float64)
+    n = len(kind)
+    span_doc = np.repeat(np.arange(n_docs), lens)
+    is_region, is_media, is_html = kind == "region", kind == "media", kind == "html"
+
+    texts = [s or "" for s in raw.tolist()]
+    text = _objects(texts)
+    page, x, y = np.ones(n, np.int64), np.zeros(n, np.int64), np.zeros(n, np.int64)
+    w, h = np.full(n, 1000, np.int64), np.full(n, 10, np.int64)
+    etype = np.full(n, "plain text", object)
+    ref = np.full(n, None, object)
+    failed = np.zeros(n, bool)
+    for col in (page, w, h):
+        col[is_media] = 0
+    etype[is_media], text[is_media], ref[is_media] = "media", "", refs[is_media]
+
+    ridx = np.flatnonzero(is_region)
+    ok, g, et, body = _parse_payloads([texts[i] for i in ridx.tolist()])
+    good, bad = ridx[ok], ridx[~ok]
+    for col in (page, x, w, h):
+        col[bad] = 0
+    etype[bad], text[bad], failed[bad] = "parse_failure", "", True
+    page[good], x[good], y[good], w[good], h[good] = g[ok].T
+    etype[good], text[good] = et[ok], body[ok]
+
+    hidx = np.flatnonzero(is_html)
+    blocks = [strip_html_blocks(raw[i]) for i in hidx.tolist()]
+    per_span = np.ones(n, np.int64)
+    per_span[hidx] = [len(b) for b in blocks]
+    before = np.concatenate(([0], np.cumsum(per_span)))  # regions before span
+    doc_base = before[np.cumsum(lens) - lens]  # regions before each doc
+    null = np.isnan(offs)
+    if null.any():
+        offs = np.where(null, before[:-1] - doc_base[span_doc], offs)
+    off = offs.astype(np.int64)
+    plain = ~(is_region | is_media)
+    y[plain] = off[plain] * 1000
+
+    rs = np.repeat(np.arange(n), per_span)  # span of each region
+    block = np.arange(len(rs)) - before[:-1][rs]  # html block index
+    reg = {"doc": span_doc[rs], "page": page[rs], "x": x[rs],
+           "y": y[rs] + 10 * block, "w": w[rs], "h": h[rs],
+           "etype": etype[rs], "text": text[rs], "ref": ref[rs],
+           "off": off[rs], "failed": failed[rs]}
+    hrows = np.flatnonzero(is_html[rs])
+    reg["etype"][hrows] = [e for b in blocks for e, _ in b]
+    reg["text"][hrows] = [s for b in blocks for _, s in b]
+    reg["pos"] = np.arange(len(rs)) - doc_base[reg["doc"]]
+    return reg
+
+
+def _reanchor_media(reg: dict, n_docs: int) -> np.ndarray:
+    """reanchor_media for every doc at once, as a forward fill: in (offset,
+    position) order a live media region takes (page, x, y) from the doc's
+    last earlier live region that is neither media nor a declared
+    parse_failure, else (1, 0, -1).  Returns which docs hold live media."""
+    doc, med, live = reg["doc"], reg["etype"] == "media", ~reg["failed"]
+    has_media = np.bincount(doc[live & med], minlength=n_docs) > 0
+    if not has_media.any():
+        return has_media
+    li = np.flatnonzero(live)
+    o = li[np.lexsort((reg["pos"][li], reg["off"][li], doc[li]))]
+    anchor = ~med[o] & (reg["etype"][o] != "parse_failure")
+    last = np.maximum.accumulate(np.where(anchor, np.arange(len(o)), -1))
+    first = np.searchsorted(doc[o], doc[o])
+    mk = np.flatnonzero(med[o])
+    src, found = o[last[mk]], last[mk] >= first[mk]
+    for col, default in (("page", 1), ("x", 0), ("y", -1)):
+        reg[col][o[mk]] = np.where(found, reg[col][src], default)
+    return has_media
+
+
+def _filter_regions(reg: dict) -> dict:
+    """filter_regions over the table: the kept regions, in input order."""
+    et = reg["etype"]
+    blank = _flags([not s or s.isspace() for s in reg["text"].tolist()])
+    keep = ~reg["failed"] & ((et == "media") | (
+        ((et == "plain text") | (et == "title") | (et == "abandon")) & ~blank
+        & ~((et == "abandon") & (reg["page"] > 1))))
+    idx = np.flatnonzero(keep)
+    return {k: v[idx] for k, v in reg.items()}
+
+
+def _column_boundaries(t: dict, has_media: np.ndarray) -> np.ndarray:
+    """detect_column_boundary for every (doc, page) of the kept regions at
+    once; returns each region's page boundary, NaN where there is none."""
+    doc, page, x, w, h = t["doc"], t["page"], t["x"], t["w"], t["h"]
+    go = np.lexsort((page, doc))
+    new = np.ones(len(doc), bool)
+    new[1:] = (doc[go][1:] != doc[go][:-1]) | (page[go][1:] != page[go][:-1])
+    gid = np.empty(len(doc), np.int64)
+    gid[go] = np.cumsum(new) - 1
+    n_groups = int(new.sum())
+    nm = t["etype"] != "media"
+    page_right = np.zeros(n_groups, np.int64)
+    np.maximum.at(page_right, gid[nm], (x + w)[nm])
+    ci = np.flatnonzero(nm & (_lens(t["text"].tolist()) > SUBSTANTIAL_MIN_CHARS)
+                        & (w.astype(np.float64) * h > SUBSTANTIAL_MIN_AREA))
+    skip = _flags([SUBSTANTIAL_SKIP_RE.search(s) is not None
+                   for s in t["text"][ci].tolist()])
+    si = ci[~skip]
+    # the page's regions in the reference's order: input order, or (offset,
+    # input order) in a doc with media; the k-means means depend on it
+    pre = np.where(has_media[doc[si]], t["off"][si], 0)
+    si = si[np.lexsort((t["pos"][si], pre, gid[si]))]
+    gs, centers = gid[si], x[si] + w[si] / 2.0
+    n_sub = np.bincount(gs, minlength=n_groups)
+    # sorted distinct rounded centers per group, and each group's first
+    # widest gap between neighbours
+    rounded = np.round(centers / 10.0) * 10.0 + 0.0
+    uo = np.lexsort((rounded, gs))
+    gu, xu = gs[uo], rounded[uo]
+    uniq = np.ones(len(uo), bool)
+    uniq[1:] = (gu[1:] != gu[:-1]) | (xu[1:] != xu[:-1])
+    gu, xu = gu[uniq], xu[uniq]
+    j = np.flatnonzero(gu[1:] == gu[:-1])  # gap xu[j] -> xu[j + 1]
+    gj = _argmin_per_doc(gu, j, (-np.diff(xu),), n_groups)
+    has_gap = gj >= 0
+    gmax, mid = np.zeros(n_groups), np.full(n_groups, np.nan)
+    gmax[has_gap] = xu[gj[has_gap] + 1] - xu[gj[has_gap]]
+    mid[has_gap] = (xu[gj[has_gap]] + xu[gj[has_gap] + 1]) / 2.0
+    eligible = ((n_sub >= COLUMN_MIN_SUBSTANTIAL) & (page_right > 0)
+                & (np.bincount(gu, minlength=n_groups) >= 2))
+    narrow = eligible & (gmax <= COLUMN_GAP_FRACTION * page_right)
+    left = np.bincount(gs, weights=centers < mid[gs], minlength=n_groups)
+    bound = np.full(n_groups, np.nan)
+    split = eligible & ~narrow & (left > 0) & (left < n_sub)
+    bound[split] = mid[split]
+    starts = _doc_bounds(gs, n_groups)
+    for gi in np.flatnonzero(narrow).tolist():
+        b = kmeans_1d_boundary(centers[starts[gi]:starts[gi + 1]].tolist(),
+                               int(page_right[gi]))
+        if b is not None:
+            bound[gi] = b
+    return bound[gid]
+
+
+def _gated_hits(blobs: list[str], rules) -> list[np.ndarray]:
+    """Per (pattern, gate strings) rule, which blobs the pattern matches;
+    it runs only on the blobs that hold one of its gate strings."""
+    arr = _arrow_strings(blobs)
+    out = []
+    for pat, gates in rules:
+        hit = np.zeros(len(blobs), bool)
+        for i in np.flatnonzero(_contains_any(arr, gates)).tolist():
+            hit[i] = pat.search(blobs[i]) is not None
+        out.append(hit)
+    return out
+
+
+def _title_points(t: str, tl: str, n: int, base: float) -> float:
+    """extract_title's score for a row whose layout score is ``base``."""
+    if TITLE_HEADER_WORD_RE.match(tl) or TITLE_URL_PREFIX_RE.match(t):
+        return 0.0
+    if base == 6.0 and not TITLE_CASE_SHAPE_RE.search(t):
+        return 0.0
+    if TITLE_META_WORD_RE.search(tl):
+        return base - 5.0
+    if TITLE_META_CHAR_RE.search(t):
+        return base - 3.0
+    if n < 20:
+        return base - 2.0
+    return base
+
+
+def _author_points(t: str, penalized: bool) -> float:
+    """extract_authors' score for one row, term by term in its order."""
+    return (
+        2.0 * len(NAME_RE.findall(t))
+        + 0.5 * t.count(",")
+        + (0.5 if _DIGIT_RE.search(t) else 0.0)
+        - (5.0 if penalized else 0.0)
+        - (5.0 if len(t) > 300 else 0.0)
+    )
+
+
+def _abstract_points(t: str, tl: str, n: int) -> int:
+    """extract_abstract's could_be_abstract score for one row (0: none)."""
+    if ABSTRACT_MARKER_RE.match(tl):
+        return 10
+    if n > 200 and ABSTRACT_CONTENT_RE.search(t):
+        return 8
+    dots = t.count(".") if n > 100 else 0
+    if n > 150 and dots >= 2:
+        return 6
+    if n > 100 and dots >= 1:
+        return 4
+    return 0
+
+
+def _end_primary(t: str, tl: str) -> bool:
+    """scan_boundaries' conservative end-score, bar the page test."""
+    return bool((END_HEADER_RE.match(t) or END_ACK_RE.match(t))
+                and len(t.strip()) < END_SHORT_CHARS
+                and not END_NOT_DOI_RE.search(tl))
+
+
+def _doc_formats(t: dict, lows: list[str], lows_arr: pa.Array, n_docs: int):
+    """detect_document_format and detect_band_format per doc, from page-1
+    blobs joined once per doc, and is_mdpi."""
+    doc, page, y, et = t["doc"], t["page"], t["y"], t["etype"]
+    p1 = np.flatnonzero((page <= 1) & (et != "media"))
+    pub = p1[(et[p1] == "abandon") | (et[p1] == "plain text")]
+    p1b, pubb = _doc_bounds(doc[p1], n_docs), _doc_bounds(doc[pub], n_docs)
+    p1_low = [lows[i] for i in p1.tolist()]
+    pub_low = [lows[i] for i in pub.tolist()]
+    # the layout hint reads the lowest y of a page-1 region under 600 with
+    # more than 30 characters
+    top = _argmin_per_doc(doc, p1[(y[p1] < 600) & (t["len"][p1] > 30)], (y,),
+                          n_docs)
+    blobs = [" ".join(p1_low[p1b[d]:p1b[d + 1]]) for d in range(n_docs)]
+    pubs = [" ".join(pub_low[pubb[d]:pubb[d + 1]]) for d in range(n_docs)]
+    # detect_document_format: rule points, layout hints, first max wins
+    scores = np.zeros((len(FORMAT_CLASS_ORDER), n_docs))
+    scores[FORMAT_CLASS_ORDER.index("generic_academic")] = 1.0
+    hits = _gated_hits(pubs, [(pat, gates) for _, _, pat, gates in _FMT_PUB_RULES])
+    for (cls, pts, _, _), hit in zip(_FMT_PUB_RULES, hits):
+        scores[FORMAT_CLASS_ORDER.index(cls)] += pts * hit
+    cls, pts, pat = _FMT_ALLTEXT_RULE
+    (hit,) = _gated_hits(blobs, [(pat, _FMT_ALLTEXT_GATES)])
+    scores[FORMAT_CLASS_ORDER.index(cls)] += pts * hit
+    title_y = _pick(y, top, 10**9)
+    scores[FORMAT_CLASS_ORDER.index("nature_communications")] += title_y < 300
+    scores[FORMAT_CLASS_ORDER.index("rsc")] += (title_y > 200) & (title_y < 400)
+    formats = [FORMAT_CLASS_ORDER[k] for k in np.argmax(scores, axis=0).tolist()]
+    # detect_band_format: the first flag pattern that matches
+    bands = [None] * n_docs
+    hits = _gated_hits(blobs, [(pat, _BAND_FLAG_GATES[name])
+                               for name, pat in BAND_FLAG_RES])
+    for (name, _), hit in reversed(list(zip(BAND_FLAG_RES, hits))):
+        for d in np.flatnonzero(hit).tolist():
+            bands[d] = name
+    is_mdpi = (np.array(formats, dtype=object) == "mdpi") | (np.bincount(
+        doc[_contains_any(lows_arr, ("mdpi",))], minlength=n_docs) > 0)
+    return formats, bands, is_mdpi
+
+
+def _abstract_band(t: dict, bands: list) -> np.ndarray:
+    """assign_bands, for the one band read downstream: which regions fall
+    in their doc's abstract band."""
+    fmt = np.array(bands, dtype=object)[t["doc"]]
+    xc = t["x"] + t["w"] / 2.0
+    y = t["y"]
+    out = np.zeros(len(y), bool)
+    for name, spec in BAND_SPECS.items():
+        free = (fmt == name) & (t["page"] <= 1)
+        for band, x_lo, x_hi, y_lo, y_hi in spec:
+            hit = free.copy()
+            if x_lo is not None:
+                hit &= xc >= x_lo
+            if x_hi is not None:
+                hit &= xc < x_hi
+            if y_lo is not None:
+                hit &= y >= y_lo
+            if y_hi is not None:
+                hit &= y < y_hi
+            if band == "abstract":
+                out |= hit
+            free &= ~hit
+    return out
+
+
+def _abstracts(t, texts, lows, c, crid, bands, n_docs) -> list[str]:
+    """extract_abstract_banded, then extract_abstract where it finds
+    nothing, over the clean rows ``c`` (row ids ``crid``)."""
+    doc, et, page, n = t["doc"], t["etype"], t["page"], t["len"]
+    cdoc, med = doc[c], et[c] == "media"
+    out = [""] * n_docs
+    found = np.zeros(n_docs, bool)
+    bc = c[_abstract_band(t, bands)[c] & ((et[c] == "plain text") | (et[c] == "title"))]
+    bcb = _doc_bounds(doc[bc], n_docs)
+    for d in np.flatnonzero(np.diff(bcb)).tolist():
+        rows = [{"band": "abstract", "element_type": et[i], "text": texts[i],
+                 "w": int(t["w"][i]), "h": int(t["h"][i]), "row_id": k}
+                for k, i in enumerate(bc[bcb[d]:bcb[d + 1]].tolist())]
+        text, k = extract_abstract_banded(rows, bands[d])
+        if k >= 0:
+            out[d], found[d] = text, True
+    ap = np.flatnonzero((page[c] == 1) & ~med & ~found[cdoc])
+    score = np.zeros(len(c))
+    score[ap] = [_abstract_points(texts[i], lows[i], n[i]) for i in c[ap].tolist()]
+    cn, cy, cx = n[c], t["y"][c], t["x"][c]
+    pick = _argmin_per_doc(cdoc, ap[score[ap] > 0], (-score, -cn, cy, cx, crid),
+                           n_docs)
+    # fallback: the largest page-1 block over 50 characters
+    fb = ap[(cn[ap] > 50) & (pick[cdoc[ap]] < 0)]
+    pick = np.where(pick >= 0, pick,
+                    _argmin_per_doc(cdoc, fb, (-cn, cy, cx, crid), n_docs))
+    for d in np.flatnonzero(pick >= 0).tolist():
+        s = ABSTRACT_STRIP_RE.sub("", texts[c[pick[d]]], count=1)
+        out[d] = _WS_RE.sub(" ", s).strip()
+    return out
+
+
+def _boundaries(t, texts, lows, lows_arr, b, brid, elsevier, is_mdpi, n_docs):
+    """scan_boundaries (or scan_boundaries_elsevier) then
+    lookahead_end_scan, over the clean body rows ``b`` (row ids
+    ``brid``).  Returns (start, end) per doc."""
+    bdoc, page = t["doc"][b], t["page"][b]
+    bt = [texts[i] for i in b.tolist()]
+    bl = [lows[i] for i in b.tolist()]
+    bn = t["len"][b]
+    n_body = np.bincount(bdoc, minlength=n_docs)
+    bb = _doc_bounds(bdoc, n_docs)
+    has_body = n_body > 0
+
+    def nth(k):  # the doc's min(k, n)-th body row
+        return np.where(has_body, bb[:-1] + np.minimum(k, n_body) - 1, -1)
+
+    els = elsevier[bdoc]
+    ei = np.flatnonzero(els)
+    # start: the best intro score >= 3, else the min(15, n)-th body row.
+    # The score term by term; each anchored pattern runs on the rows that
+    # can match it.
+    intro = (5 * _contains_any(lows_arr, (INTRO_GENERAL_TOKEN,))[b] + (bn > 100)
+             + _flags([INTRO_STARTS_PROPERLY_RE.match(s) is not None for s in bt]))
+    num = np.flatnonzero(_flags([s.startswith("1.") for s in bt]))
+    intro[num] += 3 * _flags([INTRO_NUMBERED_RE.match(bt[i]) is not None
+                              for i in num.tolist()])
+    mi = np.flatnonzero(is_mdpi[bdoc])
+    intro[mi] += 10 * _flags([INTRO_MDPI_RE.match(bt[i]) is not None
+                              for i in mi.tolist()])
+    best = _argmin_per_doc(
+        bdoc, np.flatnonzero((intro >= INTRO_SCORE_THRESHOLD) & ~els),
+        (-intro, brid), n_docs)
+    start = _pick(brid, np.where(best >= 0, best, nth(INTRO_FALLBACK_ROWS)), 0)
+    # Elsevier start: the first anchored Introduction outside the article-
+    # info box, else the 3rd substantial page-1 row, else the 10th body row
+    info = np.zeros(len(b), bool)
+    info[ei] = [ELSEVIER_INFO_RE.search(bl[i]) is not None for i in ei.tolist()]
+    e_intro = np.zeros(len(b), bool)
+    e_intro[ei] = [ELSEVIER_INTRO_RE.match(bt[i]) is not None for i in ei.tolist()]
+    first = _first_per_doc(bdoc, np.flatnonzero(e_intro & ~info), n_docs)
+    sub = np.flatnonzero(els & (page <= 1) & (bn > 100) & ~info)
+    third = _first_per_doc(bdoc, sub[_rank_in_doc(bdoc[sub], n_docs) == 2], n_docs)
+    e_start = np.where(first >= 0, first, np.where(third >= 0, third, nth(10)))
+    start = np.where(elsevier, _pick(brid, e_start, 0), start)
+
+    # end: the conservative end-score, else the first end-matter heading
+    # (Elsevier: its own end markers), after start; else one past the last
+    after = brid > start[bdoc]
+    late = np.flatnonzero(~els & (page >= END_LATE_PAGE) & after)
+    primary = late[_flags([_end_primary(bt[i], bl[i]) for i in late.tolist()])]
+    end_re = np.zeros(len(b), bool)  # read after start only
+    ai = np.flatnonzero(after)
+    end_re[ai] = [END_RE.match(bt[i]) is not None for i in ai.tolist()]
+    e_end = np.zeros(len(b), bool)
+    e_end[ei] = [ELSEVIER_END_RE.match(bt[i]) is not None for i in ei.tolist()]
+    end_at = _first_per_doc(bdoc, primary, n_docs)
+    for rows in (np.flatnonzero(~els & end_re & after),
+                 np.flatnonzero(els & e_end & after)):
+        end_at = np.where(end_at >= 0, end_at, _first_per_doc(bdoc, rows, n_docs))
+    end = np.where(end_at >= 0, _pick(brid, end_at, 0),
+                   _pick(brid, np.where(has_body, bb[1:] - 1, -1), -1) + 1)
+
+    # lookahead: a truncation marker with end matter in the next
+    # LOOKAHEAD_WINDOW in-range rows ends the body after the marker; the
+    # pattern runs where the lowered row holds "clinical trial" or is not
+    # ASCII (lookahead_end_scan's gate)
+    in_range = (brid >= start[bdoc]) & (brid < end[bdoc])
+    ir = np.flatnonzero(in_range & (
+        _contains_any(lows_arr, ("clinical trial",))[b]
+        | ~_flags([s.isascii() for s in bl])))
+    trunc = np.zeros(len(b), bool)
+    trunc[ir] = [TRUNCATE_AFTER_RE.search(bt[i]) is not None for i in ir.tolist()]
+    for d in np.unique(bdoc[trunc]).tolist():
+        rows = np.flatnonzero(in_range[bb[d]:bb[d + 1]]) + bb[d]
+        for k, i in enumerate(rows.tolist()):
+            if trunc[i] and end_re[rows[k + 1:k + 1 + LOOKAHEAD_WINDOW]].any():
+                end[d] = brid[i] + 1
+                break
+    return start, end
+
+
+def _main_texts(t, texts, b, brid, start, end, elsevier, is_mdpi, n_docs,
+                cleaning_method) -> list[str]:
+    """The body slice [start, end) joined per doc, less Elsevier
+    article-info leaks and the MDPI x-zone, deduped and cleaned."""
+    bdoc = t["doc"][b]
+    main = np.flatnonzero((brid >= start[bdoc]) & (brid < end[bdoc]))
+    em = main[elsevier[bdoc[main]]]
+    leak = np.zeros(len(b), bool)
+    leak[em] = [ELSEVIER_LEAK_RE.match(texts[i]) is not None
+                for i in b[em].tolist()]
+    main = b[main[~leak[main]]]
+    mb = _doc_bounds(t["doc"][main], n_docs)
+    x, n = t["x"], t["len"]
+    out = []
+    for d in range(n_docs):
+        rows = main[mb[d]:mb[d + 1]].tolist()
+        if is_mdpi[d]:  # mdpi_xzone_filter, on Python ints
+            longs = [int(x[i]) for i in rows if n[i] > MDPI_XZONE_MIN_CHARS]
+            if longs:
+                x_min = sum(longs) / len(longs)
+                rows = [i for i in rows if int(x[i]) >= x_min - MDPI_XZONE_SLACK]
+        out.append(clean_text(dedupe_sentences(" ".join(texts[i] for i in rows)),
+                              cleaning_method))
+    return out
+
+
+def extract_batch(pdf: pd.DataFrame, cleaning_method: str = "hybrid") -> pd.DataFrame:
+    """Extract every document of one flat Arrow batch.
+
+    ``pdf`` has ``doc_id`` and the :data:`FLAT_SPAN_COLUMNS` (one array per
+    doc, or None for a NULL spans array).  The result has one row per input
+    row, in order, with the :data:`EXTRACT_FLAT_COLUMNS`: row ``i`` is
+    ``extract_document(doc_id[i], spans[i], cleaning_method)`` with its
+    spans split into the four flat arrays.
+    """
+    n_docs = len(pdf)
+    reg = _batch_regions(pdf)
+    parse_failures = np.bincount(reg["doc"], weights=reg["failed"],
+                                 minlength=n_docs).astype(np.int64)
+    has_media = _reanchor_media(reg, n_docs)
+    t = _filter_regions(reg)
+
+    # reading_order: a column per (doc, page), then one sort for the batch
+    bound = _column_boundaries(t, has_media)
+    col = np.where(np.isnan(bound) | (t["x"] + t["w"] / 2.0 < bound), 1, 2)
+    o = np.lexsort((t["pos"], t["off"], t["x"], t["y"], col, t["page"], t["doc"]))
+    t = {k: v[o] for k, v in t.items()}
+    doc, page, et = t["doc"], t["page"], t["etype"]
+    texts = t["text"].tolist()
+    lows = [s.lower() for s in texts]  # the one lowered copy per region
+    t["len"] = _lens(texts)
+    rid = _rank_in_doc(doc, n_docs)
+    med = et == "media"
+    body = (et == "plain text") | (et == "title")
+    n_text_regions = np.bincount(doc[body], minlength=n_docs)
+    total_pages = _pick(page, _argmin_per_doc(doc, np.flatnonzero(~med),
+                                              (-page,), n_docs), 0)
+
+    lows_arr = _arrow_strings(lows)
+    formats, bands, is_mdpi = _doc_formats(t, lows, lows_arr, n_docs)
+
+    # extract_title: layout score first, the pattern gates on its candidates
+    n, y = t["len"], t["y"]
+    base = np.where((et == "title") & (n > 30), 10.0,
+                    np.where((y < 400) & (n > 40) & (n < 300), 8.0,
+                             np.where((y < 600) & (n > 30), 6.0, 0.0)))
+    ci = np.flatnonzero((page == 1) & body & (base > 0))
+    score = np.zeros(len(doc))
+    score[ci] = [_title_points(texts[i], lows[i], n[i], base[i])
+                 for i in ci.tolist()]
+    title_at = _argmin_per_doc(doc, ci[score[ci] > 3.0], (-score, y, rid), n_docs)
+    title_rid = _pick(rid, title_at, -1)
+
+    # extract_authors: page-1 rows after the title
+    ai = np.flatnonzero((page <= 1) & ~med & (rid > title_rid[doc]))
+    score = np.zeros(len(doc))
+    penalized = _contains_any(lows_arr, ("abstract", "introduction", "keywords",
+                                         "received")).tolist()
+    score[ai] = [_author_points(texts[i], penalized[i]) for i in ai.tolist()]
+    author_at = _argmin_per_doc(doc, ai[score[ai] >= 2.0], (-score, y, rid),
+                                n_docs)
+
+    # strip_boilerplate: the pattern runs on rows holding a gate token
+    gi = np.flatnonzero(_contains_any(lows_arr, _BOILER_TOKENS) & ~med)
+    boiler = np.zeros(len(doc), bool)
+    boiler[gi] = [BOILERPLATE_RE.search(texts[i]) is not None for i in gi.tolist()]
+    c = np.flatnonzero(~boiler)
+    crid = _rank_in_doc(doc[c], n_docs)
+
+    abstract = _abstracts(t, texts, lows, c, crid, bands, n_docs)
+    b, brid = c[body[c]], crid[body[c]]
+    elsevier = np.array([f == "elsevier" for f in bands], dtype=bool)
+    start, end = _boundaries(t, texts, lows, lows_arr, b, brid, elsevier,
+                             is_mdpi, n_docs)
+    main_text = _main_texts(t, texts, b, brid, start, end, elsevier, is_mdpi,
+                            n_docs, cleaning_method)
+
+    # span emission: every clean media or body row, in reading order
+    e = c[med[c] | body[c]]
+    emed = med[e]
+    kinds = _objects(np.where(emed, "media", np.where(
+        et[e] == "title", "title", "text")).tolist())
+    out_text = _objects([
+        "" if m else clean_text(texts[i], cleaning_method)
+        for i, m in zip(e.tolist(), emed.tolist())])
+    refs = np.where(emed, t["ref"][e], None)
+    orders = _rank_in_doc(doc[e], n_docs).astype(np.int32)
+    eb = _doc_bounds(doc[e], n_docs)
+
+    out = pd.DataFrame({
+        "doc_id": pdf["doc_id"].to_numpy(),
+        "title": [clean_text(_WS_RE.sub(" ", texts[i]).strip(), cleaning_method)
+                  if i >= 0 else "" for i in title_at.tolist()],
+        "authors": [clean_author_list(clean_text(texts[i], cleaning_method))
+                    if i >= 0 else "" for i in author_at.tolist()],
+        "abstract": [clean_text(a, cleaning_method) for a in abstract],
+        "main_text": main_text,
+        "boundary_start": start,
+        "boundary_end": end,
+        "document_format": formats,
+        "total_pages": total_pages,
+        "total_text_regions": n_text_regions,
+        "parse_failures": parse_failures,
+    })
+    for name, col in zip(FLAT_SPAN_COLUMNS, (kinds, out_text, refs, orders)):
+        out[name] = [col[eb[d]:eb[d + 1]] for d in range(n_docs)]
+    return out

@@ -12,10 +12,9 @@ Design (SURVEY.md §3.4 / §4 custom items):
   stage: a running character budget gives each doc's chunk boundaries, a
   small int array is exploded to one row per chunk, and each chunk's spans
   are sliced in a codegen'd projection.  The same Python batch function
-  parses each chunk to regions (the expensive stage — in production this is
-  where PDF bytes are rasterized/OCR'd) and runs the cheap doc-global
-  layout/boundary logic once the doc's last chunk arrives, so a multi-MB
-  doc never crosses as one Arrow row.  The reference OOMs silently on big
+  collects each chunk's span arrays and extracts the doc with the batch
+  that brings its last chunk, so a multi-MB doc never crosses as one Arrow
+  row.  The reference OOMs silently on big
   docs (eager per-page loop, Document_Processor_DocLayout_YOLO_Code_v10.R:
   32-191); the north rule makes sub-batching mandatory.
 * **Python over the scan once.** Extraction is one ``mapInPandas`` with no
@@ -44,6 +43,7 @@ import time
 import uuid
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -136,11 +136,14 @@ def estimate_scan_partitions(docs: DataFrame) -> int:
 # with zero Python object construction; projecting the same spans as four
 # parallel primitive arrays cut the identity pass ~15%).  So every
 # extraction-family stage crosses flat: spans.kind/.text/.media_ref/.offset
-# out to Python (a free JVM field extraction), dict records rebuilt per
-# batch (cheap — measured inside the same probe), and, for extract,
-# result spans returned as four arrays re-zipped to the public
-# struct schema JVM-side (dual, debug and layout return scalar rows).  The kernel
-# and the public EXTRACTED_WITH_PART schema are untouched.
+# out to Python (a free JVM field extraction) and, for extract, result
+# spans returned as four arrays re-zipped to the public struct schema
+# JVM-side (dual, debug and layout return scalar rows).  Extract hands each
+# batch's flat arrays straight to extract_core.extract_batch, which reads
+# them as one region table (no per-doc records); dual, debug and layout
+# rebuild the per-doc span dicts their per-doc kernels take.  A NULL offset
+# crosses as NaN in a float64 array.  The public EXTRACTED_WITH_PART schema
+# is untouched.
 #
 # The JVM expressions below are SQL strings (F.expr / selectExpr), not
 # Python-API lambdas: a lambda in a higher-order function costs py4j round
@@ -214,10 +217,12 @@ def _chunk_rows(docs: DataFrame, chunk_if: str, chunk_spans: int,
 def _records_from_flat(pdf: pd.DataFrame) -> list[list[dict]]:
     """Rebuild the kernel's span-record dicts from the four parallel input
     arrays.  NULL spans arrays (doc with spans=NULL) come through as None
-    in every column -> empty record list."""
+    in every column -> empty record list; a NULL offset comes through as
+    NaN (``o != o``) and goes back to None."""
     return [
         [
-            {"kind": k, "text": t, "media_ref": m, "offset": o}
+            {"kind": k, "text": t, "media_ref": m,
+             "offset": None if o != o else o}
             for k, t, m, o in zip(ks, ts, ms, os_)
         ]
         if ks is not None else []
@@ -226,48 +231,54 @@ def _records_from_flat(pdf: pd.DataFrame) -> list[list[dict]]:
     ]
 
 
-def _flat_out(results: list[dict], part_keys: list[int]) -> pd.DataFrame:
-    out = pd.DataFrame(results, columns=ec.EXTRACT_RESULT_COLUMNS)
-    spans = out.pop("spans")
-    out["part_key"] = part_keys
-    out["_kinds"] = spans.map(lambda sp: [s["kind"] for s in sp])
-    out["_texts"] = spans.map(lambda sp: [s["text"] for s in sp])
-    out["_refs"] = spans.map(lambda sp: [s["media_ref"] for s in sp])
-    out["_orders"] = spans.map(lambda sp: [s["order"] for s in sp])
-    return out[_FLAT_OUT_NAMES]
-
-
 def _extract_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """An unchunked doc is extracted from its row.  A chunked doc's chunk
-    rows arrive in order; each chunk's regions append to the open doc, and
-    the doc is extracted at its last chunk (media re-anchoring and every
-    doc-global step run on the assembled regions).  The open doc carries
-    across Arrow batches; a row out of that sequence raises rather than
-    emitting a partial doc."""
-    open_id, next_chunk, regions = None, 0, []
+    """Run :func:`.extract_core.extract_batch` once per non-empty Arrow
+    batch.  An unchunked doc goes in as its row.  A chunked doc's chunk rows
+    arrive in order; their span arrays append to the open doc, which goes in
+    with the batch that brings its last chunk, so media re-anchoring, NULL
+    offset numbering and every doc-global step see the assembled doc.  The
+    open doc carries across Arrow batches; a row out of that sequence raises
+    rather than emitting a partial doc."""
+    open_id, next_chunk, parts = None, 0, []
     for pdf in batches:
-        results, part_keys = [], []
-        for doc_id, part_key, chunk, n, spans in zip(
-                pdf["doc_id"], pdf["part_key"], pdf["_chunk"], pdf["_n"],
-                _records_from_flat(pdf)):
-            if max(chunk, 0) != next_chunk or (chunk > 0 and doc_id != open_id):
-                raise ValueError(
-                    f"chunk {chunk} of doc {doc_id!r} out of sequence "
-                    f"(open doc {open_id!r} expects chunk {next_chunk})")
-            if chunk < 0:
-                results.append(ec.extract_document(doc_id, spans))
-                part_keys.append(part_key)
-                continue
-            open_id, next_chunk = doc_id, chunk + 1
-            regions.extend(ec.spans_to_regions(spans))
-            if next_chunk == n:
-                results.append(ec.extract_from_records(doc_id, regions))
-                part_keys.append(part_key)
-                open_id, next_chunk, regions = None, 0, []
-        if results:
-            yield _flat_out(results, part_keys)
+        if pdf.empty:
+            continue
+        chunks = pdf["_chunk"].to_numpy()
+        if open_id is None and (chunks < 0).all():
+            docs = pdf
+        else:
+            rows = []
+            for i, (doc_id, chunk, n) in enumerate(zip(
+                    pdf["doc_id"], chunks, pdf["_n"])):
+                if max(chunk, 0) != next_chunk or (chunk > 0 and doc_id != open_id):
+                    raise ValueError(
+                        f"chunk {chunk} of doc {doc_id!r} out of sequence "
+                        f"(open doc {open_id!r} expects chunk {next_chunk})")
+                if chunk < 0:
+                    rows.append(pdf.iloc[i])
+                    continue
+                open_id, next_chunk = doc_id, chunk + 1
+                parts.append(pdf.iloc[i])
+                if next_chunk == n:
+                    rows.append(_assemble(parts))
+                    open_id, next_chunk, parts = None, 0, []
+            docs = pd.DataFrame(rows, columns=pdf.columns)
+        out = ec.extract_batch(docs)
+        if len(out):
+            out["part_key"] = docs["part_key"].to_numpy()
+            yield out[_FLAT_OUT_NAMES]
     if open_id is not None:
         raise ValueError(f"doc {open_id!r} ended before its last chunk")
+
+
+def _assemble(parts: list[pd.Series]) -> pd.Series:
+    """One doc's chunk rows -> a row holding its whole span arrays."""
+    row = parts[0].copy()
+    for col in ec.FLAT_SPAN_COLUMNS:
+        dtype = np.float64 if col == "_orders" else object
+        arrays = [np.asarray(p[col], dtype) for p in parts if p[col] is not None]
+        row[col] = np.concatenate(arrays) if arrays else None
+    return row
 
 
 def _extract(docs: DataFrame, chunk_if: str,
@@ -301,9 +312,9 @@ def extract_chunked(docs: DataFrame, chunk_spans: int = DEFAULT_CHUNK_SPANS,
     count — a multi-MB doc made of a few hundred huge spans must still
     split into many parse units (north_star: "multi-MB spans split into
     sub-batches before the Arrow UDF"); ``chunk_spans`` remains a secondary
-    cap for many-tiny-span docs.  Each chunk is parsed to regions in its
-    own call, and the doc is assembled in the same task once its last chunk
-    arrives, so no chunk or region row crosses an exchange.
+    cap for many-tiny-span docs.  The chunks' span arrays are assembled in
+    the same task and the doc is extracted with the batch that brings its
+    last chunk, so no chunk row crosses an exchange.
     """
     return _extract(docs, "true", chunk_spans, chunk_chars)
 

@@ -572,7 +572,7 @@ class TestAbstractScorerWeights:
         r"""v10.R:1331: the winning abstract gets \s+ collapsed."""
         body = "Abstract  sentence one.\nIt   continues. " + "word " * 40
         rows = [_trow(0, body, y=100)]
-        text, _ = ec.extract_abstract(rows, -1)
+        text, _ = ec.extract_abstract(rows)
         assert "  " not in text and "\n" not in text
 
     def test_equal_score_len_tie_breaks_on_y_x_not_row_id(self):
@@ -585,7 +585,7 @@ class TestAbstractScorerWeights:
             _trow(0, a, y=500),               # reading order first...
             _trow(1, b, y=200),               # ...but visually higher
         ]
-        text, rid = ec.extract_abstract(rows, -1)
+        text, rid = ec.extract_abstract(rows)
         assert (text, rid) == (b, 1)
 
     def test_marker_branch_beats_longer_prose(self):
@@ -594,14 +594,14 @@ class TestAbstractScorerWeights:
             _trow(0, long_prose, y=100),
             _trow(1, "Abstract short but marked body here", y=200),
         ]
-        text, rid = ec.extract_abstract(rows, -1)
+        text, rid = ec.extract_abstract(rows)
         assert rid == 1
         assert text == "short but marked body here"  # header stripped
 
     def test_summary_marker_and_uppercase_strip(self):
         rows = [_trow(0, "SUMMARY: The finding sentence here padded " +
                       "y" * 80, y=100)]
-        text, rid = ec.extract_abstract(rows, -1)
+        text, rid = ec.extract_abstract(rows)
         assert rid == 0
         assert text.startswith("The finding sentence here")
 
@@ -609,17 +609,17 @@ class TestAbstractScorerWeights:
         dots = ("A sentence. " * 16).strip()          # >150 chars, many dots
         content = "antibacterial " * 16 + "no dots here"   # >200, 8-branch
         rows = [_trow(0, dots, y=100), _trow(1, content, y=200)]
-        assert ec.extract_abstract(rows, -1)[1] == 1
+        assert ec.extract_abstract(rows)[1] == 1
 
     def test_dot_branches_and_length_tiebreak(self):
         six = ("Sent one. Sent two. " * 9).strip()     # >150, >=2 dots -> 6
         four = "One dot only " + "z" * 100 + "."       # >100, 1 dot -> 4
         rows = [_trow(0, four, y=100), _trow(1, six, y=200)]
-        assert ec.extract_abstract(rows, -1)[1] == 1
+        assert ec.extract_abstract(rows)[1] == 1
         # same score -> longer wins
         six_b = ("Sent uno. Sent dos. " * 12).strip()
         rows = [_trow(0, six, y=100), _trow(1, six_b, y=200)]
-        assert ec.extract_abstract(rows, -1)[1] == 1
+        assert ec.extract_abstract(rows)[1] == 1
 
     def test_fallback_largest_block_over_50(self):
         rows = [
@@ -627,8 +627,8 @@ class TestAbstractScorerWeights:
             _trow(1, "a" * 60, y=200),
             _trow(2, "b" * 80, y=300),
         ]
-        assert ec.extract_abstract(rows, -1) == ("b" * 80, 2)
+        assert ec.extract_abstract(rows) == ("b" * 80, 2)
 
     def test_nothing_qualifies(self):
         rows = [_trow(0, "tiny", y=100)]
-        assert ec.extract_abstract(rows, -1) == ("", -1)
+        assert ec.extract_abstract(rows) == ("", -1)

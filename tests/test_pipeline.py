@@ -167,6 +167,52 @@ class TestChunkedPath:
         assert list(out["_texts"].iloc[0]) == [s["text"] for s in want["spans"]]
         assert out["main_text"].iloc[0] == want["main_text"]
 
+    def test_null_offsets_number_across_chunks(self):
+        """A NULL offset is the region's position in the assembled doc, not
+        in its chunk, so chunking keeps the media after the third block."""
+        spans = _null_offset_spans()
+        chunks = [spans[i:i + 3] for i in range(0, len(spans), 3)]
+        batches = [_chunk_batch("a", c, len(chunks), sp)
+                   for c, sp in enumerate(chunks)]
+        (out,) = pl._extract_batches_flat(iter(batches))
+        want = ec.extract_document("a", spans)["spans"]
+        assert [s["media_ref"] for s in want].index("m://1") == 3
+        assert list(out["_refs"].iloc[0]) == [s["media_ref"] for s in want]
+        assert list(out["_texts"].iloc[0]) == [s["text"] for s in want]
+
+    def test_null_offsets_match_oracle(self, spark):
+        """NULL offsets cross the Arrow boundary as NaN in a float array;
+        the direct and chunked routes number them as the oracle does."""
+        doc = {"doc_id": "nulls", "spans": _null_offset_spans()}
+        for oversize_chars in (10**12, 0):
+            got = pl.extract_docs(_docs_df(spark, [doc]), num_parts=2,
+                                  oversize_chars=oversize_chars, chunk_spans=3)
+            assert _spans_key([r.asDict(recursive=True) for r in got.collect()]) \
+                == _oracle([doc]), oversize_chars
+
+    def test_null_offsets_in_dual_debug_and_layout(self, spark):
+        """The per-doc stages read a NULL offset that crossed as NaN as the
+        reference reads None."""
+        doc = {"doc_id": "nulls", "spans": _null_offset_spans()}
+        df = _docs_df(spark, [doc])
+        recs = ec.spans_to_regions(doc["spans"])
+        assert [r.offset for r in pl.extract_layout(df).collect()] == \
+            [r["offset"] for r in recs]
+        (dual,) = pl.extract_docs_dual(df).collect()
+        assert dual.n_spans_smart == len(ec.extract_document("nulls", doc["spans"])["spans"])
+        assert len(pl.debug_boundaries(df).collect()) == \
+            len(ec.boundary_debug_records("nulls", recs))
+
+
+def _null_offset_spans():
+    """Six region blocks in reading order and a media span after the third,
+    every offset NULL."""
+    spans = [dict(fx.region(1, 100, 100 * (i + 1), 900, 40, "plain text",
+                            f"Block {i} " + "word " * 8, 0), offset=None)
+             for i in range(6)]
+    spans.insert(3, fx.span("media", "", "m://1", None))
+    return spans
+
 
 def _chunk_batch(doc_id, chunk, n, spans=()):
     """One Arrow batch of the flat crossing with a single chunk row."""

@@ -8,7 +8,7 @@ idempotent, sentence-dedup is idempotent, media refs survive.
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pdf_extraction_tests_spark import extract_core as ec
 
@@ -193,33 +193,45 @@ def scorer_rows(draw):
     return rows
 
 
+def _scorer_row(text, element_type, y=0):
+    return {"page": 1, "x": 100, "w": 1000, "h": 50, "y": y, "text": text,
+            "element_type": element_type, "row_id": 0, "offset": 0,
+            "parse_failure": 0, "media_ref": None}
+
+
 @settings(max_examples=60, deadline=None)
 @given(scorer_rows())
+@example([_scorer_row("0" * 30 + "\xa0", "title")])
 def test_title_scorer_total_and_sound(rows):
     """Never crashes on arbitrary text; any pick is a page-1 non-media row's
-    own text, row_id valid; verbatim gates hold (>30 chars for YOLO titles)."""
+    own text with whitespace runs collapsed and trimmed (v10.R:1952-1954),
+    row_id valid; verbatim gates hold on the raw row (>30 chars for YOLO
+    titles)."""
     title, rid = ec.extract_title(rows)
     if rid == -1:
         assert title == ""
         return
     r = rows[rid]
     assert r["page"] == 1 and r["element_type"] in ("plain text", "title")
-    assert title == r["text"]
-    assert len(title) > 30 or (r["y"] < 600)
+    assert title == ec._WS_RE.sub(" ", r["text"]).strip()
+    assert len(r["text"]) > 30 or (r["y"] < 600)
 
 
 @settings(max_examples=60, deadline=None)
 @given(scorer_rows())
+@example([_scorer_row("Abstract: " + "word.  " * 30, "plain text")])
 def test_abstract_scorer_total_and_sound(rows):
     """Never crashes; any pick comes from a page-1 non-media row, with the
-    reference header strip applied; fallback rows are > 50 chars."""
-    text, rid = ec.extract_abstract(rows, -1)
+    reference header strip and whitespace collapse applied; fallback rows
+    are > 50 chars."""
+    text, rid = ec.extract_abstract(rows)
     if rid == -1:
         assert text == ""
         return
     r = rows[rid]
     assert r["page"] == 1 and r["element_type"] != "media"
-    assert text == ec.ABSTRACT_STRIP_RE.sub("", r["text"], count=1).strip()
+    assert text == ec._WS_RE.sub(
+        " ", ec.ABSTRACT_STRIP_RE.sub("", r["text"], count=1)).strip()
 
 
 @settings(max_examples=120, deadline=None)
