@@ -241,19 +241,28 @@ def _rec(page, x, y, w, h, text, etype, media_ref, offset, pf):
     }
 
 
+# a header field must lie strictly inside +-GEOMETRY_LIMIT, which keeps every
+# geometry sum (x + w) inside int64
+GEOMETRY_LIMIT = 1 << 62
+
+
 def parse_region_payload(payload: str) -> tuple[int, int, int, int, int, str, str] | None:
     """Parse the in-band region payload ``"page,x,y,w,h,element_type|text"``.
 
     Stands in for the reference's per-page YOLO + per-box tesseract boundary
-    (v10.R:39-44, 131-152); malformed payloads are counted as parse failures,
-    not raised — page-level fault isolation per v10.R:37, 188-190.
+    (v10.R:39-44, 131-152); malformed payloads (a header field ``int()``
+    rejects, or one outside +-:data:`GEOMETRY_LIMIT`) are counted as parse
+    failures, not raised — page-level fault isolation per v10.R:37, 188-190.
     """
     try:
         header, text = payload.split("|", 1)
         page_s, x_s, y_s, w_s, h_s, etype = header.split(",", 5)
-        return (int(page_s), int(x_s), int(y_s), int(w_s), int(h_s), etype, text)
+        geo = (int(page_s), int(x_s), int(y_s), int(w_s), int(h_s))
     except (ValueError, AttributeError):
         return None
+    if max(map(abs, geo)) >= GEOMETRY_LIMIT:
+        return None
+    return geo + (etype, text)
 
 
 def strip_html_blocks(fragment: str) -> list[tuple[str, str]]:
@@ -1144,9 +1153,10 @@ def analyze_document(records: list[dict]) -> dict:
     """Shared analysis prelude: parsed records -> ordered/clean rows,
     title/authors/abstract picks, extraction boundaries.
 
-    Used by BOTH the extraction kernel (:func:`extract_from_records`) and
-    the boundary-debug relation (:func:`boundary_debug_records`) so the QA
-    surface can never drift from what the extractor actually did.
+    The per-document reference: used by :func:`extract_from_records` and the
+    boundary-debug relation (:func:`boundary_debug_records`).  Production
+    extraction runs the batch kernel (:func:`extract_batch`), a separate
+    implementation that tests pin equal to this one.
     """
     parse_failures = sum(r["parse_failure"] for r in records)
     live = [r for r in records if not r["parse_failure"]]
@@ -1268,8 +1278,9 @@ def boundary_debug_records(doc_id: str, records: list[dict],
                            context: int = 3) -> list[dict]:
     """Rows within ``context`` of the start/end boundary, per document.
 
-    Shares :func:`analyze_document` with the extractor, so the reported
-    boundaries ARE the extractor's (pinned by test).  The +-3 context and
+    Runs :func:`analyze_document`, the per-document reference; its
+    boundaries match what ``extract_docs`` emits because tests pin the batch
+    kernel equal to that reference.  The +-3 context and
     the str_trunc(text, 80) preview width mirror the reference inspector
     (v10.R:3258-3268).
     """
@@ -1518,17 +1529,12 @@ def extract_dual_frame(pdf: pd.DataFrame,
 # sentence dedupe, and the author list.  The per-document functions above
 # stay the reference (extract_docs_frame, the span differentials and the
 # per-stage trace run them).
-#
-# One difference from the reference, on input no layout produces: a region
-# header field outside +-2**62 makes the region a parse failure here (the
-# reference keeps Python ints); the bound keeps x + w inside int64.
 
 # the flat crossing's span columns, in and out: kind, text, media_ref and
 # offset (in) or order (out), one array per document
 FLAT_SPAN_COLUMNS = ["_kinds", "_texts", "_refs", "_orders"]
 EXTRACT_FLAT_COLUMNS = (
     [c for c in EXTRACT_RESULT_COLUMNS if c != "spans"] + FLAT_SPAN_COLUMNS)
-_GEOMETRY_LIMIT = 1 << 62
 
 # Literal gates for the page-1 blob patterns the reference runs ungated:
 # every alternative of each pattern contains one of its gate strings, so a
@@ -1618,16 +1624,17 @@ def _lens(texts: list) -> np.ndarray:
 
 
 # a payload whose five header fields are plain ASCII integers (up to 18
-# digits, so inside +-2**62): int() reads each such field as its digits, so
-# these payloads are found in one Arrow pass and split without a fallback
+# digits, so inside +-GEOMETRY_LIMIT): int() reads each such field as its
+# digits, so these payloads are found in one Arrow pass and split without a
+# fallback
 _STRICT_HEADER = r"^(?:-?[0-9]{1,18},){5}[^|]*\|"
 
 
 def _parse_payloads(payloads: list[str]):
-    """parse_region_payload over many payloads, plus the +-_GEOMETRY_LIMIT
-    bound.  Returns (ok, geometry rows, element types, texts), with zeros
-    and None where a payload fails.  Strict payloads are read in one Arrow
-    pass; the others go through parse_region_payload itself."""
+    """parse_region_payload over many payloads.  Returns (ok, geometry rows,
+    element types, texts), with zeros and None where a payload fails.
+    Strict payloads are read in one Arrow pass; the others go through
+    parse_region_payload itself."""
     n = len(payloads)
     ok = np.zeros(n, bool)
     geo = np.zeros((n, 5), np.int64)
@@ -1648,13 +1655,7 @@ def _parse_payloads(payloads: list[str]):
     rest = rest[_flags([p is not None for p in parsed])]
     parsed = [p for p in parsed if p is not None]
     if parsed:
-        try:
-            g = np.array([p[:5] for p in parsed], dtype=np.int64)
-        except OverflowError:  # a field past int64: bound-test Python ints
-            g = np.array([p[:5] for p in parsed], dtype=object)
-        fits = _flags(((g < _GEOMETRY_LIMIT) & (g > -_GEOMETRY_LIMIT)).all(axis=1))
-        rest, parsed = rest[fits], [p for p, f in zip(parsed, fits.tolist()) if f]
-        geo[rest] = g[fits].astype(np.int64)
+        geo[rest] = np.array([p[:5] for p in parsed], dtype=np.int64)
         ok[rest] = True
         etype[rest] = [p[5] for p in parsed]
         body[rest] = [p[6] for p in parsed]
@@ -1719,7 +1720,6 @@ def _batch_regions(pdf: pd.DataFrame) -> dict:
     hrows = np.flatnonzero(is_html[rs])
     reg["etype"][hrows] = [e for b in blocks for e, _ in b]
     reg["text"][hrows] = [s for b in blocks for _, s in b]
-    reg["pos"] = np.arange(len(rs)) - doc_base[reg["doc"]]
     return reg
 
 
@@ -1733,7 +1733,7 @@ def _reanchor_media(reg: dict, n_docs: int) -> np.ndarray:
     if not has_media.any():
         return has_media
     li = np.flatnonzero(live)
-    o = li[np.lexsort((reg["pos"][li], reg["off"][li], doc[li]))]
+    o = li[np.lexsort((reg["off"][li], doc[li]))]  # stable: ties by position
     anchor = ~med[o] & (reg["etype"][o] != "parse_failure")
     last = np.maximum.accumulate(np.where(anchor, np.arange(len(o)), -1))
     first = np.searchsorted(doc[o], doc[o])
@@ -1774,9 +1774,10 @@ def _column_boundaries(t: dict, has_media: np.ndarray) -> np.ndarray:
                    for s in t["text"][ci].tolist()])
     si = ci[~skip]
     # the page's regions in the reference's order: input order, or (offset,
-    # input order) in a doc with media; the k-means means depend on it
+    # input order) in a doc with media; the k-means means depend on it.  The
+    # table is in input order and lexsort is stable, so ties keep it.
     pre = np.where(has_media[doc[si]], t["off"][si], 0)
-    si = si[np.lexsort((t["pos"][si], pre, gid[si]))]
+    si = si[np.lexsort((pre, gid[si]))]
     gs, centers = gid[si], x[si] + w[si] / 2.0
     n_sub = np.bincount(gs, minlength=n_groups)
     # sorted distinct rounded centers per group, and each group's first
@@ -2046,8 +2047,8 @@ def _boundaries(t, texts, lows, lows_arr, b, brid, elsevier, is_mdpi, n_docs):
     return start, end
 
 
-def _main_texts(t, texts, b, brid, start, end, elsevier, is_mdpi, n_docs,
-                cleaning_method) -> list[str]:
+def _main_texts(t, texts, b, brid, start, end, elsevier, is_mdpi,
+                n_docs) -> list[str]:
     """The body slice [start, end) joined per doc, less Elsevier
     article-info leaks and the MDPI x-zone, deduped and cleaned."""
     bdoc = t["doc"][b]
@@ -2067,18 +2068,17 @@ def _main_texts(t, texts, b, brid, start, end, elsevier, is_mdpi, n_docs,
             if longs:
                 x_min = sum(longs) / len(longs)
                 rows = [i for i in rows if int(x[i]) >= x_min - MDPI_XZONE_SLACK]
-        out.append(clean_text(dedupe_sentences(" ".join(texts[i] for i in rows)),
-                              cleaning_method))
+        out.append(clean_text(dedupe_sentences(" ".join(texts[i] for i in rows))))
     return out
 
 
-def extract_batch(pdf: pd.DataFrame, cleaning_method: str = "hybrid") -> pd.DataFrame:
+def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     """Extract every document of one flat Arrow batch.
 
     ``pdf`` has ``doc_id`` and the :data:`FLAT_SPAN_COLUMNS` (one array per
     doc, or None for a NULL spans array).  The result has one row per input
     row, in order, with the :data:`EXTRACT_FLAT_COLUMNS`: row ``i`` is
-    ``extract_document(doc_id[i], spans[i], cleaning_method)`` with its
+    ``extract_document(doc_id[i], spans[i])`` with its
     spans split into the four flat arrays.
     """
     n_docs = len(pdf)
@@ -2091,7 +2091,9 @@ def extract_batch(pdf: pd.DataFrame, cleaning_method: str = "hybrid") -> pd.Data
     # reading_order: a column per (doc, page), then one sort for the batch
     bound = _column_boundaries(t, has_media)
     col = np.where(np.isnan(bound) | (t["x"] + t["w"] / 2.0 < bound), 1, 2)
-    o = np.lexsort((t["pos"], t["off"], t["x"], t["y"], col, t["page"], t["doc"]))
+    # the table is in input order and lexsort is stable: input position is
+    # the last tiebreak
+    o = np.lexsort((t["off"], t["x"], t["y"], col, t["page"], t["doc"]))
     t = {k: v[o] for k, v in t.items()}
     doc, page, et = t["doc"], t["page"], t["etype"]
     texts = t["text"].tolist()
@@ -2141,7 +2143,7 @@ def extract_batch(pdf: pd.DataFrame, cleaning_method: str = "hybrid") -> pd.Data
     start, end = _boundaries(t, texts, lows, lows_arr, b, brid, elsevier,
                              is_mdpi, n_docs)
     main_text = _main_texts(t, texts, b, brid, start, end, elsevier, is_mdpi,
-                            n_docs, cleaning_method)
+                            n_docs)
 
     # span emission: every clean media or body row, in reading order
     e = c[med[c] | body[c]]
@@ -2149,7 +2151,7 @@ def extract_batch(pdf: pd.DataFrame, cleaning_method: str = "hybrid") -> pd.Data
     kinds = _objects(np.where(emed, "media", np.where(
         et[e] == "title", "title", "text")).tolist())
     out_text = _objects([
-        "" if m else clean_text(texts[i], cleaning_method)
+        "" if m else clean_text(texts[i])
         for i, m in zip(e.tolist(), emed.tolist())])
     refs = np.where(emed, t["ref"][e], None)
     orders = _rank_in_doc(doc[e], n_docs).astype(np.int32)
@@ -2157,11 +2159,11 @@ def extract_batch(pdf: pd.DataFrame, cleaning_method: str = "hybrid") -> pd.Data
 
     out = pd.DataFrame({
         "doc_id": pdf["doc_id"].to_numpy(),
-        "title": [clean_text(_WS_RE.sub(" ", texts[i]).strip(), cleaning_method)
+        "title": [clean_text(_WS_RE.sub(" ", texts[i]).strip())
                   if i >= 0 else "" for i in title_at.tolist()],
-        "authors": [clean_author_list(clean_text(texts[i], cleaning_method))
+        "authors": [clean_author_list(clean_text(texts[i]))
                     if i >= 0 else "" for i in author_at.tolist()],
-        "abstract": [clean_text(a, cleaning_method) for a in abstract],
+        "abstract": [clean_text(a) for a in abstract],
         "main_text": main_text,
         "boundary_start": start,
         "boundary_end": end,

@@ -263,8 +263,8 @@ def _extract_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
                     rows.append(_assemble(parts))
                     open_id, next_chunk, parts = None, 0, []
             docs = pd.DataFrame(rows, columns=pdf.columns)
-        out = ec.extract_batch(docs)
-        if len(out):
+        if len(docs):  # empty when the batch holds only non-final chunks
+            out = ec.extract_batch(docs)
             out["part_key"] = docs["part_key"].to_numpy()
             yield out[_FLAT_OUT_NAMES]
     if open_id is not None:

@@ -123,11 +123,14 @@ _text = st.one_of(
     st.lists(st.sampled_from(_WORDS), max_size=40).map(" ".join),
     st.text(alphabet=_CHARS, max_size=60),
 )
-# header fields int() accepts in forms an Arrow cast does not; values stay
-# well inside +-2**62, where the batch kernel's parse is the reference's
+# header fields int() accepts in forms an Arrow cast does not, and values
+# on both sides of +-GEOMETRY_LIMIT, past int64 and past 18 digits
+_LIMIT = ec.GEOMETRY_LIMIT
 _INT_FIELD = st.one_of(
     st.integers(-20, 3300).map(str),
     st.sampled_from([" 7", "+7", "7_0", "٣", "7\n", "-0", "007", "1e3", "", "x"]),
+    st.sampled_from([_LIMIT - 1, _LIMIT, 1 - _LIMIT, -_LIMIT, 1 << 63,
+                     10 ** 17, 10 ** 18, -10 ** 30]).map(str),
 )
 _ETYPE = st.sampled_from(["plain text", "title", "abandon", "table", "media",
                           "parse_failure", "plain text,x", "title,", "figure"])
@@ -165,6 +168,9 @@ _doc = st.tuples(
        st.booleans())
 @example([("a", [{"kind": "region", "text": " 7,+7,7_0,٣,7\n,title,x|İß ſ\x85",
                   "offset": None, "media_ref": None}])], False)
+@example([("a", [{"kind": "region", "offset": k, "media_ref": None,
+                  "text": f"1,{x},0,{_LIMIT - 1},10,plain text|" + "word " * 12}
+                 for k, x in enumerate((_LIMIT - 1, _LIMIT, 10 ** 19, 5))])], False)
 def test_generated_batches_equal_reference(docs, nan_offsets):
     _assert_batch_equals_reference(docs, nan_offsets)
 
@@ -232,7 +238,7 @@ def test_stage_calls_batch_kernel_once_per_batch(monkeypatch):
                for k, c in enumerate(chunks)]
     batches = [whole.iloc[:3], whole.iloc[:0], whole.iloc[3:], *chunked]
     out = list(pl._extract_batches_flat(iter(batches)))
-    assert calls == [3, len(docs) - 3] + [0] * (len(chunks) - 1) + [1]
+    assert calls == [3, len(docs) - 3, 1]
     assert [len(o) for o in out] == [3, len(docs) - 3, 1]
     assert list(out[0].columns) == [f.name for f in pl._EXTRACT_FLAT_OUT.fields]
 

@@ -21,6 +21,11 @@ class TestParsing:
     def test_region_payload_malformed(self):
         assert ec.parse_region_payload("nope") is None
         assert ec.parse_region_payload("1,2|x") is None
+        # a field at or past +-GEOMETRY_LIMIT: x + w must stay inside int64
+        lim = ec.GEOMETRY_LIMIT
+        assert ec.parse_region_payload(f"1,{lim - 1},0,{1 - lim},1,t|x")[1] == lim - 1
+        for v in (lim, -lim, 1 << 63, -10 ** 30):
+            assert ec.parse_region_payload(f"1,0,{v},1,1,t|x") is None
 
     def test_spans_to_regions_counts_failures(self):
         recs = ec.spans_to_regions(fx.BROKEN_DOC["spans"])
