@@ -1206,8 +1206,7 @@ def analyze_document(records: list[dict]) -> dict:
     }
 
 
-def extract_from_records(doc_id: str, records: list[dict],
-                         cleaning_method: str = "hybrid") -> dict:
+def extract_from_records(doc_id: str, records: list[dict]) -> dict:
     """Run the full extraction given parsed region records."""
     a = analyze_document(records)
     kept, clean, body_rows = a["kept"], a["clean"], a["body_rows"]
@@ -1222,7 +1221,7 @@ def extract_from_records(doc_id: str, records: list[dict],
     if is_mdpi:
         main_rows = mdpi_xzone_filter(main_rows)
     main_raw = " ".join(r["text"] for r in main_rows)
-    main_text = clean_text(dedupe_sentences(main_raw), cleaning_method)
+    main_text = clean_text(dedupe_sentences(main_raw))
 
     # span emission: every surviving non-abandon block in reading order,
     # media interleaved at its position; order = 0..n-1
@@ -1236,7 +1235,7 @@ def extract_from_records(doc_id: str, records: list[dict],
         elif et in BODY_TYPES:
             spans.append({
                 "kind": "title" if et == "title" else "text",
-                "text": clean_text(r["text"], cleaning_method),
+                "text": clean_text(r["text"]),
                 "media_ref": None,
                 "order": order,
             })
@@ -1248,9 +1247,9 @@ def extract_from_records(doc_id: str, records: list[dict],
     return {
         "doc_id": doc_id,
         "spans": spans,
-        "title": clean_text(title, cleaning_method),
-        "authors": clean_author_list(clean_text(authors, cleaning_method)),
-        "abstract": clean_text(abstract, cleaning_method),
+        "title": clean_text(title),
+        "authors": clean_author_list(clean_text(authors)),
+        "abstract": clean_text(abstract),
         "main_text": main_text,
         "boundary_start": start,
         "boundary_end": end,
@@ -1272,17 +1271,19 @@ DEBUG_BOUNDARY_COLUMNS = [
     "doc_id", "row_id", "page", "y", "element_type", "text_preview",
     "near", "in_slice", "boundary_start", "boundary_end",
 ]
+# rows this close to a boundary are shown: the reference inspector's width
+# (v10.R:3258-3268)
+DEBUG_CONTEXT = 3
 
 
-def boundary_debug_records(doc_id: str, records: list[dict],
-                           context: int = 3) -> list[dict]:
-    """Rows within ``context`` of the start/end boundary, per document.
+def boundary_debug_records(doc_id: str, records: list[dict]) -> list[dict]:
+    """Rows within :data:`DEBUG_CONTEXT` of the start/end boundary, per
+    document.
 
     Runs :func:`analyze_document`, the per-document reference; its
     boundaries match what ``extract_docs`` emits because tests pin the batch
-    kernel equal to that reference.  The +-3 context and
-    the str_trunc(text, 80) preview width mirror the reference inspector
-    (v10.R:3258-3268).
+    kernel equal to that reference.  The str_trunc(text, 80) preview width
+    mirrors the reference inspector (v10.R:3258-3268).
     """
     a = analyze_document(records)
     start, end = a["start"], a["end"]
@@ -1291,8 +1292,8 @@ def boundary_debug_records(doc_id: str, records: list[dict],
         if r["element_type"] == "media":
             continue
         rid = r["row_id"]
-        near_start = abs(rid - start) <= context
-        near_end = abs(rid - end) <= context
+        near_start = abs(rid - start) <= DEBUG_CONTEXT
+        near_end = abs(rid - end) <= DEBUG_CONTEXT
         if not (near_start or near_end):
             continue
         t = r["text"] or ""
@@ -1332,8 +1333,7 @@ SIMPLE_INTRO_RE = re.compile(r"^(\d+[\.\)]?\s*)?Introduction\s*$")  # :2008
 SIMPLE_INTRO_FALLBACK = 25                # v10.R:2038
 
 
-def extract_simple_from_records(doc_id: str, records: list[dict],
-                                cleaning_method: str = "hybrid") -> dict:
+def extract_simple_from_records(doc_id: str, records: list[dict]) -> dict:
     """The simple/universal extraction path over parsed region records.
 
     Returns the same record shape as :func:`extract_from_records` so the
@@ -1393,7 +1393,7 @@ def extract_simple_from_records(doc_id: str, records: list[dict],
     main_raw = " ".join(
         r["text"] for r in text_rows if start <= r["row_id"] < end
     )
-    main_text = clean_text(dedupe_sentences(main_raw), cleaning_method)
+    main_text = clean_text(dedupe_sentences(main_raw))
 
     spans = []
     order = 0
@@ -1404,7 +1404,7 @@ def extract_simple_from_records(doc_id: str, records: list[dict],
         else:
             spans.append({
                 "kind": "title" if r["element_type"] == "title" else "text",
-                "text": clean_text(r["text"], cleaning_method),
+                "text": clean_text(r["text"]),
                 "media_ref": None,
                 "order": order,
             })
@@ -1413,9 +1413,9 @@ def extract_simple_from_records(doc_id: str, records: list[dict],
     return {
         "doc_id": doc_id,
         "spans": spans,
-        "title": clean_text(title, cleaning_method),
-        "authors": clean_author_list(clean_text(authors, cleaning_method)),
-        "abstract": clean_text(abstract, cleaning_method),
+        "title": clean_text(title),
+        "authors": clean_author_list(clean_text(authors)),
+        "abstract": clean_text(abstract),
         "main_text": main_text,
         "boundary_start": start,
         "boundary_end": end,
@@ -1426,20 +1426,17 @@ def extract_simple_from_records(doc_id: str, records: list[dict],
     }
 
 
-def extract_simple_document(doc_id: str, spans: Iterable[dict],
-                            cleaning_method: str = "hybrid") -> dict:
+def extract_simple_document(doc_id: str, spans: Iterable[dict]) -> dict:
     """spans-in -> simple-path extraction (dual-extractor differential)."""
-    return extract_simple_from_records(doc_id, spans_to_regions(spans),
-                                       cleaning_method)
+    return extract_simple_from_records(doc_id, spans_to_regions(spans))
 
 
-def extract_document(doc_id: str, spans: Iterable[dict],
-                     cleaning_method: str = "hybrid") -> dict:
+def extract_document(doc_id: str, spans: Iterable[dict]) -> dict:
     """spans-in -> extracted-doc-out; the per-document unit of work."""
-    return extract_from_records(doc_id, spans_to_regions(spans), cleaning_method)
+    return extract_from_records(doc_id, spans_to_regions(spans))
 
 
-def extract_docs_frame(pdf: pd.DataFrame, cleaning_method: str = "hybrid") -> pd.DataFrame:
+def extract_docs_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     """Extract every document in a nested (doc_id, spans) pandas frame.
 
     The single-process local oracle for differential tests, running the
@@ -1448,8 +1445,7 @@ def extract_docs_frame(pdf: pd.DataFrame, cleaning_method: str = "hybrid") -> pd
     it.
     """
     results = [
-        extract_document(row.doc_id, row.spans if row.spans is not None else [],
-                         cleaning_method)
+        extract_document(row.doc_id, row.spans if row.spans is not None else [])
         for row in pdf.itertuples(index=False)
     ]
     if not results:
@@ -1467,8 +1463,7 @@ DUAL_RESULT_COLUMNS = [
 ]
 
 
-def extract_dual_document(doc_id: str, spans: Iterable[dict],
-                          cleaning_method: str = "hybrid") -> dict:
+def extract_dual_document(doc_id: str, spans: Iterable[dict]) -> dict:
     """Run the smart AND simple extractors over ONE parse of the document
     and emit the agreement record the reference's cross-extractor check
     compares (v8.R:3017-3033: both paths on the same PDF, then diff).
@@ -1481,10 +1476,8 @@ def extract_dual_document(doc_id: str, spans: Iterable[dict],
     mapInPandas stage — no shuffle at all.
     """
     recs = spans_to_regions(spans)
-    smart = extract_from_records(doc_id, [dict(r) for r in recs],
-                                 cleaning_method)
-    simple = extract_simple_from_records(doc_id, [dict(r) for r in recs],
-                                         cleaning_method)
+    smart = extract_from_records(doc_id, [dict(r) for r in recs])
+    simple = extract_simple_from_records(doc_id, [dict(r) for r in recs])
     return {
         "doc_id": doc_id,
         "title_match": smart["title"] == simple["title"],
@@ -1496,14 +1489,11 @@ def extract_dual_document(doc_id: str, spans: Iterable[dict],
     }
 
 
-def extract_dual_frame(pdf: pd.DataFrame,
-                       cleaning_method: str = "hybrid") -> pd.DataFrame:
+def extract_dual_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     """Dual-path analog of :func:`extract_docs_frame`."""
     results = [
         extract_dual_document(
-            row.doc_id, row.spans if row.spans is not None else [],
-            cleaning_method,
-        )
+            row.doc_id, row.spans if row.spans is not None else [])
         for row in pdf.itertuples(index=False)
     ]
     if not results:
@@ -2175,3 +2165,17 @@ def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     for name, col in zip(FLAT_SPAN_COLUMNS, (kinds, out_text, refs, orders)):
         out[name] = [col[eb[d]:eb[d + 1]] for d in range(n_docs)]
     return out
+
+
+def layout_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The layout rows of one flat Arrow batch, read off its region table:
+    row for row what :func:`spans_to_regions` gives per doc, docs in batch
+    order, as the LAYOUT columns (geometry and class, no text)."""
+    reg = _batch_regions(pdf)
+    return pd.DataFrame({
+        "doc_id": pdf["doc_id"].to_numpy()[reg["doc"]],
+        "page": reg["page"], "x": reg["x"], "y": reg["y"],
+        "w": reg["w"], "h": reg["h"], "element_type": reg["etype"],
+        "media_ref": reg["ref"], "offset": reg["off"],
+        "parse_failure": reg["failed"].astype(np.int64),
+    })

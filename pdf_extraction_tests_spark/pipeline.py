@@ -11,10 +11,10 @@ Design (SURVEY.md §3.4 / §4 custom items):
   split into chunk rows before the Arrow crossing, JVM-side in the scan
   stage: a running character budget gives each doc's chunk boundaries, a
   small int array is exploded to one row per chunk, and each chunk's spans
-  are sliced in a codegen'd projection.  The same Python batch function
-  collects each chunk's span arrays and extracts the doc with the batch
-  that brings its last chunk, so a multi-MB doc never crosses as one Arrow
-  row.  The reference OOMs silently on big
+  are sliced in a codegen'd projection.  On the Python side
+  :func:`_whole_docs` collects each chunk's span arrays and hands the doc on
+  with the batch that brings its last chunk, so a multi-MB doc never crosses
+  as one Arrow row.  The reference OOMs silently on big
   docs (eager per-page loop, Document_Processor_DocLayout_YOLO_Code_v10.R:
   32-191); the north rule makes sub-batching mandatory.
 * **Python over the scan once.** Extraction is one ``mapInPandas`` with no
@@ -33,8 +33,9 @@ Design (SURVEY.md §3.4 / §4 custom items):
   by :func:`.shipping.map_batches` (which ships the package to the workers
   and drops empty batches); everything else is native column expressions.
 * **One crossing shape.** Every extraction-family relation (extract, dual,
-  debug, layout) crosses the boundary flat — see the note above
-  ``_EXTRACT_FLAT_OUT``.
+  debug, layout) crosses the boundary the same way: flat chunk rows from
+  :func:`_chunk_rows` under extract_docs' size rule, read back as whole docs
+  by :func:`_whole_docs` — see the note above ``_EXTRACT_FLAT_OUT``.
 """
 
 from __future__ import annotations
@@ -135,15 +136,17 @@ def estimate_scan_partitions(docs: DataFrame) -> int:
 # (measured: an identity pass over the bench corpus cost 3.2-5.1 s even
 # with zero Python object construction; projecting the same spans as four
 # parallel primitive arrays cut the identity pass ~15%).  So every
-# extraction-family stage crosses flat: spans.kind/.text/.media_ref/.offset
-# out to Python (a free JVM field extraction) and, for extract, result
-# spans returned as four arrays re-zipped to the public struct schema
-# JVM-side (dual, debug and layout return scalar rows).  Extract hands each
-# batch's flat arrays straight to extract_core.extract_batch, which reads
-# them as one region table (no per-doc records); dual, debug and layout
-# rebuild the per-doc span dicts their per-doc kernels take.  A NULL offset
-# crosses as NaN in a float64 array.  The public EXTRACTED_WITH_PART schema
-# is untouched.
+# extraction-family stage crosses flat, through the chunk rows of
+# _chunk_rows: spans.kind/.text/.media_ref/.offset out to Python (a free JVM
+# field extraction), an oversized doc as several rows, and, for extract,
+# result spans returned as four arrays re-zipped to the public struct schema
+# JVM-side (dual, debug and layout return scalar rows).  Each stage reads
+# its input through _whole_docs.  Extract hands each frame of whole docs
+# straight to extract_core.extract_batch and layout to
+# extract_core.layout_batch, which read it as one region table (no per-doc
+# records); dual and debug rebuild the per-doc span dicts their per-doc
+# kernels take.  A NULL offset crosses as NaN in a float64 array.  The
+# public EXTRACTED_WITH_PART schema is untouched.
 #
 # The JVM expressions below are SQL strings (F.expr / selectExpr), not
 # Python-API lambdas: a lambda in a higher-order function costs py4j round
@@ -166,6 +169,10 @@ _FLAT_OUT_NAMES = [f.name for f in _EXTRACT_FLAT_OUT.fields]
 # summed span text; NULL text counts 0 (a NULL spans array sums to NULL,
 # so that doc is never chunked)
 _TOTAL_CHARS_SQL = "aggregate(spans, 0L, (acc, s) -> acc + coalesce(length(s.text), 0))"
+
+# extract_docs' default size rule, which every other extraction-family
+# relation crosses by
+_OVERSIZE_SQL = f"{_TOTAL_CHARS_SQL} > {int(DEFAULT_OVERSIZE_CHARS)}"
 
 _REZIP_SQL = (
     "transform(arrays_zip(_kinds, _texts, _refs, _orders), x -> named_struct("
@@ -192,22 +199,25 @@ def _chunk_bounds_sql(chunk_spans: int, chunk_chars: int) -> str:
       array(0, 0))"""
 
 
-def _chunk_rows(docs: DataFrame, chunk_if: str, chunk_spans: int,
-                chunk_chars: int) -> DataFrame:
-    """docs(doc_id, part_key, spans) -> the flat crossing rows: one row per
-    unchunked doc (``_chunk = -1``, ``_n = 0``) and, for each doc where the
-    SQL condition ``chunk_if`` holds, one row per chunk (``_chunk`` =
-    0.._n-1, in order).  All JVM-side, in the scan stage: a small int array
-    is exploded and each chunk's spans are sliced in a codegen'd projection,
-    so a multi-MB doc never crosses as one Arrow row."""
+def _chunk_rows(docs: DataFrame, chunk_if: str,
+                chunk_spans: int = DEFAULT_CHUNK_SPANS,
+                chunk_chars: int = DEFAULT_CHUNK_CHARS) -> DataFrame:
+    """docs(doc_id, [part_key,] spans) -> the flat crossing rows: one row
+    per unchunked doc (``_chunk = -1``, ``_n = 0``) and, for each doc where
+    the SQL condition ``chunk_if`` holds, one row per chunk (``_chunk`` =
+    0.._n-1, in order); ``part_key`` is carried when ``docs`` has it.  All
+    JVM-side, in the scan stage: a small int array is exploded and each
+    chunk's spans are sliced in a codegen'd projection, so a multi-MB doc
+    never crosses as one Arrow row."""
+    keys = ["doc_id", "part_key"] if "part_key" in docs.columns else ["doc_id"]
     bounds = f"IF({chunk_if}, {_chunk_bounds_sql(chunk_spans, chunk_chars)}, array(0))"
     spans = ("IF(_chunk < 0, spans, "
              "slice(spans, _b[_chunk] + 1, _b[_chunk + 1] - _b[_chunk]))")
     return (
-        docs.selectExpr("doc_id", "part_key", "spans", f"{bounds} AS _b")
-        .selectExpr("doc_id", "part_key", "spans", "_b", "explode(IF(size(_b) = 1, "
+        docs.selectExpr(*keys, "spans", f"{bounds} AS _b")
+        .selectExpr(*keys, "spans", "_b", "explode(IF(size(_b) = 1, "
                     "array(-1), sequence(0, size(_b) - 2))) AS _chunk")
-        .selectExpr("doc_id", "part_key", "_chunk", "size(_b) - 1 AS _n",
+        .selectExpr(*keys, "_chunk", "size(_b) - 1 AS _n",
                     *[f"({spans}).{field} AS {name}" for field, name in (
                         ("kind", "_kinds"), ("text", "_texts"),
                         ("media_ref", "_refs"), ("offset", "_orders"))])
@@ -231,44 +241,50 @@ def _records_from_flat(pdf: pd.DataFrame) -> list[list[dict]]:
     ]
 
 
-def _extract_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Run :func:`.extract_core.extract_batch` once per non-empty Arrow
-    batch.  An unchunked doc goes in as its row.  A chunked doc's chunk rows
-    arrive in order; their span arrays append to the open doc, which goes in
-    with the batch that brings its last chunk, so media re-anchoring, NULL
-    offset numbering and every doc-global step see the assembled doc.  The
-    open doc carries across Arrow batches; a row out of that sequence raises
-    rather than emitting a partial doc."""
+def _whole_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Each non-empty Arrow batch of the crossing as a frame of whole docs.
+    An unchunked doc stays its row.  A chunked doc's chunk rows arrive in
+    order; their span arrays append to the open doc, which is yielded with
+    the batch that brings its last chunk, so media re-anchoring, NULL offset
+    numbering and every doc-global step see the assembled doc.  The open doc
+    carries across Arrow batches; a row out of that sequence raises rather
+    than yielding a partial doc."""
     open_id, next_chunk, parts = None, 0, []
     for pdf in batches:
         if pdf.empty:
             continue
         chunks = pdf["_chunk"].to_numpy()
         if open_id is None and (chunks < 0).all():
-            docs = pdf
-        else:
-            rows = []
-            for i, (doc_id, chunk, n) in enumerate(zip(
-                    pdf["doc_id"], chunks, pdf["_n"])):
-                if max(chunk, 0) != next_chunk or (chunk > 0 and doc_id != open_id):
-                    raise ValueError(
-                        f"chunk {chunk} of doc {doc_id!r} out of sequence "
-                        f"(open doc {open_id!r} expects chunk {next_chunk})")
-                if chunk < 0:
-                    rows.append(pdf.iloc[i])
-                    continue
-                open_id, next_chunk = doc_id, chunk + 1
-                parts.append(pdf.iloc[i])
-                if next_chunk == n:
-                    rows.append(_assemble(parts))
-                    open_id, next_chunk, parts = None, 0, []
-            docs = pd.DataFrame(rows, columns=pdf.columns)
-        if len(docs):  # empty when the batch holds only non-final chunks
-            out = ec.extract_batch(docs)
-            out["part_key"] = docs["part_key"].to_numpy()
-            yield out[_FLAT_OUT_NAMES]
+            yield pdf
+            continue
+        rows = []
+        for i, (doc_id, chunk, n) in enumerate(zip(
+                pdf["doc_id"], chunks, pdf["_n"])):
+            if max(chunk, 0) != next_chunk or (chunk > 0 and doc_id != open_id):
+                raise ValueError(
+                    f"chunk {chunk} of doc {doc_id!r} out of sequence "
+                    f"(open doc {open_id!r} expects chunk {next_chunk})")
+            if chunk < 0:
+                rows.append(pdf.iloc[i])
+                continue
+            open_id, next_chunk = doc_id, chunk + 1
+            parts.append(pdf.iloc[i])
+            if next_chunk == n:
+                rows.append(_assemble(parts))
+                open_id, next_chunk, parts = None, 0, []
+        if rows:  # none when the batch holds only non-final chunks
+            yield pd.DataFrame(rows, columns=pdf.columns)
     if open_id is not None:
         raise ValueError(f"doc {open_id!r} ended before its last chunk")
+
+
+def _extract_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Run :func:`.extract_core.extract_batch` once per frame of whole docs
+    (:func:`_whole_docs`)."""
+    for docs in _whole_docs(batches):
+        out = ec.extract_batch(docs)
+        out["part_key"] = docs["part_key"].to_numpy()
+        yield out[_FLAT_OUT_NAMES]
 
 
 def _assemble(parts: list[pd.Series]) -> pd.Series:
@@ -319,19 +335,6 @@ def extract_chunked(docs: DataFrame, chunk_spans: int = DEFAULT_CHUNK_SPANS,
     return _extract(docs, "true", chunk_spans, chunk_chars)
 
 
-def _flat_spans_input(docs: DataFrame) -> DataFrame:
-    """Project the spans struct array into four parallel arrays for a flat
-    boundary crossing (see the flat-boundary note above _EXTRACT_FLAT_OUT),
-    next to ``doc_id``."""
-    return docs.select(
-        "doc_id",
-        F.col("spans.kind").alias("_kinds"),
-        F.col("spans.text").alias("_texts"),
-        F.col("spans.media_ref").alias("_refs"),
-        F.col("spans.offset").alias("_orders"),
-    )
-
-
 DUAL_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
@@ -344,9 +347,9 @@ DUAL_SCHEMA = T.StructType(
 
 
 def _extract_dual_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
+    for docs in _whole_docs(batches):
         frame = pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "spans": _records_from_flat(pdf)})
+            {"doc_id": docs["doc_id"], "spans": _records_from_flat(docs)})
         yield ec.extract_dual_frame(frame)
 
 
@@ -356,11 +359,11 @@ def extract_docs_dual(docs: DataFrame) -> DataFrame:
     mapInPandas stage — one corpus scan, zero joins/shuffles.  The round-2
     form (two full pipelines + equi-join) parsed every document twice and
     shuffled both outputs; at 100 TB the single-pass form is the only
-    sensible shape for a per-doc differential.  Crosses the boundary flat
-    (only the input side here; the output is five scalars) and follows the
-    scan partitioning."""
-    return map_batches(_flat_spans_input(docs), _extract_dual_batches_flat,
-                       DUAL_SCHEMA)
+    sensible shape for a per-doc differential.  Crosses the boundary as
+    extract does (only the input side here; the output is five scalars) and
+    follows the scan partitioning."""
+    return map_batches(_chunk_rows(docs, _OVERSIZE_SQL),
+                       _extract_dual_batches_flat, DUAL_SCHEMA)
 
 
 DEBUG_BOUNDARY_SCHEMA = T.StructType(
@@ -379,29 +382,36 @@ DEBUG_BOUNDARY_SCHEMA = T.StructType(
 )
 
 
-def debug_boundaries(docs: DataFrame, context: int = 3) -> DataFrame:
+def debug_boundaries(docs: DataFrame) -> DataFrame:
     """The reference's manual-QA inspector (debug_reading_order /
     debug_content_extraction, v10.R:3237-3428) as a queryable relation:
-    per document, the rows within ``context`` of each extraction boundary
-    with an in-slice flag — boundary regressions become visible in DATA.
-    One mapInPandas stage over the corpus scan, no shuffle."""
+    per document, the rows within :data:`.extract_core.DEBUG_CONTEXT` of
+    each extraction boundary with an in-slice flag — boundary regressions
+    become visible in DATA.  One mapInPandas stage over the corpus scan,
+    no shuffle."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in DEBUG_BOUNDARY_SCHEMA.fields]
-        for pdf in batches:
+        for docs in _whole_docs(batches):
             rows: list[dict] = []
-            for doc_id, spans in zip(pdf["doc_id"], _records_from_flat(pdf)):
+            for doc_id, spans in zip(docs["doc_id"], _records_from_flat(docs)):
                 recs = ec.spans_to_regions(spans)
-                rows.extend(ec.boundary_debug_records(doc_id, recs, context))
+                rows.extend(ec.boundary_debug_records(doc_id, recs))
             yield (pd.DataFrame(rows, columns=cols) if rows
                    else pd.DataFrame(columns=cols))
 
-    return map_batches(_flat_spans_input(docs), run, DEBUG_BOUNDARY_SCHEMA)
+    return map_batches(_chunk_rows(docs, _OVERSIZE_SQL), run,
+                       DEBUG_BOUNDARY_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # layout table (reference complete_layout, SURVEY §1.2 / S5)
 # ---------------------------------------------------------------------------
+
+
+def _layout_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for docs in _whole_docs(batches):
+        yield ec.layout_batch(docs)
 
 
 def extract_layout(docs: DataFrame) -> DataFrame:
@@ -411,25 +421,8 @@ def extract_layout(docs: DataFrame) -> DataFrame:
     197-202): ALL parsed blocks, including 'abandon' and parse failures,
     before any extraction filter — the debugging/audit relation.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in LAYOUT.fields]
-        for pdf in batches:
-            frames = []
-            for doc_id, spans in zip(pdf["doc_id"], _records_from_flat(pdf)):
-                recs = ec.spans_to_regions(spans)
-                if not recs:
-                    continue
-                f = pd.DataFrame(recs)
-                f.insert(0, "doc_id", doc_id)
-                frames.append(f[cols])
-            yield (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(columns=cols)
-            )
-
-    return map_batches(_flat_spans_input(docs), run, LAYOUT)
+    return map_batches(_chunk_rows(docs, _OVERSIZE_SQL), _layout_batches_flat,
+                       LAYOUT)
 
 
 # ---------------------------------------------------------------------------

@@ -9,8 +9,9 @@ Spark re-expressions:
 2. **Structured Streaming** (this module) — ``readStream`` over the docs
    table + ``foreachBatch`` applying the same ``extract_docs`` plan with
    ``Trigger.AvailableNow`` semantics: each micro-batch is extracted and
-   appended, Spark's own streaming checkpoint provides exactly-once resume.
-   Useful when the corpus grows continuously (new parquet files landing).
+   committed as one epoch-tagged snapshot, so a restart from Spark's own
+   streaming checkpoint resumes exactly once.  Useful when the corpus grows
+   continuously (new parquet files landing).
 
 Both paths run the identical kernel — streaming changes scheduling, never
 results (asserted in tests/test_streaming.py).
@@ -24,41 +25,9 @@ from ..pipeline import extract_docs
 from ..schema import DOCS
 
 
-def stream_extract(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    num_parts: int = 16,
-    max_files_per_trigger: int = 8,
-):
-    """Start an available-now streaming extraction over a parquet directory.
-
-    Returns the StreamingQuery; callers use ``processAllAvailable()`` +
-    ``stop()`` for batch-drain semantics, or leave it running for continuous
-    ingestion.  Restart with the same checkpoint_path resumes exactly-once.
-    """
-    stream = (
-        spark.readStream.schema(DOCS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
-
-    def process_batch(batch_df, epoch_id: int) -> None:
-        out = extract_docs(batch_df, num_parts=num_parts)
-        out.write.mode("append").parquet(output_path)
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def snapshot_batch_committer(table_dir: str, num_parts: int = 16):
-    """foreachBatch body for :func:`stream_extract_snapshot` — exposed for
-    direct testing of the replay-idempotence contract."""
+    """foreachBatch body for :func:`stream_extract` — exposed for direct
+    testing of the replay-idempotence contract."""
 
     def process_batch(batch_df, epoch_id: int) -> None:
         from .. import snapshots as S
@@ -72,7 +41,7 @@ def snapshot_batch_committer(table_dir: str, num_parts: int = 16):
     return process_batch
 
 
-def stream_extract_snapshot(
+def stream_extract(
     spark: SparkSession,
     input_path: str,
     table_dir: str,
@@ -80,17 +49,23 @@ def stream_extract_snapshot(
     num_parts: int = 16,
     max_files_per_trigger: int = 8,
 ):
-    """:func:`stream_extract` with an ATOMIC, idempotent sink.
+    """Start an available-now streaming extraction of a parquet directory
+    into the snapshot table ``table_dir`` (read it with
+    ``snapshots.read_snapshot``).
 
-    The plain-parquet foreachBatch append has the classic exactly-once
-    hole: a crash between the parquet write and the streaming-checkpoint
-    commit replays the batch and duplicates its rows.  Here each batch
-    commits one snapshot (snapshots.py) tagged with its epoch id —
-    publish is a single atomic link, and a replayed epoch finds its tag
-    already committed and becomes a no-op, so the output table holds each
-    batch exactly once no matter where a crash lands.  Readers see only
-    published snapshots (isolation) and can time-travel the ingest
-    history.  Pinned in tests/test_streaming.py.
+    Returns the StreamingQuery; callers use ``processAllAvailable()`` +
+    ``stop()`` for batch-drain semantics, or leave it running for continuous
+    ingestion.  Restart with the same checkpoint_path resumes exactly once.
+
+    A plain-parquet foreachBatch append has the classic exactly-once hole:
+    a crash between the parquet write and the streaming-checkpoint commit
+    replays the batch and duplicates its rows.  Here each batch commits one
+    snapshot (snapshots.py) tagged with its epoch id — publish is a single
+    atomic link, and a replayed epoch finds its tag already committed and
+    becomes a no-op, so the table holds each batch exactly once no matter
+    where a crash lands.  Readers see only published snapshots (isolation)
+    and can time-travel the ingest history.  Pinned in
+    tests/test_streaming.py.
     """
     stream = (
         spark.readStream.schema(DOCS)

@@ -20,6 +20,7 @@ from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pdf_extraction_tests_spark import extract_core as ec
 from pdf_extraction_tests_spark import pipeline as pl
 from pdf_extraction_tests_spark.corpus import FORMAT_FAMILIES, make_document
+from pdf_extraction_tests_spark.schema import LAYOUT
 from tests import fixtures as fx
 
 
@@ -64,14 +65,26 @@ def _reference(docs):
     return rows
 
 
+def _layout_reference(docs):
+    return [{"doc_id": doc_id, **{f.name: r[f.name] for f in LAYOUT.fields[1:]}}
+            for doc_id, spans in docs for r in ec.spans_to_regions(spans or [])]
+
+
 def _assert_batch_equals_reference(docs, nan_offsets=False):
-    got = ec.extract_batch(_flat_batch(docs, nan_offsets))
+    """extract_batch equals extract_document per doc, and layout_batch
+    equals spans_to_regions per doc, on the batch of ``docs``."""
+    batch = _flat_batch(docs, nan_offsets)
+    got = ec.extract_batch(batch)
     assert list(got.columns) == ec.EXTRACT_FLAT_COLUMNS
     want = _reference(docs)
     assert len(got) == len(want)
     for i, w in enumerate(want):
         g = {c: _plain(got[c].iloc[i]) for c in ec.EXTRACT_FLAT_COLUMNS}
         assert g == w, (i, docs[i][0])
+    layout = ec.layout_batch(batch)
+    assert list(layout.columns) == [f.name for f in LAYOUT.fields]
+    assert [{c: _plain(v) for c, v in r.items()}
+            for r in layout.to_dict("records")] == _layout_reference(docs)
 
 
 def test_fixtures():
@@ -86,6 +99,7 @@ def test_every_format_family():
 
 def test_empty_batch_and_empty_docs():
     assert list(ec.extract_batch(_flat_batch([])).columns) == ec.EXTRACT_FLAT_COLUMNS
+    assert ec.layout_batch(_flat_batch([])).empty
     _assert_batch_equals_reference([("a", None), ("b", []), ("a", None)])
 
 
@@ -255,3 +269,29 @@ def test_chunk_rows_assemble_before_the_kernel(nan_offsets):
     want = _reference([("m", spans)])[0]
     for c in ec.EXTRACT_FLAT_COLUMNS:
         assert _plain(out[c].iloc[0]) == want[c], c
+
+
+def test_layout_stage_reads_the_region_table(monkeypatch):
+    """The layout stage builds each frame of whole docs from the batch
+    region table, chunked docs included, and never calls spans_to_regions."""
+    docs = [(d["doc_id"], d["spans"]) for d in fx.ALL_FIXTURES]
+    spans = fx.GENERIC_DOC["spans"]
+    want = _layout_reference(docs + [("g", spans)])
+    calls = []
+    real = ec.layout_batch
+    monkeypatch.setattr(ec, "layout_batch",
+                        lambda pdf: calls.append(len(pdf)) or real(pdf))
+
+    def forbidden(*a, **k):
+        raise AssertionError("per-document region parse called")
+    monkeypatch.setattr(ec, "spans_to_regions", forbidden)
+
+    whole = _flat_batch(docs, nan_offsets=True)
+    chunks = [spans[i:i + 4] for i in range(0, len(spans), 4)]
+    chunked = [_flat_batch([("g", c)]).assign(_chunk=k, _n=len(chunks))
+               for k, c in enumerate(chunks)]
+    batches = [whole.iloc[:3], whole.iloc[:0], whole.iloc[3:], *chunked]
+    out = pd.concat(pl._layout_batches_flat(iter(batches)), ignore_index=True)
+    assert calls == [3, len(docs) - 3, 1]
+    assert [{c: _plain(v) for c, v in r.items()}
+            for r in out.to_dict("records")] == want

@@ -16,7 +16,7 @@ import pytest
 from pdf_extraction_tests_spark import extract_core as ec
 from pdf_extraction_tests_spark import pipeline as pl
 from pdf_extraction_tests_spark.corpus import corpus_pandas, make_document
-from pdf_extraction_tests_spark.schema import DOCS
+from pdf_extraction_tests_spark.schema import DOCS, LAYOUT
 from tests import fixtures as fx
 
 
@@ -479,6 +479,35 @@ class TestOversizedDoc:
         rows = [r.asDict(recursive=True) for r in df.collect()]
         assert len(rows) == 1
         assert _spans_key(rows) == _oracle([doc])
+
+    def test_dual_debug_and_layout_chunk_oversized_doc(self, spark):
+        """dual, debug and layout cross a doc over DEFAULT_OVERSIZE_CHARS as
+        chunk rows (the explode's Generate is in the executed plan), and
+        their rows equal the per-doc reference over the whole doc."""
+        spans = [{"kind": "region", "media_ref": None, "offset": i,
+                  "text": f"1,200,{100 + i * 10},2000,50,plain text|"
+                          + "word " * 2000 + str(i)}
+                 for i in range(240)]
+        spans.insert(120, fx.span("media", "", "m://big", 240))
+        doc = {"doc_id": "oversized", "spans": spans}
+        assert sum(len(s["text"]) for s in spans) > pl.DEFAULT_OVERSIZE_CHARS
+        want = {
+            "extract_docs_dual":
+                ec.extract_dual_frame(pd.DataFrame([doc])).to_dict("records"),
+            "debug_boundaries": ec.boundary_debug_records(
+                "oversized", ec.spans_to_regions(spans)),
+            "extract_layout": [
+                {"doc_id": "oversized",
+                 **{f.name: r[f.name] for f in LAYOUT.fields[1:]}}
+                for r in ec.spans_to_regions(spans)],
+        }
+        assert all(want.values())
+        df = _docs_df(spark, [doc])
+        for name, rows in want.items():
+            out = getattr(pl, name)(df)
+            assert [r.asDict() for r in out.collect()] == rows, name
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "Generate" in plan, (name, plan)
 
 
 class TestLayoutTable:

@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 
 from pdf_extraction_tests_spark import extract_core as ec
+from pdf_extraction_tests_spark import snapshots as S
 from pdf_extraction_tests_spark.corpus import corpus_pandas
 from pdf_extraction_tests_spark.schema import DOCS
 from pdf_extraction_tests_spark.streaming.incremental import stream_extract
@@ -32,7 +33,7 @@ def test_streaming_matches_batch_kernel(spark, corpus_path, tmp_path):
         r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"])
                       for s in r["spans"]]
         for r in (row.asDict(recursive=True)
-                  for row in spark.read.parquet(out).collect())
+                  for row in S.read_snapshot(spark, out).collect())
     }
     oracle_df = ec.extract_docs_frame(pdf)
     want = {
@@ -49,27 +50,23 @@ def test_streaming_restart_is_exactly_once(spark, corpus_path, tmp_path):
     ckpt = str(tmp_path / "ckpt2")
     q1 = stream_extract(spark, path, out, ckpt, num_parts=4)
     q1.awaitTermination()
-    n1 = spark.read.parquet(out).count()
+    n1 = S.read_snapshot(spark, out).count()
     # restart with same checkpoint: no new input -> no duplicate output
     q2 = stream_extract(spark, path, out, ckpt, num_parts=4)
     q2.awaitTermination()
-    n2 = spark.read.parquet(out).count()
+    n2 = S.read_snapshot(spark, out).count()
     assert n1 == len(pdf)
     assert n2 == n1
 
 
 def test_snapshot_sink_matches_batch_and_travels(spark, corpus_path, tmp_path):
-    """stream_extract_snapshot: exactly-once into an atomic snapshot table;
-    each micro-batch is one epoch-tagged snapshot, history time-travels."""
-    from pdf_extraction_tests_spark import snapshots as S
-    from pdf_extraction_tests_spark.streaming.incremental import (
-        stream_extract_snapshot)
-
+    """stream_extract: exactly-once into an atomic snapshot table; each
+    micro-batch is one epoch-tagged snapshot, history time-travels."""
     path, pdf = corpus_path
     table = str(tmp_path / "snap_tbl")
     ckpt = str(tmp_path / "snap_ckpt")
-    q = stream_extract_snapshot(spark, path, table, ckpt, num_parts=4,
-                                max_files_per_trigger=1)
+    q = stream_extract(spark, path, table, ckpt, num_parts=4,
+                       max_files_per_trigger=1)
     q.awaitTermination()
     got = {r.doc_id for r in S.read_snapshot(spark, table).collect()}
     assert got == set(pdf["doc_id"])
@@ -83,11 +80,9 @@ def test_snapshot_sink_matches_batch_and_travels(spark, corpus_path, tmp_path):
 
 
 def test_snapshot_sink_replayed_epoch_is_noop(spark, corpus_path, tmp_path):
-    """The exactly-once hole the plain append sink has: a replayed epoch
+    """The exactly-once hole a plain append sink has: a replayed epoch
     (crash between sink write and checkpoint commit) must not duplicate
     rows — the epoch tag makes the second commit a no-op."""
-    from pdf_extraction_tests_spark import snapshots as S
-    from pdf_extraction_tests_spark.schema import DOCS
     from pdf_extraction_tests_spark.streaming.incremental import (
         snapshot_batch_committer)
 
