@@ -65,14 +65,13 @@ def main(argv: list[str] | None = None) -> None:
         from pdf_extraction_tests_spark import snapshots as S
         from pdf_extraction_tests_spark.pipeline import read_extracted
 
-        tag = f"run-{metrics['run_id']}"
-        if tag in S.committed_tags(args.publish_snapshot):
-            metrics["snapshot_version"] = None  # already published: no-op
-        else:
-            committed = read_extracted(spark, args.output)
-            metrics["snapshot_version"] = S.commit_snapshot(
-                committed.drop("run_id", "attempt_id"),
-                args.publish_snapshot, mode="append", tag=tag)
+        # a re-submitted run's tag is already published: the commit reads
+        # and writes nothing and returns None
+        committed = read_extracted(spark, args.output)
+        metrics["snapshot_version"] = S.commit_snapshot(
+            committed.drop("run_id", "attempt_id"),
+            args.publish_snapshot, mode="append",
+            tag=f"run-{metrics['run_id']}")
     print(json.dumps(metrics))
     spark.stop()
 

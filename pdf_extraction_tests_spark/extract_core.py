@@ -1156,10 +1156,11 @@ def analyze_document(records: list[dict]) -> dict:
     The per-document reference: used by :func:`extract_from_records` and the
     boundary-debug relation (:func:`boundary_debug_records`).  Production
     extraction runs the batch kernel (:func:`extract_batch`), a separate
-    implementation that tests pin equal to this one.
+    implementation that tests pin equal to this one.  The caller's records
+    are left as they were: the stages below write into copies.
     """
     parse_failures = sum(r["parse_failure"] for r in records)
-    live = [r for r in records if not r["parse_failure"]]
+    live = [dict(r) for r in records if not r["parse_failure"]]
     if any(r["element_type"] == "media" for r in live):
         live = reanchor_media(live)
     kept = filter_regions(live)
@@ -1339,10 +1340,10 @@ def extract_simple_from_records(doc_id: str, records: list[dict]) -> dict:
     Returns the same record shape as :func:`extract_from_records` so the
     two paths are directly comparable (the reference's cross-extractor
     differential).  ``document_format`` is the literal 'auto_detected'
-    (v10.R:799).
+    (v10.R:799).  The caller's records are left as they were.
     """
     parse_failures = sum(r["parse_failure"] for r in records)
-    live = [r for r in records if not r["parse_failure"]]
+    live = [dict(r) for r in records if not r["parse_failure"]]
     if any(r["element_type"] == "media" for r in live):
         live = reanchor_media(live)
     rows = [
@@ -1352,8 +1353,6 @@ def extract_simple_from_records(doc_id: str, records: list[dict]) -> dict:
     ]
     rows.sort(key=lambda r: (r["page"], r["y"], r["x"], r["offset"]))
     for i, r in enumerate(rows):
-        r = dict(r)
-        rows[i] = r
         r["row_id"] = i
     text_rows = [r for r in rows if r["element_type"] != "media"]
 
@@ -1470,14 +1469,14 @@ def extract_dual_document(doc_id: str, spans: Iterable[dict]) -> dict:
 
     Single-pass by construction: the spans are parsed to region records
     once (the expensive step — for PDF/HTML documents this is the byte
-    decode), then each extractor gets its own shallow-copied records
-    (both kernels mutate rows in place: ``_tl`` memo, row renumbering).
+    decode), then both extractors read the same records (each works on
+    its own copies).
     Distributed, this replaces two full pipelines + an equi-join with one
     mapInPandas stage — no shuffle at all.
     """
     recs = spans_to_regions(spans)
-    smart = extract_from_records(doc_id, [dict(r) for r in recs])
-    simple = extract_simple_from_records(doc_id, [dict(r) for r in recs])
+    smart = extract_from_records(doc_id, recs)
+    simple = extract_simple_from_records(doc_id, recs)
     return {
         "doc_id": doc_id,
         "title_match": smart["title"] == simple["title"],

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from . import extract_core as ec
 from .schema import CHECKPOINT, EXTRACTED_WITH_PART, LAYOUT
 from .shipping import map_batches
-from .tables import read_table, write_table
+from .tables import read_table
 
 # part_key cardinality: the checkpoint/resume granularity.  Deliberately
 # much larger than any shuffle partition count so hashing part_keys into
@@ -551,8 +551,8 @@ def run_pipeline(
     # creates exactly one directory and each task writes one file into it —
     # no tiny-file spray.  part_key stays a COLUMN (lineage/resume join
     # key): with 512 keys x N tasks it WOULD spray as a partition dir.
-    write_table(extracted, f"{out_dir}/extracted", mode="append",
-                partition_by=["run_id", "attempt_id"])
+    (extracted.write.mode("append").partitionBy("run_id", "attempt_id")
+     .parquet(f"{out_dir}/extracted"))
     elapsed = time.time() - t0
 
     # lineage: per-partition metrics from what was just written — a
@@ -576,7 +576,7 @@ def run_pipeline(
         .withColumn("ts", F.current_timestamp())
         .select([f.name for f in CHECKPOINT.fields])
     )
-    write_table(metrics, ckpt_path, mode="append")
+    metrics.write.mode("append").parquet(ckpt_path)
 
     totals = (
         read_table(spark, ckpt_path, schema=CHECKPOINT)

@@ -1,11 +1,11 @@
 """Snapshot tables: Iceberg-style semantics on plain Parquet.
 
-The north rule targets Iceberg tables; the sandbox has no
-``iceberg-spark-runtime`` jar, so :mod:`.tables` falls back to bare
-parquet directories.  This module upgrades that fallback with the table-
-format PROPERTIES the engine actually depends on, using only a filesystem
-with atomic rename/link (POSIX, HDFS, and object stores with a rename
-shim):
+The design targets Iceberg tables; the Spark image has no
+``iceberg-spark-runtime`` jar, so this module gives plain parquet
+directories the table-format PROPERTIES the engine depends on, using only
+a filesystem with atomic rename/link (POSIX, HDFS, and object stores with
+a rename shim).  Each snapshot's data is one unpartitioned parquet
+directory.
 
 * **atomic commit / snapshot isolation** — a snapshot is a JSON manifest
   listing immutable data directories; it becomes visible via one atomic
@@ -20,20 +20,23 @@ shim):
   version: one ``os.link`` wins, the loser gets
   :class:`ConcurrentCommitError` and retries on the fresh parent (same
   contract as Iceberg's optimistic commit).
+* **idempotent replay** — a commit whose ``tag`` a retained snapshot
+  already holds writes nothing (a replayed streaming epoch or job run).
+* **additive schema evolution** — appends may add columns; a type change
+  raises :class:`SchemaEvolutionError`.
 * **expiry** — ``expire_snapshots`` drops old manifests and deletes data
   dirs no retained manifest references (orphans from failed commits
   included).
 
-On a real cluster with the Iceberg runtime, ``tables.write_table`` takes
-the catalog path instead; this module is the self-contained stand-in that
-keeps checkpoint/lineage semantics honest in CI.
+Its callers are ``job.py --publish-snapshot``, the streaming sink
+(:mod:`.streaming.incremental`) and the learned BPE merge table
+(:mod:`.functions.bpe`).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import uuid
 
@@ -48,68 +51,6 @@ class SchemaEvolutionError(ValueError):
     """Append schema is incompatible with the table (type change) — only
     ADDITIVE evolution is supported.  Columns MISSING from an append are
     not an error: they keep their table slot and read NULL."""
-
-
-# ---------------------------------------------------------------------------
-# hidden partition transforms (Iceberg §partition-transforms): the table
-# remembers HOW it is partitioned; writers derive the partition value,
-# readers prune by it without ever seeing the hidden column.
-# ---------------------------------------------------------------------------
-
-_BUCKET_RE = re.compile(r"^bucket\(\s*(\d+)\s*,\s*(\w+)\s*\)$")
-_TRUNCATE_RE = re.compile(r"^truncate\(\s*(\d+)\s*,\s*(\w+)\s*\)$")
-
-
-def _parse_transform(spec: str) -> dict:
-    m = _BUCKET_RE.match(spec)
-    if m:
-        n, col = int(m.group(1)), m.group(2)
-        return {"kind": "bucket", "n": n, "col": col,
-                "hidden": f"_pb_{col}"}
-    m = _TRUNCATE_RE.match(spec)
-    if m:
-        w, col = int(m.group(1)), m.group(2)
-        return {"kind": "truncate", "w": w, "col": col,
-                "hidden": f"_pt_{col}"}
-    if not re.match(r"^\w+$", spec):
-        raise ValueError(f"unsupported partition transform {spec!r}")
-    return {"kind": "identity", "col": spec, "hidden": spec}
-
-
-def _bucket_of(value, n: int) -> int:
-    """Cross-layer bucket function: python-computable so readers can prune
-    without Spark, Spark-expressible so writers derive it scan-side.
-    Matches the engine-wide 48-bit md5 hash (CLAUDE.md invariant)."""
-    import hashlib
-    h = int(hashlib.md5(str(value).encode()).hexdigest()[:12], 16)
-    return h % n
-
-
-def _hidden_col(t: dict):
-    from pyspark.sql import functions as F
-    c = t["col"]
-    if t["kind"] == "bucket":
-        h48 = F.expr(
-            f"cast(conv(substr(md5(cast({c} as string)), 1, 12), 16, 10) "
-            f"as bigint)")
-        return F.pmod(h48, F.lit(t["n"])).cast("int")
-    if t["kind"] == "truncate":
-        return F.substring(F.col(c).cast("string"), 1, t["w"])
-    return F.col(c)
-
-
-def _eq_filter(t: dict, value):
-    """Reader-side pruning predicate for ``col == value`` under the
-    transform: the hidden-column equality prunes partitions (lossy for
-    bucket/truncate), the source-column equality keeps exactness."""
-    from pyspark.sql import functions as F
-    if t["kind"] == "bucket":
-        return ((F.col(t["hidden"]) == _bucket_of(value, t["n"]))
-                & (F.col(t["col"]) == value))
-    if t["kind"] == "truncate":
-        return ((F.col(t["hidden"]) == str(value)[:t["w"]])
-                & (F.col(t["col"]) == value))
-    return F.col(t["col"]) == value
 
 
 def _evolved_schema(parent: dict, new: dict) -> dict:
@@ -176,8 +117,7 @@ def _load_manifest(table_dir: str, version: int) -> dict:
 
 
 def commit_snapshot(df: DataFrame, table_dir: str, mode: str = "append",
-                    partition_by: list[str] | None = None,
-                    tag: str | None = None) -> int:
+                    tag: str | None = None) -> int | None:
     """Write ``df`` as a new snapshot; returns the published version.
 
     The data directory is written FIRST (unique name, never referenced
@@ -185,16 +125,9 @@ def commit_snapshot(df: DataFrame, table_dir: str, mode: str = "append",
     ``os.link`` — the only point at which the snapshot becomes visible.
     Raises :class:`ConcurrentCommitError` when another committer wins the
     version; the caller re-reads state and retries.  ``tag`` is an opaque
-    idempotence label recorded in the manifest (e.g. a streaming epoch id
-    — see :func:`committed_tags`): a replayed writer checks it before
-    re-committing.
-
-    ``partition_by`` entries may be plain columns (identity) or HIDDEN
-    transforms — ``"bucket(N, col)"`` / ``"truncate(W, col)"`` (Iceberg
-    partition-transform semantics): the writer derives the partition
-    value scan-side, the layout uses the derived column, and readers
-    never see it (:func:`read_snapshot` drops hidden columns and
-    :func:`read_snapshot`'s ``eq`` filters prune by them).
+    idempotence label recorded in the manifest (e.g. a streaming epoch id):
+    when a retained snapshot already holds it (see :func:`committed_tags`),
+    the commit is a replay — nothing is written and None is returned.
 
     Schema evolution is ADDITIVE on append: new columns join the table
     schema as nullable (old data reads NULL for them); columns missing
@@ -203,51 +136,26 @@ def commit_snapshot(df: DataFrame, table_dir: str, mode: str = "append",
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode {mode!r}")
+    if tag is not None and tag in committed_tags(table_dir):
+        return None
     os.makedirs(_meta(table_dir), exist_ok=True)
     parent_v = current_version(table_dir)
     new_v = parent_v + 1
     data_dir = os.path.join(
         table_dir, "data", f"s{new_v}-{uuid.uuid4().hex[:8]}")
-
-    parent_m = _load_manifest(table_dir, parent_v) if parent_v else None
-    spec = [_parse_transform(s) for s in (partition_by or [])]
-    if mode == "append" and parent_m:
-        parent_spec = parent_m.get("partition_by", [])
-        if partition_by is None:  # inherit the table's layout
-            spec = [_parse_transform(s) for s in parent_spec]
-            partition_by = parent_spec
-        elif list(partition_by) != parent_spec:
-            # an EMPTY parent spec is a spec too: appending partitioned
-            # data onto an unpartitioned table would leave old data dirs
-            # without the hidden column, and read_snapshot(eq=...) would
-            # then silently drop matching pre-transform rows (NULL != v).
-            raise ValueError(
-                f"append partition spec {list(partition_by)} != table's "
-                f"{parent_spec}")
-
-    out = df
-    hidden = [t["hidden"] for t in spec if t["kind"] != "identity"]
-    for t in spec:
-        if t["kind"] != "identity":
-            out = out.withColumn(t["hidden"], _hidden_col(t))
-    w = out.write.mode("errorifexists")
-    if spec:
-        w = w.partitionBy(*[t["hidden"] for t in spec])
-    w.parquet(data_dir)
-
     schema = df.schema.jsonValue()
     parent_dirs: list[str] = []
-    if mode == "append" and parent_m:
+    if mode == "append" and parent_v:
+        parent_m = _load_manifest(table_dir, parent_v)
         parent_dirs = parent_m["data_dirs"]
         schema = _evolved_schema(parent_m["schema"], schema)
+    df.write.mode("errorifexists").parquet(data_dir)
     manifest = {
         "version": new_v,
         "parent": parent_v or None,
         "mode": mode,
         "data_dirs": [*parent_dirs, data_dir],
-        "schema": schema,                      # USER schema (no hidden cols)
-        "partition_by": list(partition_by or []),
-        "hidden_cols": hidden,
+        "schema": schema,
         "tag": tag,
     }
     tmp = os.path.join(_meta(table_dir),
@@ -273,16 +181,9 @@ def commit_snapshot(df: DataFrame, table_dir: str, mode: str = "append",
 
 
 def read_snapshot(spark: SparkSession, table_dir: str,
-                  version: int | None = None,
-                  eq: dict | None = None) -> DataFrame | None:
+                  version: int | None = None) -> DataFrame | None:
     """Read a snapshot (default: current).  None when the table is empty
-    or the requested version has been expired.
-
-    ``eq`` maps column -> value equality predicates; for columns covered
-    by a hidden partition transform the matching partition-column filter
-    is added too, so the scan PRUNES to the matching bucket/truncation
-    directories (PartitionFilters in the plan — pinned in
-    tests/test_plans.py).  Hidden columns never appear in the result."""
+    or the requested version has been expired."""
     v = current_version(table_dir) if version is None else version
     if v <= 0:
         return None
@@ -290,7 +191,6 @@ def read_snapshot(spark: SparkSession, table_dir: str,
         m = _load_manifest(table_dir, v)
     except FileNotFoundError:
         return None
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(m["schema"])
@@ -306,37 +206,7 @@ def read_snapshot(spark: SparkSession, table_dir: str,
             f"(first: {missing[0]}); reading the rest", RuntimeWarning)
     if not dirs:
         return spark.createDataFrame([], schema)
-    spec = {t["col"]: t
-            for t in (_parse_transform(s) for s in m.get("partition_by", []))}
-    # hidden partition columns are appended to the read schema so the
-    # scanner recovers them from the directory layout (and can prune on
-    # them); they are dropped before the frame is returned
-    storage = StructType.fromJson(m["schema"])
-    from pyspark.sql.types import IntegerType, StringType, StructField
-    for t in spec.values():
-        if t["kind"] == "bucket":
-            storage = StructType(
-                [*storage.fields,
-                 StructField(t["hidden"], IntegerType(), True)])
-        elif t["kind"] == "truncate":
-            storage = StructType(
-                [*storage.fields, StructField(t["hidden"], StringType(),
-                                              True)])
-    if len(dirs) == 1 or not spec:
-        df = spark.read.schema(storage).parquet(*dirs)
-    else:
-        # several partitioned roots can't share one multi-path read
-        # (CONFLICTING_DIRECTORY_STRUCTURES without a common basePath):
-        # scan each snapshot dir and union — filters (incl. partition
-        # pruning) push through the union into every branch
-        from functools import reduce
-        df = reduce(lambda a, b: a.unionByName(b),
-                    [spark.read.schema(storage).parquet(d) for d in dirs])
-    for col, val in (eq or {}).items():
-        t = spec.get(col)
-        df = df.filter(_eq_filter(t, val) if t is not None
-                       else F.col(col) == val)
-    return df.select(*[f.name for f in schema.fields])
+    return spark.read.schema(schema).parquet(*dirs)
 
 
 def list_snapshots(table_dir: str) -> list[dict]:
@@ -408,23 +278,3 @@ def expire_snapshots(table_dir: str, keep_last: int = 2,
             shutil.rmtree(d, ignore_errors=True)
             deleted.append(d)
     return deleted
-
-
-def compact_snapshots(spark: SparkSession, table_dir: str,
-                      target_partitions: int = 8) -> int:
-    """Rewrite the CURRENT snapshot's data into one coalesced directory
-    and publish it as an overwrite snapshot (Iceberg's
-    rewrite_data_files shape).
-
-    The natural companion to the streaming sink: one snapshot per
-    micro-batch epoch accumulates many small data dirs/files; compaction
-    collapses the current view into ``target_partitions`` files while
-    history (and time travel to pre-compaction versions) stays intact
-    until ``expire_snapshots`` reclaims it.  Returns the new version.
-    """
-    cur = read_snapshot(spark, table_dir)
-    if cur is None:
-        raise ValueError(f"{table_dir}: nothing to compact")
-    v = current_version(table_dir)
-    return commit_snapshot(cur.coalesce(target_partitions), table_dir,
-                           mode="overwrite", tag=f"compaction-of-v{v}")

@@ -7,10 +7,12 @@ directory distributed (S1/S8 in SURVEY §2.1) and the byte->spans parse runs
 inside a batched ``mapInPandas`` stage — one JVM->Python crossing per Arrow
 batch, not per file.
 
-Real PDF rasterization + layout detection + OCR need poppler / a layout
-model / tesseract, none of which exist in this image — ``parse_pdf_bytes``
-raises ``NotImplementedError`` and is the single function to replace in
-production.  For end-to-end testing the source also understands two
+``parse_pdf_bytes`` decodes digitally-born PDFs through the pure-Python
+decoder :mod:`.pdf_min` (one region span per text block, media spans for
+image draws).  Scanned, image-only or otherwise undecodable PDFs need
+rasterization + layout detection + OCR; they go through the pluggable
+stack in :mod:`.scanned` when one is passed, and otherwise become one
+parse-failure span for that document.  The source also understands two
 deterministic container formats:
 
 * ``SPDF`` — our fixture container: a ``b"SPDF\\n"`` magic followed by one

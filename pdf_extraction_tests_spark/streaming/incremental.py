@@ -32,11 +32,11 @@ def snapshot_batch_committer(table_dir: str, num_parts: int = 16):
     def process_batch(batch_df, epoch_id: int) -> None:
         from .. import snapshots as S
 
-        tag = f"epoch-{int(epoch_id)}"
-        if tag in S.committed_tags(table_dir):
-            return  # replayed batch after a crash: already durable
+        # a replayed epoch after a crash is already durable: its tag makes
+        # the commit a no-op, and the lazy frame never runs extraction
         out = extract_docs(batch_df, num_parts=num_parts)
-        S.commit_snapshot(out, table_dir, mode="append", tag=tag)
+        S.commit_snapshot(out, table_dir, mode="append",
+                          tag=f"epoch-{int(epoch_id)}")
 
     return process_batch
 

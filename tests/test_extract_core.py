@@ -485,6 +485,20 @@ class TestDualExtractor:
         assert [s["text"] for s in smart["spans"]][1].startswith("Left column second")
 
 
+@pytest.mark.parametrize("doc", fx.ALL_FIXTURES, ids=lambda d: d["doc_id"])
+def test_per_doc_kernels_leave_records_unchanged(doc):
+    """A region list reused after one per-doc kernel reads the same in the
+    next: no kernel writes into the caller's records."""
+    import copy
+
+    recs = ec.spans_to_regions(doc["spans"])
+    before = copy.deepcopy(recs)
+    ec.boundary_debug_records(doc["doc_id"], recs)
+    ec.extract_from_records(doc["doc_id"], recs)
+    ec.extract_simple_from_records(doc["doc_id"], recs)
+    assert recs == before
+
+
 class TestDeterminism:
     def test_twice_identical(self):
         a = ec.extract_document(fx.GENERIC_DOC["doc_id"], fx.GENERIC_DOC["spans"])

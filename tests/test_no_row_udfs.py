@@ -56,3 +56,18 @@ def test_mapinpandas_only_in_shipping():
                 offenders.append(f"{path.name}:{i}: {line.strip()}")
     assert not offenders, ("mapInPandas outside shipping.map_batches:\n"
                            + "\n".join(offenders))
+
+
+def test_env_reads_only_in_session():
+    """Deployment settings live in ``session.py``; an environment read
+    anywhere else is a switch no caller can see (and no test sets)."""
+    env_re = re.compile(r"\bos\.(environ|getenv)\b|\bgetenv\s*\(")
+    offenders = []
+    for path in PKG.rglob("*.py"):
+        if path == PKG / "session.py":
+            continue
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if env_re.search(line.split("#")[0]):
+                offenders.append(f"{path.relative_to(PKG)}:{i}: {line.strip()}")
+    assert not offenders, ("environment reads outside session.py:\n"
+                           + "\n".join(offenders))

@@ -383,8 +383,6 @@ class TestCheckpointResume:
         invisible to read_extracted and to metrics."""
         from pyspark.sql import functions as F
 
-        from pdf_extraction_tests_spark.tables import write_table
-
         docs = fx.ALL_FIXTURES[:3]
         df = _docs_df(spark, docs)
         out = str(tmp_path / "crash")
@@ -394,8 +392,8 @@ class TestCheckpointResume:
             .withColumn("run_id", F.lit("rC"))
             .withColumn("attempt_id", F.lit("dead_attempt"))
         )
-        write_table(orphan, f"{out}/extracted", mode="append",
-                    partition_by=["run_id", "attempt_id"])
+        (orphan.write.mode("append").partitionBy("run_id", "attempt_id")
+         .parquet(f"{out}/extracted"))
         # resume with the same run_id: no checkpoint rows -> everything
         # re-processes under a fresh attempt_id
         m = pl.run_pipeline(spark, df, out, run_id="rC", num_parts=4)

@@ -62,8 +62,7 @@ class TestSnapshots:
         t = str(tmp_path / "tbl")
         S.commit_snapshot(_df(spark, [1]), t)
         m = {"version": 2, "parent": 1, "mode": "append", "data_dirs": [],
-             "schema": _df(spark, [1]).schema.jsonValue(), "partition_by": [],
-             "tag": None}
+             "schema": _df(spark, [1]).schema.jsonValue(), "tag": None}
         with open(S._manifest_path(t, 2), "w") as f:
             json.dump(m, f)
         monkeypatch.setattr(S, "current_version", lambda _t: 1)  # stale read
@@ -90,6 +89,31 @@ class TestSnapshots:
         assert sorted(r.doc_id for r in
                       S.read_snapshot(spark, t).collect()) == [1, 2, 3]
 
+    def test_committed_tag_is_not_committed_again(self, spark, tmp_path):
+        """A replayed writer (streaming epoch, re-submitted job run) passes
+        the same tag again: the second commit writes nothing."""
+        t = str(tmp_path / "tbl")
+        assert S.commit_snapshot(_df(spark, [1]), t, tag="epoch-0") == 1
+        assert S.commit_snapshot(_df(spark, [1]), t, tag="epoch-0") is None
+        assert [m["version"] for m in S.list_snapshots(t)] == [1]
+        assert len(os.listdir(os.path.join(t, "data"))) == 1
+        assert [r.doc_id for r in S.read_snapshot(spark, t).collect()] == [1]
+        assert S.commit_snapshot(_df(spark, [2]), t, tag="epoch-1") == 2
+
+    def test_older_manifest_keys_are_ignored(self, spark, tmp_path):
+        """Manifests that also carry ``partition_by``/``hidden_cols`` (an
+        earlier layout's keys, always empty for unpartitioned tables) still
+        read and take appends."""
+        t = str(tmp_path / "tbl")
+        S.commit_snapshot(_df(spark, [1]), t)
+        m = S._load_manifest(t, 1)
+        m.update({"partition_by": [], "hidden_cols": []})
+        with open(S._manifest_path(t, 1), "w") as f:
+            json.dump(m, f)
+        S.commit_snapshot(_df(spark, [2]), t)
+        assert sorted(r.doc_id
+                      for r in S.read_snapshot(spark, t).collect()) == [1, 2]
+
     def test_expire_after_overwrite_frees_old_data(self, spark, tmp_path):
         t = str(tmp_path / "tbl")
         S.commit_snapshot(_df(spark, [1, 2]), t)
@@ -97,38 +121,6 @@ class TestSnapshots:
         deleted = S.expire_snapshots(t, keep_last=1, orphan_grace_sec=0)
         assert len(deleted) == 1                              # v1's data dir
         assert [r.doc_id for r in S.read_snapshot(spark, t).collect()] == [9]
-
-    def test_partitioned_snapshot_roundtrip(self, spark, tmp_path):
-        t = str(tmp_path / "tbl")
-        df = spark.createDataFrame(pd.DataFrame(
-            {"doc_id": [1, 2, 3], "lang": ["en", "de", "en"],
-             "text": ["a", "b", "c"]}))
-        S.commit_snapshot(df, t, partition_by=["lang"])
-        got = S.read_snapshot(spark, t)
-        assert sorted((r.doc_id, r.lang) for r in got.collect()) \
-            == [(1, "en"), (2, "de"), (3, "en")]
-
-
-class TestCompaction:
-    def test_compaction_preserves_rows_and_history(self, spark, tmp_path):
-        t = str(tmp_path / "tbl")
-        for i in range(4):           # four tiny appends: the small-file shape
-            S.commit_snapshot(_df(spark, [i]), t)
-        before = sorted(r.doc_id for r in S.read_snapshot(spark, t).collect())
-        v = S.compact_snapshots(spark, t, target_partitions=1)
-        assert v == 5
-        after = S.read_snapshot(spark, t)
-        assert sorted(r.doc_id for r in after.collect()) == before
-        assert after.rdd.getNumPartitions() == 1
-        # one data dir now backs the current view; history still travels
-        assert S.list_snapshots(t)[-1]["n_data_dirs"] == 1
-        assert sorted(r.doc_id for r in
-                      S.read_snapshot(spark, t, 2).collect()) == [0, 1]
-        # expiry then reclaims the pre-compaction dirs
-        deleted = S.expire_snapshots(t, keep_last=1, orphan_grace_sec=0)
-        assert len(deleted) == 4
-        assert sorted(r.doc_id
-                      for r in S.read_snapshot(spark, t).collect()) == before
 
 
 class TestExpireGracePeriod:
@@ -209,83 +201,6 @@ class TestSnapshotSequencesMatchModel:
             assert got == sorted(want), f"version {v}"
 
 
-class TestPartitionTransforms:
-    def test_bucket_transform_roundtrip_hides_column(self, spark, tmp_path):
-        t = str(tmp_path / "tbl")
-        df = _df(spark, range(20))
-        S.commit_snapshot(df, t, partition_by=["bucket(4, doc_id)"])
-        got = S.read_snapshot(spark, t)
-        assert sorted(got.columns) == ["doc_id", "text"]  # hidden col gone
-        assert sorted(r.doc_id for r in got.collect()) == list(range(20))
-        # the layout really is bucketed: _pb_doc_id dirs on disk
-        data = S._load_manifest(t, 1)["data_dirs"][0]
-        assert any(n.startswith("_pb_doc_id=") for n in os.listdir(data))
-
-    def test_eq_read_prunes_and_is_exact(self, spark, tmp_path):
-        t = str(tmp_path / "tbl")
-        S.commit_snapshot(_df(spark, range(40)), t,
-                          partition_by=["bucket(4, doc_id)"])
-        got = S.read_snapshot(spark, t, eq={"doc_id": 7})
-        rows = got.collect()
-        assert [r.doc_id for r in rows] == [7]
-        from pdf_extraction_tests_spark.plans.audit import formatted_plan
-        plan = formatted_plan(got)
-        import re as _re
-        m = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-        assert m and "_pb_doc_id" in m.group(1), plan  # pruning planned
-
-    def test_truncate_transform(self, spark, tmp_path):
-        import pandas as pd
-        t = str(tmp_path / "tbl")
-        df = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1, 2, 3], "src": ["alpha", "alto", "beta"]}))
-        S.commit_snapshot(df, t, partition_by=["truncate(2, src)"])
-        got = S.read_snapshot(spark, t, eq={"src": "alto"})
-        assert [(r.doc_id, r.src) for r in got.collect()] == [(2, "alto")]
-        assert sorted(got.columns) == ["doc_id", "src"]
-
-    def test_append_inherits_layout_and_rejects_conflicts(self, spark,
-                                                          tmp_path):
-        t = str(tmp_path / "tbl")
-        S.commit_snapshot(_df(spark, [1, 2]), t,
-                          partition_by=["bucket(4, doc_id)"])
-        S.commit_snapshot(_df(spark, [3]), t)  # inherits bucket(4, doc_id)
-        data2 = S._load_manifest(t, 2)["data_dirs"][-1]
-        assert any(n.startswith("_pb_doc_id=") for n in os.listdir(data2))
-        assert sorted(r.doc_id for r in
-                      S.read_snapshot(spark, t).collect()) == [1, 2, 3]
-        with pytest.raises(ValueError, match="partition spec"):
-            S.commit_snapshot(_df(spark, [4]), t,
-                              partition_by=["bucket(8, doc_id)"])
-
-    def test_append_partitioned_onto_unpartitioned_rejected(self, spark,
-                                                            tmp_path):
-        # an EMPTY parent spec is a spec: silently accepting a partitioned
-        # append would leave v1's data dirs without the hidden column and
-        # read_snapshot(eq=...) would drop matching pre-transform rows
-        t = str(tmp_path / "tbl")
-        S.commit_snapshot(_df(spark, [1, 2]), t)  # unpartitioned
-        with pytest.raises(ValueError, match="partition spec"):
-            S.commit_snapshot(_df(spark, [3]), t,
-                              partition_by=["bucket(4, doc_id)"])
-        # identity specs conflict the same way
-        with pytest.raises(ValueError, match="partition spec"):
-            S.commit_snapshot(_df(spark, [3]), t, partition_by=["doc_id"])
-        # overwrite may still re-layout the table
-        S.commit_snapshot(_df(spark, [5]), t, mode="overwrite",
-                          partition_by=["bucket(4, doc_id)"])
-        assert [r.doc_id for r in
-                S.read_snapshot(spark, t).collect()] == [5]
-
-    def test_bucket_function_is_engine_hash(self, spark):
-        # python-side bucket == the engine-wide 48-bit md5 hash mod n
-        import hashlib
-        for v, n in ((7, 4), ("x", 16), (123456, 8)):
-            want = int(hashlib.md5(str(v).encode()).hexdigest()[:12],
-                       16) % n
-            assert S._bucket_of(v, n) == want
-
-
 class TestSchemaEvolution:
     def test_additive_column_null_fills_old_rows(self, spark, tmp_path):
         import pandas as pd
@@ -320,3 +235,5 @@ class TestSchemaEvolution:
             {"doc_id": ["not-an-int"], "text": ["x"]}))
         with pytest.raises(S.SchemaEvolutionError):
             S.commit_snapshot(bad, t, mode="append")
+        # rejected before its data is written: no orphan dir to expire
+        assert len(os.listdir(os.path.join(t, "data"))) == 1
