@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .dedup import h48
+from .dedup import _h48_duck, h48
 
 _M61 = (1 << 61) - 1
 _A = [10007, 11003, 12011, 13001, 14011]
@@ -46,7 +46,7 @@ def _pos(key_expr: str, i: int, m_bits: int):
 
 
 def _pos_sql(key_expr: str, i: int, m_bits: int) -> str:
-    h = f"('0x' || substr(md5({key_expr}), 1, 12))::BIGINT"
+    h = _h48_duck(key_expr)
     return f"((({h}) * {_A[i]} + {_B[i]}) % {_M61}) % {m_bits}"
 
 

@@ -12,11 +12,10 @@ Spark shape:
   — no explode of the corpus, no Python;
 * corpus stats (N, avgdl) and per-term df are tiny aggregates, broadcast
   back via crossJoin(broadcast(...)) — never a driver collect;
-* the per-term top-k runs TWO-PHASE: a salted (term, salt) window prunes to
-  k rows per salt bucket, then the global per-term window ranks at most
-  k * salt survivors.  A single window partitioned by term would funnel
-  every scoring document of a hot term through one task — the classic
-  skew cliff at corpus scale (same reasoning as skew.salted_ordered_concat).
+* the per-term top-k is ``skew.two_phase_topk``: a salted (term, salt)
+  window prunes before the per-term rank.  A single window partitioned by
+  term would funnel every scoring document of a hot term through one
+  task — the classic skew cliff at corpus scale.
 
 Determinism: ranking ties break on ascending doc id in both phases, so the
 result is independent of partitioning and matches the DuckDB oracle rank
@@ -25,11 +24,12 @@ for rank.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from .skew import two_phase_topk
 
 K1 = 1.2
 B = 0.75
-DEFAULT_SALT = 8
 
 
 def bm25_topk(
@@ -40,7 +40,6 @@ def bm25_topk(
     text_col: str = "text",
     k1: float = K1,
     b: float = B,
-    salt: int = DEFAULT_SALT,
 ) -> DataFrame:
     """Top-``k`` documents per query term by BM25 score.
 
@@ -67,7 +66,7 @@ def bm25_topk(
         .filter(F.col("tf") > 0)
         .drop("w")
     )
-    return _rank_scored(scored, stats, k, id_col, k1, b, salt)
+    return _rank_scored(scored, stats, k, id_col, k1, b)
 
 
 def _rank_scored(
@@ -77,7 +76,6 @@ def _rank_scored(
     id_col: str,
     k1: float,
     b: float,
-    salt: int,
 ) -> DataFrame:
     """BM25 scoring + salted two-phase top-k over a
     (term, id_col, tf, dl) posting frame and a 1-row (n_docs, avgdl)
@@ -107,39 +105,16 @@ def _rank_scored(
         )
     )
 
-    # phase 1: prune inside (term, salt) buckets — bounded window state
-    pruned = (
-        enriched.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt))
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                W.partitionBy("term", "_salt").orderBy(
-                    F.desc("score"), F.asc(id_col)
-                )
-            ),
-        )
-        .filter(F.col("_rn") <= k)
-        .drop("_rn", "_salt")
-    )
-    # phase 2: final rank over <= k * salt survivors per term
-    return (
-        pruned.withColumn(
-            "rank",
-            F.row_number().over(
-                W.partitionBy("term").orderBy(F.desc("score"), F.asc(id_col))
-            ),
-        )
-        .filter(F.col("rank") <= k)
-        .select(
-            "term",
-            F.col("rank").cast("int").alias("rank"),
-            id_col,
-            F.col("tf").cast("bigint").alias("tf"),
-            F.col("dl").cast("bigint").alias("dl"),
-            F.round("score", 4).alias("score"),
-        )
+    ranked = two_phase_topk(enriched, "term",
+                            [F.desc("score"), F.asc(id_col)],
+                            F.col(id_col), k)
+    return ranked.select(
+        "term",
+        "rank",
+        id_col,
+        F.col("tf").cast("bigint").alias("tf"),
+        F.col("dl").cast("bigint").alias("dl"),
+        F.round("score", 4).alias("score"),
     )
 
 

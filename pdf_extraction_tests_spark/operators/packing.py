@@ -1,97 +1,102 @@
-"""Sequence packing: assign documents to fixed token-length training
-sequences (the "concat-and-chunk" packing used to build LLM pretraining
-batches — documents are concatenated in a deterministic order and sliced
-into ``seq_len``-token sequences; each document records which sequence its
-first token lands in and at what offset).
+"""The one distributed exclusive prefix sum, and sequence packing on it.
 
-Spark-first at 100 TB: the exclusive prefix sum over token counts reuses
-the q45 two-level shape — NO global-ordered window over the corpus (that
-funnels every row through one task):
+:func:`prior_sum` gives every row the sum of a value over all earlier rows
+of a total order, with NO global-ordered window over the corpus (that
+funnels every row through one task).  It is the two-level shape of a
+parallel prefix sum:
 
-1. sub-bucket = floor(doc_id / sub_width) — monotone in the (doc_id)
-   concatenation order, so per-bucket order + bucket order = total order;
-2. per-bucket token totals (one hash aggregate);
+1. sub-bucket = floor(id / width): monotone in the id tiebreak, so
+   (lead, sub-bucket, id) is the same total order as (lead, id).  The
+   width is a column of a broadcast 1-row ``max(id)`` aggregate, sized so
+   the totals frame stays <= MAX_TOTALS_ROWS per lead value at any corpus
+   size, so building the plan runs no job;
+2. per-bucket totals (one hash aggregate);
 3. exclusive bucket offsets via an ordered window over the TOTALS frame
-   only (corpus_size / sub_width rows — the small sequential pass of a
-   parallel prefix sum; widen ``sub_width`` at scale to keep it tiny);
-4. broadcast offsets back; per-bucket PARTITIONED exclusive running sum.
+   only, the small sequential pass;
+4. offsets broadcast back; a per-bucket PARTITIONED exclusive running sum.
 
-Plan shape pinned in tests/test_plans.py; value parity vs a DuckDB global
-window in q49's oracle.
+q45 (token-budget head) and q49 (:func:`sequence_pack`) use it.  Plan
+shape pinned in tests/test_plans.py; value parity vs a DuckDB global
+window in both oracles.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-# ceiling on the totals-frame row count (step 3's single-task ordered
-# window).  65,536 eight-byte rows is a trivially small frame at any
-# executor size; auto_sub_width widens the sub-bucket so the frame never
-# exceeds it no matter the corpus (1e12 docs -> width ~1.5e7, frame 65k).
+# ceiling on the totals-frame rows per lead value (step 3's single-task
+# ordered window).  65,536 eight-byte rows is a trivially small frame at
+# any executor size; the width grows with the id domain so the frame never
+# exceeds it (1e12 docs -> width ~1.5e7, frame 65k).
 MAX_TOTALS_ROWS = 65_536
 
 
-def auto_sub_width(docs: DataFrame, id_col: str = "doc_id",
-                   max_totals_rows: int = MAX_TOTALS_ROWS) -> int:
-    """Derive the prefix-sum sub-bucket width from the corpus's id domain
-    so the totals frame (the small sequential pass of the parallel prefix
-    sum) stays <= ``max_totals_rows`` at ANY scale — the round-5 verdict's
-    watch item was a fixed /64 divisor whose frame grows linearly with the
-    corpus.  One bounded 1-row aggregate job (column-stats scan)."""
-    row = docs.agg(F.max(F.col(id_col)).alias("m")).first()  # bounded-sample ok
-    max_id = row["m"] if row and row["m"] is not None else 0
-    return max(64, -(-int(max_id + 1) // max_totals_rows))
+def _width(df: DataFrame, id_col: str) -> DataFrame:
+    """1-row frame: the sub-bucket width ``_w`` for ``df``'s id domain,
+    ceil((max id + 1) / MAX_TOTALS_ROWS) and at least 64."""
+    n = MAX_TOTALS_ROWS
+    return df.agg(F.expr(
+        f"greatest(64, (coalesce(max({id_col}), 0) + {n}) div {n})"
+    ).alias("_w"))
+
+
+def prior_sum(scored: DataFrame, value: str, lead: str | None, id_col: str,
+              limit: int | None = None) -> DataFrame:
+    """``scored`` plus ``_prior``: the sum of ``value`` over every earlier
+    row in (``lead`` DESC, ``id_col`` ASC) order (``lead=None``: id order
+    alone).  NULL when no earlier row has a non-NULL value, the NULL rule
+    of a SQL running sum.
+
+    ``limit`` prunes every bucket whose offset is past it before the
+    join-back, so the corpus-sized window exchange carries only the
+    head buckets; with non-negative values, every pruned row has
+    ``_prior > limit``."""
+    keys = ([lead] if lead else []) + ["_sub"]
+    width = F.broadcast(_width(scored, id_col))
+    subbed = scored.crossJoin(width).withColumn(
+        "_sub", F.floor(F.col(id_col) / F.col("_w"))).drop("_w")
+    totals = subbed.groupBy(*keys).agg(F.sum(value).alias("_bt"))
+    order = ([F.desc(lead)] if lead else []) + [F.asc("_sub")]
+    off_w = W.orderBy(*order).rowsBetween(W.unboundedPreceding, -1)
+    offsets = totals.select(*keys, F.sum("_bt").over(off_w).alias("_off"))
+    off = F.col("_off")
+    if limit is not None:
+        offsets = offsets.filter(off.isNull() | (off <= F.lit(limit)))
+    run_w = (
+        W.partitionBy(*keys).orderBy(F.asc(id_col))
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    run = F.sum(value).over(run_w)
+    return (
+        subbed.join(F.broadcast(offsets), keys)
+        .withColumn("_prior", F.coalesce(off + run, off, run))
+        .drop("_sub", "_off")
+    )
 
 
 def sequence_pack(docs: DataFrame, seq_len: int = 2048,
                   text_col: str = "text", id_col: str = "doc_id",
-                  sub_width: int | None = None,
                   tokenizer: str = "whitespace",
                   merges: list | None = None) -> DataFrame:
     """-> (doc_id, n_tokens, seq_id, seq_offset) for every non-NULL-text
     document, under the chosen tokenization and doc_id concatenation
-    order.  ``seq_id`` is the fixed-length sequence containing the doc's
-    first token; ``seq_offset`` its position inside that sequence (docs
+    order (the "concat-and-chunk" packing of LLM pretraining batches).
+    ``seq_id`` is the fixed-length sequence containing the doc's first
+    token; ``seq_offset`` its position inside that sequence (docs
     straddle boundaries, exactly like concat-and-chunk).
 
     ``tokenizer='whitespace'`` (default, DuckDB-oracled via q49) or
-    ``'bpe'`` (real subword counts — functions/bpe.py; same prefix-sum
-    machinery, scan-side Arrow kernel for the counts).
-
-    ``sub_width=None`` (default) auto-derives the bucket width from the
-    id domain via :func:`auto_sub_width`, keeping the totals frame
-    bounded by MAX_TOTALS_ROWS regardless of corpus size.  Any width
-    yields the SAME output (the sub-bucket is monotone in ``id_col``, so
-    bucket order + in-bucket order is always the total order)."""
+    ``'bpe'`` (real subword counts — functions/bpe.py; scan-side Arrow
+    kernel for the counts).  The token offsets are :func:`prior_sum`."""
     from ..functions.bpe import token_count_col
 
-    if sub_width is None:
-        sub_width = auto_sub_width(docs, id_col)
     toks = token_count_col(text_col, tokenizer, merges)
     scored = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        toks.alias("_toks"),
-        F.floor(F.col(id_col) / sub_width).alias("_sub"),
-    )
-    totals = scored.groupBy("_sub").agg(F.sum("_toks").alias("_bt"))
-    off_w = W.orderBy(F.asc("_sub")).rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_sub",
-        F.coalesce(F.sum("_bt").over(off_w), F.lit(0).cast("long"))
-        .alias("_off"),
-    )
-    run_w = (
-        W.partitionBy("_sub").orderBy(F.asc(id_col))
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    prior = F.col("_off") + F.coalesce(
-        F.sum("_toks").over(run_w), F.lit(0).cast("long"))
-    return (
-        scored.join(F.broadcast(offsets), ["_sub"])
-        .select(
-            id_col,
-            F.col("_toks").alias("n_tokens"),
-            F.floor(prior / seq_len).cast("long").alias("seq_id"),
-            (prior % seq_len).cast("long").alias("seq_offset"),
-        )
+        F.col(id_col), toks.alias("_toks"))
+    prior = F.coalesce(F.col("_prior"), F.lit(0).cast("long"))
+    return prior_sum(scored, "_toks", None, id_col).select(
+        id_col,
+        F.col("_toks").alias("n_tokens"),
+        F.floor(prior / seq_len).cast("long").alias("seq_id"),
+        (prior % seq_len).cast("long").alias("seq_offset"),
     )

@@ -20,7 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .dedup import h48
+from .dedup import _h48_duck, h48
+from .skew import two_phase_topk
 
 _DENOM = float((1 << 48) + 1)
 
@@ -50,7 +51,7 @@ def sample_weighted(df: DataFrame, id_expr: str, weight_col: str, k: int,
 def sample_weighted_sql(table: str, id_expr: str, weight_col: str, k: int,
                         salt: str = "") -> str:
     """DuckDB twin of :func:`sample_weighted` (same hash, same key)."""
-    h = f"('0x' || substr(md5('{salt}' || {id_expr}), 1, 12))::BIGINT"
+    h = _h48_duck(f"'{salt}' || {id_expr}")
     key = f"power(({h} + 1.0) / {_DENOM!r}, 1.0 / {weight_col})"
     return f"""
 SELECT * EXCLUDE (sample_key),
@@ -66,8 +67,7 @@ FROM (
 
 
 def quota_sample(df: DataFrame, group_col: str, id_expr: str,
-                 weight_col: str, k: int, salt: str = "",
-                 prune_salt: int = 8) -> DataFrame:
+                 weight_col: str, k: int, salt: str = "") -> DataFrame:
     """Per-group weighted sample without replacement: the ``k`` largest
     E-S keys WITHIN each ``group_col`` value (uniform quota when the
     weight column is constant).  The training-mix workhorse: "keep at most
@@ -75,46 +75,17 @@ def quota_sample(df: DataFrame, group_col: str, id_expr: str,
 
     Scale shape: a single window partitioned by group would funnel every
     row of a hot group (one domain with 10^9 docs) through one task, so
-    the rank runs TWO-PHASE like bm25's top-k — a salted (group, _salt)
-    window prunes to k rows per bucket (bounded state), then the final
-    per-group window ranks <= k * prune_salt survivors.  Deterministic:
-    the E-S key is hash-derived and ties break on the id expression.
+    the rank is ``skew.two_phase_topk`` like bm25's top-k, salted on the
+    id expression.  Deterministic: the E-S key is hash-derived and ties
+    break on the id expression.
 
-    Returns (group_col, rank, *df columns, sample_key rounded 6dp).
+    Returns (*df columns, sample_key rounded 6dp, rank).
     """
-    from pyspark.sql import Window as W
-
-    key = es_key(id_expr, F.col(weight_col), salt)
-    keyed = (
-        df.where(F.col(weight_col) > 0)
-        .withColumn("sample_key", key)
-        .withColumn(
-            "_salt", F.pmod(F.xxhash64(F.expr(id_expr)), F.lit(prune_salt))
-        )
-    )
-    pruned = (
-        keyed.withColumn(
-            "_rn",
-            F.row_number().over(
-                W.partitionBy(group_col, "_salt").orderBy(
-                    F.desc("sample_key"), F.expr(id_expr)
-                )
-            ),
-        )
-        .filter(F.col("_rn") <= k)
-        .drop("_rn", "_salt")
-    )
+    keyed = df.where(F.col(weight_col) > 0).withColumn(
+        "sample_key", es_key(id_expr, F.col(weight_col), salt))
+    order = [F.desc("sample_key"), F.expr(id_expr)]
     return (
-        pruned.withColumn(
-            "rank",
-            F.row_number().over(
-                W.partitionBy(group_col).orderBy(
-                    F.desc("sample_key"), F.expr(id_expr)
-                )
-            ),
-        )
-        .filter(F.col("rank") <= k)
-        .withColumn("rank", F.col("rank").cast("int"))
+        two_phase_topk(keyed, group_col, order, F.expr(id_expr), k)
         .withColumn("sample_key", F.round("sample_key", 6))
     )
 
@@ -123,7 +94,7 @@ def quota_sample_sql(table: str, group_col: str, id_expr: str,
                      weight_col: str, k: int, salt: str = "") -> str:
     """DuckDB twin of :func:`quota_sample` (single window — the salted
     prune is a physical detail with identical results)."""
-    h = f"('0x' || substr(md5('{salt}' || {id_expr}), 1, 12))::BIGINT"
+    h = _h48_duck(f"'{salt}' || {id_expr}")
     key = f"power(({h} + 1.0) / {_DENOM!r}, 1.0 / {weight_col})"
     return f"""
 SELECT * EXCLUDE (sample_key), round(sample_key, 6) AS sample_key

@@ -41,20 +41,28 @@ def norm(vc):
     )
 
 
-def cosine_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact top-k by cosine similarity to a constant query vector.
-
-    The query vector is inlined as a literal array (broadcast to every task
-    inside the plan); one scan, one TakeOrdered — no shuffle of vectors.
-    """
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+def _rank(cand: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Top-k of ``cand`` by cosine of ``vec_col`` to its ``_q`` column."""
+    q = F.col("_q")
     sim = dot(F.col(vec_col), q) / (norm(F.col(vec_col)) * norm(q))
     return (
-        emb.select(F.col(id_col), F.round(sim, 6).alias("cosine"))
+        cand.select(F.col(id_col), F.round(sim, 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
     )
+
+
+def cosine_topk(emb: DataFrame, query: DataFrame, k: int = 10,
+                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Exact top-k by cosine similarity to ``query``, a 1-row frame whose
+    one column is the query vector.
+
+    The query row is cross-joined in by broadcast; one scan of ``emb``,
+    one TakeOrdered — no shuffle of vectors.  ``dot`` and ``norm`` cast to
+    double, so a float vector ranks bit-identically to its double
+    literal."""
+    return _rank(emb.crossJoin(F.broadcast(query.toDF("_q"))),
+                 k, id_col, vec_col)
 
 
 def hyperplanes(dim: int, bits: int = 8, seed: int = 42) -> np.ndarray:
@@ -96,26 +104,23 @@ def lsh_bucket_sql(planes: np.ndarray, vec_expr: str = "e") -> str:
     return " + ".join(terms)
 
 
-def ann_topk_expr(emb: DataFrame, query_vec: list[float], k: int = 10,
-                  bits: int = 4, seed: int = 42, id_col: str = "vec_id",
+def ann_topk_expr(emb: DataFrame, query: DataFrame, planes: np.ndarray,
+                  k: int = 10, id_col: str = "vec_id",
                   vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k (q28): probe only the query's sign-LSH bucket, exact-rank
-    inside it.
+    """ANN top-k (q28): probe only the bucket of ``query`` (a 1-row frame
+    whose one column is the query vector), exact-rank inside it.
 
-    Recall < 1 by construction (single-probe); raise recall with fewer bits
-    or multi-probe.  The bucket is :func:`lsh_bucket_expr`, so the whole
-    plan (bucket -> probe filter -> exact rank) is SQL-expressible; the
-    query's own bucket is computed driver-side with the identical float64
-    arithmetic.  At scale, ``bucket`` becomes the table's partition column
-    so a probe is a partition-pruned scan."""
-    dim = len(query_vec)
-    planes = hyperplanes(dim, bits, seed)
-    q = np.asarray(query_vec, dtype=np.float64)
-    q_bucket = int(((planes @ q > 0) * (1 << np.arange(bits))).sum())
+    Recall < 1 by construction (single-probe); raise recall with fewer
+    planes or multi-probe.  The query's bucket and every row's bucket are
+    the same :func:`lsh_bucket_expr` over ``planes``; the vector and its
+    bucket travel in one 1-row broadcast frame, so the whole plan (bucket
+    -> probe join -> exact rank) is SQL-expressible.  At scale, ``bucket``
+    becomes the table's partition column so a probe is a partition-pruned
+    scan."""
+    q = query.toDF("_q").withColumn("_qb", lsh_bucket_expr(planes, "_q"))
     bucketed = emb.withColumn("bucket", lsh_bucket_expr(planes, vec_col))
-    return cosine_topk(
-        bucketed.filter(F.col("bucket") == q_bucket), query_vec, k, id_col, vec_col
-    )
+    cand = bucketed.join(F.broadcast(q), F.col("bucket") == F.col("_qb"))
+    return _rank(cand, k, id_col, vec_col)
 
 
 def ann_topk_sql(planes: np.ndarray, k: int = 10, query_id: int = 0,

@@ -1,21 +1,25 @@
-"""Skew tools: salted two-phase aggregation for hot keys.
+"""Skew tools: salted two-phase aggregation and top-k for hot keys.
 
 Spark's AQE splits skewed JOIN partitions automatically, and hash
 aggregates with algebraic functions (count/sum/min/max) already combine
 map-side — but HOLISTIC aggregates (collect_list / ordered group-concat)
-funnel every row of a hot key through one task, and that is exactly the
-aggregate the extraction domain needs (reading-ordered text assembly per
-document/site/domain).  The classic fix: aggregate (key, salt) partials
-first, then merge the ``salt`` partials per key — no task ever holds more
-than ~1/salt of the hottest key's rows.
+and per-group ranking windows funnel every row of a hot key through one
+task, and those are exactly what the extraction domain needs
+(reading-ordered text assembly per document/site/domain, per-term and
+per-domain top-k).  The classic fix: work per (key, salt) first, then
+merge the salt partials per key — no task ever holds more than ~1/salt of
+the hottest key's rows.
 
 Two exchanges instead of one, both bounded; equivalence with the direct
-single-phase form is pinned in tests/test_operators.py::TestSaltedAgg.
+single-phase forms is pinned in tests/test_operators.py (TestSaltedAgg,
+TestQuotaSample).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window as W, functions as F
+
+TOPK_SALT = 8
 
 
 def salted_ordered_concat(df: DataFrame, key: str, order_col: str,
@@ -50,4 +54,28 @@ def salted_ordered_concat(df: DataFrame, key: str, order_col: str,
         F.array_join(
             F.transform(F.array_sort("_all"), lambda s: s["v"]), sep
         ).alias("concat"),
+    )
+
+
+def two_phase_topk(df: DataFrame, group_col: str, order: list[Column],
+                   salt_key: Column, k: int) -> DataFrame:
+    """The ``k`` first rows per ``group_col`` value in ``order`` (which
+    must be total), with their int ``rank`` (1..k).
+
+    Phase 1 ranks inside (group, pmod(xxhash64(salt_key), TOPK_SALT)) and
+    keeps k rows per salt bucket; phase 2 ranks the <= k * TOPK_SALT
+    survivors per group.  Every global top-k row is in its salt bucket's
+    top k, so the result equals one ``row_number`` window per group, while
+    no window holds more than ~1/TOPK_SALT of a hot group."""
+    salted = df.withColumn(
+        "_salt", F.pmod(F.xxhash64(salt_key), F.lit(TOPK_SALT)))
+    rn = F.row_number().over(W.partitionBy(group_col, "_salt").orderBy(*order))
+    pruned = (
+        salted.withColumn("_rn", rn).filter(F.col("_rn") <= k)
+        .drop("_rn", "_salt")
+    )
+    rank = F.row_number().over(W.partitionBy(group_col).orderBy(*order))
+    return (
+        pruned.withColumn("rank", rank).filter(F.col("rank") <= k)
+        .withColumn("rank", F.col("rank").cast("int"))
     )

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from .boilerplate import quoted
+from .dedup import h48
 
 # ---------------------------------------------------------------------------
 # Language ID - three signal tiers, all exact integer column arithmetic on
@@ -761,7 +762,5 @@ def token_counts_sql(table: str = "documents") -> str:
 def with_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """48-bit content fingerprint of the whitespace-normalized lowercase
     text (rolling-hash stand-in; md5-derived for the cross-engine oracle)."""
-    fp = F.expr(
-        f"cast(conv(substr(md5(lower(regexp_replace({text_col}, '\\\\s+', ' '))), 1, 12), 16, 10) as bigint)"
-    )
+    fp = h48(f"lower(regexp_replace({text_col}, '\\\\s+', ' '))")
     return docs.withColumn("fingerprint", fp)

@@ -740,35 +740,36 @@ def q26(spark, sf_dir):
 )
 def q27(spark, sf_dir):
     """Brute-force cosine top-k similarity search against a query vector
-    (vec_id=0's embedding), exact baseline for ANN."""
+    (vec_id=0's embedding, a 1-row frame broadcast into the plan), exact
+    baseline for ANN."""
     from .operators.similarity import cosine_topk
 
     emb = load(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    return cosine_topk(emb, [float(x) for x in qvec], k=10)
+    return cosine_topk(emb, _query_vec(emb), k=10)
+
+
+def _query_vec(emb: DataFrame) -> DataFrame:
+    """q27/q28's 1-row query frame: vec_id 0's embedding."""
+    return emb.filter(F.col("vec_id") == 0).select("embedding")
 
 
 from .operators import similarity as SIM  # noqa: E402
 
-_ANN_BITS, _ANN_SEED, _EMB_DIM = 4, 42, 64
+_EMB_DIM = 64
+_ANN_PLANES = SIM.hyperplanes(_EMB_DIM, 4)
 
 
-@query(
-    "q28_ann_lsh_topk",
-    SIM.ann_topk_sql(SIM.hyperplanes(_EMB_DIM, _ANN_BITS, _ANN_SEED), k=10),
-)
+@query("q28_ann_lsh_topk", SIM.ann_topk_sql(_ANN_PLANES, k=10))
 def q28(spark, sf_dir):
     """ANN: sign-LSH bucketed top-k (single-probe), expression-form bucket
     — per-bit sign(v . plane_b) as zip_with/aggregate with literal planes,
-    so the whole plan (bucket -> probe filter -> exact rank) has an exact
-    DuckDB oracle.  Recall vs brute force is asserted in
-    tests/test_operators.py."""
+    so the whole plan (bucket -> probe join -> exact rank) has an exact
+    DuckDB oracle.  The plan and the oracle share ``_ANN_PLANES``.
+    Recall vs brute force is asserted in tests/test_operators.py."""
     from .operators.similarity import ann_topk_expr
 
     emb = load(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    return ann_topk_expr(emb, [float(x) for x in qvec], k=10,
-                         bits=_ANN_BITS, seed=_ANN_SEED)
+    return ann_topk_expr(emb, _query_vec(emb), _ANN_PLANES, k=10)
 
 
 @query("q29_language_guess", TA.language_guess_sql())
@@ -1157,10 +1158,7 @@ def q44(spark, sf_dir):
     cluster size, no RNG state).  Pure scan-side predicate: at 100 TB this
     is a filter pushed into the scan, zero shuffle before the final count."""
     d = load(spark, sf_dir, "documents")
-    bucket = F.pmod(
-        F.expr("cast(conv(substr(md5(concat('s:', doc_id)), 1, 12), 16, 10) as bigint)"),
-        F.lit(100),
-    )
+    bucket = F.pmod(D.h48("concat('s:', doc_id)"), F.lit(100))
     rate = F.when(F.col("source").isin("src0", "src1", "src2"), 50).otherwise(20)
     return (
         d.filter(bucket < rate)
@@ -1198,66 +1196,31 @@ def q45(spark, sf_dir, tokenizer: str = "whitespace"):
     whitespace-token count fits a 20k budget — the 'best data first' mixing
     step.
 
-    Distributed two-level prefix sum (NO global-ordered window over the
-    corpus — the round-2 form funneled every row through one task):
-
-    1. bucket = (quality, floor(doc_id/sub_width)): the sub-bucket is
-       monotone in the doc_id tiebreak, so (quality DESC, sub ASC,
-       doc_id ASC) is the SAME total order as (quality DESC, doc_id ASC);
-    2. per-bucket token totals (one hash aggregate);
-    3. exclusive bucket offsets via an ordered window over the TOTALS frame
-       only — rows = n_quality_bands x n_subbuckets, the classic small
-       sequential pass of a parallel prefix sum;
-    4. broadcast offsets back; per-bucket PARTITIONED running sum + offset.
-
-    The sub-bucket width auto-derives from the id domain
-    (operators/packing.py:auto_sub_width) so the totals frame stays
-    <= MAX_TOTALS_ROWS per quality band at ANY corpus size — the round-5
-    verdict's watch item was a hardcoded /64 divisor.  Every corpus-sized
-    stage is scan + hash-partitioned window.
+    The running sum is ``packing.prior_sum`` over (quality DESC, doc_id):
+    a two-level prefix sum with NO global-ordered window over the corpus
+    (the round-2 form funneled every row through one task).  Its
+    ``limit`` drops the buckets that start past the budget before the
+    join-back, so the corpus-sized window exchange carries only the
+    budget's candidate buckets.  cum_tokens = prior + own count, NULL
+    exactly where the oracle's global running sum is (NULL text has a NULL
+    count and sum() skips it).
 
     ``tokenizer``: 'whitespace' (driver-registered, DuckDB-oracled) or
     'bpe' (real subword budget — functions/bpe.py; pytest-pinned)."""
     from .functions.bpe import token_count_col
-    from .operators.packing import auto_sub_width
+    from .operators.packing import prior_sum
     from .operators.text_analysis import with_quality_score
 
+    budget = 20000
     d = with_quality_score(load(spark, sf_dir, "documents"))
-    toks = token_count_col("text", tokenizer)
-    sub_width = auto_sub_width(d, "doc_id")
-    scored = d.select(
-        "doc_id", "quality", toks.alias("_toks"),
-        F.floor(F.col("doc_id") / sub_width).alias("_sub"),
-    )
-    totals = scored.groupBy("quality", "_sub").agg(F.sum("_toks").alias("_bt"))
-    off_w = (
-        W.orderBy(F.desc("quality"), F.asc("_sub"))
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    # _off stays NULL while every earlier bucket's count is NULL, so
-    # cum_tokens below is NULL exactly where the oracle's global running
-    # sum is (NULL text has a NULL count and sum() skips it)
-    offsets = totals.select(
-        "quality", "_sub", F.sum("_bt").over(off_w).alias("_off"))
-    # Budget prune BEFORE the join-back (guide §2.3 — shuffle fewer bytes):
-    # cum_tokens >= _off (token counts are never negative), so a bucket
-    # with _off > 20000 can only yield rows the final filter drops.
-    # Keeping only the other buckets turns the broadcast join into a
-    # selective semi-filter: the per-(quality,_sub) window exchange now
-    # carries just the head buckets instead of the whole corpus — at
-    # 100 TB this is the difference between shuffling every doc and
-    # shuffling only the budget's candidate buckets.  Output identical.
-    off = F.col("_off")
-    offsets = offsets.filter(off.isNull() | (off <= F.lit(20000)))
-    run_w = (
-        W.partitionBy("quality", "_sub").orderBy(F.asc("doc_id"))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    run = F.sum("_toks").over(run_w)
+    scored = d.select("doc_id", "quality",
+                      token_count_col("text", tokenizer).alias("_toks"))
+    prior, toks = F.col("_prior"), F.col("_toks")
     return (
-        scored.join(F.broadcast(offsets), ["quality", "_sub"])
-        .select("doc_id", F.coalesce(off + run, off, run).alias("cum_tokens"))
-        .filter(F.col("cum_tokens") <= 20000)
+        prior_sum(scored, "_toks", "quality", "doc_id", limit=budget)
+        .select("doc_id",
+                F.coalesce(prior + toks, prior, toks).alias("cum_tokens"))
+        .filter(F.col("cum_tokens") <= budget)
     )
 
 
@@ -1386,10 +1349,10 @@ def q49(spark, sf_dir):
     """Sequence packing (concat-and-chunk): each doc's first token lands
     in sequence ``seq_id`` at ``seq_offset`` under doc_id concatenation
     order and 2048-token sequences — the packing step that turns a curated
-    corpus into fixed-length training batches.  Distributed form is the
-    q45 two-level prefix sum (operators/packing.py — partitioned running
-    sums, ordered window only over the tiny bucket-totals frame); the
-    oracle is DuckDB's global window, value-identical."""
+    corpus into fixed-length training batches.  The offsets are q45's
+    two-level prefix sum, ``packing.prior_sum`` (partitioned running sums,
+    ordered window only over the tiny bucket-totals frame); the oracle is
+    DuckDB's global window, value-identical."""
     from .operators.packing import sequence_pack
 
     return sequence_pack(load(spark, sf_dir, "documents"))
@@ -1456,9 +1419,9 @@ def q51(spark, sf_dir):
 
 @query("q52_bm25_topk", bm25_topk_sql(_BM25_TERMS))
 def q52(spark, sf_dir):
-    """Okapi BM25 top-5 docs per query term with a salted TWO-PHASE top-k
-    (hot-term skew safety; same two-exchange reasoning as
-    skew.salted_ordered_concat).  tf/dl are scan-side array arithmetic."""
+    """Okapi BM25 top-5 docs per query term, ranked by the salted
+    two-phase top-k ``skew.two_phase_topk`` (hot-term skew safety).  tf/dl
+    are scan-side array arithmetic."""
     return bm25_topk(load(spark, sf_dir, "documents"), _BM25_TERMS)
 
 

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import collections
 import importlib.util
+import re
 import sys
 from pathlib import Path
 
@@ -101,3 +103,41 @@ for case in (lid, bpe, assembled, media):
     for want in ("lid 500", "bpe True", "assembled 1", "media 96"):
         assert want in res.stdout.splitlines(), (
             res.stdout + res.stderr[-3000:])
+
+
+def test_building_every_query_runs_no_job(spark, record_property):
+    """Building a query (calling its function, not running the frame)
+    runs no Spark job but parquet footer reads, so every job a query costs
+    is in its plan.  Each registered query builds under its own job group.
+    The one exception is q39: ``dedup.connected_components`` runs its
+    min-label loop while the query is built (a ``collect`` of the changed
+    count per round, then a ``localCheckpoint``).  Its stage count under
+    AQE off (one job per action, not one per query stage) is pinned, so
+    the day q39 builds lazily this test says so."""
+    mod = _load_entry()
+    built = {**mod.queries(), **mod.extra_queries()}
+    sc = spark.sparkContext
+    stages = {}
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for name, fn in built.items():
+            sc.setJobGroup(name, name)
+            fn(spark, mod.SF0001)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+            st = sc.statusTracker()
+            stages[name] = [st.getStageInfo(sid).name
+                            for jid in st.getJobIdsForGroup(name)
+                            for sid in st.getJobInfo(jid).stageIds]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = {n: [s for s in ss if not s.startswith("parquet at")]
+            for n, ss in stages.items()}
+    q39 = jobs.pop("q39_dedup_clusters")
+    assert not {n: ss for n, ss in jobs.items() if ss}, jobs
+    record_property("q39_build_stages", len(q39))
+    assert all(re.match(r"(collect at .*dedup\.py:\d+|localCheckpoint at )", s)
+               for s in q39), q39
+    assert len(q39) == 44, collections.Counter(q39)

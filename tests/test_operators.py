@@ -169,17 +169,20 @@ class TestConnectedComponentsHardening:
 
 
 class TestSimilarity:
+    @staticmethod
+    def _query(emb):
+        return emb.filter(F.col("vec_id") == 0).select("embedding")
+
     def test_bruteforce_top1_is_self(self, spark, emb):
-        qvec = emb.filter(F.col("vec_id") == 0).head()[1]
-        top = S.cosine_topk(emb, [float(x) for x in qvec], k=3).collect()
+        top = S.cosine_topk(emb, self._query(emb), k=3).collect()
         assert top[0].vec_id == 0
         assert abs(top[0].cosine - 1.0) < 1e-6
 
     def test_ann_recall_vs_bruteforce(self, spark, emb):
-        qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
-        exact = {r.vec_id for r in S.cosine_topk(emb, qvec, k=10).collect()}
-        approx = {r.vec_id
-                  for r in S.ann_topk_expr(emb, qvec, k=10, bits=4).collect()}
+        q = self._query(emb)
+        exact = {r.vec_id for r in S.cosine_topk(emb, q, k=10).collect()}
+        approx = {r.vec_id for r in S.ann_topk_expr(
+            emb, q, S.hyperplanes(64, 4), k=10).collect()}
         # single-probe LSH: require the query itself + meaningful overlap
         assert 0 in approx
         assert len(exact & approx) >= 3
@@ -551,28 +554,30 @@ class TestSequencePack:
     def test_auto_sub_width_bounds_totals_frame(self, spark):
         """Round-5 verdict watch item: the prefix-sum totals frame (the
         single-task ordered window) must stay bounded at ANY corpus
-        scale.  auto_sub_width widens the bucket with the id domain —
+        scale.  The width column widens the bucket with the id domain —
         pin the invariant n_subbuckets = ceil((max_id+1)/width)
         <= MAX_TOTALS_ROWS for ids spanning 1e3 .. 1e13 (a sparse frame
         stands in for the scaled corpus: width depends only on max id)."""
         import pandas as pd
 
         from pdf_extraction_tests_spark.operators.packing import (
-            MAX_TOTALS_ROWS, auto_sub_width)
+            MAX_TOTALS_ROWS, _width)
 
         for max_id in (1_000, 4_999_999, 65_536_000, 10**13):
             pdf = pd.DataFrame({"doc_id": [0, max_id], "text": ["a", "b"]})
-            w = auto_sub_width(spark.createDataFrame(pdf))
+            (w,) = _width(spark.createDataFrame(pdf), "doc_id").first()
             assert w >= 64
             n_buckets = -(-(max_id + 1) // w)
             assert n_buckets <= MAX_TOTALS_ROWS, (max_id, w, n_buckets)
 
-    def test_sub_width_invariance(self, spark):
+    def test_sub_width_invariance(self, spark, monkeypatch):
         """Any sub-bucket width yields identical packing (the bucket is
-        monotone in doc_id) — auto width == explicit odd width == the old
-        fixed 64."""
+        monotone in doc_id).  200 ids under a totals-frame ceiling of 1,
+        2 and the default give widths 200, 100 and 64 (1, 2 and 4
+        buckets)."""
         import pandas as pd
 
+        from pdf_extraction_tests_spark.operators import packing
         from pdf_extraction_tests_spark.operators.packing import (
             sequence_pack)
 
@@ -583,14 +588,14 @@ class TestSequencePack:
         })
         d = spark.createDataFrame(pdf)
 
-        def run(width):
+        def run(ceiling):
+            monkeypatch.setattr(packing, "MAX_TOTALS_ROWS", ceiling)
             return sorted(
                 (r.doc_id, r.n_tokens, r.seq_id, r.seq_offset)
-                for r in sequence_pack(d, seq_len=128,
-                                       sub_width=width).collect())
+                for r in sequence_pack(d, seq_len=128).collect())
 
-        auto = run(None)
-        assert auto == run(7) == run(64)
+        default = run(packing.MAX_TOTALS_ROWS)
+        assert default == run(1) == run(2)
 
 
 class TestHyperLogLog:
@@ -946,7 +951,7 @@ class TestQuotaSample:
             es_key, quota_sample)
         df = self._df(spark)
         got = sorted((r.grp, r.id) for r in quota_sample(
-            df, "grp", "cast(id as string)", "w", 7, prune_salt=4).collect())
+            df, "grp", "cast(id as string)", "w", 7).collect())
         direct = (
             df.where(F.col("w") > 0)
             .withColumn("k", es_key("cast(id as string)", F.col("w")))

@@ -125,17 +125,31 @@ def test_extraction_scan_prunes_to_needed_columns(spark):
     assert set(cols) == {"doc_id", "text"}  # not lang/source/n_chars
 
 
+def _below_single_partition(plan: str) -> list[str]:
+    """The node directly below each SinglePartition shuffle exchange (a
+    formatted plan prints the partitioning on the exchange's
+    ``Arguments:`` line, and a node's child on the next tree line)."""
+    ids = {re.match(r"\((\d+)\)", d).group(1) for n, d in plan_nodes(plan)
+           if n == "Exchange" and "Arguments: SinglePartition" in d}
+    tree = plan.split("\n\n")[0].splitlines()
+    return [re.search(r"\w+", tree[i + 1]).group(0)
+            for i, ln in enumerate(tree)
+            if (m := re.search(r"\bExchange \((\d+)\)", ln))
+            and m.group(1) in ids]
+
+
 def test_token_budget_head_no_global_corpus_window(spark):
     """q45: the running sum must NOT be a global-ordered window over the
     corpus (single-task sort).  Corpus-sized window work is partitioned on
-    (quality, _sub); the only single-partition exchange feeds the tiny
-    bucket-totals window (input = one row per bucket, i.e. an aggregate)."""
+    (quality, _sub); every single-partition exchange sits directly above
+    an aggregate (the bucket totals, the sub-bucket width), so none
+    carries corpus rows."""
     plan = formatted_plan(queries()["q45_token_budget_head"](spark, SF))
     # the per-row running sum is a PARTITIONED window
     assert "partitionBy=[quality" in plan.replace(" ", "") or \
         "hashpartitioning(quality" in plan, plan
-    # at most one SinglePartition exchange, and the offsets side broadcasts
-    assert plan.count("Exchange SinglePartition") <= 1, plan
+    below = _below_single_partition(plan)
+    assert below and set(below) == {"HashAggregate"}, (below, plan)
     assert has_broadcast_join(plan), plan
 
 
@@ -184,12 +198,14 @@ def test_aqe_splits_skewed_join_partition(spark):
 
 def test_sequence_pack_no_global_corpus_window(spark):
     """q49: the packing prefix sum must be partitioned (per sub-bucket);
-    the only single-partition exchange feeds the tiny bucket-totals
-    window, and the offsets side broadcasts back."""
+    every single-partition exchange sits directly above an aggregate (the
+    bucket totals, the sub-bucket width), so none carries corpus rows,
+    and the offsets side broadcasts back."""
     plan = formatted_plan(queries()["q49_sequence_pack"](spark, SF))
     assert "partitionBy=[_sub" in plan.replace(" ", "") or \
         "hashpartitioning(_sub" in plan, plan
-    assert plan.count("Exchange SinglePartition") <= 1, plan
+    below = _below_single_partition(plan)
+    assert below and set(below) == {"HashAggregate"}, (below, plan)
     assert has_broadcast_join(plan), plan
 
 
