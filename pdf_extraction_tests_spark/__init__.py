@@ -10,9 +10,10 @@ interleaved text + media documents:
                    title, authors, abstract, main_text, boundaries, ...)
 
 All per-document logic runs inside vectorized pandas/Arrow UDFs
-(``mapInPandas`` / ``applyInPandas``); there is no per-row Python anywhere on
-the hot path.  Relational / analytical operators are exposed as named queries
-in :mod:`pdf_extraction_tests_spark.queries` and cross-checked against DuckDB.
+(``mapInPandas`` and scalar pandas UDFs, both built in :mod:`.shipping`);
+there is no per-row Python anywhere on the hot path.  Relational /
+analytical operators are exposed as named queries in
+:mod:`pdf_extraction_tests_spark.queries` and cross-checked against DuckDB.
 """
 
 __version__ = "0.1.0"

@@ -344,16 +344,13 @@ def token_count_col(text_col: str, tokenizer: str = "whitespace",
     if tokenizer != "bpe":
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
     from pyspark.sql import SparkSession
-    from pyspark.sql.functions import pandas_udf
 
-    from ..shipping import ship_package
+    from ..shipping import pandas_column
 
-    # the closure's BpeTokenizer pickles by reference to this package
-    ship_package(SparkSession.active())
     tok = _DEFAULT_TOKENIZER if merges is None else BpeTokenizer(merges)
 
-    @pandas_udf("long")
     def _count(texts: pd.Series) -> pd.Series:
         return texts.map(tok.token_count).astype("int64")
 
-    return _count(F.col(text_col))
+    return pandas_column(SparkSession.active(), _count, "long")(
+        F.col(text_col))

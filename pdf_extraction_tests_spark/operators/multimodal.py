@@ -10,7 +10,9 @@ production shape either way; on a real cluster only the decode body widens
 
 Pattern: media rows are (ref, media_type, content binary, meta map); feature
 extraction is a ``mapInPandas`` over Arrow batches so decode amortizes per
-batch, never per row.
+batch, never per row.  The media table q33 reads comes from
+:func:`media_from_documents`; a PDF's media span carries only its
+``pdf:xobj:<name>`` reference, so no PDF source feeds this table.
 """
 
 from __future__ import annotations
@@ -279,74 +281,3 @@ def media_features_sql(limit: int = 96, table: str = "documents") -> str:
            TRUE AS decode_ok
     FROM {table} WHERE doc_id < {limit} AND text IS NOT NULL
     """
-
-
-def media_from_binary_docs(docs: DataFrame, content_col: str = "content",
-                           id_col: str = "doc_id") -> DataFrame:
-    """Binary documents -> embedded-image MEDIA table: one row per image
-    XObject reference, in MEDIA_SCHEMA — the bridge from the PDF source
-    to :func:`extract_media_features` (embedded JPEGs and gray bitmaps
-    become REAL ``feature_kind='pixel'`` histograms downstream; codec
-    placeholders keep NULL content and stub features).
-
-    media_ref is ``<doc_id>/pdf:xobj:<name>`` — the same reference the
-    doc's media SPANS carry, prefixed by the doc, so features join back
-    to the span stream.  Non-PDF / undecodable docs yield no rows (per-
-    doc fault isolation, same contract as bytes_to_spans).  mapInPandas:
-    decode amortizes per Arrow batch, scan-side, no shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources.pdf_min import extract_pdf_media
-
-        cols = [f.name for f in MEDIA_SCHEMA]
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                raw = bytes(content)
-                if not raw.startswith(b"%PDF-"):
-                    continue
-                try:
-                    media = extract_pdf_media(raw)
-                except Exception:  # noqa: BLE001 — per-doc fault isolation
-                    continue
-                for m in media:
-                    rows.append({
-                        "media_ref": f"{doc_id}/{m['ref']}",
-                        "media_type": "image",
-                        "content": m["content"],
-                        "width": m["width"],
-                        "height": m["height"],
-                        "duration_ms": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return map_batches(docs, run, MEDIA_SCHEMA)
-
-
-def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table for tests/bench."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        mtype = ["image", "audio", "video"][i % 3]
-        content = rng.integers(0, 256, size=int(rng.integers(64, 4096)), dtype=np.uint8)
-        rows.append(
-            {
-                "media_ref": f"media://{i}",
-                "media_type": mtype,
-                "content": bytearray(content.tobytes()),
-                "width": 640 if mtype == "image" else None,
-                "height": 480 if mtype == "image" else None,
-                "duration_ms": 1000 * (i % 30) if mtype != "image" else None,
-            }
-        )
-    pdf = pd.DataFrame(rows)
-    # pandas promotes int+None columns to float64; IntegerType rejects floats
-    for c in ("width", "height", "duration_ms"):
-        pdf[c] = pd.Series(
-            [None if v is None or pd.isna(v) else int(v) for v in pdf[c]],
-            dtype="object",
-        )
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)

@@ -1,18 +1,16 @@
-"""Skew tools: salted two-phase aggregation and top-k for hot keys.
+"""Skew tools: salted two-phase top-k for hot groups.
 
 Spark's AQE splits skewed JOIN partitions automatically, and hash
 aggregates with algebraic functions (count/sum/min/max) already combine
-map-side — but HOLISTIC aggregates (collect_list / ordered group-concat)
-and per-group ranking windows funnel every row of a hot key through one
-task, and those are exactly what the extraction domain needs
-(reading-ordered text assembly per document/site/domain, per-term and
-per-domain top-k).  The classic fix: work per (key, salt) first, then
-merge the salt partials per key — no task ever holds more than ~1/salt of
-the hottest key's rows.
+map-side — but a per-group ranking window funnels every row of a hot
+group through one task, and per-term and per-domain top-k is what the
+extraction domain needs (q52, q58, quota sampling).  The classic fix:
+rank per (group, salt) first, then merge the salt survivors per group —
+no window ever holds more than ~1/salt of the hottest group's rows.
 
 Two exchanges instead of one, both bounded; equivalence with the direct
-single-phase forms is pinned in tests/test_operators.py (TestSaltedAgg,
-TestQuotaSample).
+single-window form is pinned in tests/test_operators.py
+(TestQuotaSample).
 """
 
 from __future__ import annotations
@@ -20,41 +18,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 TOPK_SALT = 8
-
-
-def salted_ordered_concat(df: DataFrame, key: str, order_col: str,
-                          val_col: str, salt: int = 32,
-                          sep: str = " ") -> DataFrame:
-    """Ordered group-concat that survives hot keys.
-
-    Phase 1 groups by (key, pmod(xxhash64(order_col), salt)) and collects
-    (order, val) structs per salt bucket; phase 2 flattens + sorts the
-    (at most ``salt``) partial arrays per key and joins.  Result is
-    identical to ``array_join(array_sort(collect_list(struct(order, val))))``
-    grouped by key alone — the A1 ordered-concat semantics — while the
-    biggest single aggregation state is ~hottest_key/salt rows.
-    """
-    # salt on (order, val): hashing the order column alone collapses every
-    # row sharing an order value into ONE bucket — a hot key with few
-    # distinct order values would defeat the bound.  Correctness is salt-
-    # independent (phase 2 re-sorts globally per key).
-    salted = df.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col(order_col), F.col(val_col)), F.lit(salt)),
-    )
-    partial = salted.groupBy(key, "_salt").agg(
-        F.collect_list(F.struct(F.col(order_col).alias("o"),
-                                F.col(val_col).alias("v"))).alias("_part")
-    )
-    merged = partial.groupBy(key).agg(
-        F.flatten(F.collect_list("_part")).alias("_all")
-    )
-    return merged.select(
-        key,
-        F.array_join(
-            F.transform(F.array_sort("_all"), lambda s: s["v"]), sep
-        ).alias("concat"),
-    )
 
 
 def two_phase_topk(df: DataFrame, group_col: str, order: list[Column],

@@ -11,7 +11,6 @@ import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves pd.Series hints here
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 
 from .boilerplate import quoted
 from .dedup import h48
@@ -596,18 +595,6 @@ def _lid_guess_frame(padded: pd.Series) -> pd.Series:
     return pd.Series(guess, dtype=object)
 
 
-_LID_UDF = None
-
-
-def _lid_guess_udf():
-    """Lazily-built pandas_udf (module-level @pandas_udf would parse the
-    DDL return type at import, which needs an active SparkContext)."""
-    global _LID_UDF
-    if _LID_UDF is None:
-        _LID_UDF = pandas_udf(_lid_guess_frame, "string")
-    return _LID_UDF
-
-
 def with_language_guess(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Language-ID via the Arrow-vectorized kernel (round-7, guide §4.2).
 
@@ -621,15 +608,13 @@ def with_language_guess(docs: DataFrame, text_col: str = "text") -> DataFrame:
     batch.  Guess values are bit-identical to the expression path
     (equivalence pinned in tests/test_langid.py; the DuckDB oracle mirrors
     the expression path as before)."""
-    # the udf is pickled BY REFERENCE to this module, so executors must be able to import the package —
-    # ship it like every pipeline operator does (memoized per context;
-    # found by the round-7 4x-scale probe: a session that had never run an
-    # extraction had no package on the workers and q29/q59 crashed)
-    from ..shipping import ship_package
+    # pandas_column ships the package first: a session that never ran an
+    # extraction has no package on its workers (q29/q59 crashed there)
+    from ..shipping import pandas_column
 
-    ship_package(docs.sparkSession)
+    guess = pandas_column(docs.sparkSession, _lid_guess_frame, "string")
     padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
-    return docs.withColumn("lang_guess", _lid_guess_udf()(padded))
+    return docs.withColumn("lang_guess", guess(padded))
 
 
 def language_guess_sql(table: str = "documents") -> str:

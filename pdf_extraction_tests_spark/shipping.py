@@ -1,4 +1,4 @@
-"""Ship the package to Spark python workers; the one ``mapInPandas`` site.
+"""Ship the package to Spark python workers; the one Python-boundary site.
 
 On a real cluster the job is submitted as ``spark-submit --py-files
 pipeline.zip job.py`` (north rule).  When the engine is embedded in an
@@ -7,11 +7,11 @@ closures are pickled *by reference* to this package, so executors must be
 able to import it — :func:`ship_package` zips the package once per process
 and registers it with ``sparkContext.addPyFile``.
 
-Every batched Python stage in the package crosses the boundary through
-:func:`map_batches`, which ships the package before it builds the
-``mapInPandas`` plan, so no operator can forget to.  The three boundaries
-that are not ``mapInPandas`` (the language-ID and ``bpe`` pandas UDFs and
-the stateful span assembler) call :func:`ship_package` themselves.
+The package crosses the Python boundary in two ways, each built here so
+no operator can forget to ship the package first: every batched Python
+stage is a ``mapInPandas`` plan built by :func:`map_batches`, and every
+scalar pandas UDF (the language-ID and ``bpe`` token-count columns) is
+built by :func:`pandas_column`.
 
 Inside a worker, :func:`install_zip_stat_check` makes PySpark's per-task
 ``importlib.invalidate_caches()`` cheap (see :class:`StatCheckedZipImporter`).
@@ -62,6 +62,16 @@ def map_batches(df, fn, schema):
         return fn(pdf for pdf in batches if not pdf.empty)
 
     return df.mapInPandas(run, schema=schema)
+
+
+def pandas_column(spark, fn, return_type):
+    """``fn`` as a scalar ``pandas_udf`` returning ``return_type``, with
+    the package shipped to the workers of ``spark``'s session (``fn`` is
+    pickled by reference to this package)."""
+    from pyspark.sql.functions import pandas_udf
+
+    ship_package(spark)
+    return pandas_udf(fn, return_type)
 
 
 def _archive_stamp(path: str) -> tuple[int, int, int] | None:

@@ -153,34 +153,6 @@ def _segments(data: bytes, start: int) -> tuple[list[bytes], int]:
     return segs, i
 
 
-def jpeg_dimensions(data: bytes) -> tuple[int, int]:
-    """(width, height) from the frame header — cheap marker scan only.
-    Accepts any SOF flavor (dimension metadata needs no decoder support).
-    Raises ValueError when no frame header is found."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (no SOI)")
-    i, n = 2, len(data)
-    while i + 4 <= n:
-        if data[i] != 0xFF:
-            raise ValueError("marker desync")
-        m = data[i + 1]
-        if m in (0xD8, 0x01) or 0xD0 <= m <= 0xD7:
-            i += 2
-            continue
-        if m == 0xD9:
-            break
-        ln = struct.unpack(">H", data[i + 2:i + 4])[0]
-        if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-            if i + 9 > n:
-                break
-            h, w = struct.unpack(">HH", data[i + 5:i + 9])
-            if w <= 0 or h <= 0:
-                raise ValueError("bad SOF dimensions")
-            return w, h
-        i += 2 + ln
-    raise ValueError("no SOF marker")
-
-
 def decode_jpeg_gray(data: bytes) -> np.ndarray:
     """Baseline or progressive JPEG -> (h, w) float64 luminance plane
     (0-255).

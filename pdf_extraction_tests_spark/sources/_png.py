@@ -109,7 +109,7 @@ def _unfilter(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
 
 def decode_png_gray(data: bytes) -> np.ndarray:
     """PNG bytes -> (h, w) float64 luma plane, 0.0-255.0 (the
-    _jpeg/_ccitt convention).  Raises ValueError on anything malformed
+    _jpeg convention).  Raises ValueError on anything malformed
     or outside the supported profile."""
     if not bytes(data).startswith(_SIGNATURE):
         raise ValueError("bad PNG signature")

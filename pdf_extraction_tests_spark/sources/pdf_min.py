@@ -15,8 +15,10 @@ What it extracts, per page:
   (PDF bottom-left origin converted to the engine's top-left y), width/
   height estimated from font size and shown glyph count, element_type
   'title' for display-size text (>= 14pt) else 'plain text';
-* one media placeholder per image-XObject ``Do`` invocation
-  (``media_ref='pdf:xobj:<name>'``) at its reading position.
+* one media placeholder per XObject ``Do`` invocation
+  (``media_ref='pdf:xobj:<name>'``) at its reading position.  The
+  XObject itself is never resolved: the placeholder carries no pixels and
+  no dimensions, since the span carries only kind, text, ref and order.
 
 Out of scope (raise UnsupportedPdfError -> fault-isolated upstream):
 genuinely password-protected files and image-codec filters
@@ -1193,181 +1195,6 @@ def _page_fonts(head: bytes, objs: dict[int, bytes],
     return fonts
 
 
-_XOBJDICT_INLINE_RE = re.compile(rb"/XObject\s*<<(.*?)>>", re.DOTALL)
-_XOBJDICT_REF_RE = re.compile(rb"/XObject\s+(\d+)\s+\d+\s+R")
-_SUBTYPE_IMAGE_RE = re.compile(rb"/Subtype\s*/Image\b")
-_WIDTH_RE = re.compile(rb"/Width\s+(\d+)(?!\s+\d+\s+R)")
-_HEIGHT_RE = re.compile(rb"/Height\s+(\d+)(?!\s+\d+\s+R)")
-_DCT_FILTER_RE = re.compile(rb"/Filter\s*(?:\[\s*)?/(?:DCTDecode|DCT)\b")
-
-
-def _raw_stream_of(obj_body: bytes, crypt=None, num: int = 0,
-                   gen: int = 0) -> bytes | None:
-    """Stream payload with decryption applied but the /Filter chain NOT —
-    how image-codec streams (DCTDecode JPEG bytes) are accessed."""
-    m = _STREAM_RE.match(obj_body)
-    if not m:
-        return None
-    head, rest = m.group(1), m.group(2)
-    end = rest.rfind(b"endstream")
-    raw = rest[:end if end >= 0 else len(rest)]
-    lnm = _LENGTH_LIT_RE.search(head)
-    raw = (raw[:int(lnm.group(1))] if lnm else _strip_one_eol(raw))
-    if crypt is not None:
-        raw = crypt.decrypt(num, gen, raw)
-    return raw
-
-
-def _page_xobjects(head: bytes, objs: dict[int, bytes],
-                   crypt=None) -> dict[str, dict]:
-    """Resolve a page's /Resources /XObject dict -> {name: {width,
-    height}} for IMAGE XObjects, so media placeholders carry real
-    dimensions.  /Width //Height come from the image dict; for DCTDecode
-    streams the embedded JPEG's own SOF frame header is authoritative
-    when it parses (what the pixels say beats what the dict claims)."""
-    res = head
-    rm = _RES_REF_RE.search(head)
-    if rm and int(rm.group(1)) in objs:
-        res = objs[int(rm.group(1))]
-    xm = _XOBJDICT_INLINE_RE.search(res)
-    if xm:
-        body = xm.group(1)
-    else:
-        xr = _XOBJDICT_REF_RE.search(res)
-        body = objs.get(int(xr.group(1))) if xr else None
-    if not body:
-        return {}
-    out: dict[str, dict] = {}
-    for name, ref in _FONTREF_RE.findall(body):
-        xobj = objs.get(int(ref))
-        if xobj is None:
-            continue
-        xhead = xobj.split(b"stream", 1)[0]
-        if not _SUBTYPE_IMAGE_RE.search(xhead):
-            continue
-        wm, hm = _WIDTH_RE.search(xhead), _HEIGHT_RE.search(xhead)
-        w = int(wm.group(1)) if wm else None
-        h = int(hm.group(1)) if hm else None
-        codec, content = None, None
-        fm = _FILTER_VAL_RE.search(xhead)
-        filt_names = _NAME_TOK_RE.findall(fm.group(1)) if fm else []
-        img_codecs = [n for n in filt_names if n in _IMAGE_CODECS]
-        if _DCT_FILTER_RE.search(xhead):
-            # a sole /DCTDecode stream IS a standalone JPEG: carry the
-            # payload (decrypted, unfiltered) and trust its SOF dims
-            codec = "jpeg"
-            try:
-                raw = _raw_stream_of(xobj, crypt, int(ref))
-                if raw:
-                    content = raw
-                    from ._jpeg import jpeg_dimensions
-                    w, h = jpeg_dimensions(raw)
-            except (ValueError, UnsupportedPdfError):
-                pass  # keep the dict's claim; dims are best-effort
-        elif img_codecs[:1] in ([b"CCITTFaxDecode"], [b"CCF"]):
-            # fax coding: /K -1 = G4 (T.6, dominant for scans), /K 0 =
-            # G3 1-D, /K > 0 = G3 mixed — all decode to pixels with the
-            # pure-Python T.4/T.6 decoders, wrapped as PGM
-            codec = "ccitt"
-            km = re.search(rb"/K\s+(-?\d+)", xhead)
-            cm = re.search(rb"/Columns\s+(\d+)", xhead)
-            kval = int(km.group(1)) if km else 0   # /K default 0 per spec
-            align = re.search(
-                rb"/EncodedByteAlign\s+true\b", xhead) is not None
-            try:
-                raw = _raw_stream_of(xobj, crypt, int(ref))
-                cols = int(cm.group(1)) if cm else 1728
-                if raw:
-                    from ._ccitt import decode_g3, decode_g4
-                    if kval < 0:
-                        px = decode_g4(raw, cols, rows=h,
-                                       byte_align=align)
-                    else:
-                        px = decode_g3(raw, cols, rows=h, k=kval,
-                                       byte_align=align)
-                    h2, w2 = px.shape
-                    if w is None or h is None:
-                        w, h = w2, h2
-                    codec = "g4" if kval < 0 else "g3"
-                    content = (b"P5\n%d %d\n255\n" % (w2, h2)
-                               + px.astype("uint8").tobytes())
-            except (ValueError, UnsupportedPdfError):
-                pass  # keep the labeled placeholder
-        elif img_codecs[:1] == [b"JBIG2Decode"]:
-            # JBIG2 generic-region profile (MQ coder + MMR): decode to
-            # pixels; symbol/text-region files keep the labeled
-            # placeholder.  /JBIG2Globals (shared segment stream) is
-            # resolved and prepended per the PDF embedding rules.
-            codec = "jbig2decode"
-            try:
-                raw = _raw_stream_of(xobj, crypt, int(ref))
-                if raw:
-                    gdata = b""
-                    gm = re.search(rb"/JBIG2Globals\s+(\d+)\s+\d+\s+R",
-                                   xhead)
-                    if gm and int(gm.group(1)) in objs:
-                        gdata = _stream_of(objs[int(gm.group(1))], crypt,
-                                           int(gm.group(1))) or b""
-                    from ._jbig2 import decode_jbig2
-
-                    px = decode_jbig2(raw, gdata)
-                    h2, w2 = px.shape
-                    if w is None or h is None:
-                        w, h = w2, h2
-                    codec = "jbig2"
-                    content = (b"P5\n%d %d\n255\n" % (w2, h2)
-                               + px.astype("uint8").tobytes())
-            except (ValueError, UnsupportedPdfError):
-                pass  # keep the labeled placeholder
-        elif img_codecs:
-            # codec the sandbox cannot decode: labeled placeholder (same
-            # honesty contract as multimodal feature_kind='stub')
-            codec = img_codecs[0].decode("latin-1", "replace").lower()
-        elif (w and h and re.search(rb"/ColorSpace\s*/DeviceGray\b", xhead)
-              and re.search(rb"/BitsPerComponent\s+8\b", xhead)):
-            # text-capable filters (or none): decode to raw gray pixels
-            # and wrap as binary PGM — a payload the multimodal operator
-            # already pixel-decodes
-            try:
-                px = _stream_of(xobj, crypt, int(ref))
-            except (UnsupportedPdfError, NotImplementedError):
-                px = None
-            if px is not None and len(px) >= w * h:
-                codec = "gray8"
-                content = b"P5\n%d %d\n255\n" % (w, h) + px[: w * h]
-        out[name.decode("latin-1", "replace")] = {
-            "width": w, "height": h, "codec": codec, "content": content}
-    return out
-
-
-def extract_pdf_media(data: bytes, password: bytes = b"") -> list[dict]:
-    """PDF bytes -> embedded image payloads, one row per page-resource
-    image XObject reference: ``{ref, page, codec, content, width,
-    height}``.
-
-    ``content`` carries the DECODABLE payload — the raw (decrypted)
-    JPEG stream for a sole /DCTDecode filter, or the filter-decoded
-    gray bitmap wrapped as binary PGM for uncompressed/Flate 8-bit
-    /DeviceGray images — or None for codecs the sandbox cannot decode
-    (JPX/CCITT/JBIG2, labeled in ``codec``).  ``ref`` matches the media
-    spans :func:`extract_pdf_text` emits (``pdf:xobj:<name>``), so a
-    media table joins back to the span stream by reference.  Raises
-    :class:`UnsupportedPdfError` exactly like the text path; per-image
-    problems degrade to content=None rows instead of raising.
-    """
-    if not data.startswith(b"%PDF-"):
-        raise UnsupportedPdfError("missing %PDF header")
-    out: list[dict] = []
-    for pageno, (_, _, _, xobjs) in enumerate(
-            _page_streams(data, password), 1):
-        for name, info in xobjs.items():
-            out.append({"ref": f"pdf:xobj:{name}", "page": pageno,
-                        "codec": info.get("codec"),
-                        "content": info.get("content"),
-                        "width": info["width"], "height": info["height"]})
-    return out
-
-
 def _text_of_bytes(b: bytes, font: dict | None) -> str:
     """Shown-string bytes -> text under the current font's semantics."""
     if font is None:
@@ -1385,10 +1212,8 @@ def _text_of_bytes(b: bytes, font: dict | None) -> str:
 
 
 def _page_streams(data: bytes,
-                  password: bytes = b"") -> list[tuple[bytes, float, dict, dict]]:
-    """[(content_stream, page_height, special_fonts, image_xobjects),
-    ...] in page order.  ``image_xobjects`` maps resource names to
-    best-effort {width, height, codec, content} (:func:`_page_xobjects`).
+                  password: bytes = b"") -> list[tuple[bytes, float, dict]]:
+    """[(content_stream, page_height, special_fonts), ...] in page order.
     ``special_fonts`` is :func:`_page_fonts`'s map for fonts needing
     non-latin-1 decode (Type0 / ToUnicode); empty for simple pages.
 
@@ -1448,11 +1273,7 @@ def _page_streams(data: bytes,
             fonts = _page_fonts(head, objs, crypt)
         except Exception:  # noqa: BLE001 — hostile bytes: fonts are optional
             fonts = {}
-        try:
-            xobjs = _page_xobjects(head, objs, crypt)
-        except Exception:  # noqa: BLE001 — dims are best-effort metadata
-            xobjs = {}
-        out.append((b"\n".join(parts), height, fonts, xobjs))
+        out.append((b"\n".join(parts), height, fonts))
     return out
 
 
@@ -1509,8 +1330,7 @@ _IDENTITY = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 
 
 def _extract_page_blocks(content: bytes, height: float, page: int,
-                         fonts: dict | None = None,
-                         xobjs: dict | None = None) -> list[dict]:
+                         fonts: dict | None = None) -> list[dict]:
     """One page's content stream -> block dicts (text blocks + media).
 
     ``fonts`` (from :func:`_page_fonts`) carries the page's Type0/
@@ -1664,17 +1484,8 @@ def _extract_page_blocks(content: bytes, height: float, page: int,
             elif op == b"Do":
                 if stack and stack[-1][:1] == b"/":
                     name = stack[-1][1:].decode("latin-1", "replace")
-                    blk = {
-                        "kind": "media", "page": page,
-                        "ref": f"pdf:xobj:{name}",
-                    }
-                    dims = (xobjs or {}).get(name)
-                    if dims:  # real dimensions (dict /Width //Height,
-                        # SOF-verified for DCTDecode) — metadata only,
-                        # never part of the span-equality surface
-                        blk["width"] = dims["width"]
-                        blk["height"] = dims["height"]
-                    blocks.append(blk)
+                    blocks.append({"kind": "media", "page": page,
+                                   "ref": f"pdf:xobj:{name}"})
             stack = []
             n_nonstr = 0
             continue
@@ -1714,9 +1525,8 @@ def extract_pdf_text(data: bytes, password: bytes = b"") -> list[dict]:
     if not data.startswith(b"%PDF-"):
         raise UnsupportedPdfError("missing %PDF header")
     blocks: list[dict] = []
-    for i, (content, h, fonts, xobjs) in enumerate(
-            _page_streams(data, password)):
-        blocks.extend(_extract_page_blocks(content, h, i + 1, fonts, xobjs))
+    for i, (content, h, fonts) in enumerate(_page_streams(data, password)):
+        blocks.extend(_extract_page_blocks(content, h, i + 1, fonts))
     return blocks
 
 
@@ -1733,13 +1543,10 @@ def write_minimal_pdf(pages: list[list[tuple]], compress: bool = True,
     """Build a valid one-font PDF.
 
     ``pages`` is a list of pages; each page a list of items:
-    ``("text", x, y_top, size, text)``, ``("image", name)``, or
-    ``("jpeg", name, jpeg_bytes, dict_w, dict_h)`` — embeds a /DCTDecode
-    image XObject whose DICT claims (dict_w, dict_h) while the stream
-    carries real JPEG bytes (fixture for SOF-verified dims) — or
-    ``("g4", name, g4_bytes, cols, rows)`` — a /CCITTFaxDecode /K -1
-    image XObject (T.6 fax payload) — or ``("g3", ...)`` for /K 0 (T.4
-    one-dimensional fax).
+    ``("text", x, y_top, size, text)``, ``("image", name)`` (draws the
+    shared 2x2 gray image), or ``("xobject", name, filter_name, payload)``
+    — an image XObject of its own whose stream is ``payload`` verbatim
+    under ``/Filter /<filter_name>`` (the text path never decodes it).
     y is given TOP-left (engine convention) and converted to PDF user space.
     ``objstm=True`` packs the page-tree dict objects into a FlateDecode
     ``/ObjStm`` (the PDF 1.5+ layout) — the reader-side fixture for
@@ -1756,17 +1563,16 @@ def write_minimal_pdf(pages: list[list[tuple]], compress: bool = True,
 
     # layout: 1 catalog, 2 pages-root, 3 font, then per page: page obj,
     # then all content streams, then image xobjects (one shared gray +
-    # one per distinct jpeg item name)
+    # one per distinct "xobject" item name)
     page_ids = [4 + i for i in range(len(pages))]
     content_ids = [4 + len(pages) + i for i in range(len(pages))]
     xobj_id = 4 + 2 * len(pages)
-    jpeg_items: dict[str, tuple] = {}
+    own_items: dict[str, tuple] = {}
     for pg in pages:
         for it in pg:
-            if it[0] in ("jpeg", "g4", "g3", "jbig2"):
-                jpeg_items.setdefault(it[1], it)
-    jpeg_ids = {name: xobj_id + 1 + i
-                for i, name in enumerate(jpeg_items)}
+            if it[0] == "xobject":
+                own_items.setdefault(it[1], it)
+    own_ids = {name: xobj_id + 1 + i for i, name in enumerate(own_items)}
 
     body = {}
     body[1] = b"<< /Type /Catalog /Pages 2 0 R >>"
@@ -1779,11 +1585,11 @@ def write_minimal_pdf(pages: list[list[tuple]], compress: bool = True,
     needs_xobj = any(it[0] == "image" for pg in pages for it in pg)
     for i, pg in enumerate(pages):
         res = b"/Font << /F1 3 0 R >>"
-        if needs_xobj or jpeg_ids:
+        if needs_xobj or own_ids:
             ents = b""
             if needs_xobj:
                 ents += b" /Im0 %d 0 R" % xobj_id
-            for name, oid in jpeg_ids.items():
+            for name, oid in own_ids.items():
                 ents += b" /%s %d 0 R" % (name.encode(), oid)
             res += b" /XObject <<" + ents + b" >>"
         body[page_ids[i]] = (
@@ -1821,32 +1627,13 @@ def write_minimal_pdf(pages: list[list[tuple]], compress: bool = True,
             b"/ColorSpace /DeviceGray /BitsPerComponent 8 /Length %d >>"
             b"\nstream\n" % len(img) + img + b"\nendstream"
         )
-    for name, it in jpeg_items.items():
-        kind_, _, payload, dict_w, dict_h = it
-        if kind_ == "jpeg":
-            body[jpeg_ids[name]] = (
-                b"<< /Type /XObject /Subtype /Image /Width %d /Height %d "
-                b"/ColorSpace /DeviceGray /BitsPerComponent 8 "
-                b"/Filter /DCTDecode /Length %d >>\nstream\n"
-                % (dict_w, dict_h, len(payload)) + payload + b"\nendstream"
-            )
-        elif kind_ == "jbig2":
-            body[jpeg_ids[name]] = (
-                b"<< /Type /XObject /Subtype /Image /Width %d /Height %d "
-                b"/ColorSpace /DeviceGray /BitsPerComponent 1 "
-                b"/Filter /JBIG2Decode /Length %d >>\nstream\n"
-                % (dict_w, dict_h, len(payload)) + payload + b"\nendstream"
-            )
-        else:  # g4 / g3 fax
-            kv = -1 if kind_ == "g4" else 0
-            body[jpeg_ids[name]] = (
-                b"<< /Type /XObject /Subtype /Image /Width %d /Height %d "
-                b"/ColorSpace /DeviceGray /BitsPerComponent 1 "
-                b"/Filter /CCITTFaxDecode /DecodeParms << /K %d "
-                b"/Columns %d /Rows %d >> /Length %d >>\nstream\n"
-                % (dict_w, dict_h, kv, dict_w, dict_h, len(payload))
-                + payload + b"\nendstream"
-            )
+    for name, (_, _, filter_name, payload) in own_items.items():
+        body[own_ids[name]] = (
+            b"<< /Type /XObject /Subtype /Image /Width 8 /Height 8 "
+            b"/ColorSpace /DeviceGray /BitsPerComponent 8 /Filter /%s "
+            b"/Length %d >>\nstream\n" % (filter_name.encode(), len(payload))
+            + payload + b"\nendstream"
+        )
 
     if objstm:
         # move the dict-only page tree (pages root + page dicts) into one

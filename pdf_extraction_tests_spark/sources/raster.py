@@ -73,7 +73,7 @@ def rasterize_minimal(data: bytes, page_width: int = 612) -> list[np.ndarray]:
     from .pdf_min import _extract_page_blocks, _page_streams
 
     pages: list[np.ndarray] = []
-    for pageno, (content, height, fonts, _xobjs) in enumerate(
+    for pageno, (content, height, fonts) in enumerate(
             _page_streams(bytes(data)), 1):
         page = np.full((max(int(height), 16), page_width), 255, dtype=np.uint8)
         media_n = 0

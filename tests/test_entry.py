@@ -37,17 +37,16 @@ def test_every_oracle_key_has_query(spark):
     assert len(q) >= 20
 
 
-def test_udf_queries_run_in_fresh_session_without_extraction(tmp_path):
+def test_udf_queries_run_in_fresh_session_without_extraction():
     """Round-7 regression: with_language_guess's Arrow kernel is pickled by
     reference to the package, so a session that never ran an extraction
     (which would have shipped the package via addPyFile) must STILL be able
     to run the LID queries — the operator now ships the package itself.
-    The other Python boundaries that ``shipping.map_batches`` does not build
-    (the ``bpe`` token count, the stateful span assembler) and q33's media
-    feature kernel, built on ``map_batches``, are held to the same rule
-    (96 is q33's row count at sf0.001).  One subprocess; each case gets
-    its own new SparkContext, so one case shipping the package cannot hide
-    another that does not."""
+    The ``bpe`` token count (the other ``shipping.pandas_column`` user)
+    and q33's media feature kernel (built on ``shipping.map_batches``) are
+    held to the same rule (96 is q33's row count at sf0.001).  One
+    subprocess; each case gets its own new SparkContext, so one case
+    shipping the package cannot hide another that does not."""
     import pathlib
     import subprocess
     import sys
@@ -61,8 +60,6 @@ from pdf_extraction_tests_spark.functions.bpe import token_count_col
 from pdf_extraction_tests_spark.operators.multimodal import (
     extract_media_features, media_from_documents)
 from pdf_extraction_tests_spark.operators.text_analysis import with_language_guess
-from pdf_extraction_tests_spark.streaming.stateful import (
-    SPAN_EVENTS, assemble_spans_stream)
 
 def lid(spark, d):
     return with_language_guess(d).select("doc_id", "lang_guess").count()
@@ -70,23 +67,11 @@ def lid(spark, d):
 def bpe(spark, d):
     return d.select(F.sum(token_count_col("text", "bpe"))).first()[0] > 0
 
-def assembled(spark, d):
-    ev = [("A", "region", "1,1,10,5,5,plain text|a", None, 0, True)]
-    spark.createDataFrame(ev, schema=SPAN_EVENTS).coalesce(1).write.parquet(
-        "{tmp_path}/events")
-    q = (assemble_spans_stream(spark.readStream.schema(SPAN_EVENTS)
-                               .parquet("{tmp_path}/events"))
-         .writeStream.format("parquet").option("path", "{tmp_path}/out")
-         .option("checkpointLocation", "{tmp_path}/ckpt")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.read.parquet("{tmp_path}/out").count()
-
 def media(spark, d):
     return extract_media_features(media_from_documents(d)).count()
 
 stopped = []  # keeps each stopped context alive so no id(sc) is reused
-for case in (lid, bpe, assembled, media):
+for case in (lid, bpe, media):
     spark = (SparkSession.builder.master("local[2]").appName("fresh")
              .config("spark.ui.enabled", "false")
              .config("spark.sql.session.timeZone", "UTC").getOrCreate())
@@ -100,7 +85,7 @@ for case in (lid, bpe, assembled, media):
 """
     res = subprocess.run([sys.executable, "-c", code], capture_output=True,
                          text=True, cwd="/tmp", timeout=300)
-    for want in ("lid 500", "bpe True", "assembled 1", "media 96"):
+    for want in ("lid 500", "bpe True", "media 96"):
         assert want in res.stdout.splitlines(), (
             res.stdout + res.stderr[-3000:])
 

@@ -17,8 +17,7 @@ import struct
 import numpy as np
 import pytest
 
-from pdf_extraction_tests_spark.sources._jpeg import (
-    decode_jpeg_gray, jpeg_dimensions)
+from pdf_extraction_tests_spark.sources._jpeg import decode_jpeg_gray
 
 # --- test-side encoder -----------------------------------------------------
 
@@ -452,18 +451,6 @@ class TestRoundTrip:
         assert np.max(np.abs(got - img)) <= 2.0
 
 
-class TestDimensions:
-    def test_dimensions_fast_path(self):
-        data = encode_jpeg(_gradient(21, 13))
-        assert jpeg_dimensions(data) == (13, 21)
-
-    def test_dimensions_rejects_garbage(self):
-        with pytest.raises(ValueError):
-            jpeg_dimensions(b"not a jpeg")
-        with pytest.raises(ValueError):
-            jpeg_dimensions(b"\xff\xd8\xff\xd9")  # SOI+EOI, no SOF
-
-
 class TestHostileInputs:
     """Totality: anything malformed is ValueError, never an IndexError/
     struct.error escaping into an Arrow batch."""
@@ -575,10 +562,6 @@ class TestProgressive:
         assert np.array_equal(decode_jpeg_gray(data),
                               decode_jpeg_gray(encode_jpeg(img)))
 
-    def test_dimensions(self):
-        assert jpeg_dimensions(
-            encode_jpeg_progressive(_gradient(21, 13))) == (13, 21)
-
     def test_truncated_scans_still_render(self):
         """A progressive file cut after the DC scans (EOI appended) is a
         legal partial render — coarse but decodable, matching real-world
@@ -643,127 +626,3 @@ class TestJpegIntegration:
         feat, kind = MM._decode(bad, "image")
         assert kind == "stub"
         assert np.allclose(feat, MM._decode_stub(bad, "image"))
-
-    def test_pdf_dct_xobject_real_dimensions(self):
-        """DCTDecode image XObjects gain real dimensions: the embedded
-        JPEG's SOF header wins over a lying /Width //Height dict."""
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_text, write_minimal_pdf)
-
-        jpg = encode_jpeg(_gradient(21, 13))  # 13 wide, 21 high
-        data = write_minimal_pdf([[
-            ("text", 50, 50, 12, "body text near the figure"),
-            ("jpeg", "Jp0", jpg, 999, 888),   # dict lies about dims
-        ]])
-        media = [b for b in extract_pdf_text(data) if b["kind"] == "media"]
-        assert [m["ref"] for m in media] == ["pdf:xobj:Jp0"]
-        assert (media[0]["width"], media[0]["height"]) == (13, 21)
-
-    def test_pdf_plain_image_dict_dimensions(self):
-        """Non-DCT image XObjects carry the dict's /Width //Height."""
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_text, write_minimal_pdf)
-
-        data = write_minimal_pdf([[
-            ("text", 50, 50, 12, "body text near the figure"),
-            ("image", "Im0"),
-        ]])
-        media = [b for b in extract_pdf_text(data) if b["kind"] == "media"]
-        assert (media[0]["width"], media[0]["height"]) == (2, 2)
-
-    def test_corrupt_dct_stream_keeps_dict_dims(self):
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_text, write_minimal_pdf)
-
-        data = write_minimal_pdf([[
-            ("text", 50, 50, 12, "body text near the figure"),
-            ("jpeg", "Jp0", b"\xff\xd8 not a decodable jpeg", 64, 32),
-        ]])
-        media = [b for b in extract_pdf_text(data) if b["kind"] == "media"]
-        assert (media[0]["width"], media[0]["height"]) == (64, 32)
-
-
-class TestPdfMediaLoop:
-    """The source->media->features loop: embedded image XObjects become a
-    media table whose JPEG/gray payloads decode to REAL pixel features."""
-
-    def test_extract_pdf_media_jpeg_payload(self):
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_media, write_minimal_pdf)
-
-        img = _gradient(16, 24)
-        jpg = encode_jpeg(img)
-        data = write_minimal_pdf([[
-            ("text", 50, 50, 12, "figure caption text"),
-            ("jpeg", "Jp0", jpg, 1, 1),
-        ]])
-        media = extract_pdf_media(data)
-        assert [(m["ref"], m["page"], m["codec"]) for m in media] \
-            == [("pdf:xobj:Jp0", 1, "jpeg")]
-        assert media[0]["content"] == jpg          # payload verbatim
-        assert (media[0]["width"], media[0]["height"]) == (24, 16)
-        got = decode_jpeg_gray(media[0]["content"])
-        assert np.max(np.abs(got - img)) <= 2.0
-
-    def test_extract_pdf_media_gray8_as_pgm(self):
-        from pdf_extraction_tests_spark.operators import multimodal as MM
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_media, write_minimal_pdf)
-
-        data = write_minimal_pdf([[
-            ("text", 50, 50, 12, "figure caption text"),
-            ("image", "Im0"),   # builtin 2x2 uncompressed DeviceGray
-        ]])
-        media = extract_pdf_media(data)
-        assert media[0]["codec"] == "gray8"
-        assert media[0]["content"].startswith(b"P5\n2 2\n255\n")
-        feat, kind = MM._decode(media[0]["content"], "image")
-        assert kind == "pixel"
-
-    def test_media_refs_match_span_refs(self):
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_media, extract_pdf_text, write_minimal_pdf)
-
-        data = write_minimal_pdf([[
-            ("text", 50, 50, 12, "figure caption text"),
-            ("jpeg", "Jp0", encode_jpeg(_gradient(8, 8)), 1, 1),
-        ]])
-        span_refs = {b["ref"] for b in extract_pdf_text(data)
-                     if b["kind"] == "media"}
-        media_refs = {m["ref"] for m in extract_pdf_media(data)}
-        assert span_refs == media_refs == {"pdf:xobj:Jp0"}
-
-    def test_spark_loop_pdf_to_pixel_features(self, spark):
-        import pandas as pd
-
-        from pdf_extraction_tests_spark.operators import multimodal as MM
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            write_minimal_pdf)
-
-        img = np.full((16, 16), 200.0)
-        pdf_bytes = write_minimal_pdf([[
-            ("text", 50, 50, 12, "doc with an embedded figure"),
-            ("jpeg", "Jp0", encode_jpeg(img), 1, 1),
-        ]])
-        docs = spark.createDataFrame(pd.DataFrame([
-            {"doc_id": "d1", "content": bytearray(pdf_bytes)},
-            {"doc_id": "d2", "content": bytearray(b"not a pdf at all")},
-            {"doc_id": "d3", "content": None},
-        ]))
-        media = MM.media_from_binary_docs(docs)
-        feats = MM.extract_media_features(media).collect()
-        assert [f.media_ref for f in feats] == ["d1/pdf:xobj:Jp0"]
-        f = feats[0]
-        assert f.feature_kind == "pixel" and f.decode_ok
-        want_bin = int(200 // (256 / MM.FEATURE_DIM))
-        assert f.feature[want_bin] > 0.9
-
-    def test_corrupt_pdf_is_isolated(self, spark):
-        import pandas as pd
-
-        from pdf_extraction_tests_spark.operators import multimodal as MM
-
-        docs = spark.createDataFrame(pd.DataFrame([
-            {"doc_id": "bad", "content": bytearray(b"%PDF-1.4\ngarbage")},
-        ]))
-        assert MM.media_from_binary_docs(docs).count() == 0

@@ -1,8 +1,8 @@
 """Guardrail (SURVEY §7): no per-row Python UDFs anywhere on the hot path.
 
 The north rule forbids per-row Python; only Arrow-vectorized pandas UDFs
-(``mapInPandas`` / ``applyInPandas`` / ``@pandas_udf``) and native column
-expressions are allowed.  This test greps the package source.
+(``mapInPandas`` and scalar pandas UDFs, both built in ``shipping.py``) and
+native column expressions are allowed.  This test greps the package source.
 """
 
 from __future__ import annotations
@@ -42,19 +42,46 @@ def test_no_driver_side_collect_loops():
     assert not offenders, "driver-side collect in operators:\n" + "\n".join(offenders)
 
 
-def test_mapinpandas_only_in_shipping():
-    """Every batched Python stage is built by ``shipping.map_batches``,
-    which ships the package to the workers first; a hand-written
-    ``.mapInPandas(`` elsewhere can skip that and fail with
-    ModuleNotFoundError in a session that never shipped it."""
+def _outside_shipping(token: str) -> list[str]:
     offenders = []
     for path in PKG.rglob("*.py"):
         if path == PKG / "shipping.py":
             continue
         for i, line in enumerate(path.read_text().splitlines(), 1):
-            if ".mapInPandas(" in line.split("#")[0]:
+            if token in line.split("#")[0]:
                 offenders.append(f"{path.name}:{i}: {line.strip()}")
+    return offenders
+
+
+def test_mapinpandas_only_in_shipping():
+    """Every batched Python stage is built by ``shipping.map_batches``,
+    which ships the package to the workers first; a hand-written
+    ``.mapInPandas(`` elsewhere can skip that and fail with
+    ModuleNotFoundError in a session that never shipped it."""
+    offenders = _outside_shipping(".mapInPandas(")
     assert not offenders, ("mapInPandas outside shipping.map_batches:\n"
+                           + "\n".join(offenders))
+
+
+def test_pandas_udf_only_in_shipping():
+    """Every scalar pandas UDF is built by ``shipping.pandas_column``, for
+    the same reason as ``map_batches``."""
+    offenders = _outside_shipping("pandas_udf(")
+    assert not offenders, ("pandas_udf outside shipping.pandas_column:\n"
+                           + "\n".join(offenders))
+
+
+def test_no_grouped_python_boundary():
+    """``map_batches`` and ``pandas_column`` are the only two ways across
+    the Python boundary: no ``applyInPandas`` (grouped or with state)
+    appears anywhere in the package, code or prose."""
+    offenders = [
+        f"{path.name}:{i}: {line.strip()}"
+        for path in PKG.rglob("*.py")
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "applyInPandas" in line
+    ]
+    assert not offenders, ("applyInPandas in the package:\n"
                            + "\n".join(offenders))
 
 

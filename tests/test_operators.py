@@ -10,11 +10,40 @@ from pdf_extraction_tests_spark.operators import dedup as D
 from pdf_extraction_tests_spark.operators import similarity as S
 from pdf_extraction_tests_spark.operators import text_analysis as TA
 from pdf_extraction_tests_spark.operators.multimodal import (
+    MEDIA_SCHEMA,
     extract_media_features,
-    synthetic_media,
 )
 
 SF = "/root/testdata/sf0.001"
+
+
+def synthetic_media(spark, n: int = 64, seed: int = 42):
+    """Deterministic fake media table (random bytes, MEDIA_SCHEMA)."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(n):
+        mtype = ["image", "audio", "video"][i % 3]
+        content = rng.integers(0, 256, size=int(rng.integers(64, 4096)), dtype=np.uint8)
+        rows.append(
+            {
+                "media_ref": f"media://{i}",
+                "media_type": mtype,
+                "content": bytearray(content.tobytes()),
+                "width": 640 if mtype == "image" else None,
+                "height": 480 if mtype == "image" else None,
+                "duration_ms": 1000 * (i % 30) if mtype != "image" else None,
+            }
+        )
+    pdf = pd.DataFrame(rows)
+    # pandas promotes int+None columns to float64; IntegerType rejects floats
+    for c in ("width", "height", "duration_ms"):
+        pdf[c] = pd.Series(
+            [None if v is None or pd.isna(v) else int(v) for v in pdf[c]],
+            dtype="object",
+        )
+    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
 
 
 @pytest.fixture(scope="module")
@@ -489,36 +518,6 @@ class TestAsofJoin:
             outs.add(asof_join(left.repartition(3), right.repartition(3))
                      .collect()[0].sig_asof)
         assert outs == {300}  # greatest payload, every run
-
-
-class TestSaltedAgg:
-    def test_salted_concat_equals_direct(self, spark):
-        """Skewed input (one key holds 90% of rows): the salted two-phase
-        ordered concat must equal the direct single-phase form exactly."""
-        from pdf_extraction_tests_spark.operators.skew import (
-            salted_ordered_concat,
-        )
-
-        rows = [{"k": "hot", "o": i, "v": f"w{i}"} for i in range(900)]
-        rows += [{"k": f"cold{j}", "o": i, "v": f"c{j}_{i}"}
-                 for j in range(10) for i in range(10)]
-        df = spark.createDataFrame(pd.DataFrame(rows)).repartition(8)
-        got = {r.k: r.concat
-               for r in salted_ordered_concat(df, "k", "o", "v", salt=16).collect()}
-        want = {
-            r.k: r.concat
-            for r in df.groupBy("k").agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct(
-                            F.col("o").alias("o"), F.col("v").alias("v")))),
-                        lambda s: s["v"]),
-                    " ").alias("concat")
-            ).collect()
-        }
-        assert got == want
-        assert got["hot"].startswith("w0 w1 w2")
-        assert len(got) == 11
 
 
 class TestSequencePack:

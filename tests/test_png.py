@@ -1,6 +1,6 @@
 """PNG decoder tests (sources/_png.py).
 
-Oracle strategy mirrors test_jpeg/test_ccitt/test_jbig2: a test-side
+Oracle strategy mirrors test_jpeg: a test-side
 spec-procedure PNG *encoder* (chunk writer + per-row filters) round-trips
 pixel data exactly — PNG is lossless, so decode(encode(px)) == px for
 every color type and every filter type, including the sequential

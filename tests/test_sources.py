@@ -28,6 +28,17 @@ REAL_PDF_PAGES = [
      ("text", 72, 300, 14, "References")],
 ]
 
+# text interleaved with image XObjects under the codecs the text path
+# never decodes; the payloads are garbage
+XOBJECT_PAGE = [
+    ("text", 72, 100, 11, "text before the fax image"),
+    ("xobject", "Fax0", "CCITTFaxDecode", b"\x00\x01\x00\x01 not fax"),
+    ("text", 72, 200, 11, "text between fax and jbig2"),
+    ("xobject", "Jb0", "JBIG2Decode", b"\x97JB2 garbage"),
+    ("xobject", "Jp0", "DCTDecode", b"\xff\xd8 not a decodable jpeg"),
+    ("text", 72, 400, 11, "text after the images"),
+]
+
 
 @pytest.fixture(scope="module")
 def doc_dir(tmp_path_factory):
@@ -127,6 +138,27 @@ class TestMinimalPdfDecoder:
         by_page = {b["page"]: b["text"] for b in blocks}
         assert by_page[1] == "second page body text"  # Kids order wins
         assert by_page[2] == "first page body text"
+
+    def test_image_xobjects_are_media_refs_in_reading_order(self):
+        """Each ``Do`` of an image XObject is one media span whose ref is
+        ``pdf:xobj:<name>``, at its place among the text regions; the
+        image stream is never decoded (no fax/JBIG2 decoder exists)."""
+        import importlib.util
+
+        spans = bytes_to_spans(write_minimal_pdf([XOBJECT_PAGE]))
+        assert [(s["kind"], s["media_ref"]) for s in spans] == [
+            ("region", None), ("media", "pdf:xobj:Fax0"), ("region", None),
+            ("media", "pdf:xobj:Jb0"), ("media", "pdf:xobj:Jp0"),
+            ("region", None)]
+        assert [s["offset"] for s in spans] == list(range(6))
+        assert [s["text"].split("|", 1)[1] for s in spans
+                if s["kind"] == "region"] == [
+            "text before the fax image", "text between fax and jbig2",
+            "text after the images"]
+        assert all(s["text"] == "" for s in spans if s["kind"] == "media")
+        for gone in ("_ccitt", "_jbig2"):
+            assert importlib.util.find_spec(
+                f"pdf_extraction_tests_spark.sources.{gone}") is None
 
     def test_corrupt_flate_is_isolated(self):
         good = write_minimal_pdf([[("text", 10, 10, 11, "hello world ok")]])
