@@ -3,9 +3,9 @@
 Scanned PDFs carry their page images overwhelmingly as /CCITTFaxDecode
 streams with ``/K -1`` (pure two-dimensional G4) — the reference's whole
 domain is scanned academic PDFs (rasterize -> layout -> OCR,
-v10.R:26,39-44,131-152).  This module decodes G4 to a pixel plane so the
-media-extraction loop can emit real ``feature_kind='pixel'`` features for
-fax-coded images, exactly as ``_jpeg`` does for DCTDecode.
+v10.R:26,39-44,131-152).  This module decodes G4 to a pixel plane.  The
+PDF text path does not call it: a fax-coded image XObject is one media
+span there, never decoded.
 
 Implementation is written directly from the spec structure:
 

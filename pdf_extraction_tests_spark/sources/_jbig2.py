@@ -29,8 +29,10 @@ profile real scanned-document encoders actually emit) streams use:
   regions, end-of-page/stripe/file; regions composed onto the page
   canvas.
 
-Out of scope -> ValueError (the caller keeps an honest labeled
-placeholder): Huffman-coded variants, refinement/aggregate coding,
+The PDF text path does not call this module: a JBIG2 image XObject is
+one media span there, never decoded.
+
+Out of scope -> ValueError: Huffman-coded variants, refinement/aggregate coding,
 halftone regions, intermediate (non-immediate) regions, retained
 coding contexts and unknown-length MMR data.  Totality: any malformed
 input raises ValueError, never an ad-hoc exception.  Resource ceiling:

@@ -293,44 +293,6 @@ class TestHostileInputs:
             C.decode_g4(b"\x00", 0)
 
 
-class TestPdfIntegration:
-    def test_g4_xobject_decodes_to_pgm_media(self):
-        from pdf_extraction_tests_spark.operators import multimodal as MM
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_media, write_minimal_pdf)
-
-        img = np.full((20, 30), 255.0)
-        img[5:15, 8:22] = 0.0
-        data = write_minimal_pdf([[
-            ("text", 50, 50, 12, "scanned page stand-in"),
-            ("g4", "Fax0", encode_g4(img), 30, 20),
-        ]])
-        media = extract_pdf_media(data)
-        assert [(m["ref"], m["codec"]) for m in media] \
-            == [("pdf:xobj:Fax0", "g4")]
-        assert media[0]["content"].startswith(b"P5\n30 20\n255\n")
-        feat, kind = MM._decode(media[0]["content"], "image")
-        assert kind == "pixel"
-        # 10x14 black box in 600 px: black fraction lands in bin 0
-        assert abs(feat[0] - 140 / 600) < 1e-6
-
-    def test_corrupt_g4_stays_labeled_placeholder(self):
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_media, write_minimal_pdf)
-
-        # 0x00 0x01...: the bit prefix 0000000 1 matches no T.6 mode code
-        # (0xFF bytes would NOT do here: all-ones is a valid stream of V0
-        # modes decoding to white rows)
-        data = write_minimal_pdf([[
-            ("text", 50, 50, 12, "scanned page stand-in"),
-            ("g4", "Fax0", b"\x00\x01\x00\x01", 30, 20),
-        ]])
-        media = extract_pdf_media(data)
-        assert media[0]["codec"] == "ccitt"      # honest placeholder
-        assert media[0]["content"] is None
-        assert (media[0]["width"], media[0]["height"]) == (30, 20)
-
-
 # --- G3 (T.4) ----------------------------------------------------------------
 
 
@@ -481,32 +443,6 @@ class TestG3Hostile:
                     assert out.shape[1] == 37
                 except ValueError:
                     pass
-
-
-class TestG3PdfIntegration:
-    def test_g3_xobject_decodes_to_pgm_media(self):
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_media, write_minimal_pdf)
-        rng = np.random.RandomState(21)
-        img = np.where(rng.rand(10, 24) > 0.5, 255.0, 0.0)
-        pdf = write_minimal_pdf(
-            [[("text", 72, 90, 12, "fax"), ("g3", "Fx1",
-               encode_g3(img), 24, 10)]])
-        media = extract_pdf_media(pdf)
-        m = [x for x in media if x["codec"] == "g3"]
-        assert len(m) == 1
-        assert m[0]["content"].startswith(b"P5\n24 10\n255\n")
-        px = np.frombuffer(
-            m[0]["content"].split(b"\n", 3)[3], dtype=np.uint8)
-        assert np.array_equal(px.reshape(10, 24), img.astype(np.uint8))
-
-    def test_corrupt_g3_stays_labeled_placeholder(self):
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_media, write_minimal_pdf)
-        pdf = write_minimal_pdf(
-            [[("g3", "Fx1", b"\xff\x07\x55\xaa", 24, 10)]])
-        media = extract_pdf_media(pdf)
-        assert media and media[0]["codec"] == "ccitt"
 
 
 class TestResourceCeilings:

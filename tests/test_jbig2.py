@@ -362,34 +362,6 @@ class TestEmbedded:
                 pass
 
 
-class TestPdfIntegration:
-    def test_jbig2_xobject_decodes_to_pgm_media(self):
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_media, write_minimal_pdf)
-
-        bm = _rand_bitmap(np.random.RandomState(13), 10, 24)
-        payload = make_jbig2([(0, 0, bm)], page_wh=(24, 10))
-        pdf = write_minimal_pdf(
-            [[("text", 72, 90, 12, "jb"), ("jbig2", "Jb1",
-               payload, 24, 10)]])
-        media = extract_pdf_media(pdf)
-        m = [x for x in media if x["codec"] == "jbig2"]
-        assert len(m) == 1
-        assert m[0]["content"].startswith(b"P5\n24 10\n255\n")
-        px = np.frombuffer(
-            m[0]["content"].split(b"\n", 3)[3], dtype=np.uint8)
-        assert np.array_equal(px.reshape(10, 24) == 0, bm.astype(bool))
-
-    def test_corrupt_jbig2_stays_labeled_placeholder(self):
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_media, write_minimal_pdf)
-
-        pdf = write_minimal_pdf(
-            [[("jbig2", "Jb1", b"\x00\x01\x02\x03", 24, 10)]])
-        media = extract_pdf_media(pdf)
-        assert media and media[0]["codec"] == "jbig2decode"
-
-
 class TestTemplates123:
     @pytest.mark.parametrize("template", [1, 2, 3])
     def test_round_trip(self, template):
@@ -865,31 +837,6 @@ class TestTextRegion:
                 assert out.ndim == 2
             except ValueError:
                 pass
-
-
-class TestSymbolTextPdfIntegration:
-    def test_symbol_text_jbig2_in_pdf(self):
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_media, write_minimal_pdf)
-
-        syms = _glyphs()
-        payload = make_jbig2_text(syms, [(0, 1, 1), (1, 7, 1),
-                                         (3, 12, 1)], page_wh=(20, 8))
-        pdf = write_minimal_pdf(
-            [[("text", 72, 90, 12, "sy"), ("jbig2", "Jb1",
-               payload, 20, 8)]])
-        media = extract_pdf_media(pdf)
-        m = [x for x in media if x["codec"] == "jbig2"]
-        assert len(m) == 1
-        assert m[0]["content"].startswith(b"P5\n20 8\n255\n")
-        px = np.frombuffer(
-            m[0]["content"].split(b"\n", 3)[3],
-            dtype=np.uint8).reshape(8, 20)
-        want = np.zeros((8, 20), dtype=bool)
-        for sid, s, t in [(0, 1, 1), (1, 7, 1), (3, 12, 1)]:
-            hi, wi = syms[sid].shape
-            want[t:t + hi, s:s + wi] |= syms[sid].astype(bool)
-        assert np.array_equal(px == 0, want)
 
 
 class TestResourceCeilings:

@@ -405,6 +405,20 @@ def test_bpe_pieces_reassemble_and_bound(text):
     assert B.bpe_token_count(text) == len(B.bpe_tokenize(text))
 
 
+@settings(max_examples=40, deadline=None)
+@given(st.integers(1, 80), st.integers(1, 24), st.integers(0, 2 ** 31 - 1))
+def test_g4_round_trip_random_shapes(w, h, seed):
+    """G4 encode->decode is EXACT for any bilevel image (lossless)."""
+    import numpy as np
+
+    from pdf_extraction_tests_spark.sources import _ccitt as C
+    from tests.test_ccitt import encode_g4
+
+    rng = np.random.default_rng(seed)
+    img = np.where(rng.random((h, w)) < rng.random(), 0.0, 255.0)
+    assert np.array_equal(C.decode_g4(encode_g4(img), w), img)
+
+
 @settings(max_examples=25, deadline=None)
 @given(st.integers(1, 40), st.integers(1, 40), st.integers(0, 2 ** 31 - 1))
 def test_jpeg_round_trip_random_shapes(w, h, seed):
@@ -420,3 +434,57 @@ def test_jpeg_round_trip_random_shapes(w, h, seed):
     got = decode_jpeg_gray(encode_jpeg(img))
     assert got.shape == (h, w)
     assert float(np.max(np.abs(got - img))) <= 2.0
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.integers(1, 60), st.integers(1, 20), st.integers(0, 2 ** 31 - 1),
+       st.booleans(), st.booleans())
+def test_g3_round_trip_random_shapes(w, h, seed, byte_align, leading_eol):
+    """G3 1-D encode->decode is EXACT for any bilevel image, with and
+    without per-line byte alignment / the leading EOL."""
+    import numpy as np
+
+    from pdf_extraction_tests_spark.sources import _ccitt as C
+    from tests.test_ccitt import encode_g3
+
+    rng = np.random.default_rng(seed)
+    img = np.where(rng.random((h, w)) < rng.random(), 0.0, 255.0)
+    data = encode_g3(img, byte_align=byte_align, leading_eol=leading_eol)
+    got = C.decode_g3(data, w, rows=h, byte_align=byte_align)
+    assert np.array_equal(got, img)
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.integers(1, 40), st.integers(1, 16), st.integers(0, 2 ** 31 - 1),
+       st.integers(0, 3), st.booleans())
+def test_jbig2_round_trip_random_shapes(w, h, seed, template, tpgdon):
+    """JBIG2 generic-region encode->decode is EXACT for any bilevel
+    image, every GBTEMPLATE, with and without typical prediction."""
+    import numpy as np
+
+    from pdf_extraction_tests_spark.sources import _jbig2 as J
+    from tests.test_jbig2 import encode_generic
+
+    rng = np.random.default_rng(seed)
+    img = (rng.random((h, w)) < rng.random()).astype(np.uint8)
+    data = encode_generic(img, template, tpgdon=tpgdon)
+    got = J.decode_generic(data, w, h, template=template, tpgdon=tpgdon)
+    assert np.array_equal(got, img)
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.binary(min_size=0, max_size=200), st.integers(0, 2 ** 31 - 1))
+def test_jbig2_decode_total_on_garbage(payload, seed):
+    """decode_jbig2 over arbitrary bytes: decodes or ValueError, never a
+    stray exception."""
+    import random
+
+    from pdf_extraction_tests_spark.sources import _jbig2 as J
+
+    rng = random.Random(seed)
+    data = bytes(payload) + bytes(rng.randrange(256)
+                                  for _ in range(rng.randrange(20)))
+    try:
+        J.decode_jbig2(data)
+    except ValueError:
+        pass
