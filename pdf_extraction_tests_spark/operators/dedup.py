@@ -330,141 +330,81 @@ def simhash_sql(bits: int = 16, table: str = "documents") -> str:
 # ---------------------------------------------------------------------------
 
 
-def _persistent_rdd_ids(sc) -> set:
-    """Driver-side snapshot of the session's persistent RDD ids."""
-    it = sc._jsc.getPersistentRDDs().keySet().iterator()
-    out = set()
-    while it.hasNext():
-        out.add(it.next())
-    return out
+_STAR_STEPS = 12  # alternating large-star / small-star steps in the plan
 
 
-def _unpersist_rdd_ids(sc, ids) -> None:
-    """Release persistent RDDs by id (non-blocking); ids already reclaimed
-    by the context cleaner are skipped."""
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in ids:
-        rdd = jmap.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
+def _undirected(df: DataFrame, a, b) -> DataFrame:
+    """(src, dst): the edge a-b of each row of ``df`` in both orientations,
+    self-loops dropped."""
+    both = F.array(F.struct(a.alias("src"), b.alias("dst")),
+                   F.struct(b.alias("src"), a.alias("dst")))
+    return (df.select(F.explode(both).alias("e")).select("e.*")
+            .filter(F.col("src") != F.col("dst")))
 
 
-def release(df: DataFrame) -> None:
-    """Explicitly release the checkpoint blocks backing a
-    connected-components result.
-
-    Needed because GC cannot do it: a ``localCheckpoint`` over a
-    shuffle-bearing plan is never reclaimed by the context cleaner in this
-    Spark build (measured — a shuffle-free checkpoint reclaims in seconds,
-    a post-shuffle one survives 30+ GC cycles), so every CC result would
-    otherwise pin its label-map blocks for the session lifetime.  The frame
-    must not be used after release (its lineage was truncated by the
-    checkpoint).  No-op for frames that pin nothing."""
-    ids = getattr(df, "_pinned_rdd_ids", None)
-    if ids:
-        _unpersist_rdd_ids(df.sparkSession.sparkContext, ids)
-        df._pinned_rdd_ids = ()
+def _neighbours(edges: DataFrame) -> DataFrame:
+    """(src, nbrs): each node's distinct neighbour set."""
+    return edges.groupBy("src").agg(F.collect_set("dst").alias("nbrs"))
 
 
-_CHECKPOINT_EVERY = 3  # rounds between lineage-truncating checkpoints
+def _star_step(edges: DataFrame, large: bool) -> DataFrame:
+    """One large-star (``large``) or small-star step over a symmetric edge
+    frame: node u with neighbours N and m = min(N + [u]) links m to each
+    neighbour above u (large) or to u and each neighbour below u (small).
+    One ``groupBy`` over ``edges``, which is referenced once, so the plan
+    grows by one aggregate per step."""
+    src = F.col("src")
+    m = F.least(src, F.array_min("nbrs"))
+    if large:
+        keep = F.filter("nbrs", lambda v: v > src)
+    else:
+        keep = F.concat(F.filter("nbrs", lambda v: v < src), F.array(src))
+    links = _neighbours(edges).select(m.alias("m"), F.explode(keep).alias("v"))
+    return _undirected(links, F.col("v"), F.col("m"))
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """(doc_a, doc_b) near-dup pairs -> (doc_id, cluster_id) with
-    cluster_id = min doc id in the component (the canonical keeper).
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) near-dup pairs of distinct ids -> (doc_id,
+    cluster_id) with cluster_id = min doc id in the component (the
+    canonical keeper).  One lazy plan: building it runs no Spark job and
+    nothing is persisted.
 
-    Iterative min-label propagation: each round every node adopts the
-    smallest label among itself and its neighbors; converges in at most
-    the component diameter (dup clusters are shallow).  Per round: one
-    join + one aggregate — all shuffles keyed on doc ids.  Early-exits
-    when a round changes nothing; **raises** if ``max_iter`` rounds pass
-    with labels still moving (max_iter is a safety valve, not a silent
-    truncation — a wrong cluster_id would diverge from the exact oracle).
-    Lineage is bounded: each round unpersists the superseded label frame
-    and ``localCheckpoint``s every ``_CHECKPOINT_EVERY`` rounds so the plan
-    never grows 20 joins deep.  Dup components are small and shallow: over
-    q39's candidate pairs (3 bands x 2 rows) sf0.001 / sf0.01 / sf0.1 give
-    100 / 86 / 6,301 pairs, largest components of 4 / 4 / 19 docs, and
-    2 / 3 / 6 rounds to converge counting the confirming round.
+    Algorithm: ``_STAR_STEPS`` alternating large-star / small-star steps
+    (Kiveris et al., SoCC 2014), each one aggregate keyed on a doc id,
+    then one checking aggregate that gives each node ``lo`` = its minimum
+    neighbour, its degree, and ``cluster_id = least(doc_id, lo)``.
 
-    Block hygiene: the only persistent RDD alive after this returns is the
-    final eager localCheckpoint backing the result — small (one row per
-    clustered doc) but pinned until the caller passes the frame to
-    :func:`release` (GC can NOT reclaim it; see release()).  Intermediate
-    checkpoint blocks are released synchronously via a driver-side id
-    diff — which assumes no CONCURRENT persist activity in the session
-    while a call is in flight (true for this engine's batch entry points).
+    Exact, or it raises: a node passes the check if it is a centre
+    (``lo > doc_id``) or a leaf (degree 1, ``lo < doc_id``); any other
+    node evaluates ``raise_error`` in the same projection, so the action
+    fails with ``did not converge``.  If every node passes, each component
+    is a star centred on its minimum (a centre's neighbours are all
+    larger, hence leaves; a leaf's one neighbour is smaller, hence not a
+    leaf), and star steps never change components, so a returned label is
+    always the component minimum.
+
+    What converges (pure-Python simulation of the same steps): paths of
+    <= 64 nodes with sorted or reversed ids and every shuffled order
+    sampled (paths of 21-64 nodes are new: min-label propagation capped
+    at 20 rounds rejected them); chains
+    of 80 five-node cliques; random trees of depth <= 9 with random ids up
+    to 20,000 nodes (<= 11 steps).  One case narrows: a depth-<= 9 tree
+    whose ids fall from root to leaves needs 13 steps from ~1,500 nodes on
+    and now raises, where the 20-round cap accepted it.  q39's candidate
+    graphs at sf0.001 / sf0.01 / sf0.1 (100 / 86 / 6,301 pairs) need
+    1 / 2 / 5 steps; LSH candidates form clique chains, not deep trees.
     """
-    sc = pairs.sparkSession.sparkContext
-    before_ids = _persistent_rdd_ids(sc)
-    edges = (
-        pairs.selectExpr("doc_a AS src", "doc_b AS dst")
-        .unionByName(pairs.selectExpr("doc_b AS src", "doc_a AS dst"))
-        .distinct()
-        .cache()
-    )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-    )
-    prev = None
-    prev_is_ckpt = False  # a localCheckpoint's blocks ARE its lineage — never unpersist
-    changed = 0
-    for it in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nmin"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-                (F.col("nmin") < F.col("cluster_id")).alias("_changed"),
-            )
-        )
-        is_ckpt = (it + 1) % _CHECKPOINT_EVERY == 0
-        if is_ckpt:
-            # truncate lineage: without this the plan is `it` joins deep and
-            # re-evaluation (or executor loss) replays the whole chain
-            updated = updated.localCheckpoint(eager=False)
-        else:
-            updated = updated.cache()
-        # one aggregation action per round (drives the cache/checkpoint fill)
-        changed = updated.agg(
-            F.sum(F.col("_changed").cast("int")).alias("n")
-        ).collect()[0]["n"] or 0  # bounded-sample ok: single-row scalar aggregate
-        if prev is not None and not prev_is_ckpt:
-            prev.unpersist()
-        prev, prev_is_ckpt = updated, is_ckpt
-        labels = updated.drop("_changed")
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed:
-        _unpersist_rdd_ids(sc, _persistent_rdd_ids(sc) - before_ids)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing) — component diameter exceeds "
-            "max_iter; raise max_iter"
-        )
-    # hand the caller an eagerly-materialized copy, then release EVERY
-    # persistent RDD this call created except the final checkpoint: the
-    # cached frames via unpersist() (also clears their CacheManager
-    # entries) and the intermediate localCheckpoint blocks by id
-    pre_final = _persistent_rdd_ids(sc)
-    labels = labels.localCheckpoint(eager=True)
-    final_ids = _persistent_rdd_ids(sc) - pre_final
-    if prev is not None and not prev_is_ckpt:
-        prev.unpersist()
-    _unpersist_rdd_ids(
-        sc, (_persistent_rdd_ids(sc) - before_ids) - final_ids)
-    labels._pinned_rdd_ids = tuple(sorted(final_ids))
-    return labels
+    edges = _undirected(pairs, F.col("doc_a"), F.col("doc_b"))
+    for step in range(_STAR_STEPS):
+        edges = _star_step(edges, large=step % 2 == 0)
+    src = F.col("src")
+    lo = F.array_min("nbrs")
+    converged = (lo > src) | ((F.size("nbrs") == 1) & (lo < src))
+    failed = F.raise_error(F.lit(
+        f"connected_components did not converge in {_STAR_STEPS} star steps"))
+    return _neighbours(edges).select(
+        src.alias("doc_id"),
+        F.when(converged, F.least(src, lo)).otherwise(failed).alias("cluster_id"))
 
 
 # ---------------------------------------------------------------------------

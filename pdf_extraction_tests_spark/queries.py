@@ -1007,8 +1007,9 @@ def q37(spark, sf_dir):
 def q39(spark, sf_dir):
     """Dedup clusters: LSH candidate pairs -> connected components ->
     (doc_id, cluster_id=min id of the component).  Oracle: recursive-CTE
-    transitive closure in DuckDB (fine at oracle scale; Spark side is
-    iterative min-label propagation that holds at corpus scale)."""
+    transitive closure in DuckDB (fine at oracle scale); the Spark side is
+    one lazy plan of bounded large-star/small-star steps that raises at
+    action time rather than return a label short of convergence."""
     sig = D.minhash_signatures(load(spark, sf_dir, "documents"), _MINHASH_K, _SHINGLE_N)
     pairs = D.lsh_candidate_pairs(sig, bands=3, rows_per_band=2)
     return D.connected_components(pairs)

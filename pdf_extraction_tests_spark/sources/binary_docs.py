@@ -170,10 +170,3 @@ def read_binary_docs(spark: SparkSession, path: str,
             )
 
     return map_batches(raw, parse, DOCS)
-
-
-def write_spdf(path: str, regions: list[str]) -> None:
-    """Test helper: write an SPDF fixture file."""
-    with open(path, "wb") as f:
-        f.write(SPDF_MAGIC)
-        f.write("\n".join(regions).encode("utf-8"))

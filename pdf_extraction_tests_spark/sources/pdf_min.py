@@ -1528,147 +1528,3 @@ def extract_pdf_text(data: bytes, password: bytes = b"") -> list[dict]:
     for i, (content, h, fonts) in enumerate(_page_streams(data, password)):
         blocks.extend(_extract_page_blocks(content, h, i + 1, fonts))
     return blocks
-
-
-# ---------------------------------------------------------------------------
-# Deterministic minimal-PDF WRITER (tests/fixtures): text + image XObjects,
-# FlateDecode content streams — valid per ISO 32000 minimal profile.
-# ---------------------------------------------------------------------------
-
-
-def write_minimal_pdf(pages: list[list[tuple]], compress: bool = True,
-                      page_height: float = 792.0,
-                      objstm: bool = False,
-                      font_encoding: bytes | None = None) -> bytes:
-    """Build a valid one-font PDF.
-
-    ``pages`` is a list of pages; each page a list of items:
-    ``("text", x, y_top, size, text)``, ``("image", name)`` (draws the
-    shared 2x2 gray image), or ``("xobject", name, filter_name, payload)``
-    — an image XObject of its own whose stream is ``payload`` verbatim
-    under ``/Filter /<filter_name>`` (the text path never decodes it).
-    y is given TOP-left (engine convention) and converted to PDF user space.
-    ``objstm=True`` packs the page-tree dict objects into a FlateDecode
-    ``/ObjStm`` (the PDF 1.5+ layout) — the reader-side fixture for
-    :func:`_expand_objstm`; content streams stay top-level per spec.
-    ``font_encoding`` injects a verbatim /Encoding value into the font
-    dict (a name like ``b"/WinAnsiEncoding"`` or an inline
-    ``<< /Differences [...] >>`` dict) — the simple-font-encoding fixture.
-    """
-    objs: list[bytes] = []
-
-    def esc(s: str) -> bytes:
-        return (s.replace("\\", r"\\").replace("(", r"\(")
-                 .replace(")", r"\)")).encode("latin-1", "replace")
-
-    # layout: 1 catalog, 2 pages-root, 3 font, then per page: page obj,
-    # then all content streams, then image xobjects (one shared gray +
-    # one per distinct "xobject" item name)
-    page_ids = [4 + i for i in range(len(pages))]
-    content_ids = [4 + len(pages) + i for i in range(len(pages))]
-    xobj_id = 4 + 2 * len(pages)
-    own_items: dict[str, tuple] = {}
-    for pg in pages:
-        for it in pg:
-            if it[0] == "xobject":
-                own_items.setdefault(it[1], it)
-    own_ids = {name: xobj_id + 1 + i for i, name in enumerate(own_items)}
-
-    body = {}
-    body[1] = b"<< /Type /Catalog /Pages 2 0 R >>"
-    kids = b" ".join(b"%d 0 R" % p for p in page_ids)
-    body[2] = (b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>"
-               % len(pages))
-    body[3] = (b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica"
-               + (b" /Encoding " + font_encoding if font_encoding else b"")
-               + b" >>")
-    needs_xobj = any(it[0] == "image" for pg in pages for it in pg)
-    for i, pg in enumerate(pages):
-        res = b"/Font << /F1 3 0 R >>"
-        if needs_xobj or own_ids:
-            ents = b""
-            if needs_xobj:
-                ents += b" /Im0 %d 0 R" % xobj_id
-            for name, oid in own_ids.items():
-                ents += b" /%s %d 0 R" % (name.encode(), oid)
-            res += b" /XObject <<" + ents + b" >>"
-        body[page_ids[i]] = (
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 %d] "
-            b"/Resources << %s >> /Contents %d 0 R >>"
-            % (int(page_height), res, content_ids[i])
-        )
-        ops = [b"BT"]
-        for item in pg:
-            if item[0] == "text":
-                _, x, y_top, size, text = item
-                y_pdf = page_height - y_top - size
-                ops.append(b"/F1 %g Tf" % size)
-                ops.append(b"1 0 0 1 %g %g Tm" % (x, y_pdf))
-                ops.append(b"(" + esc(text) + b") Tj")
-            else:
-                ops.append(b"ET /%s Do BT" % item[1].encode())
-        ops.append(b"ET")
-        stream = b"\n".join(ops)
-        if compress:
-            z = zlib.compress(stream)
-            body[content_ids[i]] = (
-                b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(z)
-                + z + b"\nendstream"
-            )
-        else:
-            body[content_ids[i]] = (
-                b"<< /Length %d >>\nstream\n" % len(stream)
-                + stream + b"\nendstream"
-            )
-    if needs_xobj:
-        img = bytes([0, 0, 0, 255] * 4)
-        body[xobj_id] = (
-            b"<< /Type /XObject /Subtype /Image /Width 2 /Height 2 "
-            b"/ColorSpace /DeviceGray /BitsPerComponent 8 /Length %d >>"
-            b"\nstream\n" % len(img) + img + b"\nendstream"
-        )
-    for name, (_, _, filter_name, payload) in own_items.items():
-        body[own_ids[name]] = (
-            b"<< /Type /XObject /Subtype /Image /Width 8 /Height 8 "
-            b"/ColorSpace /DeviceGray /BitsPerComponent 8 /Filter /%s "
-            b"/Length %d >>\nstream\n" % (filter_name.encode(), len(payload))
-            + payload + b"\nendstream"
-        )
-
-    if objstm:
-        # move the dict-only page tree (pages root + page dicts) into one
-        # compressed object stream; streams (contents, xobjects) stay out
-        members = [2, *page_ids]
-        parts, offs, pos = [], [], 0
-        for n in members:
-            b = body.pop(n) + b"\n"
-            offs.append((n, pos))
-            parts.append(b)
-            pos += len(b)
-        header = " ".join(f"{n} {o}" for n, o in offs).encode() + b"\n"
-        z = zlib.compress(header + b"".join(parts))
-        body[max(max(body), xobj_id) + 1] = (
-            b"<< /Type /ObjStm /N %d /First %d /Length %d "
-            b"/Filter /FlateDecode >>\nstream\n" % (len(members), len(header), len(z))
-            + z + b"\nendstream"
-        )
-
-    out = bytearray(b"%PDF-1.5\n" if objstm else b"%PDF-1.4\n")
-    offsets = {}
-    for num in sorted(body):
-        offsets[num] = len(out)
-        out += b"%d 0 obj\n" % num + body[num] + b"\nendobj\n"
-    xref_at = len(out)
-    maxn = max(body)
-    out += b"xref\n0 %d\n" % (maxn + 1)
-    out += b"0000000000 65535 f \n"
-    for n in range(1, maxn + 1):
-        if n in offsets:
-            out += b"%010d 00000 n \n" % offsets[n]
-        else:
-            # objects living inside the /ObjStm: FREE rows, not offset-0
-            # in-use rows (the xref-first reader would reject those)
-            out += b"0000000000 65535 f \n"
-    out += (b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-            % (maxn + 1, xref_at))
-    return bytes(out)

@@ -5,7 +5,7 @@ DocLayout-YOLO, :131-152 pytesseract) needs poppler + a layout model +
 tesseract — absent from this image.  This module supplies the three stage
 callables for :func:`.scanned.extract_scanned_pdf` built only on the
 repo's own minimal-PDF decoder + numpy, so the ENTIRE pipeline —
-write_minimal_pdf -> rasterize -> layout detection -> per-box OCR ->
+a minimal-profile PDF -> rasterize -> layout detection -> per-box OCR ->
 spans — runs end to end in CI:
 
 * :func:`rasterize_minimal` renders each text block of a minimal-profile

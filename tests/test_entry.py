@@ -2,9 +2,7 @@
 
 from __future__ import annotations
 
-import collections
 import importlib.util
-import re
 import sys
 from pathlib import Path
 
@@ -90,15 +88,11 @@ for case in (lid, bpe, media):
             res.stdout + res.stderr[-3000:])
 
 
-def test_building_every_query_runs_no_job(spark, record_property):
+def test_building_every_query_runs_no_job(spark):
     """Building a query (calling its function, not running the frame)
     runs no Spark job but parquet footer reads, so every job a query costs
-    is in its plan.  Each registered query builds under its own job group.
-    The one exception is q39: ``dedup.connected_components`` runs its
-    min-label loop while the query is built (a ``collect`` of the changed
-    count per round, then a ``localCheckpoint``).  Its stage count under
-    AQE off (one job per action, not one per query stage) is pinned, so
-    the day q39 builds lazily this test says so."""
+    is in its plan.  Each registered query builds under its own job group,
+    with AQE off (one job per action, not one per query stage)."""
     mod = _load_entry()
     built = {**mod.queries(), **mod.extra_queries()}
     sc = spark.sparkContext
@@ -120,9 +114,15 @@ def test_building_every_query_runs_no_job(spark, record_property):
         sc.setLocalProperty("spark.job.description", None)
     jobs = {n: [s for s in ss if not s.startswith("parquet at")]
             for n, ss in stages.items()}
-    q39 = jobs.pop("q39_dedup_clusters")
     assert not {n: ss for n, ss in jobs.items() if ss}, jobs
-    record_property("q39_build_stages", len(q39))
-    assert all(re.match(r"(collect at .*dedup\.py:\d+|localCheckpoint at )", s)
-               for s in q39), q39
-    assert len(q39) == 44, collections.Counter(q39)
+
+
+def test_q39_runs_pin_nothing(spark):
+    """Three runs of q39 in one session leave no persistent RDD behind."""
+    mod = _load_entry()
+    q39 = mod.queries()["q39_dedup_clusters"]
+    jsc = spark.sparkContext._jsc
+    base = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(3):
+        assert q39(spark, mod.SF0001).collect()
+        assert not set(jsc.getPersistentRDDs().keySet()) - base

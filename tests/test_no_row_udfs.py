@@ -85,6 +85,22 @@ def test_no_grouped_python_boundary():
                            + "\n".join(offenders))
 
 
+def test_no_persisted_frames():
+    """Every operator returns a lazy plan: nothing in the package caches,
+    persists or checkpoints a frame (a persisted result stays pinned
+    until someone releases it, and nothing does), code or prose."""
+    persist_re = re.compile(
+        r"\.cache\(\)|\.persist\(|localCheckpoint|\.checkpoint\(|unpersist")
+    offenders = [
+        f"{path.relative_to(PKG)}:{i}: {line.strip()}"
+        for path in PKG.rglob("*.py")
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if persist_re.search(line)
+    ]
+    assert not offenders, ("persisted frames in the package:\n"
+                           + "\n".join(offenders))
+
+
 def test_env_reads_only_in_session():
     """Deployment settings live in ``session.py``; an environment read
     anywhere else is a switch no caller can see (and no test sets)."""

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from pdf_extraction_tests_spark.operators import dedup as D
@@ -174,6 +175,71 @@ class TestBucketedEmbeddingDedup:
         assert len(many & exact) >= len(few & exact)
 
 
+def _union_find_min_labels(pairs) -> dict:
+    """Reference: node -> min id of its component, by union-find."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _generated_graphs(seed: int = 7) -> list:
+    """Union of disjoint graphs, each on its own id range, as (a, b) pairs
+    in random orientation: paths of 2-40 nodes in sorted, reversed and
+    shuffled id order, clique chains, a hot 200-clique, a random tree of
+    depth <= 9 and 1,000 nodes, and isolated pairs."""
+    import random
+
+    rng = random.Random(seed)
+    pairs, base = [], 0
+
+    def ids(n, order="shuffled"):
+        nonlocal base
+        out = list(range(base, base + n))
+        base += n + 1000
+        if order == "reversed":
+            out.reverse()
+        elif order == "shuffled":
+            rng.shuffle(out)
+        return out
+
+    def path(nodes):
+        return list(zip(nodes, nodes[1:]))
+
+    def cliques(nodes, size):
+        # consecutive cliques share one node
+        out = []
+        for c in range(0, len(nodes) - 1, size - 1):
+            mem = nodes[c:c + size]
+            out += [(a, b) for i, a in enumerate(mem) for b in mem[i + 1:]]
+        return out
+
+    for n in range(2, 41):
+        for order in ("sorted", "reversed", "shuffled"):
+            pairs += path(ids(n, order))
+    for n_cliques, size in ((2, 3), (10, 5), (40, 5), (30, 12)):
+        pairs += cliques(ids(n_cliques * (size - 1) + 1), size)
+    pairs += cliques(ids(200), 200)
+    tree, depth = ids(1000), [0]
+    for i in range(1, len(tree)):
+        p = rng.choice([j for j in range(i) if depth[j] < 9])
+        depth.append(depth[p] + 1)
+        pairs.append((tree[p], tree[i]))
+    for _ in range(50):
+        pairs += path(ids(2))
+    return [(a, b) if rng.random() < 0.5 else (b, a) for a, b in pairs]
+
+
 class TestConnectedComponentsHardening:
     def test_long_chain_within_iters_converges(self, spark):
         # a path graph of diameter 6: label must propagate end to end
@@ -181,20 +247,29 @@ class TestConnectedComponentsHardening:
             pd.DataFrame({"doc_a": [1, 2, 3, 4, 5, 6],
                           "doc_b": [2, 3, 4, 5, 6, 7]})
         )
-        cc = D.connected_components(pairs, max_iter=20)
-        rows = {r.doc_id: r.cluster_id for r in cc.collect()}
-        D.release(cc)
-        assert set(rows.values()) == {1}
+        rows = {r.doc_id: r.cluster_id
+                for r in D.connected_components(pairs).collect()}
+        assert rows == {i: 1 for i in range(1, 8)}
 
     def test_nonconvergence_raises_not_truncates(self, spark):
-        # diameter exceeds max_iter: must RAISE, never silently emit wrong
-        # cluster ids (round-1 advice)
+        # a 1,000-node path needs 19 star steps, more than the plan has:
+        # the action must RAISE, never silently emit wrong cluster ids
         pairs = spark.createDataFrame(
-            pd.DataFrame({"doc_a": list(range(1, 9)),
-                          "doc_b": list(range(2, 10))})
+            pd.DataFrame({"doc_a": list(range(1, 1000)),
+                          "doc_b": list(range(2, 1001))})
         )
-        with pytest.raises(RuntimeError, match="did not converge"):
-            D.connected_components(pairs, max_iter=2)
+        with pytest.raises(SparkRuntimeException, match="did not converge"):
+            D.connected_components(pairs).collect()
+
+    def test_matches_union_find_on_generated_graphs(self, spark):
+        """One Spark call over many disjoint generated graphs equals the
+        union-find min label of every node."""
+        pairs = _generated_graphs()
+        frame = spark.createDataFrame(
+            pd.DataFrame(pairs, columns=["doc_a", "doc_b"]))
+        got = {r.doc_id: r.cluster_id
+               for r in D.connected_components(frame).collect()}
+        assert got == _union_find_min_labels(pairs)
 
 
 class TestSimilarity:
@@ -336,80 +411,33 @@ class TestRealImageDecode:
 
 class TestCacheHygiene:
     """Round-2 leak class: operators pinning frames for the session
-    lifetime.  Operators that return lazy plans must pin NOTHING; iterative
-    operators may pin exactly their result checkpoint, dropped on demand by
-    D.release() (the context cleaner provably never reclaims post-shuffle
-    localCheckpoints in this build, so GC is not a cleanup path)."""
+    lifetime.  Every operator returns a lazy plan and pins NOTHING."""
 
     @staticmethod
-    def _n_persistent(spark):
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    def _persistent_ids(spark) -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     def test_lazy_operators_pin_nothing(self, spark, docs):
         d = docs.filter(F.col("doc_id") < 60)
-        base = self._n_persistent(spark)
+        base = self._persistent_ids(spark)
         for _ in range(3):
             D.ngram_jaccard_pairs(d, threshold=0.2).count()
             D.minhash_signatures(d).count()
             D.simhash(d).count()
-        # <=, not ==: earlier tests' localCheckpoint blocks may be context-
-        # cleaned WHILE this test runs (count can drop); the invariant is
-        # that these operators never ADD pinned RDDs
-        assert self._n_persistent(spark) <= base
-
-    def test_components_release_intermediates_synchronously(self, spark, docs):
-        """Each CC call must leave AT MOST its final result checkpoint
-        pinned — intermediates are released by the operator itself, not by
-        GC.  Measured on the ids THIS test creates (id-set diff), so
-        pre-existing blocks from other tests can neither mask nor fail it."""
-        from pdf_extraction_tests_spark.operators.dedup import (
-            _persistent_rdd_ids)
-
-        sc = spark.sparkContext
-        pairs = D.lsh_candidate_pairs(
-            D.minhash_signatures(docs.filter(F.col("doc_id") < 100)))
-        before = _persistent_rdd_ids(sc)
-        out = D.connected_components(pairs)
-        out.count()
-        assert len(_persistent_rdd_ids(sc) - before) <= 1, (
-            "connected_components left more than its result checkpoint")
-
-    def test_release_drops_every_block_deterministically(self, spark, docs):
-        """D.release() must drop a CC result's checkpoint blocks
-        synchronously — no GC, no polling.  This replaces the round-3
-        GC-poll test: measurement showed a localCheckpoint over a
-        shuffle-bearing plan is NEVER reclaimed by the context cleaner in
-        this Spark build (a shuffle-free one reclaims in seconds), so
-        waiting on GC was both flaky and, for these frames, hopeless —
-        explicit release is the contract."""
-        from pdf_extraction_tests_spark.operators.dedup import (
-            _persistent_rdd_ids)
-
-        sc = spark.sparkContext
-        pairs = D.lsh_candidate_pairs(
-            D.minhash_signatures(docs.filter(F.col("doc_id") < 100)))
-        base_ids = _persistent_rdd_ids(sc)
-        for _ in range(2):
-            out = D.connected_components(pairs)
-            out.count()
-            D.release(out)
-            leaked = _persistent_rdd_ids(sc) - base_ids
-            assert not leaked, f"persistent RDD ids {sorted(leaked)} linger"
+            D.connected_components(
+                D.lsh_candidate_pairs(D.minhash_signatures(d))).collect()
+        assert not self._persistent_ids(spark) - base
 
     def test_nonconvergence_leaves_no_blocks(self, spark):
-        """The raise path must also clean up after itself."""
-        from pdf_extraction_tests_spark.operators.dedup import (
-            _persistent_rdd_ids)
-
-        sc = spark.sparkContext
+        """The raise path pins nothing either."""
         pairs = spark.createDataFrame(
-            pd.DataFrame({"doc_a": list(range(1, 20)),
-                          "doc_b": list(range(2, 21))})
+            pd.DataFrame({"doc_a": list(range(1, 1000)),
+                          "doc_b": list(range(2, 1001))})
         )
-        base_ids = _persistent_rdd_ids(sc)
-        with pytest.raises(RuntimeError):
-            D.connected_components(pairs, max_iter=4)
-        assert not (_persistent_rdd_ids(sc) - base_ids)
+        base = self._persistent_ids(spark)
+        with pytest.raises(SparkRuntimeException, match="did not converge"):
+            D.connected_components(pairs).collect()
+        assert not self._persistent_ids(spark) - base
 
 
 class TestAsofJoin:

@@ -148,10 +148,8 @@ def test_pdf_writer_decoder_roundtrip(pages, compress, objstm):
     """Any text placed by the writer comes back from the decoder with its
     page/x/y/size intact (strings with parens/backslashes included) — in
     both the flat 1.4 layout and the ObjStm-packed 1.5 layout."""
-    from pdf_extraction_tests_spark.sources.pdf_min import (
-        extract_pdf_text,
-        write_minimal_pdf,
-    )
+    from pdf_extraction_tests_spark.sources.pdf_min import extract_pdf_text
+    from tests.fixtures import write_minimal_pdf
 
     spec = [[("text", x, y, size, text) for x, y, size, text in pg]
             for pg in pages]
@@ -250,8 +248,8 @@ def test_pdf_decoder_total_under_mutation(seed, n_mut, compress, objstm):
     from pdf_extraction_tests_spark.sources.pdf_min import (
         UnsupportedPdfError,
         extract_pdf_text,
-        write_minimal_pdf,
     )
+    from tests.fixtures import write_minimal_pdf
 
     base = write_minimal_pdf(
         [[("text", 10, 10, 12, "hello fuzz world")], [("image", "Im0")]],
@@ -296,9 +294,7 @@ def _hard_profile_pdfs():
     if _HARD_PDFS is None:
         import zlib
 
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            write_minimal_pdf,
-        )
+        from tests.fixtures import write_minimal_pdf
         from tests.test_sources import (
             XOBJECT_PAGE,
             TestRc4Encryption,
@@ -368,8 +364,8 @@ def test_inband_raster_loop_matches_direct_decode(items):
     """Property form of the zero-binary scanned loop: for ANY generated
     one-page document, write_minimal_pdf -> default raster stack yields
     the same (etype, text, geometry) blocks as the direct pdf_min decode."""
-    from pdf_extraction_tests_spark.sources.pdf_min import (
-        extract_pdf_text, write_minimal_pdf)
+    from pdf_extraction_tests_spark.sources.pdf_min import extract_pdf_text
+    from tests.fixtures import write_minimal_pdf
     from pdf_extraction_tests_spark.sources.scanned import (
         extract_scanned_pdf)
 
@@ -452,39 +448,3 @@ def test_g3_round_trip_random_shapes(w, h, seed, byte_align, leading_eol):
     data = encode_g3(img, byte_align=byte_align, leading_eol=leading_eol)
     got = C.decode_g3(data, w, rows=h, byte_align=byte_align)
     assert np.array_equal(got, img)
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.integers(1, 40), st.integers(1, 16), st.integers(0, 2 ** 31 - 1),
-       st.integers(0, 3), st.booleans())
-def test_jbig2_round_trip_random_shapes(w, h, seed, template, tpgdon):
-    """JBIG2 generic-region encode->decode is EXACT for any bilevel
-    image, every GBTEMPLATE, with and without typical prediction."""
-    import numpy as np
-
-    from pdf_extraction_tests_spark.sources import _jbig2 as J
-    from tests.test_jbig2 import encode_generic
-
-    rng = np.random.default_rng(seed)
-    img = (rng.random((h, w)) < rng.random()).astype(np.uint8)
-    data = encode_generic(img, template, tpgdon=tpgdon)
-    got = J.decode_generic(data, w, h, template=template, tpgdon=tpgdon)
-    assert np.array_equal(got, img)
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.binary(min_size=0, max_size=200), st.integers(0, 2 ** 31 - 1))
-def test_jbig2_decode_total_on_garbage(payload, seed):
-    """decode_jbig2 over arbitrary bytes: decodes or ValueError, never a
-    stray exception."""
-    import random
-
-    from pdf_extraction_tests_spark.sources import _jbig2 as J
-
-    rng = random.Random(seed)
-    data = bytes(payload) + bytes(rng.randrange(256)
-                                  for _ in range(rng.randrange(20)))
-    try:
-        J.decode_jbig2(data)
-    except ValueError:
-        pass

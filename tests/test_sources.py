@@ -9,13 +9,12 @@ from pdf_extraction_tests_spark.sources.binary_docs import (
     bytes_to_spans,
     parse_pdf_bytes,
     read_binary_docs,
-    write_spdf,
 )
 from pdf_extraction_tests_spark.sources.pdf_min import (
     UnsupportedPdfError,
     extract_pdf_text,
-    write_minimal_pdf,
 )
+from tests.fixtures import write_minimal_pdf, write_spdf
 
 REAL_PDF_PAGES = [
     [("text", 72, 100, 18, "A Real Decoded Pdf Title Line Of Length"),
@@ -459,8 +458,6 @@ class TestInbandRasterStack:
         """write_minimal_pdf -> DEFAULT scanned stack == pdf_min decode:
         same (page, etype, text) sequence and same geometry, with media
         draws surviving as placeholders."""
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_text, write_minimal_pdf)
         from pdf_extraction_tests_spark.sources.scanned import (
             extract_scanned_pdf)
 
@@ -481,8 +478,6 @@ class TestInbandRasterStack:
         assert [b for b in scanned if b["kind"] == "media"]
 
     def test_rasterizer_pages_are_real_pixels(self):
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            write_minimal_pdf)
         from pdf_extraction_tests_spark.sources.raster import (
             rasterize_minimal)
 
@@ -604,7 +599,7 @@ class TestXrefFirst:
 
     def test_writer_output_takes_the_xref_path(self):
         from pdf_extraction_tests_spark.sources.pdf_min import (
-            _objects_via_xref, write_minimal_pdf)
+            _objects_via_xref)
 
         plain = write_minimal_pdf([[("text", 10, 10, 12, "hello")]])
         assert _objects_via_xref(plain) is not None
@@ -947,8 +942,6 @@ class TestType0ToUnicode:
         assert m[0x20] == "text" and m[0x21] == "!"
 
     def test_fonts_do_not_disturb_simple_pages(self):
-        from pdf_extraction_tests_spark.sources.pdf_min import (
-            extract_pdf_text, write_minimal_pdf)
 
         data = write_minimal_pdf([[("text", 10, 10, 12, "plain ok")]])
         assert [b["text"] for b in extract_pdf_text(data)
