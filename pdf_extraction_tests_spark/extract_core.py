@@ -508,27 +508,6 @@ def reading_order(records: list[dict]) -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
-# Legacy layout detectors (v7) — kept for parity (SURVEY §2 row A7)
-# ---------------------------------------------------------------------------
-
-
-def detect_page_layout_legacy(page_records: list[dict], quantile: float = 0.3) -> list[dict]:
-    """v7's area-quantile main-text filter (v7.R:2225-2277): drop regions
-    whose bbox area falls below the page's ``quantile`` area cutoff —
-    a crude noise filter superseded by the substantial-region rules, exposed
-    for capability parity and unit-tested."""
-    body = [r for r in page_records if r["element_type"] in BODY_TYPES]
-    if len(body) < 4:
-        return page_records
-    areas = np.array([r["w"] * r["h"] for r in body], dtype=float)
-    cutoff = float(np.quantile(areas, quantile))
-    return [
-        r for r in page_records
-        if r["element_type"] not in BODY_TYPES or r["w"] * r["h"] >= cutoff
-    ]
-
-
-# ---------------------------------------------------------------------------
 # Per-format page-1 band segmentation (SURVEY §2.2 P7 / §2.3 J2)
 # ---------------------------------------------------------------------------
 # The reference assigns page-1 regions to named bands by coordinate

@@ -1,1 +1,2 @@
-"""Native Spark column-expression function library (no UDFs)."""
+"""Column-level functions: author canonicalisation, BPE token counts,
+LLM-reply parsing and prompt rendering (no row-at-a-time UDFs)."""

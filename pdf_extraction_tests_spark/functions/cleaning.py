@@ -1,53 +1,17 @@
-"""Text-cleaning pipelines as native Spark column expressions.
+"""Author-line canonicalisation as a native Spark column expression.
 
-Spark-side mirrors of the kernel's regex chains (SURVEY §2.8;
-Document_Processor_DocLayout_YOLO_Code_v10.R:3431-3525) for use in
-declarative plans where the per-document UDF is not involved — whole-stage
-codegen'd, zero Python.  The hot extraction path keeps its regexes inside
-the pandas kernel (one dialect, SURVEY §7 risk note); these expressions are
-for column-level cleaning of already-extracted tables.
+:func:`authors_canonical` mirrors the kernel's ``clean_author_list``
+(Document_Processor_DocLayout_YOLO_Code_v10.R:3552-3575) for declarative
+plans where the per-document kernel is not involved: whole-stage
+codegen'd, zero Python.  q41 runs it, checked against its DuckDB twin
+:func:`authors_canonical_sql`.  The text-cleaning chains of SURVEY §2.8
+(v10.R:3431-3525) have one implementation, ``extract_core.clean_text``,
+inside the kernel (one regex dialect, SURVEY §7 risk note).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
-
-
-def collapse_whitespace(col: Column) -> Column:
-    """str_replace_all(text, "\\s+", " ") %>% trim (v10.R:1649, 3437)."""
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
-def strip_citations(col: Column) -> Column:
-    """Remove bracketed citation markers [1], [2, 3], [4-6] (v10.R:1797-1802)."""
-    return F.regexp_replace(col, r"\[\d+(?:[,–-]\s*\d+)*\]", "")
-
-
-def dehyphenate(col: Column) -> Column:
-    """Re-join line-break hyphenation: ([a-z])-\\s+([a-z]) -> $1$2 (v10.R:3439, 3462)."""
-    return F.regexp_replace(col, r"([a-z])-\s+([a-z])", r"$1$2")
-
-
-def normalize_units(col: Column) -> Column:
-    """Scientific-unit normalization: p H -> pH, '500nm' -> '500 nm'
-    (v10.R:3458-3465)."""
-    c = F.regexp_replace(col, r"\bp\s*H\b", "pH")
-    return F.regexp_replace(c, r"(\d+)\s*nm\b", r"$1 nm")
-
-
-def clean_aggressive(col: Column) -> Column:
-    """clean_text_for_llm_aggressive (v10.R:3431-3442)."""
-    return collapse_whitespace(strip_citations(col))
-
-
-def clean_academic(col: Column) -> Column:
-    """clean_text_with_textclean_academic (v10.R:3444-3472)."""
-    return collapse_whitespace(normalize_units(dehyphenate(col)))
-
-
-def clean_hybrid(col: Column) -> Column:
-    """clean_text_hybrid: aggressive then academic (v10.R:3474-3498)."""
-    return collapse_whitespace(normalize_units(dehyphenate(strip_citations(col))))
 
 
 _AUTHOR_MARKS = "[°*†‡§¶#¹²³⁴⁵⁶⁷⁸⁹⁰'\"?]"
@@ -81,14 +45,3 @@ def authors_canonical_sql(raw_expr: str) -> str:
         f"p -> trim(regexp_replace(regexp_replace(p, '{marks}', '', 'g'), "
         r"'\s*\b\d+\b', '', 'g'))), p -> p != ''), '; ')"
     )
-
-
-def apply_cleaning_method(col: Column, method: str) -> Column:
-    """Dispatch (v10.R:3518-3525)."""
-    if method == "aggressive":
-        return clean_aggressive(col)
-    if method == "academic":
-        return clean_academic(col)
-    if method == "hybrid":
-        return clean_hybrid(col)
-    raise ValueError(f"unknown cleaning method: {method}")

@@ -6,10 +6,9 @@ v10.R:906-1032): find the outermost JSON object by brace matching, try
 ``fromJSON``, fall back to regex field extraction, fall back to defaults
 (regions [1], [2], [3,4,5], v10.R:1026-1028).
 
-Spark-first re-expression: the column-level variant uses ``from_json`` with
-an explicit schema and ``regexp_extract`` fallbacks — pure expressions, no
-UDF.  The python variant (used inside the optional LLM mapInPandas hook —
-SURVEY U4, off the deterministic hot path) mirrors it exactly.
+:func:`parse_llm_response` is the one parser; the optional LLM
+``mapInPandas`` hook (SURVEY U4, off the deterministic hot path) runs it
+once per reply.
 
 The LLM call itself is OUT of the deterministic pipeline (north rule: no
 per-row Python / deterministic results); the hook stage accepts any
@@ -21,16 +20,6 @@ from __future__ import annotations
 
 import json
 import re
-
-from pyspark.sql import Column, functions as F, types as T
-
-STRUCTURE_SCHEMA = T.StructType(
-    [
-        T.StructField("title_region", T.IntegerType(), True),
-        T.StructField("author_regions", T.ArrayType(T.IntegerType()), True),
-        T.StructField("abstract_regions", T.ArrayType(T.IntegerType()), True),
-    ]
-)
 
 # reference defaults (v10.R:1026-1028)
 DEFAULT_STRUCTURE = {
@@ -72,7 +61,7 @@ def extract_json_object(text: str) -> str | None:
 
 
 def parse_llm_response(text: str) -> dict:
-    """Python mirror: brace-match -> json -> regex fallback -> defaults."""
+    """Brace-match -> json -> regex fallback -> defaults (v10.R:906-1032)."""
     obj = extract_json_object(text or "")
     if obj is not None:
         try:
@@ -96,26 +85,3 @@ def parse_llm_response(text: str) -> dict:
         if m:
             out[key] = [int(x) for x in re.findall(r"\d+", m.group(1))]
     return out
-
-
-def parse_llm_response_col(col: Column) -> Column:
-    """Column-expression variant: from_json on the first {...} blob with
-    regex fallbacks for each field — no UDF."""
-    blob = F.regexp_extract(col, r"(\{[^{}]*(?:\{[^{}]*\}[^{}]*)*\})", 1)
-    parsed = F.from_json(blob, STRUCTURE_SCHEMA)
-    title_fb = F.regexp_extract(col, r"title_region\D+(\d+)", 1)
-    return F.struct(
-        F.coalesce(
-            parsed["title_region"],
-            F.when(title_fb != "", title_fb.cast("int")),
-            F.lit(DEFAULT_STRUCTURE["title_region"]),
-        ).alias("title_region"),
-        F.coalesce(
-            parsed["author_regions"],
-            F.lit(DEFAULT_STRUCTURE["author_regions"]),
-        ).alias("author_regions"),
-        F.coalesce(
-            parsed["abstract_regions"],
-            F.lit(DEFAULT_STRUCTURE["abstract_regions"]),
-        ).alias("abstract_regions"),
-    )

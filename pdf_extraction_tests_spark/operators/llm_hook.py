@@ -102,13 +102,3 @@ def apply_structure_slices(extracted_with_structure: DataFrame) -> DataFrame:
     ).withColumn(
         "llm_abstract", pick(F.col("structure.abstract_regions"))
     )
-
-
-def canned_chat_fn(prompts: list[str]) -> list[str]:
-    """Deterministic test responder: echoes a fixed structure, with the
-    noisy formats real models produce (prose around JSON)."""
-    return [
-        'Sure! Here is the analysis:\n{"title_region": 1, '
-        '"author_regions": [2], "abstract_regions": [3]}\nHope that helps.'
-        for _ in prompts
-    ]

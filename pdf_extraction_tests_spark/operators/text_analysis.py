@@ -1,8 +1,10 @@
 """Text-analysis operators: language-ID, quality scoring, token counting,
 document fingerprinting.
 
-All pure column expressions (whole-stage codegen; zero UDFs, zero shuffles
-beyond any final aggregation the caller adds) with exact DuckDB oracles.
+Quality, token counts and fingerprints are pure column expressions
+(whole-stage codegen, no UDF).  Language ID is one Arrow-batched pandas
+UDF (:func:`with_language_guess`).  None shuffles beyond any final
+aggregation the caller adds, and each has an exact DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -10,15 +12,15 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves pd.Series hints here
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .boilerplate import quoted
 from .dedup import h48
 
 # ---------------------------------------------------------------------------
-# Language ID - three signal tiers, all exact integer column arithmetic on
-# BOTH engines (counts via length-replace; no floats, so cross-engine ties
-# are bit-identical):
+# Language ID - three signal tiers, all exact integer arithmetic in the
+# Arrow kernel and in its DuckDB oracle (counts via length-replace there;
+# no floats, so cross-engine ties are bit-identical):
 #
 #   1. Latin-script languages: DISCRIMINATIVE char-trigram profiles
 #      (Cavnar & Trenkle 1994 shape) learned at import from frozen
@@ -409,59 +411,6 @@ LANGUAGES: list[str] = list(LANG_TRIGRAMS) + list(_SCRIPT_RANGES)
 _LID_THRESHOLD3 = 6  # thirds-of-a-hit units: < 2 whole hits -> 'und'
 
 
-def _lid_scores3(p: Column) -> dict[str, Column]:
-    """Per-language integer scores (thirds-of-a-hit units) over the padded
-    lowered text column ``p`` - pure length/replace arithmetic.
-
-    The trigram sum folds over an ARRAY of literals with one shared
-    length-replace lambda (``F.aggregate``) instead of inlining ~500
-    replace() terms: value-identical (same per-trigram length deltas,
-    integer addition), but the expression tree stays small enough that
-    Catalyst analysis + codegen take milliseconds - the inlined form hit
-    janino's method limits and cost ~13 s of plan compilation per query.
-    """
-    def occ_len(lit: Column | str) -> Column:  # occurrences * len(lit)
-        lit = F.lit(lit) if isinstance(lit, str) else lit
-        return F.length(p) - F.length(F.replace(p, lit, F.lit("")))
-
-    scores: dict[str, Column] = {}
-    for lang, tris in LANG_TRIGRAMS.items():
-        s = F.aggregate(
-            F.array(*[F.lit(t) for t in tris]),
-            F.lit(0),
-            lambda acc, t: acc + occ_len(t),
-        )
-        for c in _MARKER_CHARS.get(lang, ""):
-            s = s + F.lit(3 * _MARKER_WEIGHT) * occ_len(c)
-        scores[lang] = s
-    for lang, cls in _SCRIPT_RANGES.items():
-        n = F.length(p) - F.length(F.regexp_replace(p, f"[{cls}]", ""))
-        scores[lang] = n * F.lit(3 * _SCRIPT_WEIGHT.get(lang, 1))
-    return scores
-
-
-def with_language_guess_expr(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """All-JVM expression form of the classifier (the shape the DuckDB
-    oracle mirrors).  Kept as the semantic reference: equivalence with the
-    Arrow kernel below is pinned by
-    tests/test_langid.py::test_arrow_kernel_matches_expression_path."""
-    padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
-    scores = _lid_scores3(padded)
-    # materialize scores as named columns so the 18-way argmax below
-    # references shared subtrees (codegen CSE) instead of re-expanding
-    # ~500 replace() terms per comparison
-    scored = docs.withColumns({f"_s_{lg}": e for lg, e in scores.items()})
-    best = F.greatest(*[F.col(f"_s_{lg}") for lg in scores])
-    guess = F.lit("und")
-    # deterministic priority on ties: _LANG_SEEDS then _SCRIPT_RANGES order
-    for lang in reversed(list(scores)):
-        guess = F.when(F.col(f"_s_{lang}") == best, F.lit(lang)).otherwise(guess)
-    return scored.withColumn(
-        "lang_guess",
-        F.when(best >= _LID_THRESHOLD3, guess).otherwise(F.lit("und")),
-    ).drop(*[f"_s_{lg}" for lg in scores])
-
-
 # one sorted lookup table for the batch kernel below: every profile
 # trigram that cannot overlap itself, as a 3x21-bit code (every codepoint
 # fits in 21 bits), and every marker character, as a unigram code whose top
@@ -496,7 +445,7 @@ _LID_TABLE = _lid_table()
 
 
 def _lid_guess_frame(padded: pd.Series) -> pd.Series:
-    """Vectorized replica of the JVM scoring over one Arrow batch.
+    """The classifier's scoring over one Arrow batch.
 
     Every row's trigram and marker hits come from one flat codepoint array
     for the whole batch: the padded texts joined with ``"\\x00"`` and
@@ -508,10 +457,11 @@ def _lid_guess_frame(padded: pd.Series) -> pd.Series:
     array for both code kinds, its lookup indices and their gathered table
     codes, 16 bytes per character each).
 
-    Exactness argument, term by term (the guess must match the expression
-    path bit-for-bit — ties and the >= 6 threshold are live on real data):
+    Exactness argument, term by term (the guess must match the oracle,
+    :func:`language_guess_sql`, bit-for-bit — ties and the >= 6 threshold
+    are live on real data):
 
-    * the expression path counts a literal as ``(length(p) -
+    * the oracle counts a literal as ``(length(p) -
       length(replace(p, t, ''))) / len(t)``: NON-overlapping left-to-right
       occurrences.  A 3-character pattern can overlap itself only if
       ``t[0] == t[2]``; for every other pattern the number of overlapping
@@ -526,21 +476,21 @@ def _lid_guess_frame(padded: pd.Series) -> pd.Series:
       read as a marker;
     * UTF-8 is self-synchronizing: a valid UTF-8 literal matches only at
       codepoint boundaries, so matching codepoints counts what matching
-      the JVM's UTF-8 bytes counts;
+      the oracle's UTF-8 bytes counts;
     * trigram/marker contributions are integer ``count * len(t)`` /
       ``count * 3 * weight``; ``bincount`` sums them in float64, exact far
       below 2**53, and the scores return to int64;
     * script scores use ``pc.count_substring_regex('[<ranges>]')`` — each
-      match is a single char, so the count equals the JVM's
-      ``length - length(regexp_replace(p, '[cls]', ''))`` (the literal
-      codepoint ranges parse identically in Java regex and RE2, already a
-      load-bearing assumption of the DuckDB oracle);
+      match is a single char, so the count equals the oracle's
+      ``length - length(regexp_replace(p, '[cls]', '', 'g'))`` (both
+      engines run RE2 on the same literal codepoint ranges);
     * lowering/padding stays in the JVM (the caller passes
       ``' ' || lower(text) || ' '``), so JVM-vs-Python case-mapping
-      differences cannot arise;
+      differences cannot arise; the oracle lowers in DuckDB, and the two
+      agree on the upper-case rows tests/test_langid.py pins;
     * NULL text -> NULL padded -> scored as '' here -> best=0 < threshold
-      -> 'und', identical to the expression path's NULL-condition fall-
-      through to the otherwise('und') branch.
+      -> 'und', identical to the oracle's NULL-condition fall-through to
+      its ``ELSE 'und'`` branch.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -572,7 +522,7 @@ def _lid_guess_frame(padded: pd.Series) -> pd.Series:
     scores = scores.astype(np.int64).reshape(n, n_lang)
 
     # large_string: 64-bit offsets — a plain pa.string() caps one batch's
-    # total text at 2 GiB, a limit the all-JVM path never had
+    # total text at 2 GiB
     arr = pa.array(texts, type=pa.large_string())
 
     def counts(pattern: str, regex: bool = False) -> "np.ndarray":
@@ -588,7 +538,7 @@ def _lid_guess_frame(padded: pd.Series) -> pd.Series:
 
     best = scores.max(axis=1, initial=0)
     # first language in LANGUAGES order with score == best wins (same tie
-    # priority as the reversed when-chain in the expression path)
+    # priority as the oracle's first-match CASE)
     guess = np.array(LANGUAGES, dtype=object)[
         np.argmax(scores == best[:, None], axis=1)]
     guess = np.where(best >= _LID_THRESHOLD3, guess, "und")
@@ -598,16 +548,13 @@ def _lid_guess_frame(padded: pd.Series) -> pd.Series:
 def with_language_guess(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Language-ID via the Arrow-vectorized kernel (round-7, guide §4.2).
 
-    The expression path evaluates ~500 ``length(replace(p, t, ''))`` terms
-    per row, each a full scan PLUS an allocation of the replaced string —
-    measured 16 s for q29 at sf0.1.  This form ships the padded-lowered
-    text across the Arrow boundary once and counts every literal with
-    pyarrow's C++ ``count_substring`` kernels (no allocation, one batch
-    column pass per literal): 16.1 s -> ~2 s.  Scan-side, zero shuffle, no
-    per-row Python — the heavy loop is 500 vectorized kernel calls per
-    batch.  Guess values are bit-identical to the expression path
-    (equivalence pinned in tests/test_langid.py; the DuckDB oracle mirrors
-    the expression path as before)."""
+    An all-JVM expression form evaluates ~500 ``length(replace(p, t,
+    ''))`` terms per row, each a full scan PLUS an allocation of the
+    replaced string — measured 16 s for q29 at sf0.1.  This form ships the
+    padded-lowered text across the Arrow boundary once and scores it with
+    :func:`_lid_guess_frame`: 16.1 s -> ~2 s.  Scan-side, zero shuffle, no
+    per-row Python.  Guess values are bit-identical to the DuckDB oracle
+    :func:`language_guess_sql` (pinned in tests/test_langid.py)."""
     # pandas_column ships the package first: a session that never ran an
     # extraction has no package on its workers (q29/q59 crashed there)
     from ..shipping import pandas_column

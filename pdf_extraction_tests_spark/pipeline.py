@@ -558,9 +558,12 @@ def run_pipeline(
     # lineage: per-partition metrics from what was just written — a
     # partition-pruned, column-pruned scan of ONLY this attempt's directory
     # (at 100 TB the alternative — re-scanning the whole output table — is a
-    # second full pass).
+    # second full pass).  An empty input into a fresh out_dir writes no data
+    # file, so there is no table to read: its metrics come from the (empty)
+    # extracted frame instead, which Spark plans as a local relation.
+    written = read_table(spark, f"{out_dir}/extracted")
     this_attempt = (
-        read_table(spark, f"{out_dir}/extracted")
+        (extracted.limit(0) if written is None else written)
         .filter((F.col("run_id") == run_id) & (F.col("attempt_id") == attempt_id))
     )
     metrics = (

@@ -103,28 +103,3 @@ def sample_avi_frames_gray(data: bytes, k: int = 4) -> list[np.ndarray]:
             round(i * (len(frames) - 1) / (k - 1)) for i in range(k)
         })
     return [decode_jpeg_gray(frames[i]) for i in idxs]
-
-
-def build_avi(frames: list[bytes], width: int, height: int,
-              us_per_frame: int = 40_000) -> bytes:
-    """Fixture writer: Motion-JPEG AVI from ready-made JPEG frame bytes
-    (documents the exact subset parse_avi_mjpeg understands)."""
-
-    def chunk(ckid: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return ckid + len(body).to_bytes(4, "little") + body + pad
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    avih = (us_per_frame.to_bytes(4, "little")
-            + (0).to_bytes(4, "little") * 3
-            + len(frames).to_bytes(4, "little")
-            + (0).to_bytes(4, "little") * 3
-            + width.to_bytes(4, "little")
-            + height.to_bytes(4, "little")
-            + (0).to_bytes(4, "little") * 4)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + len(body).to_bytes(4, "little") + body

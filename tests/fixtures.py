@@ -3,9 +3,11 @@
 Mirrors the reference's captured golden output methodology
 (Document_Processor_DocLayout_YOLO_Code_v10_ALTAIR.R:3739-3798): each fixture
 is a small interleaved document plus the exact expected span sequence
-(kind, text, media_ref, order) and section-level values.  Also the two
+(kind, text, media_ref, order) and section-level values.  Also the
 byte-level fixture writers the source tests decode: :func:`write_minimal_pdf`
-(a valid minimal-profile PDF) and :func:`write_spdf` (an SPDF container).
+(a valid minimal-profile PDF), :func:`write_spdf` (an SPDF container) and
+:func:`build_avi` (a Motion-JPEG AVI); and :func:`canned_chat_fn`, the
+deterministic responder the LLM-hook tests plug in.
 """
 
 from __future__ import annotations
@@ -368,3 +370,38 @@ def write_spdf(path: str, regions: list[str]) -> None:
     with open(path, "wb") as f:
         f.write(SPDF_MAGIC)
         f.write("\n".join(regions).encode("utf-8"))
+
+
+def build_avi(frames: list[bytes], width: int, height: int,
+              us_per_frame: int = 40_000) -> bytes:
+    """Fixture writer: Motion-JPEG AVI from ready-made JPEG frame bytes
+    (documents the exact subset parse_avi_mjpeg understands)."""
+
+    def chunk(ckid: bytes, body: bytes) -> bytes:
+        pad = b"\x00" if len(body) & 1 else b""
+        return ckid + len(body).to_bytes(4, "little") + body + pad
+
+    def lst(ltype: bytes, body: bytes) -> bytes:
+        return chunk(b"LIST", ltype + body)
+
+    avih = (us_per_frame.to_bytes(4, "little")
+            + (0).to_bytes(4, "little") * 3
+            + len(frames).to_bytes(4, "little")
+            + (0).to_bytes(4, "little") * 3
+            + width.to_bytes(4, "little")
+            + height.to_bytes(4, "little")
+            + (0).to_bytes(4, "little") * 4)
+    hdrl = lst(b"hdrl", chunk(b"avih", avih))
+    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
+    body = b"AVI " + hdrl + movi
+    return b"RIFF" + len(body).to_bytes(4, "little") + body
+
+
+def canned_chat_fn(prompts: list[str]) -> list[str]:
+    """Deterministic test responder: echoes a fixed structure, with the
+    noisy formats real models produce (prose around JSON)."""
+    return [
+        'Sure! Here is the analysis:\n{"title_region": 1, '
+        '"author_regions": [2], "abstract_regions": [3]}\nHope that helps.'
+        for _ in prompts
+    ]

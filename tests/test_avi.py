@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 
 from pdf_extraction_tests_spark.sources import _avi as A
+from tests.fixtures import build_avi
 from tests.test_jpeg import encode_jpeg
 
 
@@ -30,14 +31,14 @@ def _frames(n=6, w=32, h=24, seed=3):
 class TestContainer:
     def test_round_trip(self):
         frames = _frames()
-        blob = A.build_avi(frames, 32, 24, us_per_frame=33_000)
+        blob = build_avi(frames, 32, 24, us_per_frame=33_000)
         parsed = A.parse_avi_mjpeg(blob)
         assert parsed["width"] == 32 and parsed["height"] == 24
         assert parsed["us_per_frame"] == 33_000
         assert parsed["frames"] == frames
 
     def test_frame_sampling_even_and_bounded(self):
-        blob = A.build_avi(_frames(n=6), 32, 24)
+        blob = build_avi(_frames(n=6), 32, 24)
         sampled = A.sample_avi_frames_gray(blob, k=3)
         assert len(sampled) == 3
         assert all(fr.shape == (24, 32) for fr in sampled)
@@ -47,7 +48,7 @@ class TestContainer:
         assert len(A.sample_avi_frames_gray(blob, k=99)) == 6
 
     def test_totality_under_mutation(self):
-        base = A.build_avi(_frames(n=3), 32, 24)
+        base = build_avi(_frames(n=3), 32, 24)
         rng = random.Random(11)
         for _ in range(300):
             b = bytearray(base)
@@ -68,7 +69,7 @@ class TestContainer:
     def test_frame_ceiling(self):
         # one tiny frame repeated past the cap must raise, not OOM
         f = _frames(n=1)[0]
-        blob = A.build_avi([f] * 64, 32, 24)
+        blob = build_avi([f] * 64, 32, 24)
         # forge a tighter ceiling for the test
         old = A._MAX_FRAMES
         A._MAX_FRAMES = 10
@@ -84,7 +85,7 @@ class TestVideoFeature:
         from pdf_extraction_tests_spark.operators.multimodal import (
             MEDIA_SCHEMA, extract_media_features)
 
-        blob = A.build_avi(_frames(), 32, 24)
+        blob = build_avi(_frames(), 32, 24)
         rows = [
             {"media_ref": "vid://real", "media_type": "video",
              "content": bytearray(blob)},

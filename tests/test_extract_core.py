@@ -208,6 +208,10 @@ class TestCleaning:
     def test_ph_nm(self):
         assert ec.clean_text("at p H 7 and 500  nm", "academic") == "at pH 7 and 500 nm"
 
+    def test_aggressive_strips_citations_and_whitespace(self):
+        assert ec.clean_text("results [1] and [2, 3] shown  here",
+                             "aggressive") == "results and shown here"
+
     def test_dedupe_sentences(self):
         assert ec.dedupe_sentences("A b. C d. A b. E f") == "A b. C d. E f"
 
@@ -335,18 +339,6 @@ class TestBandedFormats:
         # no end-matter within 5 rows => unchanged
         body2 = body[:2] + [{"text": f"t{i}", "row_id": 2 + i} for i in range(6)]
         assert ec.lookahead_end_scan(body2, 0, 10) == 10
-
-    def test_legacy_area_quantile(self):
-        page = [
-            {"element_type": "plain text", "w": 10, "h": 10, "text": "tiny"},
-            {"element_type": "plain text", "w": 100, "h": 100, "text": "a"},
-            {"element_type": "plain text", "w": 100, "h": 120, "text": "b"},
-            {"element_type": "plain text", "w": 100, "h": 140, "text": "c"},
-            {"element_type": "abandon", "w": 1, "h": 1, "text": "hdr"},
-        ]
-        kept = ec.detect_page_layout_legacy(page, 0.3)
-        texts = [r["text"] for r in kept]
-        assert "tiny" not in texts and "hdr" in texts
 
 
 class TestBoundaryScoring:

@@ -1,37 +1,10 @@
-"""Spark-native cleaning expressions agree with the kernel's cleaners."""
+"""The S7 prompt renderer over an extracted fixture document."""
 
 from __future__ import annotations
 
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
-from pdf_extraction_tests_spark import extract_core as ec
-from pdf_extraction_tests_spark.functions import cleaning as C
 from pdf_extraction_tests_spark.functions.render import render_prompt_documents
-
-SAMPLES = [
-    "results [1] and [2, 3] shown  here",
-    "an exper- iment at p H 7 and 500  nm",
-    "plain   text   with \t whitespace",
-    "",
-]
-
-
-@pytest.mark.parametrize("method", ["aggressive", "academic", "hybrid"])
-def test_cleaning_matches_kernel(spark, method):
-    pdf = pd.DataFrame({"id": range(len(SAMPLES)), "text": SAMPLES})
-    df = spark.createDataFrame(pdf)
-    got = {
-        r.id: r.cleaned
-        for r in df.select(
-            "id", C.apply_cleaning_method(F.col("text"), method).alias("cleaned")
-        ).collect()
-    }
-    # kernel superscript-strip targets unicode daggers absent from SAMPLES,
-    # so the two cleaners must agree exactly on these inputs
-    want = {i: ec.clean_text(s, method) for i, s in enumerate(SAMPLES)}
-    assert got == want
 
 
 def test_render_prompt_documents(spark):

@@ -3,16 +3,14 @@
 from __future__ import annotations
 
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 from pdf_extraction_tests_spark.functions.llm_json import (
     DEFAULT_STRUCTURE,
     extract_json_object,
     parse_llm_response,
-    parse_llm_response_col,
 )
-from pdf_extraction_tests_spark.operators.llm_hook import canned_chat_fn, llm_structure_stage
+from pdf_extraction_tests_spark.operators.llm_hook import llm_structure_stage
+from tests.fixtures import canned_chat_fn
 
 
 class TestBraceMatching:
@@ -48,23 +46,6 @@ class TestParse:
 
     def test_defaults_on_garbage(self):
         assert parse_llm_response("???") == DEFAULT_STRUCTURE
-
-    def test_column_variant_matches_python(self, spark):
-        samples = [
-            '{"title_region": 4, "author_regions": [5], "abstract_regions": [7]}',
-            "garbage without structure",
-            "prose then {\"title_region\": 2, \"author_regions\": [3], "
-            "\"abstract_regions\": [4, 5]} end",
-        ]
-        df = spark.createDataFrame(pd.DataFrame({"id": range(3), "resp": samples}))
-        got = {
-            r.id: r.s.asDict()
-            for r in df.select("id", parse_llm_response_col(F.col("resp")).alias("s"))
-            .collect()
-        }
-        for i, s in enumerate(samples):
-            want = parse_llm_response(s)
-            assert got[i]["title_region"] == want["title_region"], s
 
 
 class TestHookStage:

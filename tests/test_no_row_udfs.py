@@ -3,10 +3,13 @@
 The north rule forbids per-row Python; only Arrow-vectorized pandas UDFs
 (``mapInPandas`` and scalar pandas UDFs, both built in ``shipping.py``) and
 native column expressions are allowed.  This test greps the package source.
+It also parses the imports of the package and its entry points, so a module
+only tests import (a second copy of a capability) fails here.
 """
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -114,3 +117,60 @@ def test_env_reads_only_in_session():
                 offenders.append(f"{path.relative_to(PKG)}:{i}: {line.strip()}")
     assert not offenders, ("environment reads outside session.py:\n"
                            + "\n".join(offenders))
+
+
+# Modules no production path imports, each kept for the SURVEY row named
+# here: a capability the package offers but no query or job calls.
+_UNIMPORTED_OK = {
+    "functions.render": "S7 prompt-document sink",
+    "operators.llm_hook": "U4 optional LLM structure stage",
+    "sources.binary_docs": "S8 binary-document scan",
+    "streaming.incremental": "§2.9 incremental ingestion",
+}
+
+
+def _module_name(path: pathlib.Path) -> str:
+    parts = path.relative_to(PKG).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported_modules(path: pathlib.Path) -> set[str]:
+    """Every package-relative module name the file at ``path`` imports,
+    relative imports resolved; ``from a import b`` counts both ``a`` and
+    ``a.b``, since ``b`` may be a submodule."""
+    here = [PKG.name, *path.parent.relative_to(PKG).parts] \
+        if path.is_relative_to(PKG) else []
+    names = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = here[:len(here) - (node.level - 1)]
+                base = ".".join(parts + ([base] if base else []))
+            names.add(base)
+            names.update(f"{base}.{a.name}" for a in node.names)
+    prefix = PKG.name + "."
+    return {n[len(prefix):] for n in names if n.startswith(prefix)}
+
+
+def test_every_module_has_a_non_test_importer():
+    """Each leaf module of the package is imported by the package itself,
+    ``__spark_entry__.py``, ``job.py``, ``bench.py`` or ``sparkbench/``
+    (its tests aside), unless ``_UNIMPORTED_OK`` names the SURVEY row that
+    keeps it.  A module only tests import is a second copy to delete."""
+    repo = PKG.parent
+    importers = [*PKG.rglob("*.py"), repo / "__spark_entry__.py",
+                 repo / "job.py", repo / "bench.py",
+                 *(repo / "sparkbench").glob("*.py")]
+    imported = set()
+    for path in importers:
+        own = _module_name(path) if path.is_relative_to(PKG) else None
+        imported |= _imported_modules(path) - {own}
+    modules = {_module_name(p) for p in PKG.rglob("*.py")
+               if p.name != "__init__.py"}
+    orphans = sorted(modules - imported - set(_UNIMPORTED_OK))
+    assert not orphans, f"modules only tests import: {orphans}"
+    stale = sorted(m for m in _UNIMPORTED_OK if m in imported or m not in modules)
+    assert not stale, f"allowlisted modules that now have importers: {stale}"

@@ -402,6 +402,23 @@ class TestCheckpointResume:
         assert committed.count() == 3  # orphan rows invisible
         assert committed.select("doc_id").distinct().count() == 3
 
+    def test_empty_input_then_real_run(self, spark, tmp_path):
+        """An empty input into a fresh out_dir writes no data file (only
+        extracted/_SUCCESS); the run still returns zero metrics, and a later
+        non-empty run into the same dir commits and exposes its rows."""
+        out = str(tmp_path / "empty")
+        m = pl.run_pipeline(spark, spark.createDataFrame([], DOCS), out,
+                            run_id="rE", num_parts=4)
+        assert (m["docs"], m["spans"], m["parse_failures"],
+                m["resumed_parts_skipped"]) == (0, 0, 0, 0)
+        docs = fx.ALL_FIXTURES[:3]
+        m2 = pl.run_pipeline(spark, _docs_df(spark, docs), out,
+                             run_id="rF", num_parts=4)
+        assert m2["docs"] == 3
+        committed = pl.read_extracted(spark, out)
+        assert sorted(r.doc_id for r in committed.select("doc_id").collect()) \
+            == sorted(d["doc_id"] for d in docs)
+
     def test_lineage_rows_written(self, spark, tmp_path):
         docs = fx.ALL_FIXTURES
         out = str(tmp_path / "out2")

@@ -383,7 +383,7 @@ def test_inband_raster_loop_matches_direct_decode(items):
     assert scanned == direct
 
 
-# --- round-5 additions: BPE, G4, JPEG ---------------------------------------
+# --- round-5 additions: BPE, JPEG -------------------------------------------
 
 
 @settings(max_examples=60, deadline=None)
@@ -401,20 +401,6 @@ def test_bpe_pieces_reassemble_and_bound(text):
     assert B.bpe_token_count(text) == len(B.bpe_tokenize(text))
 
 
-@settings(max_examples=40, deadline=None)
-@given(st.integers(1, 80), st.integers(1, 24), st.integers(0, 2 ** 31 - 1))
-def test_g4_round_trip_random_shapes(w, h, seed):
-    """G4 encode->decode is EXACT for any bilevel image (lossless)."""
-    import numpy as np
-
-    from pdf_extraction_tests_spark.sources import _ccitt as C
-    from tests.test_ccitt import encode_g4
-
-    rng = np.random.default_rng(seed)
-    img = np.where(rng.random((h, w)) < rng.random(), 0.0, 255.0)
-    assert np.array_equal(C.decode_g4(encode_g4(img), w), img)
-
-
 @settings(max_examples=25, deadline=None)
 @given(st.integers(1, 40), st.integers(1, 40), st.integers(0, 2 ** 31 - 1))
 def test_jpeg_round_trip_random_shapes(w, h, seed):
@@ -430,21 +416,3 @@ def test_jpeg_round_trip_random_shapes(w, h, seed):
     got = decode_jpeg_gray(encode_jpeg(img))
     assert got.shape == (h, w)
     assert float(np.max(np.abs(got - img))) <= 2.0
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.integers(1, 60), st.integers(1, 20), st.integers(0, 2 ** 31 - 1),
-       st.booleans(), st.booleans())
-def test_g3_round_trip_random_shapes(w, h, seed, byte_align, leading_eol):
-    """G3 1-D encode->decode is EXACT for any bilevel image, with and
-    without per-line byte alignment / the leading EOL."""
-    import numpy as np
-
-    from pdf_extraction_tests_spark.sources import _ccitt as C
-    from tests.test_ccitt import encode_g3
-
-    rng = np.random.default_rng(seed)
-    img = np.where(rng.random((h, w)) < rng.random(), 0.0, 255.0)
-    data = encode_g3(img, byte_align=byte_align, leading_eol=leading_eol)
-    got = C.decode_g3(data, w, rows=h, byte_align=byte_align)
-    assert np.array_equal(got, img)
