@@ -7,7 +7,7 @@ Cluster usage (north rule)::
   spark-submit --py-files pipeline.zip job.py \\
       --input  <docs table path or catalog id> \\
       --output <output root (extracted/ + checkpoint/ land under it)> \\
-      [--run-id RID] [--num-parts P] [--no-resume] [--synthesize-from SF_DIR] \\
+      [--run-id RID] [--num-parts P] [--synthesize-from SF_DIR] \\
       [--publish-snapshot TABLE_DIR]
 
 Local smoke::
@@ -31,13 +31,13 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--num-parts", type=int, default=64)
     ap.add_argument("--oversize-chars", type=int, default=1_000_000)
-    ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--master", default=None)
     ap.add_argument(
         "--publish-snapshot", default=None, metavar="TABLE_DIR",
-        help="after the run, publish its COMMITTED extracted view into a "
-             "snapshot table (snapshots.py: atomic manifest commit, tagged "
-             "run-<run_id> so a re-submitted run publishes exactly once)")
+        help="after the run, publish this run's COMMITTED extracted rows "
+             "into a snapshot table (snapshots.py: atomic manifest commit, "
+             "tagged run-<run_id> so a re-submitted run publishes exactly "
+             "once)")
     args = ap.parse_args(argv)
 
     from pdf_extraction_tests_spark.corpus import corpus_spark
@@ -59,15 +59,18 @@ def main(argv: list[str] | None = None) -> None:
         run_id=args.run_id,
         num_parts=args.num_parts,
         oversize_chars=args.oversize_chars,
-        resume=not args.no_resume,
     )
     if args.publish_snapshot:
+        from pyspark.sql import functions as F
+
         from pdf_extraction_tests_spark import snapshots as S
         from pdf_extraction_tests_spark.pipeline import read_extracted
 
-        # a re-submitted run's tag is already published: the commit reads
+        # --output may hold earlier runs: publish only this one's rows.  A
+        # re-submitted run's tag is already published: the commit reads
         # and writes nothing and returns None
-        committed = read_extracted(spark, args.output)
+        committed = read_extracted(spark, args.output).filter(
+            F.col("run_id") == metrics["run_id"])
         metrics["snapshot_version"] = S.commit_snapshot(
             committed.drop("run_id", "attempt_id"),
             args.publish_snapshot, mode="append",

@@ -505,7 +505,6 @@ def run_pipeline(
     run_id: str | None = None,
     num_parts: int = DEFAULT_NUM_PARTS,
     oversize_chars: int = DEFAULT_OVERSIZE_CHARS,
-    resume: bool = True,
 ) -> dict:
     """End-to-end job with checkpoint/lineage and resume-from-partition.
 
@@ -517,7 +516,9 @@ def run_pipeline(
     dies between the two steps re-processes under a new attempt_id without
     ever double-exposing rows, and per-part metrics are computed from a
     partition-PRUNED scan of just this attempt's output (never a re-read of
-    the whole table).  Returns run metrics.
+    the whole table).  A ``run_id`` that already has ``done`` parts skips
+    them (the resume); a fresh run id, the default, processes every part.
+    Returns run metrics.
     """
     # letter prefix: these become hive partition directory values, and an
     # all-digit hex id (~0.4% of uuid4 prefixes) would make Spark's
@@ -529,17 +530,16 @@ def run_pipeline(
 
     ckpt_path = f"{out_dir}/checkpoint"
     done_parts: set[int] = set()
-    if resume:
-        ckpt = read_table(spark, ckpt_path, schema=CHECKPOINT)
-        if ckpt is not None:
-            done = (
-                ckpt.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-                .select("part_key")
-                .distinct()
-            )
-            done_parts = {r.part_key for r in done.collect()}
-            if done_parts:
-                docs = docs.join(F.broadcast(done), "part_key", "left_anti")
+    ckpt = read_table(spark, ckpt_path, schema=CHECKPOINT)
+    if ckpt is not None:
+        done = (
+            ckpt.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
+            .select("part_key")
+            .distinct()
+        )
+        done_parts = {r.part_key for r in done.collect()}
+        if done_parts:
+            docs = docs.join(F.broadcast(done), "part_key", "left_anti")
 
     t0 = time.time()
     extracted = (

@@ -826,13 +826,13 @@ def q33(spark, sf_dir):
     batched mapInPandas.  The media table derives deterministically from
     documents (content = UTF-8 bytes of text), so n_bytes / content_digest
     / media_type / decode_ok are hash-checked against DuckDB; only the
-    stubbed ``feature`` vector (no codecs in the image) is dropped from the
-    oracle surface.  Schema/batching/partitioning are the real binary
-    pipeline."""
+    digest-seeded ``feature`` vector (nothing decodes media) is dropped
+    from the oracle surface.  Schema/batching/partitioning are the real
+    binary pipeline."""
     from .operators.multimodal import extract_media_features, media_from_documents
 
     media = media_from_documents(load(spark, sf_dir, "documents"), limit=96)
-    return extract_media_features(media).drop("feature", "feature_kind")
+    return extract_media_features(media).drop("feature")
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,9 @@ a rename shim).  Each snapshot's data is one unpartitioned parquet
 directory.
 
 * **atomic commit / snapshot isolation** — a snapshot is a JSON manifest
-  listing immutable data directories; it becomes visible via one atomic
+  listing immutable data directories (relative to the table directory, so
+  a table reads the same under any spelling of its path or from any
+  working directory); it becomes visible via one atomic
   ``os.link`` publish.  Readers resolve the ``current`` pointer once and
   then read only directories listed in that manifest: a crashed or
   in-flight write is invisible (its data dir is simply unreferenced).
@@ -82,6 +84,15 @@ def _manifest_path(table_dir: str, version: int) -> str:
     return os.path.join(_meta(table_dir), f"v{version}.json")
 
 
+def _data_dirs(table_dir: str, manifest: dict) -> list[str]:
+    """The manifest's data dirs as absolute paths, resolved against
+    ``table_dir`` (an absolute entry resolves to itself).  Absolute because
+    Spark resolves a relative path against the JVM's working directory,
+    which need not be this process's."""
+    return [os.path.abspath(os.path.join(table_dir, d))
+            for d in manifest["data_dirs"]]
+
+
 def current_version(table_dir: str) -> int:
     """Latest PUBLISHED snapshot version; 0 when the table is empty.
 
@@ -141,20 +152,20 @@ def commit_snapshot(df: DataFrame, table_dir: str, mode: str = "append",
     os.makedirs(_meta(table_dir), exist_ok=True)
     parent_v = current_version(table_dir)
     new_v = parent_v + 1
-    data_dir = os.path.join(
-        table_dir, "data", f"s{new_v}-{uuid.uuid4().hex[:8]}")
+    data_rel = os.path.join("data", f"s{new_v}-{uuid.uuid4().hex[:8]}")
     schema = df.schema.jsonValue()
     parent_dirs: list[str] = []
     if mode == "append" and parent_v:
         parent_m = _load_manifest(table_dir, parent_v)
         parent_dirs = parent_m["data_dirs"]
         schema = _evolved_schema(parent_m["schema"], schema)
-    df.write.mode("errorifexists").parquet(data_dir)
+    df.write.mode("errorifexists").parquet(
+        os.path.abspath(os.path.join(table_dir, data_rel)))
     manifest = {
         "version": new_v,
         "parent": parent_v or None,
         "mode": mode,
-        "data_dirs": [*parent_dirs, data_dir],
+        "data_dirs": [*parent_dirs, data_rel],
         "schema": schema,
         "tag": tag,
     }
@@ -194,12 +205,13 @@ def read_snapshot(spark: SparkSession, table_dir: str,
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(m["schema"])
-    dirs = [d for d in m["data_dirs"] if os.path.exists(d)]
-    if len(dirs) < len(m["data_dirs"]):
+    listed = _data_dirs(table_dir, m)
+    dirs = [d for d in listed if os.path.exists(d)]
+    if len(dirs) < len(listed):
         # a retained manifest referencing missing data is corruption
         # (e.g. an expire racing a committer) — never drop rows silently
         import warnings
-        missing = sorted(set(m["data_dirs"]) - set(dirs))
+        missing = sorted(set(listed) - set(dirs))
         warnings.warn(
             f"snapshot v{m['version']} of {table_dir}: "
             f"{len(missing)} referenced data dir(s) missing "
@@ -257,13 +269,13 @@ def expire_snapshots(table_dir: str, keep_last: int = 2,
     keep = {m["version"] for m in snaps[-keep_last:]}
     referenced: set[str] = set()
     for v in keep:
-        referenced.update(_load_manifest(table_dir, v)["data_dirs"])
+        referenced.update(_data_dirs(table_dir, _load_manifest(table_dir, v)))
     for m in snaps:
         if m["version"] not in keep:
             os.unlink(_manifest_path(table_dir, m["version"]))
     deleted = []
     now = time.time()
-    data_root = os.path.join(table_dir, "data")
+    data_root = os.path.abspath(os.path.join(table_dir, "data"))
     if os.path.isdir(data_root):
         for name in sorted(os.listdir(data_root)):
             d = os.path.join(data_root, name)

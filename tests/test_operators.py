@@ -12,6 +12,7 @@ from pdf_extraction_tests_spark.operators import similarity as S
 from pdf_extraction_tests_spark.operators import text_analysis as TA
 from pdf_extraction_tests_spark.operators.multimodal import (
     MEDIA_SCHEMA,
+    _decode_stub,
     extract_media_features,
 )
 
@@ -340,73 +341,38 @@ class TestMultimodal:
 
 
 class TestRealImageDecode:
-    def test_pgm_feature_is_pixel_histogram(self, spark):
-        import numpy as np
+    """Real image bytes take the same path as any other content: the
+    kernel decodes nothing, so the feature is the digest-seeded stub."""
 
-        from pdf_extraction_tests_spark.operators import multimodal as MM
-
-        # 4x2 gradient: pixels 0,32,64,96,128,160,192,224 -> one per bin pair
-        px = bytes(range(0, 256, 32))
-        pgm = b"P5\n# comment\n4 2\n255\n" + px
-        feat, kind = MM._decode(pgm, "image")
-        assert kind == "pixel"
-        want = np.zeros(MM.FEATURE_DIM, dtype=np.float32)
-        for p in px:
-            want[int(p // (256 / MM.FEATURE_DIM))] += 1 / len(px)
-        assert np.allclose(feat, want)
-        # deterministic from PIXELS: same pixels, different comment -> same
-        assert np.allclose(
-            MM._decode(b"P5\n# other\n4 2\n255\n" + px, "image")[0], feat)
-
-    def test_bmp_24bit_feature(self, spark):
-        import numpy as np
-
-        from pdf_extraction_tests_spark.operators import multimodal as MM
-
-        # 2x1 24-bit BMP: one black, one white pixel (row padded to 8 bytes)
-        w, h = 2, 1
-        stride = ((w * 3 + 3) // 4) * 4
-        pixels = bytes([0, 0, 0, 255, 255, 255]) + b"\x00" * (stride - 6)
-        header = (b"BM" + (54 + len(pixels)).to_bytes(4, "little")
-                  + b"\x00" * 4 + (54).to_bytes(4, "little")
-                  + (40).to_bytes(4, "little")
-                  + w.to_bytes(4, "little") + h.to_bytes(4, "little")
-                  + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-                  + b"\x00" * 24)
-        feat, kind = MM._decode(header + pixels, "image")
-        assert kind == "pixel"
-        want = np.zeros(MM.FEATURE_DIM, dtype=np.float32)
-        want[0] = 0.5                      # black
-        want[MM.FEATURE_DIM - 1] = 0.5     # white (gray 255)
-        assert np.allclose(feat, want)
-
-    def test_end_to_end_decode_ok_on_real_bytes(self, spark):
-        import pandas as pd
-
-        from pdf_extraction_tests_spark.operators import multimodal as MM
-
-        pgm = b"P5\n3 3\n255\n" + bytes(range(9))
+    @staticmethod
+    def _one(spark, content: bytes):
         pdf = pd.DataFrame([{
-            "media_ref": "media://pgm", "media_type": "image",
-            "content": bytearray(pgm), "width": 3, "height": 3,
+            "media_ref": "media://img", "media_type": "image",
+            "content": bytearray(content), "width": 3, "height": 3,
             "duration_ms": None,
         }])
-        df = spark.createDataFrame(pdf, schema=MM.MEDIA_SCHEMA)
-        row = MM.extract_media_features(df).collect()[0]
+        df = spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
+        return extract_media_features(df).collect()[0]
+
+    def test_end_to_end_decode_ok_on_real_bytes(self, spark):
+        import hashlib
+
+        import numpy as np
+
+        pgm = b"P5\n3 3\n255\n" + bytes(range(9))
+        row = self._one(spark, pgm)
         assert row.decode_ok
-        assert row.feature_kind == "pixel"             # provenance in data
-        assert abs(sum(row.feature) - 1.0) < 1e-6      # a histogram, not noise
-        assert row.feature[0] > 0.9                    # all pixels < 16
+        assert row.n_bytes == len(pgm)
+        assert row.content_digest == hashlib.md5(pgm).hexdigest()
+        assert np.allclose(row.feature, _decode_stub(pgm, "image"))
 
     def test_magic_prefix_text_falls_back_to_stub(self, spark):
         import numpy as np
 
-        from pdf_extraction_tests_spark.operators import multimodal as MM
-
         fake = b"BMW sales prose, not a bitmap at all"
-        feat, kind = MM._decode(fake, "image")
-        assert kind == "stub"                          # the lie is visible
-        assert np.allclose(feat, MM._decode_stub(fake, "image"))
+        row = self._one(spark, fake)
+        assert row.decode_ok
+        assert np.allclose(row.feature, _decode_stub(fake, "image"))
 
 
 class TestCacheHygiene:

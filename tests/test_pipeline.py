@@ -363,6 +363,7 @@ class TestCheckpointResume:
         m2 = pl.run_pipeline(spark, df, out, run_id="r1", num_parts=4)
         assert m2["resumed_parts_skipped"] > 0
         assert m2["docs"] == 20  # totals unchanged — nothing double-counted
+        assert pl.read_extracted(spark, out).count() == 20
 
     def test_distinct_runs_not_cross_attributed(self, spark, tmp_path):
         """Two different run_ids appending into one output dir: the second
@@ -418,6 +419,31 @@ class TestCheckpointResume:
         committed = pl.read_extracted(spark, out)
         assert sorted(r.doc_id for r in committed.select("doc_id").collect()) \
             == sorted(d["doc_id"] for d in docs)
+
+    def test_publish_snapshot_holds_each_run_once(self, spark, tmp_path,
+                                                  monkeypatch):
+        """``job.py --publish-snapshot`` publishes only its own run's rows:
+        two run ids into one output dir, publishing after each, leave every
+        doc twice in the snapshot table (not once for the first run and
+        twice more for the second)."""
+        from collections import Counter
+
+        import job
+        from pdf_extraction_tests_spark import session, snapshots as S
+
+        docs = fx.ALL_FIXTURES[:3]
+        src = str(tmp_path / "docs")
+        _docs_df(spark, docs).write.parquet(src)
+        monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+        monkeypatch.setattr(spark, "stop", lambda: None)
+        tbl = str(tmp_path / "tbl")
+        for run_id in ("rP1", "rP2"):
+            job.main(["--input", src, "--output", str(tmp_path / "out"),
+                      "--run-id", run_id, "--num-parts", "4",
+                      "--publish-snapshot", tbl])
+        got = Counter(r.doc_id for r in S.read_snapshot(spark, tbl).collect())
+        assert got == {d["doc_id"]: 2 for d in docs}
+        assert S.committed_tags(tbl) == {"run-rP1", "run-rP2"}
 
     def test_lineage_rows_written(self, spark, tmp_path):
         docs = fx.ALL_FIXTURES

@@ -399,20 +399,3 @@ def test_bpe_pieces_reassemble_and_bound(text):
         assert "".join(pieces) == w
         assert 1 <= len(pieces) <= len(w)
     assert B.bpe_token_count(text) == len(B.bpe_tokenize(text))
-
-
-@settings(max_examples=25, deadline=None)
-@given(st.integers(1, 40), st.integers(1, 40), st.integers(0, 2 ** 31 - 1))
-def test_jpeg_round_trip_random_shapes(w, h, seed):
-    """Baseline JPEG with an all-ones quant table reconstructs within DCT
-    rounding for any geometry (block padding, edge replication)."""
-    import numpy as np
-
-    from pdf_extraction_tests_spark.sources._jpeg import decode_jpeg_gray
-    from tests.test_jpeg import encode_jpeg
-
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, (h, w)).astype(np.float64)
-    got = decode_jpeg_gray(encode_jpeg(img))
-    assert got.shape == (h, w)
-    assert float(np.max(np.abs(got - img))) <= 2.0

@@ -114,6 +114,24 @@ class TestSnapshots:
         assert sorted(r.doc_id
                       for r in S.read_snapshot(spark, t).collect()) == [1, 2]
 
+    def test_table_path_spelled_two_ways(self, spark, tmp_path, monkeypatch):
+        """A table committed under a relative path reads, expires and takes
+        appends under its absolute path or from another working directory
+        without losing the current snapshot's data."""
+        t = str(tmp_path / "tbl")
+        S.commit_snapshot(_df(spark, [1, 2]), os.path.relpath(t))
+        S.commit_snapshot(_df(spark, [3]), os.path.relpath(t))
+        live = sorted(os.listdir(os.path.join(t, "data")))
+        monkeypatch.chdir(tmp_path)
+        assert S.expire_snapshots(t, keep_last=1, orphan_grace_sec=0) == []
+        assert sorted(os.listdir(os.path.join(t, "data"))) == live
+        assert sorted(r.doc_id
+                      for r in S.read_snapshot(spark, t).collect()) == [1, 2, 3]
+        # the JVM keeps its own working directory: "tbl" must still land here
+        S.commit_snapshot(_df(spark, [4]), "tbl")
+        assert sorted(r.doc_id for r in
+                      S.read_snapshot(spark, t).collect()) == [1, 2, 3, 4]
+
     def test_expire_after_overwrite_frees_old_data(self, spark, tmp_path):
         t = str(tmp_path / "tbl")
         S.commit_snapshot(_df(spark, [1, 2]), t)
@@ -148,7 +166,7 @@ class TestExpireGracePeriod:
         S.commit_snapshot(_df(spark, [1]), t)
         S.commit_snapshot(_df(spark, [2]), t)
         first = S._load_manifest(t, 1)["data_dirs"][0]
-        _sh.rmtree(first)
+        _sh.rmtree(os.path.join(t, first))
         with _w.catch_warnings(record=True) as caught:
             _w.simplefilter("always")
             got = S.read_snapshot(spark, t)
